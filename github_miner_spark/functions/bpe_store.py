@@ -10,20 +10,19 @@ bpe_segmentation_stats applies the merges back to the corpus), so no
 query should re-run the training loop per call. A real tokenizer
 pipeline trains once and ships the merge file for exactly this
 reason. Content-addressed by the documents file + a spec version;
-atomic, idempotent, race-safe. The ORACLES keep re-deriving the loop
-from spec (unrolled CTE triples), so grading stays store-independent.
+landed by the shared publish step (io/store_key.py). The ORACLES
+keep re-deriving the loop from spec (unrolled CTE triples), so
+grading stays store-independent.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key
+from github_miner_spark.io.store_key import content_key, publish
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_BPE_STORE", "/tmp/spark-graft-bpe")
 
@@ -134,31 +133,16 @@ def build_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def materialize_bpe_merges(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
+def materialize_bpe_merges(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the merge table for ``sf_dir`` exists on disk; return
-    the store path. Atomic tmp-dir + rename, race-safe."""
-    target = _store_dir(sf_dir)
-    fname = "merges.parquet"
-    if os.path.isdir(os.path.join(target, fname)) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    the store path."""
+
+    def write(stage: str) -> None:
         build_bpe_merges(spark, sf_dir).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(os.path.join(tmp, fname))
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # another builder won
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        ).parquet(os.path.join(stage, "merges.parquet"))
+
+    return publish(STORE_ROOT, _store_dir(sf_dir), ("merges.parquet",), write)
 
 
 def load_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,19 +16,16 @@ queries/clustered_eval.py), so a stale or corrupted rollup
 hash-mismatches in the driver's correctness gate instead of grading
 itself.
 
-Content-addressed by the embeddings file + a spec version; atomic
-tmp+rename, idempotent, race-safe — the shared store discipline
-(io/store_key.py)."""
+Content-addressed by the embeddings file + a spec version; landed by
+the shared publish step (io/store_key.py)."""
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from github_miner_spark.io.store_key import content_key
+from github_miner_spark.io.store_key import PARQUET_DIR_ENTRIES, content_key, publish
 
 STORE_ROOT = os.environ.get(
     "SPARK_GRAFT_CLUSTERED_STORE", "/tmp/spark-graft-clustered"
@@ -58,30 +55,19 @@ def build_clu_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _clu_truth(_cnv(spark, sf_dir))
 
 
-def materialize_clu_truth(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
+def materialize_clu_truth(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the truth rollup for ``sf_dir`` exists on disk; return
     its parquet path."""
-    base = _store_dir(sf_dir)
-    target = os.path.join(base, "clu_truth.parquet")
-    if os.path.isdir(target) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
-        out = os.path.join(tmp, "clu_truth.parquet")
-        build_clu_truth(spark, sf_dir).write.mode("overwrite").parquet(out)
-        os.makedirs(base, exist_ok=True)
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(out, target)
-        except OSError:
-            pass
-        return target
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def write(stage: str) -> None:
+        build_clu_truth(spark, sf_dir).write.mode("overwrite").parquet(stage)
+
+    return publish(
+        STORE_ROOT,
+        os.path.join(_store_dir(sf_dir), "clu_truth.parquet"),
+        PARQUET_DIR_ENTRIES,
+        write,
+    )
 
 
 def load_clu_truth(spark: SparkSession, sf_dir: str) -> DataFrame:

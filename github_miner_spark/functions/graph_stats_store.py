@@ -11,19 +11,22 @@ watch's most expensive remaining entry. The ORACLE keeps re-deriving
 the exact counts from spec (a depth-bounded recursive CTE), so a
 stale or corrupted rollup hash-mismatches instead of grading itself.
 
-Content-addressed by the graph base tables + a spec version; atomic
-tmp+rename, idempotent, race-safe — the shared store discipline."""
+Content-addressed by the graph base tables + a spec version; landed
+by the shared publish step (io/store_key.py)."""
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import GRAPH_BASE_TABLES, content_key
+from github_miner_spark.io.store_key import (
+    GRAPH_BASE_TABLES,
+    PARQUET_DIR_ENTRIES,
+    content_key,
+    publish,
+)
 
 STORE_ROOT = os.environ.get(
     "SPARK_GRAFT_GRAPH_STATS_STORE", "/tmp/spark-graft-graph-stats"
@@ -85,30 +88,19 @@ def build_anchor_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.select("node", "h", "exact_reached")
 
 
-def materialize_anchor_reach(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
+def materialize_anchor_reach(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the rollup for ``sf_dir`` exists on disk; return its
     parquet path."""
-    base = _store_dir(sf_dir)
-    target = os.path.join(base, "anchor_reach.parquet")
-    if os.path.isdir(target) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
-        out = os.path.join(tmp, "anchor_reach.parquet")
-        build_anchor_reach(spark, sf_dir).write.mode("overwrite").parquet(out)
-        os.makedirs(base, exist_ok=True)
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(out, target)
-        except OSError:
-            pass
-        return target
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def write(stage: str) -> None:
+        build_anchor_reach(spark, sf_dir).write.mode("overwrite").parquet(stage)
+
+    return publish(
+        STORE_ROOT,
+        os.path.join(_store_dir(sf_dir), "anchor_reach.parquet"),
+        PARQUET_DIR_ENTRIES,
+        write,
+    )
 
 
 def load_anchor_reach(spark: SparkSession, sf_dir: str) -> DataFrame:

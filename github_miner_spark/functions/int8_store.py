@@ -7,9 +7,9 @@ and no query should pay it again. The store persists
 on the wire, so a 1B x 64-dim corpus carries 64 GB of code payload
 instead of 256 GB of float32 — the query path scans the codes file and
 never touches the float embeddings. Content-addressed by the
-embeddings file (path + size + mtime), written atomically
-(tmp dir + rename), sorted by vec_id so probe-id lookups get parquet
-min/max pruning.
+embeddings file (path + size + mtime), landed by the shared publish
+step (io/store_key.py), sorted by vec_id so probe-id lookups get
+parquet min/max pruning.
 
 Quantization is ``similarity.int8_codes`` (symmetric scalar, per-vector
 scale cancels out of cosine) — deterministic, so the DuckDB oracle can
@@ -20,13 +20,11 @@ the store.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key
+from github_miner_spark.io.store_key import content_key, publish
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_INT8_STORE", "/tmp/spark-graft-int8")
 
@@ -36,18 +34,13 @@ def _store_dir(sf_dir: str) -> str:
     return os.path.join(STORE_ROOT, key)
 
 
-def materialize_int8_codes(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def materialize_int8_codes(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the int8 code table for ``sf_dir`` exists on disk; return
-    the store path. Atomic and race-safe like the graph/text/ivf stores."""
+    the store path."""
     from github_miner_spark.functions.similarity import int8_codes
     from github_miner_spark.io.tables import load_table
 
-    target = _store_dir(sf_dir)
-    if os.path.isdir(os.path.join(target, "codes.parquet")) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    def write(stage: str) -> None:
         emb = load_table(spark, "embeddings", sf_dir).select(
             "vec_id",
             F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding"),
@@ -55,18 +48,10 @@ def materialize_int8_codes(spark: SparkSession, sf_dir: str, force: bool = False
         emb.select(
             "vec_id", int8_codes(F.col("embedding")).alias("codes")
         ).sortWithinPartitions("vec_id").write.mode("overwrite").parquet(
-            os.path.join(tmp, "codes.parquet")
+            os.path.join(stage, "codes.parquet")
         )
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+
+    return publish(STORE_ROOT, _store_dir(sf_dir), ("codes.parquet",), write)
 
 
 def load_int8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,8 +16,8 @@ reconstruction v ~ c + r_hat turns the inner-product score into
 — one per-(query, probed-list) scalar plus M_SUB ADC table hits, no
 float vector ever read on the scan side.
 
-Store layout (content-addressed, atomic tmp+rename, same discipline
-as ivf_store/pq_store):
+Store layout (content-addressed, landed by the shared publish step in
+io/store_key.py):
   centroids.parquet  (cid, cvec)            — coarse quantizer over the
                                               L2-normalized corpus,
                                               stride-sampled like IVF
@@ -40,8 +40,6 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,7 +55,7 @@ from github_miner_spark.functions.pq_store import (
     _subspaces,
 )
 from github_miner_spark.functions.similarity import dot
-from github_miner_spark.io.store_key import content_key
+from github_miner_spark.io.store_key import content_key, publish
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_IVFPQ_STORE", "/tmp/spark-graft-ivfpq")
 
@@ -99,9 +97,7 @@ def _nearest_centroid(nrm: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def materialize_ivfpq_index(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
+def materialize_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the IVF-PQ index for ``sf_dir`` exists on disk; return
     the store path. Build = ETL, once per corpus version: coarse
     assignment (one scan vs broadcast centroids), residuals (narrow
@@ -109,20 +105,15 @@ def materialize_ivfpq_index(
     (one scan vs broadcast codebooks, map-side-combined argmin)."""
     from github_miner_spark.io.tables import load_table
 
-    target = _store_dir(sf_dir)
-    if os.path.isdir(os.path.join(target, "codes.parquet")) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    def write(stage: str) -> None:
         nrm = _normalized(load_table(spark, "embeddings", sf_dir))
         n = nrm.count()
         stride = math.ceil(n / max(1, math.isqrt(n)))
         cents = nrm.filter((F.col("vec_id") % stride) == 0).select(
             F.col("vec_id").alias("cid"), F.col("nv").alias("cvec")
         )
-        cents.write.mode("overwrite").parquet(os.path.join(tmp, "centroids.parquet"))
-        cents = spark.read.parquet(os.path.join(tmp, "centroids.parquet"))
+        cents.write.mode("overwrite").parquet(os.path.join(stage, "centroids.parquet"))
+        cents = spark.read.parquet(os.path.join(stage, "centroids.parquet"))
         asg = _nearest_centroid(nrm, cents)
         res = asg.select(
             "vec_id",
@@ -144,8 +135,8 @@ def materialize_ivfpq_index(
         rcb = _subspaces(ranked.select("cid", "rv"), "rv").select(
             "j", "cid", F.col("sv").alias("cvec")
         )
-        rcb.write.mode("overwrite").parquet(os.path.join(tmp, "rcodebook.parquet"))
-        rcb = spark.read.parquet(os.path.join(tmp, "rcodebook.parquet"))
+        rcb.write.mode("overwrite").parquet(os.path.join(stage, "rcodebook.parquet"))
+        rcb = spark.read.parquet(os.path.join(stage, "rcodebook.parquet"))
         sub = _subspaces(res, "rv")
         codes = (
             sub.join(F.broadcast(rcb), "j")
@@ -166,18 +157,15 @@ def materialize_ivfpq_index(
             )
         )
         codes.sortWithinPartitions("list_id").write.mode("overwrite").parquet(
-            os.path.join(tmp, "codes.parquet")
+            os.path.join(stage, "codes.parquet")
         )
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # another builder won
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+
+    return publish(
+        STORE_ROOT,
+        _store_dir(sf_dir),
+        ("centroids.parquet", "rcodebook.parquet", "codes.parquet"),
+        write,
+    )
 
 
 def load_ivfpq_index(

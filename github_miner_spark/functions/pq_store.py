@@ -22,20 +22,19 @@ at 100 TB the scan reads m small ints per corpus vector instead of a
 map-side-combined (query_id, vec_id) partial aggregate.
 
 Same store discipline as ivf_store/int8_store: content-addressed by
-the embeddings file, atomic tmp-dir + rename, assignment sorted within
-partitions for parquet pruning.
+the embeddings file, landed by the shared publish step
+(io/store_key.py), assignment sorted within partitions for parquet
+pruning.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key
+from github_miner_spark.io.store_key import content_key, publish
 
 from github_miner_spark.functions.similarity import dot, norm
 
@@ -89,7 +88,7 @@ def _sq_l2(a, b):
     )
 
 
-def materialize_pq_codes(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def materialize_pq_codes(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the PQ store for ``sf_dir`` exists on disk; return its
     path. Writes codebook.parquet (j, cid, cvec) and codes.parquet
     (vec_id, j, cid)."""
@@ -97,12 +96,7 @@ def materialize_pq_codes(spark: SparkSession, sf_dir: str, force: bool = False) 
 
     from github_miner_spark.io.tables import load_table
 
-    target = _store_dir(sf_dir)
-    if os.path.isdir(os.path.join(target, "codes.parquet")) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    def write(stage: str) -> None:
         nrm = _normalized(load_table(spark, "embeddings", sf_dir))
         # codebook: first KSUB sampled vectors by vec_id, split into
         # subspaces; cid is the rank within the sample (0-based) so the
@@ -117,8 +111,8 @@ def materialize_pq_codes(spark: SparkSession, sf_dir: str, force: bool = False) 
         codebook = _subspaces(ranked.select("cid", "nv"), "nv").select(
             "j", "cid", F.col("sv").alias("cvec")
         )
-        codebook.write.mode("overwrite").parquet(os.path.join(tmp, "codebook.parquet"))
-        cb = spark.read.parquet(os.path.join(tmp, "codebook.parquet"))
+        codebook.write.mode("overwrite").parquet(os.path.join(stage, "codebook.parquet"))
+        cb = spark.read.parquet(os.path.join(stage, "codebook.parquet"))
         # encoding: per (vec_id, j) squared-L2 argmin over the KSUB
         # entries — corpus_rows x M_SUB x KSUB narrow rows, map-side
         # (codebook broadcast). The argmin is min_by over a groupBy
@@ -142,18 +136,12 @@ def materialize_pq_codes(spark: SparkSession, sf_dir: str, force: bool = False) 
             )
         )
         codes.sortWithinPartitions("vec_id").write.mode("overwrite").parquet(
-            os.path.join(tmp, "codes.parquet")
+            os.path.join(stage, "codes.parquet")
         )
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+
+    return publish(
+        STORE_ROOT, _store_dir(sf_dir), ("codebook.parquet", "codes.parquet"), write
+    )
 
 
 def load_pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:

@@ -6,21 +6,19 @@ tokenizing and shingling the corpus is ETL — a regex+md5 pass over
 every byte — and no query should pay it again. Dedup pipelines run
 MANY passes over the same index (Jaccard, MinHash bands, cluster
 resolution), so the index is the natural materialization boundary:
-content-addressed by the documents file (path + size + mtime), written
-atomically (tmp dir + rename), idempotent to rebuild, sorted within
+content-addressed by the documents file (path + size + mtime), landed
+by the shared publish step (io/store_key.py), sorted within
 partitions by shingle so the index self-join gets clustered keys and
 min/max pruning."""
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key
+from github_miner_spark.io.store_key import PARQUET_DIR_ENTRIES, content_key, publish
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_TEXT_STORE", "/tmp/spark-graft-text")
 
@@ -30,32 +28,19 @@ def _store_dir(sf_dir: str) -> str:
     return os.path.join(STORE_ROOT, key)
 
 
-def materialize_text_index(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def materialize_text_index(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the shingle index for ``sf_dir`` exists on disk; return
-    the store path. Atomic and race-safe like the graph store."""
+    the store path."""
     from github_miner_spark.functions.dedup import shingle_index
     from github_miner_spark.io.tables import load_table
 
-    target = _store_dir(sf_dir)
-    if os.path.isdir(os.path.join(target, "shingles.parquet")) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    def write(stage: str) -> None:
         docs = load_table(spark, "documents", sf_dir)
         shingle_index(docs).sortWithinPartitions("shingle").write.mode(
             "overwrite"
-        ).parquet(os.path.join(tmp, "shingles.parquet"))
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        ).parquet(os.path.join(stage, "shingles.parquet"))
+
+    return publish(STORE_ROOT, _store_dir(sf_dir), ("shingles.parquet",), write)
 
 
 def load_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,7 +50,7 @@ def load_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def materialize_dup_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.8, force: bool = False
+    spark: SparkSession, sf_dir: str, threshold: float = 0.8
 ) -> str:
     """Ensure the near-dup PAIR set (word-3-gram Jaccard >= threshold)
     for ``sf_dir`` exists on disk; return its parquet path.
@@ -74,36 +59,25 @@ def materialize_dup_pairs(
     the candidate join over the shingle index is the expensive pass,
     and its product — (src, dst) doc pairs, dup-pair-bounded, tiny
     relative to the corpus — feeds cluster resolution, canonical-keeper
-    selection AND split assignment. Same content-addressing as the
-    shingle index (the store dir key already folds in the documents
-    file's path/size/mtime), keyed additionally by the threshold;
-    atomic tmp+rename, idempotent."""
-    base = materialize_text_index(spark, sf_dir)
-    name = f"dup_pairs_t{int(round(threshold * 100))}.parquet"
-    target = os.path.join(base, name)
-    if os.path.isdir(target) and not force:
-        return target
+    selection AND split assignment. Published beside the shingle index
+    (the store dir key already folds in the documents file's
+    path/size/mtime), named by the threshold."""
     from github_miner_spark.functions.dedup import jaccard_pairs
     from github_miner_spark.io.tables import load_table
 
-    tmp = tempfile.mkdtemp(prefix="building-pairs-", dir=STORE_ROOT)
-    try:
+    base = materialize_text_index(spark, sf_dir)
+
+    def write(stage: str) -> None:
         docs = load_table(spark, "documents", sf_dir)
         idx = spark.read.parquet(os.path.join(base, "shingles.parquet"))
-        pairs = jaccard_pairs(docs, threshold=threshold, index=idx).select(
+        jaccard_pairs(docs, threshold=threshold, index=idx).select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        out = os.path.join(tmp, name)
-        pairs.write.mode("overwrite").parquet(out)
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(out, target)
-        except OSError:
-            pass
-        return target
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        ).write.mode("overwrite").parquet(stage)
+
+    name = f"dup_pairs_t{int(round(threshold * 100))}.parquet"
+    return publish(
+        STORE_ROOT, os.path.join(base, name), PARQUET_DIR_ENTRIES, write
+    )
 
 
 def load_dup_pairs(
@@ -121,9 +95,7 @@ def load_dup_pairs(
 SOURCE_OVERLAP_VERSION = "v1"
 
 
-def materialize_source_overlap(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
+def materialize_source_overlap(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the SOURCE-level shingle rollup exists beside the shingle
     index; return its directory. Three artifacts, all pure functions of
     (documents, shingle spec):
@@ -139,20 +111,14 @@ def materialize_source_overlap(
     constants, exactly like the walk corpus and the BPE merge table;
     queries that GRADE sketches against them read the rollup, while
     their oracles keep re-deriving everything from spec — a stale or
-    corrupted rollup fails the driver hash instead of silently passing.
-    Atomic tmp+rename, idempotent, race-safe like the other stores."""
+    corrupted rollup fails the oracle hash check instead of silently
+    passing."""
     from github_miner_spark.functions.text import token_hash60
     from github_miner_spark.io.tables import load_table
 
     base = materialize_text_index(spark, sf_dir)
-    target = os.path.join(base, f"source_overlap_{SOURCE_OVERLAP_VERSION}")
-    # gate on an INNER artifact, not the bare directory — a partially
-    # created / foreign target dir must trigger a rebuild, not be
-    # served forever (the sibling stores' discipline)
-    if os.path.isdir(os.path.join(target, "pair_inter.parquet")) and not force:
-        return target
-    tmp = tempfile.mkdtemp(prefix="building-overlap-", dir=STORE_ROOT)
-    try:
+
+    def write(stage: str) -> None:
         docs = load_table(spark, "documents", sf_dir).select("doc_id", "source")
         idx = spark.read.parquet(os.path.join(base, "shingles.parquet"))
         ss = (
@@ -167,12 +133,12 @@ def materialize_source_overlap(
             .localCheckpoint(eager=True)
         )
         ss.sortWithinPartitions("shingle").write.mode("overwrite").parquet(
-            os.path.join(tmp, "source_shingles.parquet")
+            os.path.join(stage, "source_shingles.parquet")
         )
         ss.groupBy("source").agg(
             F.count("*").cast("bigint").alias("n")
         ).write.mode("overwrite").parquet(
-            os.path.join(tmp, "source_sizes.parquet")
+            os.path.join(stage, "source_sizes.parquet")
         )
         a, b = ss.alias("a"), ss.alias("b")
         (
@@ -186,17 +152,15 @@ def materialize_source_overlap(
             )
             .agg(F.count("*").cast("bigint").alias("exact_inter"))
             .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "pair_inter.parquet"))
+            .parquet(os.path.join(stage, "pair_inter.parquet"))
         )
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            pass
-        return target
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    return publish(
+        STORE_ROOT,
+        os.path.join(base, f"source_overlap_{SOURCE_OVERLAP_VERSION}"),
+        ("source_shingles.parquet", "source_sizes.parquet", "pair_inter.parquet"),
+        write,
+    )
 
 
 def load_source_overlap(

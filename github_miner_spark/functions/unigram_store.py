@@ -35,13 +35,11 @@ instead of grading itself.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key
+from github_miner_spark.io.store_key import content_key, publish
 
 STORE_ROOT = os.environ.get(
     "SPARK_GRAFT_UNIGRAM_STORE", "/tmp/spark-graft-unigram"
@@ -261,35 +259,20 @@ def build_unigram_model(
     return counts, segs
 
 
-def materialize_unigram_model(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
+def materialize_unigram_model(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the trained model for ``sf_dir`` exists on disk; return
-    the store path. Atomic tmp+rename, idempotent, race-safe —
-    identical discipline to the walk/BPE stores."""
-    target = _store_dir(sf_dir)
-    if os.path.isdir(os.path.join(target, "vocab.parquet")) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    the store path."""
+
+    def write(stage: str) -> None:
         vocab, segs = build_unigram_model(spark, sf_dir)
-        vocab.write.mode("overwrite").parquet(
-            os.path.join(tmp, "vocab.parquet")
-        )
+        vocab.write.mode("overwrite").parquet(os.path.join(stage, "vocab.parquet"))
         segs.write.mode("overwrite").parquet(
-            os.path.join(tmp, "word_segs.parquet")
+            os.path.join(stage, "word_segs.parquet")
         )
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+
+    return publish(
+        STORE_ROOT, _store_dir(sf_dir), ("vocab.parquet", "word_segs.parquet"), write
+    )
 
 
 def load_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,8 +14,8 @@ phase re-reads it every epoch.
 
 Content-addressed by the same base-table identities the graph store
 keys on PLUS a walk-spec version string, so either a regenerated
-source dir or a walk-algebra change invalidates the store; written
-atomically (tmp dir + rename), idempotent and race-safe to rebuild.
+source dir or a walk-algebra change invalidates the store; landed by
+the shared publish step (io/store_key.py).
 The ORACLES deliberately keep re-deriving the walks from spec
 (unrolled CTE chains) — grading stays independent of the store, so a
 corrupted or stale store fails the driver hash instead of being
@@ -25,13 +25,16 @@ silently graded against itself.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import GRAPH_BASE_TABLES, content_key
+from github_miner_spark.io.store_key import (
+    GRAPH_BASE_TABLES,
+    PARQUET_DIR_ENTRIES,
+    content_key,
+    publish,
+)
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_WALK_STORE", "/tmp/spark-graft-walks")
 
@@ -201,56 +204,25 @@ _BUILDERS = {
 }
 
 
-def materialize_walks(
-    spark: SparkSession, sf_dir: str, scheme: str, force: bool = False
-) -> str:
+def materialize_walks(spark: SparkSession, sf_dir: str, scheme: str) -> str:
     """Ensure the ``scheme`` walk corpus for ``sf_dir`` exists on disk;
-    return the store path. Atomic and race-safe like the graph store.
-    Walks are clustered by start module (sortWithinPartitions) so the
-    skip-gram per-walk self-join reads clustered keys and parquet
-    min/max stats prune anchored-start probes."""
+    return the store path. Each scheme publishes its own
+    ``walks_<scheme>.parquet`` under the shared store dir. Walks are
+    clustered by start module (sortWithinPartitions) so the skip-gram
+    per-walk self-join reads clustered keys and parquet min/max stats
+    prune anchored-start probes."""
     if scheme not in _BUILDERS:
         raise ValueError(f"unknown walk scheme {scheme!r}; one of {sorted(_BUILDERS)}")
-    target = _store_dir(sf_dir)
-    fname = f"walks_{scheme}.parquet"
-    if os.path.isdir(os.path.join(target, fname)) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=f"building-{scheme}-", dir=STORE_ROOT)
-    try:
+
+    def write(stage: str) -> None:
         _BUILDERS[scheme](spark, sf_dir).sortWithinPartitions(
             "start", "seed"
-        ).write.mode("overwrite").parquet(os.path.join(tmp, fname))
-        # force replaces ONLY this scheme's file — the store dir is
-        # deliberately shared with the sibling scheme, whose corpus a
-        # whole-dir rmtree would destroy (and transiently break
-        # concurrent readers of the other scheme)
-        if force:
-            shutil.rmtree(os.path.join(target, fname), ignore_errors=True)
-        try:
-            if os.path.isdir(target):
-                os.rename(os.path.join(tmp, fname), os.path.join(target, fname))
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                os.rename(tmp, target)
-        except OSError:
-            # Race lost. TWO cases: (a) another builder of THIS scheme
-            # won — its file is in place, use theirs; (b) a builder of
-            # the OTHER scheme renamed tmp->target first (dir now
-            # exists but without this scheme's file) — retry the
-            # per-file merge so this finished build is not discarded.
-            if not os.path.isdir(os.path.join(target, fname)):
-                try:
-                    os.rename(
-                        os.path.join(tmp, fname), os.path.join(target, fname)
-                    )
-                except OSError:
-                    pass  # a same-scheme builder won the retry window
-            shutil.rmtree(tmp, ignore_errors=True)
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        ).write.mode("overwrite").parquet(stage)
+
+    base = _store_dir(sf_dir)
+    target = os.path.join(base, f"walks_{scheme}.parquet")
+    publish(STORE_ROOT, target, PARQUET_DIR_ENTRIES, write)
+    return base
 
 
 def load_walks(spark: SparkSession, sf_dir: str, scheme: str = "det") -> DataFrame:

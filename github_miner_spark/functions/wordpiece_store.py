@@ -19,7 +19,8 @@ The corpus-state machinery (delimiter-wrapped symbol strings, greedy
 leftmost non-overlapping replace as the merge step) is shared with
 bpe_store — only the scoring differs — and the store discipline is
 identical: content-addressed by the documents file + a spec version,
-atomic tmp+rename, trained once per corpus version while the ORACLES
+landed by the shared publish step (io/store_key.py), trained once per
+corpus version while the ORACLES
 re-derive the loop from spec (unrolled CTE rounds), keeping grading
 store-independent.
 """
@@ -27,8 +28,6 @@ store-independent.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,7 +37,7 @@ from github_miner_spark.functions.bpe_store import (
     corpus_state,
     split_symbols,
 )
-from github_miner_spark.io.store_key import content_key
+from github_miner_spark.io.store_key import content_key, publish
 
 STORE_ROOT = os.environ.get(
     "SPARK_GRAFT_WORDPIECE_STORE", "/tmp/spark-graft-wordpiece"
@@ -142,31 +141,16 @@ def build_wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def materialize_wordpiece_merges(
-    spark: SparkSession, sf_dir: str, force: bool = False
-) -> str:
+def materialize_wordpiece_merges(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the merge table for ``sf_dir`` exists on disk; return
-    the store path. Atomic tmp-dir + rename, race-safe."""
-    target = _store_dir(sf_dir)
-    fname = "merges.parquet"
-    if os.path.isdir(os.path.join(target, fname)) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    the store path."""
+
+    def write(stage: str) -> None:
         build_wordpiece_merges(spark, sf_dir).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(os.path.join(tmp, fname))
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # another builder won
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        ).parquet(os.path.join(stage, "merges.parquet"))
+
+    return publish(STORE_ROOT, _store_dir(sf_dir), ("merges.parquet",), write)
 
 
 def load_wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,9 +9,8 @@ the derivation (unions + joins over the base tables) is ETL, paid once;
 queries then scan a compact columnar edge table with min/max statistics
 on the BIGINT keys instead of re-running the derivation per query.
 
-The store is content-addressed by source directory and written
-atomically (tmp dir + rename), so concurrent readers either see a
-complete store or build their own; rebuilds are idempotent.
+The store is content-addressed by source directory and landed by the
+shared publish step (io/store_key.py).
 """
 
 from __future__ import annotations
@@ -23,7 +22,7 @@ import tempfile
 from pyspark.sql import SparkSession
 
 from github_miner_spark.graph.model import PropertyGraph, build_edges, build_vertices
-from github_miner_spark.io.store_key import GRAPH_BASE_TABLES, content_key
+from github_miner_spark.io.store_key import GRAPH_BASE_TABLES, content_key, publish
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_GRAPH_STORE", "/tmp/spark-graft-graph")
 
@@ -36,35 +35,24 @@ def _store_dir(sf_dir: str) -> str:
     return os.path.join(STORE_ROOT, key)
 
 
-def materialize_graph(spark: SparkSession, sf_dir: str, force: bool = False) -> str:
+def materialize_graph(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the graph tables for ``sf_dir`` exist on disk; return the
-    store path. Atomic: builds into a temp dir, renames into place."""
-    target = _store_dir(sf_dir)
-    if os.path.isdir(os.path.join(target, "edges.parquet")) and not force:
-        return target
-    os.makedirs(STORE_ROOT, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix="building-", dir=STORE_ROOT)
-    try:
+    store path."""
+
+    def write(stage: str) -> None:
         build_vertices(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(tmp, "vertices.parquet")
+            os.path.join(stage, "vertices.parquet")
         )
         # sort within partitions by dst: degree/dependants scans cluster
         # the hot aggregation key, and parquet min/max stats prune
         # selective dst lookups
         build_edges(spark, sf_dir).sortWithinPartitions("dst").write.mode(
             "overwrite"
-        ).parquet(os.path.join(tmp, "edges.parquet"))
-        if force and os.path.isdir(target):
-            shutil.rmtree(target)
-        try:
-            os.rename(tmp, target)
-        except OSError:
-            # another builder won the race; use theirs
-            shutil.rmtree(tmp, ignore_errors=True)
-        return target
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+        ).parquet(os.path.join(stage, "edges.parquet"))
+
+    return publish(
+        STORE_ROOT, _store_dir(sf_dir), ("vertices.parquet", "edges.parquet"), write
+    )
 
 
 def load_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:

@@ -1,18 +1,29 @@
-"""Shared content-address for the materialized stores.
+"""Shared content address and publish step for the materialized stores.
 
-Six stores (graph, text/shingle, IVF, PQ, int8, walks) key their
-on-disk materialization by the identity of the source files they
-derive from. One helper owns the byte format so the copies can never
-drift apart — the walk store in particular derives FROM the graph
-store, so the two must invalidate on the same base-table identities
-(round-8 review finding: a 6th hand-rolled copy of the stat-hash
-loop)."""
+Every store (graph, text/shingle, IVF, PQ, IVF-PQ, int8, walks, BPE,
+WordPiece, unigram, clustered truth, anchor reach) keys its on-disk
+materialization by the identity of the source files it derives from
+(:func:`content_key`), and lands it with :func:`publish`. One helper
+owns each so the copies can never drift apart — the walk store in
+particular derives FROM the graph store, so the two must invalidate on
+the same base-table identities.
+
+Publish contract: a store artifact is a directory ``target`` under a
+store ``root``, complete when it holds every name in ``entries``.
+Builders write into a private ``root/building-*`` stage and land it
+with one ``os.rename``, so a reader sees either a complete ``target``
+or none; concurrent builders of one target all return the winner's
+copy; a crashed build leaves only a ``building-*`` orphan, which no
+reader looks at; an incomplete ``target`` is moved aside and rebuilt,
+never served."""
 
 from __future__ import annotations
 
 import hashlib
 import os
-from collections.abc import Iterable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterable
 
 
 def content_key(
@@ -48,3 +59,64 @@ GRAPH_BASE_TABLES = (
     "part.parquet",
     "lineitem.parquet",
 )
+
+# The entries of a target that IS one Spark parquet output dir: Spark
+# writes _SUCCESS last.
+PARQUET_DIR_ENTRIES = ("_SUCCESS",)
+
+
+def _is_complete(target: str, entries: Iterable[str]) -> bool:
+    """True when ``target`` is a directory holding every name in
+    ``entries``."""
+    return os.path.isdir(target) and all(
+        os.path.exists(os.path.join(target, e)) for e in entries
+    )
+
+
+def publish(
+    root: str,
+    target: str,
+    entries: Iterable[str],
+    write: Callable[[str], None],
+) -> str:
+    """Return ``target``, building it first unless it already holds
+    every name in ``entries``.
+
+    A build calls ``write(stage)`` on a fresh ``root/building-*`` dir
+    and renames the stage onto ``target`` (its parent is created). If
+    the rename fails, a complete ``target`` means another builder won
+    the race and its copy is returned; an incomplete one is moved aside
+    under ``root/building-*`` and the rename retried once. A ``target``
+    still incomplete after that raises. The stage is always removed.
+
+    Nested artifacts are ordinary targets under a key dir; a Spark
+    parquet dir target passes :data:`PARQUET_DIR_ENTRIES`."""
+    entries = tuple(entries)
+    if _is_complete(target, entries):
+        return target
+    os.makedirs(root, exist_ok=True)
+    stage = tempfile.mkdtemp(prefix="building-", dir=root)
+    try:
+        write(stage)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        try:
+            os.rename(stage, target)
+            return target
+        except OSError:
+            if _is_complete(target, entries):
+                return target
+        # an incomplete target is in the way: move it aside, never serve it
+        aside = tempfile.mkdtemp(prefix="building-", dir=root)
+        try:
+            os.rename(target, os.path.join(aside, "incomplete"))
+        except FileNotFoundError:
+            pass
+        shutil.rmtree(aside, ignore_errors=True)
+        try:
+            os.rename(stage, target)
+        except OSError:
+            if not _is_complete(target, entries):
+                raise
+        return target
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)

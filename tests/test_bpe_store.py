@@ -1,36 +1,22 @@
-"""BPE merge-table store: idempotent rebuild and content-address
-invalidation (the walk store's discipline; the from-spec training
-replay lives in test_pipeline.py::
-test_bpe_vocab_induction_matches_python_reference, which now also
-witnesses the store content since bpe_vocab_induction serves from
-it)."""
+"""BPE merge-table store content (the store contract is in
+test_store_contract.py; the from-spec training replay lives in
+test_pipeline.py::test_bpe_vocab_induction_matches_python_reference,
+which also witnesses the store content since bpe_vocab_induction
+serves from it)."""
 
 from __future__ import annotations
-
-import os
 
 from github_miner_spark.functions import bpe_store
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_materialize_idempotent(spark):
-    p = bpe_store.materialize_bpe_merges(spark, SF)
-    f = os.path.join(p, "merges.parquet")
-    mtime = os.stat(f).st_mtime_ns
-    assert bpe_store.materialize_bpe_merges(spark, SF) == p
-    assert os.stat(f).st_mtime_ns == mtime
+def test_merge_table_has_one_row_per_round(spark):
     rows = bpe_store.load_bpe_merges(spark, SF).collect()
     assert len(rows) == bpe_store.BPE_MERGE_ROUNDS
     assert sorted(r["step"] for r in rows) == list(
         range(1, bpe_store.BPE_MERGE_ROUNDS + 1)
     )
-
-
-def test_spec_version_participates_in_address(monkeypatch):
-    before = bpe_store._store_dir(SF)
-    monkeypatch.setattr(bpe_store, "BPE_SPEC_VERSION", "test-bump")
-    assert bpe_store._store_dir(SF) != before
 
 
 def test_apply_merges_is_greedy_leftmost(spark):

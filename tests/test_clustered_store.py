@@ -1,12 +1,10 @@
 """Clustered-ladder exact-truth rollup store (VERDICT r12 item 6):
-bit-parity with a fresh inline derivation, idempotent rebuild, and
-spec-version address participation — the shared store replay
-discipline, applied to the truth leg serving all six
-clustered_*_recall_at_k graders."""
+bit-parity with a fresh inline derivation for the truth leg serving
+all six clustered_*_recall_at_k graders (the store contract is in
+test_store_contract.py)."""
 
 from __future__ import annotations
 
-import os
 
 from github_miner_spark.functions import clustered_store as C
 
@@ -19,15 +17,3 @@ def test_rollup_serves_bit_identical_truth(spark):
     assert served == fresh
     assert served, "truth rollup must not be empty at sf0.001"
 
-
-def test_materialize_idempotent(spark):
-    p = C.materialize_clu_truth(spark, SF)
-    mtime = os.stat(p).st_mtime_ns
-    assert C.materialize_clu_truth(spark, SF) == p
-    assert os.stat(p).st_mtime_ns == mtime
-
-
-def test_spec_version_participates_in_address(monkeypatch):
-    before = C._store_dir(SF)
-    monkeypatch.setattr(C, "CLU_TRUTH_SPEC_VERSION", "test-bump")
-    assert C._store_dir(SF) != before

@@ -1,11 +1,10 @@
 """Anchored-reachability rollup store: bit-parity with a fresh
-derivation, idempotent rebuild, and spec-version address participation
-— the shared store replay discipline, applied to the rollup serving
-anf_neighborhood_function's exact-grading side."""
+derivation for the rollup serving anf_neighborhood_function's
+exact-grading side (the store contract is in
+test_store_contract.py)."""
 
 from __future__ import annotations
 
-import os
 
 from github_miner_spark.functions import graph_stats_store as G
 
@@ -18,15 +17,3 @@ def test_rollup_serves_bit_identical_counts(spark):
     assert served == fresh
     assert served, "rollup must not be empty at sf0.001"
 
-
-def test_materialize_idempotent(spark):
-    p = G.materialize_anchor_reach(spark, SF)
-    mtime = os.stat(p).st_mtime_ns
-    assert G.materialize_anchor_reach(spark, SF) == p
-    assert os.stat(p).st_mtime_ns == mtime
-
-
-def test_spec_version_participates_in_address(monkeypatch):
-    before = G._store_dir(SF)
-    monkeypatch.setattr(G, "ANCHOR_REACH_SPEC_VERSION", "test-bump")
-    assert G._store_dir(SF) != before

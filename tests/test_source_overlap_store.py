@@ -1,12 +1,10 @@
-"""Source-overlap rollup store: bit-parity with a fresh derivation,
-idempotent rebuild, and spec-version participation in the address —
-the walk store's replay discipline applied to the rollup that serves
-kmv_set_operation_estimates' exact-grading side and
-source_overlap_matrix (VERDICT r8 item 4)."""
+"""Source-overlap rollup store: bit-parity with a fresh derivation for
+the rollup that serves kmv_set_operation_estimates' exact-grading side
+and source_overlap_matrix (VERDICT r8 item 4; the store contract is in
+test_store_contract.py)."""
 
 from __future__ import annotations
 
-import os
 
 from pyspark.sql import functions as F
 
@@ -62,24 +60,3 @@ def test_rollup_serves_bit_identical_aggregates(spark):
         map(tuple, fresh_inter.collect())
     )
 
-
-def test_materialize_idempotent(spark):
-    p = text_store.materialize_source_overlap(spark, SF)
-    f = os.path.join(p, "pair_inter.parquet")
-    mtime = os.stat(f).st_mtime_ns
-    assert text_store.materialize_source_overlap(spark, SF) == p
-    assert os.stat(f).st_mtime_ns == mtime
-
-
-def test_spec_version_participates_in_address(monkeypatch):
-    before_version = text_store.SOURCE_OVERLAP_VERSION
-    monkeypatch.setattr(text_store, "SOURCE_OVERLAP_VERSION", "test-bump")
-    assert text_store.SOURCE_OVERLAP_VERSION != before_version
-    # the artifact directory name embeds the version, so a bumped spec
-    # can never resolve to the old rollup
-    base = text_store._store_dir(SF)
-    bumped = os.path.join(
-        base, f"source_overlap_{text_store.SOURCE_OVERLAP_VERSION}"
-    )
-    old = os.path.join(base, f"source_overlap_{before_version}")
-    assert bumped != old

@@ -1,13 +1,12 @@
 """Unigram-LM tokenizer store: FULL from-spec Python replay (the
 third independent implementation — catches bugs mirrored into the
-oracle, which parity cannot), store idempotence + spec-version
-addressing, the broadcast plan shape of the application join, and the
-raise-don't-cap word-length guard."""
+oracle, which parity cannot), the broadcast plan shape of the
+application join, and the raise-don't-cap word-length guard (the
+store contract is in test_store_contract.py)."""
 
 from __future__ import annotations
 
 import math
-import os
 import re
 from collections import Counter
 
@@ -106,20 +105,6 @@ def test_from_spec_python_replay(spark):
     }
     assert {w: (s, n) for w, (s, n, _f) in segs.items()} == py_segs
     assert {w: f for w, (_s, _n, f) in segs.items()} == py_words
-
-
-def test_materialize_idempotent(spark):
-    p = U.materialize_unigram_model(spark, SF)
-    f = os.path.join(p, "vocab.parquet")
-    mtime = os.stat(f).st_mtime_ns
-    assert U.materialize_unigram_model(spark, SF) == p
-    assert os.stat(f).st_mtime_ns == mtime
-
-
-def test_spec_version_participates_in_address(monkeypatch):
-    before = U._store_dir(SF)
-    monkeypatch.setattr(U, "UNIGRAM_SPEC_VERSION", "test-bump")
-    assert U._store_dir(SF) != before
 
 
 def test_application_join_broadcasts(spark):

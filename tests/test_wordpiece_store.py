@@ -1,12 +1,12 @@
-"""WordPiece store contracts: store discipline (idempotent rebuild,
-content-address invalidation), the likelihood-argmax training step
-against an independent Python reference, and greedy longest-match
-(max-munch) segmentation against a Python reference walk."""
+"""WordPiece store contracts: the merge table's shape and min-count
+floor, the likelihood-argmax training step against an independent
+Python reference, and greedy longest-match (max-munch) segmentation
+against a Python reference walk (the store contract is in
+test_store_contract.py)."""
 
 from __future__ import annotations
 
 import math
-import os
 import re
 from collections import Counter
 
@@ -26,12 +26,7 @@ def _tokenized_docs(spark):
     return out
 
 
-def test_materialize_idempotent_and_min_count(spark):
-    p = wordpiece_store.materialize_wordpiece_merges(spark, SF)
-    f = os.path.join(p, "merges.parquet")
-    mtime = os.stat(f).st_mtime_ns
-    assert wordpiece_store.materialize_wordpiece_merges(spark, SF) == p
-    assert os.stat(f).st_mtime_ns == mtime
+def test_merge_table_rows_and_min_count(spark):
     rows = wordpiece_store.load_wordpiece_merges(spark, SF).collect()
     assert len(rows) == wordpiece_store.WP_MERGE_ROUNDS
     assert sorted(r["step"] for r in rows) == list(
@@ -39,12 +34,6 @@ def test_materialize_idempotent_and_min_count(spark):
     )
     # the min-count floor is the spec: no hapax-chain degeneracy
     assert all(r["n_pair"] >= wordpiece_store.WP_MIN_PAIR_COUNT for r in rows)
-
-
-def test_spec_version_participates_in_address(monkeypatch):
-    before = wordpiece_store._store_dir(SF)
-    monkeypatch.setattr(wordpiece_store, "WP_SPEC_VERSION", "test-bump")
-    assert wordpiece_store._store_dir(SF) != before
 
 
 def test_first_merge_is_true_likelihood_argmax(spark):
