@@ -269,8 +269,8 @@ CORE_LINE = [
 ]
 
 # Second lane (VERDICT r4 item 3): the iterative family re-timed with
-# SPARK_GRAFT_FORCE_DISTRIBUTED=1, which zeroes every driver-collect
-# gate (graph/algorithms.py:_gate, graph/paths.py:_gate) so the
+# SPARK_GRAFT_FORCE_DISTRIBUTED=1, which skips every driver rung of the
+# execution-path gate (github_miner_spark/gate.py) so the
 # DISTRIBUTED loops — the only code path that runs at 100 TB — have a
 # per-round timed floor next to the hybrid numbers, not just parity
 # tests.
@@ -652,8 +652,11 @@ def main() -> None:
     if not os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED") and not os.environ.get(
         "SPARK_GRAFT_SKIP_SCALING_LANE"
     ):
+        from unittest.mock import patch
+
         from pyspark.sql import functions as F
 
+        from github_miner_spark.gate import LIMITS
         from github_miner_spark.graph.algorithms import (
             connected_components,
             strongly_connected_components,
@@ -690,6 +693,12 @@ def main() -> None:
             g1, g3 = scaled(1), scaled(3)
             scaling_reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
 
+            def distributed_only(*gates):
+                # the force flag already skips the driver rungs; empty
+                # ladders turn the task kernels off too, so the entry
+                # times the distributed loop itself
+                return patch.dict(LIMITS, {g: () for g in gates})
+
             def exponent(label, fn):
                 fn(g1)  # warm
                 fn(g3)  # warm the 3x shape too — its first run JITs new stages
@@ -712,47 +721,46 @@ def main() -> None:
                     "acceptance": "median < 1.1",
                 }
 
-            # whole_core_task_threshold=0: the lane pins the DISTRIBUTED
+            # SCC and WCC ladders emptied: the lane pins the DISTRIBUTED
             # split machinery (trim + WCC star contraction + per-WCC
             # task kernels — the path a core too big for one task
             # takes), not the single-group shortcut a bench-sized core
             # would otherwise route to
-            exponent(
-                "scc",
-                lambda g: strongly_connected_components(
-                    g, whole_core_task_threshold=0
-                ).count(),
-            )
-            # task_threshold=0: the CC-family distributed floor in the
-            # lane above records the whole-graph union-find task kernel
-            # at bench SF (it is executor-side, not a driver gate —
-            # ADVICE r8); this entry pins the star-contraction LOOP
-            # itself, so the at-scale CC machinery keeps a direct
-            # per-round witness with a measured exponent.
-            exponent(
-                "connected_components",
-                lambda g: connected_components(g, task_threshold=0).count(),
-            )
-            # per_root_task_threshold=0: the lane pins the DISTRIBUTED
-            # two-sweep pipeline's exponent (the path a 100 TB edge set
-            # takes), not the task-local kernel a bench-sized graph
-            # would otherwise route to
-            exponent(
-                "all_shortest_paths",
-                lambda g: all_shortest_paths_multi(
-                    g,
-                    ANCHOR_MODULE,
-                    [132 + 2 * hi if g is g3 else 132],
-                    per_root_task_threshold=0,
-                ).count(),
-            )
+            with distributed_only(
+                "strongly_connected_components", "connected_components"
+            ):
+                exponent(
+                    "scc", lambda g: strongly_connected_components(g).count()
+                )
+            # the CC-family distributed floor in the lane above records
+            # the whole-graph union-find task kernel at bench SF (it is
+            # executor-side, not a driver rung — ADVICE r8); this entry
+            # pins the star-contraction LOOP itself, so the at-scale CC
+            # machinery keeps a direct per-round witness with a
+            # measured exponent.
+            with distributed_only("connected_components"):
+                exponent(
+                    "connected_components",
+                    lambda g: connected_components(g).count(),
+                )
+            # the lane pins the DISTRIBUTED two-sweep pipeline's
+            # exponent (the path a 100 TB edge set takes), not the
+            # task-local kernel a bench-sized graph would otherwise
+            # route to
+            with distributed_only("all_shortest_paths_multi"):
+                exponent(
+                    "all_shortest_paths",
+                    lambda g: all_shortest_paths_multi(
+                        g, ANCHOR_MODULE, [132 + 2 * hi if g is g3 else 132]
+                    ).count(),
+                )
             # round 10 (VERDICT r9 item 3): exponents for the
             # remaining iterative floors — louvain, k-core,
             # betweenness, closeness, ANF. Whole-graph entries see 3x
             # nodes+edges directly; the rooted sweeps start from the
             # copy-0 anchor and traverse the whole chain through the
             # link edges, so 3x data AND 3x depth (the ASP protocol).
-            # Task-kernel thresholds zeroed — the lane times the
+            # Task-kernel ladders emptied — the lane times the
             # distributed loops themselves. OPT-IN
             # (SPARK_GRAFT_EXTENDED_SCALING_LANE=1): these five
             # entries cost ~15-20 min under the full 3-pair protocol
@@ -780,32 +788,27 @@ def main() -> None:
                     _anf_distributed_reg_states,
                 )
 
-                exponent(
-                    "louvain_phase1",
-                    lambda g: louvain(
-                        g, max_sweeps=2, levels=1, task_threshold=0
-                    ).count(),
-                )
-                exponent(
-                    "k_core",
-                    lambda g: coreness(g, task_threshold=0).count(),
-                )
-                exponent(
-                    "betweenness",
-                    lambda g: betweenness_centrality(
-                        g,
-                        [ANCHOR_MODULE],
-                        backward_task_threshold=0,
-                        per_root_task_threshold=0,
-                    ).count(),
-                )
+                with distributed_only("louvain"):
+                    exponent(
+                        "louvain_phase1",
+                        lambda g: louvain(g, max_sweeps=2, levels=1).count(),
+                    )
+                with distributed_only("coreness"):
+                    exponent("k_core", lambda g: coreness(g).count())
+                with distributed_only(
+                    "betweenness_centrality", "betweenness_backward"
+                ):
+                    exponent(
+                        "betweenness",
+                        lambda g: betweenness_centrality(
+                            g, [ANCHOR_MODULE]
+                        ).count(),
+                    )
+                # no per_root_task opt-in: the windowed BFS loop
                 exponent(
                     "closeness",
                     lambda g: bfs_depths(
-                        g,
-                        roots=[ANCHOR_MODULE],
-                        broadcast_frontier=True,
-                        per_root_task_threshold=0,
+                        g, roots=[ANCHOR_MODULE], broadcast_frontier=True
                     ).count(),
                 )
                 exponent(
@@ -838,12 +841,12 @@ def main() -> None:
         f"smallest of {passes + _extra} — additive-contention guard, "
         "VERDICT r8 #2) — per-query statistic named in 'stats'",
         "distributed_lane": {
-            "note": "SPARK_GRAFT_FORCE_DISTRIBUTED=1, all driver-collect "
-            "gates 0. Executor-side task-kernel shortcuts (whole-core "
-            "SCC, whole-graph CC union-find, per-root path kernels) are "
-            "NOT driver gates and stay active here at bench SF; the "
+            "note": "SPARK_GRAFT_FORCE_DISTRIBUTED=1: every driver rung "
+            "of github_miner_spark/gate.py:LIMITS skipped. Executor-side "
+            "task rungs (whole-core SCC, whole-graph CC union-find, "
+            "per-root path kernels) stay active here at bench SF; the "
             "scaling lane pins the distributed machinery itself by "
-            "zeroing the task thresholds (scc/CC/ASP entries)",
+            "emptying those gates' ladders (scc/CC/ASP entries)",
             "queries": dist_timings,
             "spreads": {n: _spread(ts) for n, ts in dist_samples.items()},
             "samples": dist_samples,
@@ -851,7 +854,7 @@ def main() -> None:
         },
         "scaling_lane": {
             "note": "forced-distributed scc/CC/ASP at 1x and 3x synthetic "
-            "scale (task-kernel thresholds zeroed — the lane times the "
+            "scale (gate.LIMITS ladders emptied — the lane times the "
             "distributed loops themselves); 3 interleaved (1x,3x) pairs "
             "per algorithm, exponent "
             "= ln(t3/t1)/ln(3) per pair, median recorded; acceptance "

@@ -71,7 +71,7 @@ def build_anchor_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
             e,
             roots=anchors,
             broadcast_frontier=True,
-            per_root_task_threshold=5_000_000,
+            per_root_task=True,
         )
         .filter(F.col("depth") <= ANF_HOPS)
         .localCheckpoint(eager=True)

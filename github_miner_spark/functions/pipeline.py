@@ -28,7 +28,7 @@ def curate_and_export(
     lang: str = "en",
     min_quality: float = 0.65,
     token_band: tuple[int, int] = (30, 70),
-    jaccard_threshold: float = 0.8,
+    min_jaccard: float = 0.8,
 ) -> dict:
     """Run the full curation funnel and export the survivors.
 
@@ -66,7 +66,7 @@ def curate_and_export(
 
     # near-dup resolution: Jaccard pairs over the survivors only, star-
     # contraction components, keep the min doc_id of every cluster
-    pairs = jaccard_pairs(exact_kept, threshold=jaccard_threshold).select(
+    pairs = jaccard_pairs(exact_kept, threshold=min_jaccard).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     comp = connected_components(pairs)

@@ -27,11 +27,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-# Effective driver-collect gate for the hybrid fast paths: one shared
-# definition (graph/paths.py) so the bench's forced-distributed lane
-# can never desynchronize between the paths and algorithms families.
-from github_miner_spark.graph.paths import _gate  # noqa: F401
+from github_miner_spark.gate import LIMITS, choose_path
 
 # Cap on the per-root task kernels' replication volume (|roots| x E
 # rows). The kernels replicate the edge list once per root through a
@@ -142,8 +138,6 @@ def pagerank(
     loop_shuffle_width: int | None = None,
     barrier_every: int = 5,
     sources: list[int] | None = None,
-    collect_threshold: int = 2_000_000,
-    task_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Power-iteration PageRank, OUTGOING direction, non-normalized
     Brin-Page form: rank_v = (1-d) + d * sum(rank_u / outdeg_u) — the
@@ -190,7 +184,7 @@ def pagerank(
 
     # Hybrid fast path (README: anchored-probe hybrid execution):
     # 20 power iterations cost 4+ driver barriers distributed; under
-    # the collect threshold the weighted edge list collects and the
+    # the ``pagerank`` gate the weighted edge list collects and the
     # same recurrence runs as a numpy matvec. Ranks are genuine
     # float sums, so the two paths agree to accumulation order —
     # i.e. to the repo-wide 6dp rounding convention every consumer
@@ -205,9 +199,10 @@ def pagerank(
     # which MEASURES 2x the kernel at bench SF (2.0-3.1s vs 1.0-1.4s
     # same-session) — so the kernel outranks it whenever both apply;
     # the twin remains for explicit-vertices callers and as the pinned
-    # parity anchor. Past the thresholds the distributed loop below is
-    # the at-scale path.
-    if vertices is None and task_threshold > 0 and n_w <= task_threshold:
+    # parity anchor. Past the gate the distributed loop below is the
+    # at-scale path.
+    path = choose_path("pagerank", n_w, () if vertices is None else ("task",))
+    if path == "task":
         return (
             weighted.withColumn("g", F.lit(1))
             .groupBy("g")
@@ -217,8 +212,7 @@ def pagerank(
             )
         )
 
-    thr = _gate(collect_threshold)
-    if thr > 0 and n_w <= thr:
+    if path == "driver":
         return _pagerank_driver(
             weighted, verts, iterations, damping, sources
         )
@@ -323,8 +317,6 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     loop_shuffle_width: int | None = None,
-    collect_threshold: int = 2_000_000,
-    task_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Weakly-connected components via alternating large-star/small-star
     pointer doubling (the MapReduce CC algorithm of Kiveris et al.,
@@ -358,12 +350,12 @@ def connected_components(
     )
     n_pairs = pairs.count()
     # Hybrid fast path (README: anchored-probe hybrid execution):
-    # under the collect threshold the deduped pair list collects and
-    # path-compressed union-find labels the graph exactly —
-    # integer work, bit-identical to the star-contraction result.
+    # under the ``connected_components`` gate the deduped pair list
+    # collects and path-compressed union-find labels the graph exactly
+    # — integer work, bit-identical to the star-contraction result.
     # The distributed O(log^2 n) loop engages unchanged beyond it.
-    thr = _gate(collect_threshold)
-    if thr > 0 and n_pairs <= thr:
+    path = choose_path("connected_components", n_pairs)
+    if path == "driver":
         nodes = [r["id"] for r in verts.collect()]
         comp = _union_find_components(
             nodes, [(r["a"], r["b"]) for r in pairs.collect()]
@@ -374,14 +366,13 @@ def connected_components(
     # Whole-graph task shortcut (the SCC whole-core pattern): a pair
     # set that fits one executor task is labeled by path-compressed
     # union-find inside ONE applyInPandas group — one job instead of
-    # O(log^2 n) star-contraction barriers. Executor-side compute,
-    # deliberately NOT behind the driver-collect _gate; callers that
-    # need the distributed rounds timed (the SCC scaling lane) pass
-    # task_threshold=0, and a pair set above the threshold takes the
-    # star contraction unchanged — the 100 TB path. Isolated and
-    # self-loop-only vertices come back via the same left-join tail
-    # the distributed loop uses.
-    if task_threshold > 0 and n_pairs <= task_threshold:
+    # O(log^2 n) star-contraction barriers. Executor-side compute, so
+    # the force flag leaves it on; the scaling lane empties the gate
+    # to time the distributed rounds, and a pair set above the rung
+    # takes the star contraction unchanged — the 100 TB path. Isolated
+    # and self-loop-only vertices come back via the same left-join
+    # tail the distributed loop uses.
+    if path == "task":
         roots = (
             pairs.withColumn("g", F.lit(1))
             .groupBy("g")
@@ -479,7 +470,7 @@ def _tarjan_component_group(pdf):
     """applyInPandas kernel: one weakly-connected component's edge list
     arrives as a pandas frame (src, dst[, wcc]); iterative Tarjan labels
     it task-locally. Runs INSIDE an executor task — no driver collect,
-    memory bounded by the component-size threshold the caller enforces."""
+    memory bounded by the scc_component gate the caller checks."""
     import pandas as pd
 
     pairs = list(zip(pdf["src"].astype(int), pdf["dst"].astype(int)))
@@ -549,10 +540,7 @@ def _tarjan_components(edge_list: list[tuple[int, int]], nodes: list[int]) -> di
 def strongly_connected_components(
     edges: DataFrame,
     max_iter: int = 200,
-    core_collect_threshold: int = 5_000_000,
     loop_shuffle_width: int | None = None,
-    component_task_threshold: int = 5_000_000,
-    whole_core_task_threshold: int | None = None,
 ) -> DataFrame:
     """SCC, hybrid two-level (the set-at-a-time analog of the
     reference's algo.scc 'huge' graph run,
@@ -565,27 +553,27 @@ def strongly_connected_components(
          mostly acyclic) this removes almost everything in O(depth)
          rounds of one degree-flags shuffle each, leaving only the
          cyclic core. Trim engages only when the deduped edge set
-         exceeds component_task_threshold: its job is shrinking a
+         is past the ``scc_component`` gate: its job is shrinking a
          too-big graph, and a graph that already fits one executor
          task goes straight to the WCC split instead of paying
          O(fringe depth) peeling barriers.
-      1a. If the core is small (<= core_collect_threshold edges —
-         the usual outcome: the reference's real corpus has max SCC
-         size 9), finish with iterative Tarjan on the driver. A 100 TB
-         near-DAG trims to a core that fits comfortably in driver
-         memory; paying 30+ distributed rounds of driver-loop latency
-         to color a few thousand nodes is the wrong trade.
-      1b'. If the whole core fits ONE executor task
-         (<= ``whole_core_task_threshold`` edges, default =
-         ``component_task_threshold``), skip the WCC split and label
-         the core task-locally as a single applyInPandas group — the
-         split's only job is carving a too-big core into task-sized
-         pieces, and its star-contraction barriers were the dominant
+      1a. If the core is small (the ``strongly_connected_components``
+         gate's driver rung — the usual outcome: the reference's real
+         corpus has max SCC size 9), finish with iterative Tarjan on
+         the driver. A 100 TB near-DAG trims to a core that fits
+         comfortably in driver memory; paying 30+ distributed rounds
+         of driver-loop latency to color a few thousand nodes is the
+         wrong trade.
+      1b'. If the whole core fits ONE executor task (the same gate's
+         task rung), skip the WCC split and label the core
+         task-locally as a single applyInPandas group — the split's
+         only job is carving a too-big core into task-sized pieces,
+         and its star-contraction barriers were the dominant
          distributed-floor cost at bench SF.
       1b. Otherwise, split the core by WEAKLY-connected component
          (star contraction, O(log^2 n) rounds; every SCC is inside one
          WCC), shuffle the edges BY COMPONENT, and label each component
-         that fits an executor task (<= component_task_threshold edges)
+         that fits an executor task (the ``scc_component`` gate)
          task-locally with iterative Tarjan via applyInPandas — all
          components in parallel, no driver collect, memory bounded per
          task. Cycles in real dependency graphs are local, so this
@@ -622,33 +610,19 @@ def strongly_connected_components(
     with _loop_shuffle_partitions(
         spark, enabled=True, width=loop_shuffle_width
     ):
-        return _scc_impl(
-            dedup, n_edges, max_iter, core_collect_threshold,
-            component_task_threshold,
-            component_task_threshold
-            if whole_core_task_threshold is None
-            else whole_core_task_threshold,
-        )
+        return _scc_impl(dedup, n_edges, max_iter)
 
 
-def _scc_impl(
-    dedup: DataFrame,
-    n_edges: int,
-    max_iter: int,
-    core_collect_threshold: int,
-    component_task_threshold: int,
-    whole_core_task_threshold: int,
-) -> DataFrame:
-
-    # Fast path: if the WHOLE deduped edge set already fits under the
-    # collect threshold, the distributed trim is pure barrier latency —
-    # its only job is to shrink a too-big-to-collect graph down to a
+def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
+    gate = "strongly_connected_components"
+    # Fast path: if the WHOLE deduped edge set already fits the driver
+    # rung, the distributed trim is pure barrier latency — its only
+    # job is to shrink a too-big-to-collect graph down to a
     # collectable cyclic core. One collect supplies the edge list and
     # the vertex universe (incl. self-loop-only vertices) for driver
-    # Tarjan (~5s -> <2s at sf0.1; at 100 TB the count exceeds the
-    # threshold and the trim path below engages unchanged).
-    thr0 = _gate(core_collect_threshold)
-    if thr0 > 0 and n_edges <= thr0:
+    # Tarjan (~5s -> <2s at sf0.1; at 100 TB the count is past the
+    # rung and the trim path below engages unchanged).
+    if choose_path(gate, n_edges) == "driver":
         rows = dedup.collect()
         nodes = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
         comp = _tarjan_components(
@@ -722,13 +696,12 @@ def _scc_impl(
     # graphs are mostly acyclic) this removes almost everything in
     # O(depth) rounds of one degree-flags-derived edge checkpoint each,
     # leaving only the cyclic core. Trim's ONLY job is shrinking a
-    # too-big graph below the task/collect thresholds, so when the
+    # too-big graph below the task/driver rungs, so when the
     # whole deduped edge set ALREADY fits one executor task the
     # O(fringe depth) peeling barriers buy nothing — phase 1's WCC
-    # split labels the untrimmed graph task-locally either way. Above
-    # the threshold (any real corpus) the fixpoint trim engages
-    # unchanged.
-    if n_edges > component_task_threshold:
+    # split labels the untrimmed graph task-locally either way. Past
+    # the gate (any real corpus) the fixpoint trim engages unchanged.
+    if choose_path("scc_component", n_edges) == "distributed":
         remaining_verts, remaining_edges = _trim(remaining_edges, max_iter)
     else:
         remaining_verts = _vertex_ids(remaining_edges).localCheckpoint(eager=True)
@@ -738,8 +711,8 @@ def _scc_impl(
     )
 
     core_edge_count = remaining_edges.count()
-    thr0 = _gate(core_collect_threshold)
-    if thr0 > 0 and core_edge_count <= thr0:
+    path = choose_path(gate, core_edge_count)
+    if path == "driver":
         if core_edge_count > 0:
             comp = _tarjan_components(
                 [(r["src"], r["dst"]) for r in remaining_edges.collect()],
@@ -764,13 +737,12 @@ def _scc_impl(
     # bench SF, all barrier latency on a 31k-edge core). Run the
     # per-component Tarjan kernel on the core as ONE group instead:
     # executor-side compute with the same per-task memory budget the
-    # per-WCC path already accepts, deliberately NOT behind the
-    # driver-collect _gate (the established task-kernel precedent).
-    # ``whole_core_task_threshold=0`` disables the shortcut alone
-    # (the scaling lane's pin: WCC split + per-WCC kernels stay
-    # timed); a core above the threshold takes the WCC split
-    # unchanged — the 100 TB path.
-    if whole_core_task_threshold > 0 and core_edge_count <= whole_core_task_threshold:
+    # per-WCC path already accepts, so the force flag leaves it on
+    # (the established task-kernel precedent). Emptying the gate's
+    # task rung disables the shortcut alone (the scaling lane's pin:
+    # WCC split + per-WCC kernels stay timed); a core past the rung
+    # takes the WCC split unchanged — the 100 TB path.
+    if path == "task":
         if core_edge_count > 0:
             scc_core = (
                 remaining_edges.withColumn("g", F.lit(1))
@@ -793,37 +765,27 @@ def _scc_impl(
     #     local) shuffle BY COMPONENT into applyInPandas and are labeled
     #     task-locally by iterative Tarjan, all components in parallel,
     #     no driver collect anywhere (this is executor-side compute,
-    #     deliberately NOT behind the driver-collect _gate);
-    #   - components above ``component_task_threshold`` edges fall
-    #     through to the distributed FW-BW-Trim coloring loop below,
-    #     which then runs on those components only.
+    #     so the force flag leaves it on);
+    #   - components past the ``scc_component`` gate fall through to
+    #     the distributed FW-BW-Trim coloring loop below, which then
+    #     runs on those components only.
     # WCC uses star contraction (O(log^2 n) rounds regardless of
     # diameter), so the whole split costs ~log rounds + one shuffle —
     # replacing a per-core O(diameter) coloring fixpoint whenever the
-    # core has no task-sized-exceeding component.
-    # WCC inherits the caller's driver-collect bound: a caller that
-    # lowered core_collect_threshold to cap driver memory must not get
-    # a larger pair collect through connected_components' own gate
-    # (and with the gate forced to 0, the star contraction runs fully
-    # distributed here too)
-    # WCC's own task shortcut inherits the whole-core knob: a caller
-    # pinning the distributed split machinery (the scaling lane's
-    # whole_core_task_threshold=0) must get the star-contraction
-    # rounds it came to measure, not a union-find kernel
-    wcc = connected_components(
-        remaining_edges,
-        max_iter=max_iter,
-        collect_threshold=min(core_collect_threshold, 2_000_000),
-        task_threshold=whole_core_task_threshold,
-    )
+    # core has no task-sized-exceeding component. It takes its own
+    # ``connected_components`` gate: a caller pinning the distributed
+    # split machinery (the scaling lane) empties both gates.
+    wcc = connected_components(remaining_edges, max_iter=max_iter)
     edges_w = remaining_edges.join(
         wcc.select(F.col("id").alias("src"), F.col("component").alias("wcc")),
         "src",
     ).localCheckpoint(eager=True)
+    # the per-row form of choose_path("scc_component", n_e) == "task"
+    component_rows = dict(LIMITS["scc_component"]).get("task", -1)
     big_ids = (
         edges_w.groupBy("wcc")
         .agg(F.count("*").alias("n_e"))
-        .filter(F.col("n_e") > component_task_threshold)
+        .filter(F.col("n_e") > component_rows)
         .select("wcc")
         .localCheckpoint(eager=True)
     )
@@ -925,7 +887,7 @@ def _scc_impl(
         # paying another full coloring fixpoint — this is what bounds
         # the outer round count by the SCC-condensation depth rather
         # than the number of color classes. The shrunken core then
-        # re-checks the driver-Tarjan gate.
+        # re-checks the driver-Tarjan rung.
         prev_remaining = remaining_verts.join(scc, ["id"], "left_anti").localCheckpoint(
             eager=True
         )
@@ -941,8 +903,7 @@ def _scc_impl(
             peeled.select("id", F.col("id").alias("component")).localCheckpoint(eager=True)
         )
         core_edge_count = remaining_edges.count()
-        thr_r = _gate(core_collect_threshold)
-        if thr_r > 0 and core_edge_count <= thr_r:
+        if choose_path(gate, core_edge_count) == "driver":
             if core_edge_count > 0:
                 comp = _tarjan_components(
                     [(r["src"], r["dst"]) for r in remaining_edges.collect()],
@@ -1236,8 +1197,6 @@ def louvain(
     levels: int = 2,
     loop_shuffle_width: int | None = None,
     early_exit: bool = True,
-    collect_threshold: int = 2_000_000,
-    task_threshold: int = 5_000_000,
     sym: DataFrame | None = None,
     sym_stats: tuple[float, int] | None = None,
 ) -> DataFrame:
@@ -1258,8 +1217,7 @@ def louvain(
     are vertex/edge-sized, so the session width only buys task-launch
     overhead at bench SF while a huge graph gets it back."""
     return _louvain_inner(
-        edges, max_sweeps, levels, early_exit, collect_threshold,
-        loop_shuffle_width, task_threshold, sym, sym_stats,
+        edges, max_sweeps, levels, early_exit, loop_shuffle_width, sym, sym_stats
     )
 
 
@@ -1294,9 +1252,7 @@ def _louvain_inner(
     max_sweeps: int,
     levels: int,
     early_exit: bool = True,
-    collect_threshold: int = 2_000_000,
     loop_shuffle_width: int | None = None,
-    task_threshold: int = 5_000_000,
     sym: DataFrame | None = None,
     sym_stats: tuple[float, int] | None = None,
 ) -> DataFrame:
@@ -1319,14 +1275,14 @@ def _louvain_inner(
 
     # Hybrid fast path (README: anchored-probe hybrid execution): the
     # sweep loop pays 2 driver barriers per sweep per level, so under
-    # the collect threshold the symmetric edge list collects (it is
+    # the ``louvain`` gate the symmetric edge list collects (it is
     # already materialized for m2) and the exact same semi-synchronous
     # schedule runs in-driver — bit-identical moves, see
-    # _louvain_phase1_driver. Beyond the threshold the distributed
-    # sweeps below engage unchanged; parity between the two paths is
-    # pinned by tests on the bench slice and randomized graphs.
-    thr = _gate(collect_threshold)
-    if thr > 0 and n_sym <= thr:
+    # _louvain_phase1_driver. Beyond the gate the distributed sweeps
+    # below engage unchanged; parity between the paths is pinned by
+    # tests on the bench slice and randomized graphs.
+    path = choose_path("louvain", n_sym)
+    if path == "driver":
         rows = sym.collect()
         comm = _louvain_driver(
             [(r["src"], r["dst"], r["w"]) for r in rows],
@@ -1343,9 +1299,9 @@ def _louvain_inner(
     # edge list fits one executor task, the whole two-level schedule
     # runs inside ONE applyInPandas task via the bit-parity driver twin
     # — executor-side, no driver collect, ~12 sweep barriers -> 2
-    # stages. Past the threshold the distributed sweeps below are the
+    # stages. Past the gate the distributed sweeps below are the
     # at-scale path; equality is exact (see _louvain_group_factory).
-    if task_threshold > 0 and n_sym <= task_threshold:
+    if path == "task":
         return (
             sym.withColumn("g", F.lit(1))
             .groupBy("g")
@@ -1412,14 +1368,12 @@ def _louvain_distributed(
 def modularity(
     edges: DataFrame,
     assignment: DataFrame,
-    collect_threshold: int = 2_000_000,
     sym: DataFrame | None = None,
     sym_stats: tuple[float, int] | None = None,
 ) -> float:
     """Newman modularity Q of ``assignment`` (id, community) on the
-    undirected simple graph induced by ``edges``. Under
-    ``collect_threshold`` symmetric edges the sums run in-driver (all
-    are sums of integer-valued doubles — exact in IEEE-754 in any
+    undirected simple graph induced by ``edges``. Under the
+    ``modularity`` gate the sums run in-driver (all are sums of integer-valued doubles — exact in IEEE-754 in any
     order — so the two paths return the identical float).
 
     ``sym`` / ``sym_stats``: optionally the precomputed
@@ -1435,8 +1389,7 @@ def modularity(
         m2, n_sym = sym.agg(F.sum("w"), F.count(F.lit(1))).collect()[0]
     if not m2:
         return 0.0
-    thr = _gate(collect_threshold)
-    if thr > 0 and n_sym <= thr:
+    if choose_path("modularity", n_sym) == "driver":
         comm = {r["id"]: r["community"] for r in assignment.collect()}
         internal = 0.0
         k: dict[int, float] = {}
@@ -1514,15 +1467,13 @@ def _label_propagation_driver(
     return labels
 
 
-def label_propagation(
-    edges: DataFrame, iterations: int = 10, collect_threshold: int = 2_000_000
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
     """Community detection via synchronous label propagation with a
     deterministic tie-break (most frequent neighbor label, ties -> min
     label) — the GraphFrames-style stand-in for the reference's Louvain
     procedure (documentation/queries.md:82-98; SURVEY.md §7 notes the
-    deviation). Returns (id, community). Under ``collect_threshold``
-    symmetric edges the sweep runs in-driver (the hybrid policy shared
+    deviation). Returns (id, community). Under the
+    ``label_propagation`` gate the sweep runs in-driver (the hybrid policy shared
     by SCC/closure/Louvain); the distributed loop engages unchanged
     beyond it."""
     sym = (
@@ -1533,8 +1484,7 @@ def label_propagation(
         .localCheckpoint(eager=True)
     )
     verts = _vertex_ids(edges)
-    thr = _gate(collect_threshold)
-    if thr > 0 and sym.count() <= thr:
+    if choose_path("label_propagation", sym.count()) == "driver":
         vs = [r["id"] for r in verts.collect()]
         labels_map = _label_propagation_driver(
             vs, [(r["src"], r["dst"]) for r in sym.collect()], iterations
@@ -1576,7 +1526,7 @@ def label_propagation(
 def _matula_beck_coreness(edge_list: list[tuple[int, int]]) -> dict[int, int]:
     """Exact core numbers via the Matula-Beck O(E) bucket peel over an
     in-memory undirected simple edge list (self-loops excluded by the
-    caller). Used only under the collect threshold — the driver twin of
+    caller). Used only on the driver rung — the driver twin of
     the distributed h-index fixpoint, and the independent reference the
     property tests pin it against."""
     adj: dict[int, set[int]] = {}
@@ -1617,7 +1567,7 @@ def _coreness_group(pdf):
     as one group and the exact Matula-Beck bucket peel — the SAME twin
     the parity tests pin — runs inside the executor task. No driver
     collect, no h-index fixpoint barriers; memory bounded by the
-    edge-count threshold the caller enforces."""
+    edge-count gate the caller checks."""
     import pandas as pd
 
     core = _matula_beck_coreness(
@@ -1632,8 +1582,6 @@ def coreness(
     edges: DataFrame,
     max_iter: int = 100,
     loop_shuffle_width: int | None = None,
-    collect_threshold: int = 5_000_000,
-    task_threshold: int = 5_000_000,
 ) -> DataFrame:
     """k-core decomposition: core number per vertex of the UNDIRECTED
     simple graph underlying ``edges`` (self-loops dropped). Returns
@@ -1651,7 +1599,7 @@ def coreness(
     fixpoint are no-ops, which is what lets the DuckDB oracle unroll a
     fixed round count and still hash-match exactly.
 
-    Under ``collect_threshold`` edges the slice collects and the exact
+    Under the ``coreness`` gate the slice collects and the exact
     Matula-Beck bucket peel runs in-driver — the same hybrid policy as
     SCC's driver-Tarjan (README: anchored-probe hybrid execution);
     parity between the two paths is property-tested. RAISES if the
@@ -1672,8 +1620,8 @@ def coreness(
     n_edges = und.count()
     if n_edges == 0:
         return edges.sparkSession.createDataFrame([], "id bigint, core bigint")
-    thr = _gate(collect_threshold)
-    if thr > 0 and n_edges <= thr:
+    path = choose_path("coreness", n_edges)
+    if path == "driver":
         rows = und.collect()
         core = _matula_beck_coreness([(r["u"], r["v"]) for r in rows])
         return edges.sparkSession.createDataFrame(
@@ -1683,9 +1631,9 @@ def coreness(
     # an undirected edge set that fits one executor task runs the exact
     # Matula-Beck peel inside ONE applyInPandas task — executor-side,
     # no driver collect, the O(iterations) h-index barriers collapse to
-    # 2 stages. Past the threshold the fixpoint loop below is the
-    # at-scale path.
-    if task_threshold > 0 and n_edges <= task_threshold:
+    # 2 stages. Past the gate the fixpoint loop below is the at-scale
+    # path.
+    if path == "task":
         return (
             und.withColumn("g", F.lit(1))
             .groupBy("g")
@@ -1747,7 +1695,7 @@ def _brandes_betweenness(
     sources s and targets t of sigma_st(v)/sigma_st. Parallel edges
     count as distinct shortest paths (multigraph semantics), matching
     the enumeration oracle and the distributed loop, neither of which
-    dedups the edge multiset. Used only under the collect threshold —
+    dedups the edge multiset. Used only on the driver rung —
     the driver twin the property tests pin the distributed path
     against."""
     from collections import defaultdict, deque
@@ -1790,7 +1738,7 @@ def _brandes_backward_group(pdf):
     INSIDE an executor task (the SCC task-local-Tarjan pattern): the
     per-root DAG is root-keyed by construction, so this replaces
     O(depth) sequential driver barriers with ONE shuffle + one stage.
-    Memory is bounded by the per-root DAG size threshold the caller
+    Memory is bounded by the per-root DAG size gate the caller
     enforces."""
     import pandas as pd
 
@@ -1823,7 +1771,7 @@ def _brandes_root_group(pdf):
     task-locally by calling the SAME ``_brandes_betweenness`` twin the
     property tests pin — distributed-vs-driver parity by construction.
     Executor-side (no driver collect); memory bounded by the edge-count
-    threshold the caller enforces."""
+    gate the caller checks."""
     import pandas as pd
 
     root = int(pdf["root"].iloc[0])
@@ -1842,10 +1790,7 @@ def betweenness_centrality(
     roots,
     max_iter: int = 1000,
     loop_shuffle_width: int | None = None,
-    collect_threshold: int = 5_000_000,
     broadcast_frontier: bool = False,
-    backward_task_threshold: int = 2_000_000,
-    per_root_task_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Source-sampled shortest-path betweenness: (id, betweenness)
     with bc(v) = sum_{s in roots, t} sigma_st(v)/sigma_st over the
@@ -1883,8 +1828,8 @@ def betweenness_centrality(
     width) ride broadcast joins so only the per-level groupBy
     shuffles — right for anchored/sampled probes, wrong for
     all-sources runs.
-    Under ``collect_threshold`` edges the slice collects and exact
-    in-driver Brandes runs — the same hybrid policy as SCC's
+    Under the ``betweenness_centrality`` gate the slice collects and
+    exact in-driver Brandes runs — the same hybrid policy as SCC's
     driver-Tarjan; parity between the two paths is property-tested.
     RAISES if either sweep exceeds ``max_iter`` rounds rather than
     returning truncated centralities.
@@ -1908,8 +1853,8 @@ def betweenness_centrality(
     # re-run the input derivation.
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
     n_edges = edges.count()
-    thr = _gate(collect_threshold)
-    if thr > 0 and n_edges <= thr:
+    path = choose_path("betweenness_centrality", n_edges)
+    if path == "driver":
         rows = [(r["src"], r["dst"]) for r in edges.collect()]
         bc = _brandes_betweenness(rows, roots)
         return spark.createDataFrame(
@@ -1926,7 +1871,7 @@ def betweenness_centrality(
     # stages total instead of O(diameter) sequential barriers —
     # measured 7.6-8.8s -> ~1.5s at sf0.1 forced-distributed. No
     # driver collect anywhere, so this IS a 100 TB code path for any
-    # graph whose edge set fits task memory; beyond the threshold the
+    # graph whose edge set fits task memory; beyond the gate the
     # windowed level-synchronous sweeps below take over (exact at any
     # size, parity property-tested against this path and the driver).
     # The ROOT SET must also be bounded for this path to be the
@@ -1937,14 +1882,10 @@ def betweenness_centrality(
     # broadcast join's build-side-copies analog), so gate on that
     # product rather than a flat root cap — a flat cap would reject
     # legitimate wide-sample/small-graph calls that replicate less
-    # than a narrow sample over a threshold-sized graph. Oversized
-    # calls fall through to the windowed level-synchronous sweeps,
-    # whose per-level state is frontier-sized at any |roots|.
-    if (
-        per_root_task_threshold > 0
-        and n_edges <= per_root_task_threshold
-        and len(roots) * max(n_edges, 1) <= ROOT_REPLICATION_BUDGET
-    ):
+    # than a narrow sample over a gate-sized graph. Oversized calls
+    # fall through to the windowed level-synchronous sweeps, whose
+    # per-level state is frontier-sized at any |roots|.
+    if path == "task" and len(roots) * max(n_edges, 1) <= ROOT_REPLICATION_BUDGET:
         rep = edges.crossJoin(F.broadcast(root_df))
         deltas = rep.groupBy("root").applyInPandas(
             _brandes_root_group, schema="node bigint, delta double"
@@ -2084,13 +2025,13 @@ def betweenness_centrality(
         # when every root's DAG fits one executor task the ENTIRE
         # accumulation is one shuffle + one applyInPandas stage (the
         # SCC task-local-Tarjan pattern) — replacing O(depth)
-        # sequential driver barriers. The threshold probe is one
-        # aggregate over the already-checkpointed frame; at 100 TB a
-        # root whose reachable DAG exceeds task memory falls back to
-        # the level-synchronous loop below, which is exact at any size.
-        if backward_task_threshold > 0:
+        # sequential driver barriers. The gate probe is one aggregate
+        # over the already-checkpointed frame; at 100 TB a root whose
+        # reachable DAG exceeds task memory falls back to the
+        # level-synchronous loop below, which is exact at any size.
+        if choose_path("betweenness_backward", 0) == "task":
             mx = spd.groupBy("root").count().agg(F.max("count")).collect()[0][0]
-            if mx is not None and mx <= backward_task_threshold:
+            if mx is not None and choose_path("betweenness_backward", mx) == "task":
                 deltas = spd.groupBy("root").applyInPandas(
                     _brandes_backward_group,
                     schema="root bigint, node bigint, delta double",

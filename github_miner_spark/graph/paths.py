@@ -34,11 +34,12 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from github_miner_spark.gate import choose_path
 
 
 def _as_root_df(edges: DataFrame, roots) -> DataFrame:
@@ -122,33 +123,15 @@ def _adaptive_loop_width(
     return max(floor, min(sess, -(-int(n_rows) // rows_per_partition)))
 
 
-# Driver fast-path gate for anchored closures: same hybrid pattern as
-# the SCC operator's driver-Tarjan threshold. An edge slice under this
-# many rows collects in well under a second and the topological DP is
-# O(roots x E) python — far under the distributed loop's
-# barriers-x-driver-latency floor (~3.5s at sf0.1). Beyond the
-# threshold (or with a large/unknown root set) the distributed frontier
-# loop engages unchanged.
-DRIVER_CLOSURE_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CLOSURE_DRIVER_EDGES", "2000000")
-)
+# Root-count cap for the anchored-closure fast paths: only an explicit
+# root set this small is collected and handed to a driver or task twin
+# (the edge-count rungs are the ``gate.LIMITS`` entries).
 DRIVER_CLOSURE_ROOTS = 128
 
 # Cap on driver-collected keep/terminal id sets (enumerate_simple_paths'
 # emit-time filter): 64k bigints is broadcast-sized driver state; a
 # label set larger than this falls back to the distributed post-filter.
 KEEP_COLLECT_CAP = 65536
-
-
-def _gate(threshold: int) -> int:
-    """Call-time gate override: SPARK_GRAFT_FORCE_DISTRIBUTED=1 zeroes
-    every driver fast-path gate so the distributed loops (the 100-TB
-    path) are timed by bench.py's second lane and exercised by tests
-    without touching call sites."""
-    if os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED"):
-        return 0
-    return threshold
-
 
 
 def _closure_in_driver(
@@ -232,8 +215,6 @@ def closure_path_counts(
     checkpoint_every: int = 7,
     broadcast_frontier: bool = False,
     checkpoint_edges: bool = True,
-    driver_threshold: int | None = None,
-    task_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Transitive closure preserving path multiplicity.
 
@@ -245,13 +226,12 @@ def closure_path_counts(
     ``max_iter`` levels (cyclic input without a depth bound).
 
     Hybrid execution: with an explicit small root set (<=
-    ``DRIVER_CLOSURE_ROOTS``) and an edge slice under
-    ``driver_threshold`` rows (default ``DRIVER_CLOSURE_EDGES``), the
-    slice is collected and the DP runs in-driver — the SCC-style fast
-    path that skips the frontier loop's barrier floor entirely (same
-    results, same cycle contract; ``tests/test_paths.py`` pins parity
-    between the two paths). Distributed loop unchanged beyond the
-    threshold.
+    ``DRIVER_CLOSURE_ROOTS``) the ``closure_path_counts`` gate picks
+    the path by edge count — the slice collected and the DP run
+    in-driver, or the same DP in one executor task — skipping the
+    frontier loop's barrier floor entirely (same results, same cycle
+    contract; ``tests/test_gate.py`` pins parity). Distributed loop
+    unchanged beyond the gate.
 
     ``checkpoint_every``: barrier cadence. Levels inside a window stay
     LAZY (no Spark job at all); each barrier materializes the WHOLE
@@ -283,12 +263,12 @@ def closure_path_counts(
     shape.
     """
     spark = edges.sparkSession
-    thr = _gate(driver_threshold if driver_threshold is not None else DRIVER_CLOSURE_EDGES)
+    cheapest = choose_path("closure_path_counts", 0)
     if roots is not None:
         if isinstance(roots, DataFrame):
             # a root FRAME under the cap collects to a scalar list (one
             # tiny count + collect) so it can take the fast path too
-            if thr > 0 and roots.count() <= DRIVER_CLOSURE_ROOTS:
+            if cheapest == "driver" and roots.count() <= DRIVER_CLOSURE_ROOTS:
                 rcol = roots.columns[0]
                 roots = [int(r[rcol]) for r in roots.distinct().collect()]
         else:
@@ -296,27 +276,27 @@ def closure_path_counts(
         if (
             not isinstance(roots, DataFrame)
             and len(roots) <= DRIVER_CLOSURE_ROOTS
-            and (thr > 0 or task_threshold > 0)
+            and cheapest != "distributed"
         ):
             # ONE materialization shared by the gate count, the driver
             # collect, the task kernel and the fallback loop — the
             # caller's edge derivation never runs twice (the SCC /
             # betweenness one-lineage discipline).
             e2 = edges.select("src", "dst").localCheckpoint(eager=True)
-            n_e = e2.count()
-            if thr > 0 and n_e <= thr:
+            path = choose_path("closure_path_counts", e2.count())
+            if path == "driver":
                 rows = [(r["src"], r["dst"]) for r in e2.collect()]
                 out = _closure_in_driver(rows, roots)
                 return spark.createDataFrame(
                     out or [], "root bigint, node bigint, paths bigint"
                 )
-            # Task-local path (the betweenness/ASP pattern, driver gate
-            # off): an edge set that fits one executor task runs the
-            # same closure DP — all roots in one kernel call — inside
-            # ONE applyInPandas task; no driver collect, no frontier
-            # barriers. The cycle contract (RuntimeError) raises from
-            # the task and fails the job, same refusal semantics.
-            if task_threshold > 0 and n_e <= task_threshold:
+            # Task-local path (the betweenness/ASP pattern): an edge
+            # set that fits one executor task runs the same closure DP
+            # — all roots in one kernel call — inside ONE applyInPandas
+            # task; no driver collect, no frontier barriers. The cycle
+            # contract (RuntimeError) raises from the task and fails
+            # the job, same refusal semantics.
+            if path == "task":
                 return (
                     e2.withColumn("g", F.lit(1))
                     .groupBy("g")
@@ -449,8 +429,7 @@ def bfs_depths(
     until: int | None = None,
     broadcast_frontier: bool = False,
     checkpoint_every: int = 4,
-    driver_threshold: int | None = None,
-    per_root_task_threshold: int = 0,
+    per_root_task: bool = False,
 ) -> DataFrame:
     """Min-depth BFS: (root, node, depth) with the smallest hop count
     root ->* node (depth >= 1). Cycle-safe via per-root visited sets.
@@ -468,71 +447,58 @@ def bfs_depths(
     deferred dedup exact: every discovery path produces a row and the
     minimum survives. Intra-window row growth is bounded by
     branching^window (the price of 1 barrier per window instead of 3
-    per level — measured 3x faster on the sf0.1 DAG probes)."""
+    per level — measured 3x faster on the sf0.1 DAG probes).
+
+    ``per_root_task``: opt in to the ``bfs_depths`` gate's task rung —
+    for callers whose root sample is small and whose edge set is
+    scan-backed; internal sweeps leave it off."""
     spark = edges.sparkSession
     edges = edges.select("src", "dst")
-    edges_is_ck = False
-    # driver fast path (same gate as closure_path_counts): a small
+    skip = () if per_root_task else ("task",)
+    cheapest = choose_path("bfs_depths", 0, skip)
+    # fast paths (same gate shape as closure_path_counts): a small
     # explicit root set over a collectable edge slice runs the BFS
-    # in-driver and returns the FULL min-depth map — a superset of the
-    # until-early-stopped distributed output, which internal callers
+    # in-driver, or per root inside one executor task, and returns the
+    # FULL min-depth map — a superset of the until-early-stopped
+    # distributed output, which internal callers
     # (all_shortest_paths_multi) filter identically either way
-    if (
-        driver_threshold != 0
-        and roots is not None
-    ):
+    if roots is not None and cheapest != "distributed":
         if isinstance(roots, DataFrame):
-            thr_roots = roots
-            if thr_roots.count() <= DRIVER_CLOSURE_ROOTS:
-                rcol = thr_roots.columns[0]
-                roots = [int(r[rcol]) for r in thr_roots.distinct().collect()]
+            if roots.count() <= DRIVER_CLOSURE_ROOTS:
+                rcol = roots.columns[0]
+                roots = [int(r[rcol]) for r in roots.distinct().collect()]
         else:
             roots = [int(r) for r in roots]
-        thr = _gate(
-            driver_threshold if driver_threshold is not None else DRIVER_CLOSURE_EDGES
-        )
         if not isinstance(roots, DataFrame) and len(roots) <= DRIVER_CLOSURE_ROOTS:
-            if thr > 0:
-                # ONE materialization shared with the task path and the
-                # loop (the closure discipline): the gate count runs on
-                # the checkpoint, never the raw derivation
-                edges = edges.localCheckpoint(eager=True)
-                edges_is_ck = True
-                if edges.count() <= thr:
-                    rows = [(r["src"], r["dst"]) for r in edges.collect()]
-                    out = _bfs_in_driver(rows, roots, max_iter)
-                    return spark.createDataFrame(
-                        out or [], "root bigint, node bigint, depth int"
-                    )
-    # ---- per-root task-local path (opt-in) ---------------------------
-    # The betweenness per-root pattern applied to plain min-depth BFS:
-    # when the caller vouches (threshold > 0) that the edge set fits an
-    # executor task and the root set is a bounded explicit sample,
-    # replicate the checkpointed edges per root (broadcast cross join)
-    # and run the pinned in-driver BFS twin INSIDE the task — 3 stages
-    # instead of O(diameter/window) sequential barriers, no driver
-    # collect. Returns the full depth map (the same superset contract
-    # as the driver path). Beyond the threshold, the windowed
-    # level-synchronous loop below is the at-scale path.
-    if (
-        per_root_task_threshold > 0
-        and roots is not None
-        and not isinstance(roots, DataFrame)
-        and len(roots) <= DRIVER_CLOSURE_ROOTS
-    ):
-        if not edges_is_ck:
+            # ONE materialization shared by the gate count, both fast
+            # paths and the loop (the closure discipline): the count
+            # runs on the checkpoint, never the raw derivation
             edges = edges.localCheckpoint(eager=True)
-            edges_is_ck = True
-        if edges.count() <= per_root_task_threshold:
-            root_df = spark.createDataFrame(
-                [(int(r),) for r in roots], "root bigint"
-            )
-            return edges.crossJoin(F.broadcast(root_df)).groupBy(
-                "root"
-            ).applyInPandas(
-                _bfs_root_group_factory(max_iter),
-                schema="root bigint, node bigint, depth int",
-            )
+            path = choose_path("bfs_depths", edges.count(), skip)
+            if path == "driver":
+                rows = [(r["src"], r["dst"]) for r in edges.collect()]
+                out = _bfs_in_driver(rows, roots, max_iter)
+                return spark.createDataFrame(
+                    out or [], "root bigint, node bigint, depth int"
+                )
+            # ---- per-root task-local path (opt-in) ---------------------
+            # The betweenness per-root pattern applied to plain min-depth
+            # BFS: replicate the checkpointed edges per root (broadcast
+            # cross join) and run the pinned in-driver BFS twin INSIDE
+            # the task — 3 stages instead of O(diameter/window)
+            # sequential barriers, no driver collect. Beyond the gate,
+            # the windowed level-synchronous loop below is the at-scale
+            # path.
+            if path == "task":
+                root_df = spark.createDataFrame(
+                    [(int(r),) for r in roots], "root bigint"
+                )
+                return edges.crossJoin(F.broadcast(root_df)).groupBy(
+                    "root"
+                ).applyInPandas(
+                    _bfs_root_group_factory(max_iter),
+                    schema="root bigint, node bigint, depth int",
+                )
     root_df = _as_root_df(edges, roots)
     until_set: set[int] | None = None
     if until is not None:
@@ -779,13 +745,12 @@ def all_shortest_paths_multi(
     src: int,
     targets,
     max_iter: int = 1000,
-    per_root_task_threshold: int = 5_000_000,
 ) -> DataFrame:
     """All shortest paths from ``src`` to EVERY id in ``targets`` in one
-    batched pass: (target, path, length). Under the driver gate (small
-    target set, collectable edge slice) the whole construction runs
-    in-driver via :func:`_asp_in_driver`; the distributed two-sweep
-    pipeline below engages beyond it.
+    batched pass: (target, path, length). For a small target set the
+    ``all_shortest_paths_multi`` gate runs the whole construction via
+    :func:`_asp_in_driver` in-driver or inside one executor task; the
+    distributed two-sweep pipeline below engages beyond it.
 
     Same shortest-path-DAG construction as :func:`all_shortest_paths`
     (forward BFS + reverse BFS + on-path filter), but the reverse BFS
@@ -799,20 +764,18 @@ def all_shortest_paths_multi(
     edges = edges.select("src", "dst")
     targets = [int(t) for t in targets]
     empty = spark.createDataFrame([], "target bigint, path array<bigint>, length int")
-    # driver fast path (same gate as closure/bfs): the whole DAG
+    # driver fast path (same gate shape as closure/bfs): the whole DAG
     # construction + enumeration is output-bounded python over a
     # collectable slice, skipping both BFS sweeps AND the ~max_len
     # expansion barriers
-    asp_thr = _gate(DRIVER_CLOSURE_EDGES)
-    if len(targets) <= DRIVER_CLOSURE_ROOTS and (
-        asp_thr > 0 or per_root_task_threshold > 0
-    ):
+    gate = "all_shortest_paths_multi"
+    if len(targets) <= DRIVER_CLOSURE_ROOTS and choose_path(gate, 0) != "distributed":
         # ONE materialization shared by the gate count, the driver
         # collect, the task kernel and the fallback pipeline (the
         # closure discipline)
         edges = edges.localCheckpoint(eager=True)
-        n_e = edges.count()
-        if asp_thr > 0 and n_e <= asp_thr:
+        path = choose_path(gate, edges.count())
+        if path == "driver":
             rows = [(r["src"], r["dst"]) for r in edges.collect()]
             out = _asp_in_driver(rows, int(src), targets, max_iter)
             return spark.createDataFrame(
@@ -821,11 +784,11 @@ def all_shortest_paths_multi(
         # task-local path (the betweenness/BFS/Dijkstra pattern): an
         # edge set that fits an executor task runs the pinned in-driver
         # twin inside ONE applyInPandas task — no driver collect, none
-        # of the 2-sweep + max_len expansion barriers. Past the
-        # threshold the distributed pipeline below is the at-scale path
-        # (and the bench scaling lane times THAT path explicitly by
-        # zeroing the threshold).
-        if per_root_task_threshold > 0 and n_e <= per_root_task_threshold:
+        # of the 2-sweep + max_len expansion barriers. Past the gate
+        # the distributed pipeline below is the at-scale path (and the
+        # bench scaling lane times THAT path explicitly by emptying the
+        # gate's ladder).
+        if path == "task":
             return (
                 edges.withColumn("g", F.lit(1))
                 .groupBy("g")
@@ -993,7 +956,6 @@ def enumerate_simple_paths(
     root: int,
     max_iter: int = 1000,
     end_nodes: DataFrame | None = None,
-    task_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Enumerate EVERY simple path of length >= 1 out of ``root`` as a
     node-id array: (path array<bigint>, length int) — Cypher's
@@ -1014,15 +976,17 @@ def enumerate_simple_paths(
     this set (a label-constrained terminal node), applied after
     enumeration so intermediate expansion is unaffected.
 
-    Hybrid (README: anchored-probe policy): under the closure driver
-    gate (edge slice <= DRIVER_CLOSURE_EDGES) the slice collects and an
-    iterative DFS enumerates in-driver — identical path set, output-
-    proportional either way; the level loop below engages unchanged
-    beyond it."""
+    Hybrid (README: anchored-probe policy): the
+    ``enumerate_simple_paths`` gate collects a small slice and an
+    iterative DFS enumerates in-driver (or in one executor task) —
+    identical path set, output-proportional either way; the level loop
+    below engages unchanged beyond it."""
     e = edges.select("src", "dst").localCheckpoint(eager=True)
     spark = edges.sparkSession
-    enum_thr = _gate(DRIVER_CLOSURE_EDGES)
-    if enum_thr > 0 and e.count() <= enum_thr:
+    path = "distributed"
+    if choose_path("enumerate_simple_paths", 0) != "distributed":
+        path = choose_path("enumerate_simple_paths", e.count())
+    if path == "driver":
         keep = None
         if end_nodes is not None:
             keep = {r["id"] for r in end_nodes.select("id").distinct().collect()}
@@ -1042,9 +1006,9 @@ def enumerate_simple_paths(
     # path (ADVICE r7). An end set ABOVE the cap is, by the same
     # token, barely selective relative to the path set, so the kernel
     # enumerates unfiltered and the broadcast post-filter keeps the
-    # old distributed shape. Past the threshold the level loop below
-    # is the at-scale path (output-proportional either way).
-    if task_threshold > 0 and e.count() <= task_threshold:
+    # old distributed shape. Past the gate the level loop below is the
+    # at-scale path (output-proportional either way).
+    if path == "task":
         keep = None
         if end_nodes is not None:
             sample = end_nodes.select("id").distinct().limit(
@@ -1146,7 +1110,7 @@ def _dijkstra_root_group(pdf):
     arrives as a pandas frame (root, src, dst, w) and heap Dijkstra —
     the SAME ``_dijkstra_in_driver`` twin the parity tests pin — runs
     inside the executor task. No driver collect, no relaxation
-    barriers; memory bounded by the edge-count threshold the caller
+    barriers; memory bounded by the edge-count gate the caller
     enforces."""
     import pandas as pd
 
@@ -1167,19 +1131,17 @@ def weighted_sssp(
     weight_col: str = "w",
     max_iter: int = 200,
     broadcast_frontier: bool = False,
-    driver_threshold: int | None = None,
-    per_root_task_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Single-source weighted shortest distances (node, dist) from
     ``root`` over ``edges(src, dst, weight_col)`` — the algo.dijkstra
     / algo.shortestPath surface of the plugin set the reference
     installs (bin/install_neo4j_plugins.sh).
 
-    Hybrid on the closure family's shared gate: an edge slice under
-    the driver threshold collects and runs heap Dijkstra in-driver;
-    beyond it (or forced by SPARK_GRAFT_FORCE_DISTRIBUTED) a
-    level-synchronous Bellman-Ford relaxation runs distributed — one
-    keyed min-merge shuffle and one emptiness probe per round, state
+    Hybrid on the closure family's gate shape: a small edge slice
+    collects and runs heap Dijkstra in-driver (or in one executor
+    task); beyond the ``weighted_sssp`` gate a level-synchronous
+    Bellman-Ford relaxation runs distributed — one keyed min-merge
+    shuffle and one emptiness probe per round, state
     checkpointed, rounds bounded by the hop length of the optimal
     paths (not V): the loop stops the first round no distance
     improves and RAISES at ``max_iter`` rather than returning a
@@ -1190,24 +1152,22 @@ def weighted_sssp(
     """
     spark = edges.sparkSession
     edges = edges.select("src", "dst", F.col(weight_col).alias("w"))
-    thr = _gate(
-        driver_threshold if driver_threshold is not None else DRIVER_CLOSURE_EDGES
-    )
-    # Checkpoint the edge projection ONLY when a gate can actually
-    # fire: evaluating the driver/task gates needs an edge count, and
-    # the count + collect/kernel + (between-thresholds) loop then all
-    # reuse the one materialization — the SCC/betweenness discipline.
-    # When BOTH gates are off (forced-distributed lane, or a caller
-    # that zeroed the thresholds for an oversized input), skip the
-    # eager localCheckpoint entirely: materializing a corpus-sized
+    # Checkpoint the edge projection ONLY when a rung can actually
+    # fire: evaluating the gate needs an edge count, and the count +
+    # collect/kernel + (past-the-gate) loop then all reuse the one
+    # materialization — the SCC/betweenness discipline. When no rung
+    # is on (forced-distributed lane with the task rung emptied), skip
+    # the eager localCheckpoint entirely: materializing a corpus-sized
     # edge set to executor local disk up front costs a full extra
     # write AND loses fault tolerance (localCheckpoint output dies
     # with its executor) — the Bellman-Ford loop below recomputes the
     # projection from source lineage per round instead, Spark's
     # ordinary fault-tolerant pattern (ADVICE r7).
-    if thr > 0 or per_root_task_threshold > 0:
+    path = "distributed"
+    if choose_path("weighted_sssp", 0) != "distributed":
         edges = edges.localCheckpoint(eager=True)
-    if thr > 0 and edges.count() <= thr:
+        path = choose_path("weighted_sssp", edges.count())
+    if path == "driver":
         rows = [(r["src"], r["dst"], float(r["w"])) for r in edges.collect()]
         out = _dijkstra_in_driver(rows, int(root))
         return spark.createDataFrame(out or [], "node bigint, dist double")
@@ -1223,12 +1183,9 @@ def weighted_sssp(
     # root needs no replication at all — tag the checkpointed edge list
     # with the root and run the pinned heap-Dijkstra twin inside ONE
     # applyInPandas task. No driver collect, zero relaxation barriers;
-    # past the threshold the Bellman-Ford loop below is the at-scale
-    # path (exact at any size, parity property-tested).
-    if (
-        per_root_task_threshold > 0
-        and edges.count() <= per_root_task_threshold
-    ):
+    # past the gate the Bellman-Ford loop below is the at-scale path
+    # (exact at any size, parity property-tested).
+    if path == "task":
         return (
             edges.withColumn("root", F.lit(int(root)))
             .groupBy("root")

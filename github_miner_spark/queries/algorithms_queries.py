@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from github_miner_spark.gate import choose_path
 from github_miner_spark.graph.algorithms import (
     _symmetrize_weighted,
     connected_components,
@@ -1214,12 +1215,12 @@ def closeness_centrality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["src"]
         for r in mm.filter(F.col("src") < 200).select("src").distinct().collect()
     )
-    # per_root_task_threshold: the scan-backed module edge set fits an
-    # executor task at any bench SF, so each sampled root's BFS runs
-    # task-locally (3 stages, no per-level barriers); past the
-    # threshold bfs_depths falls back to its windowed loop
+    # per_root_task: the scan-backed module edge set fits an executor
+    # task at any bench SF, so each sampled root's BFS runs
+    # task-locally (3 stages, no per-level barriers); past the gate
+    # bfs_depths falls back to its windowed loop
     depths = bfs_depths(
-        mm, roots=roots, broadcast_frontier=True, per_root_task_threshold=5_000_000
+        mm, roots=roots, broadcast_frontier=True, per_root_task=True
     )
     return (
         depths.groupBy("root")
@@ -1979,9 +1980,7 @@ def _anf_kernel_factory(
     "counts via a depth-bounded recursive walk.",
     tags=("graph", "sketch", "approx", "iterative", "algorithm"),
 )
-def anf_neighborhood_function(
-    spark: SparkSession, sf_dir: str, task_threshold: int = 5_000_000
-) -> DataFrame:
+def anf_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_bits, hops, anchor_max = 5, 3, 120
     m = 1 << m_bits
     rho_max = 60 - m_bits + 1
@@ -1998,12 +1997,12 @@ def anf_neighborhood_function(
     anchors = anchor_nodes(spark, sf_dir)
     assert anchor_max == 120  # the rollup's ANF_ANCHOR_MAX — one spec
     anchor_df = spark.createDataFrame([(a,) for a in anchors], "node bigint")
-    if n_edges <= task_threshold:
+    if choose_path("anf", n_edges) == "task":
         # task-local path (the SCC/betweenness pattern): the whole
         # 3-hop propagation runs inside ONE applyInPandas task with
         # the identical integer algebra — 1 job instead of 4
-        # checkpoint barriers; beyond the threshold the
-        # distributed loop below is the at-scale path
+        # checkpoint barriers; beyond the gate the distributed loop
+        # below is the at-scale path
         reg_states = (
             e.withColumn("g", F.lit(1))
             .groupBy("g")
@@ -2163,9 +2162,7 @@ def _anf_diameter_oracle_sql(m_bits: int = 5, hops: int = 3) -> str:
     "hops-bounded rollup.",
     tags=("graph", "sketch", "approx", "iterative", "algorithm"),
 )
-def anf_effective_diameter(
-    spark: SparkSession, sf_dir: str, task_threshold: int = 5_000_000
-) -> DataFrame:
+def anf_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from github_miner_spark.functions.text import hll_estimate_expr
 
     m_bits, hops = 5, 3
@@ -2174,7 +2171,7 @@ def anf_effective_diameter(
     g = load_graph(spark, sf_dir)
     e = g.module_dep_edges().select("src", "dst").localCheckpoint(eager=True)
     n_edges = e.count()
-    if n_edges <= task_threshold:
+    if choose_path("anf", n_edges) == "task":
         sums = (
             e.withColumn("g", F.lit(1))
             .groupBy("g")

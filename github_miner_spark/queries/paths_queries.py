@@ -106,16 +106,16 @@ def closure_per_root(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bfs_depth_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = load_graph(spark, sf_dir)
-    # per_root_task_threshold (VERDICT r7 item 6): the anchored probe
-    # over the scan-backed module edge set fits an executor task at any
-    # bench SF, so the BFS runs task-locally (3 stages, no per-level
+    # per_root_task (VERDICT r7 item 6): the anchored probe over the
+    # scan-backed module edge set fits an executor task at any bench
+    # SF, so the BFS runs task-locally (3 stages, no per-level
     # barriers) — the closeness opt-in, applied family-wide; past the
-    # threshold bfs_depths falls back to its windowed loop unchanged
+    # gate bfs_depths falls back to its windowed loop unchanged
     depths = bfs_depths(
         g.module_dep_edges(),
         roots=[ANCHOR_MODULE],
         broadcast_frontier=True,
-        per_root_task_threshold=5_000_000,
+        per_root_task=True,
     )
     return depths.select("node", "depth").orderBy("node")
 
@@ -148,7 +148,7 @@ def depth_extremes_per_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast-sized, then runs each root's BFS inside one
     # applyInPandas task — the closeness floor cut, applied here
     depths = bfs_depths(
-        mm, roots=roots, broadcast_frontier=True, per_root_task_threshold=5_000_000
+        mm, roots=roots, broadcast_frontier=True, per_root_task=True
     )
     return (
         depths.groupBy("root")
@@ -310,7 +310,7 @@ def harmonic_centrality_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-root task opt-in (VERDICT r7 item 6): same floor cut as
     # closeness — the root set is broadcast-sized by construction
     depths = bfs_depths(
-        mm, roots=roots, broadcast_frontier=True, per_root_task_threshold=5_000_000
+        mm, roots=roots, broadcast_frontier=True, per_root_task=True
     )
     h = F.round(F.sum(1.0 / F.col("depth")), 6)
     return (

@@ -23,6 +23,7 @@ from github_miner_spark.functions.text import (
     token_count,
     tokenize,
 )
+from github_miner_spark.gate import choose_path
 from github_miner_spark.io.tables import load_table
 from github_miner_spark.registry import register
 
@@ -1024,12 +1025,6 @@ def doc_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ZIPF_SCALE = 1_000_000  # per-item quantization for the five OLS sums
-# corpora at or below this doc count rank their vocabulary in one
-# bounded task; above it the distributed shard rank takes over (the
-# r12 A/B measured the distributed machinery at +0.75s of pure
-# overhead on a bench-sized vocabulary — overhead worth paying only
-# once the vocabulary can actually straggle a task)
-ZIPF_SINGLE_TASK_DOCS = 1_000_000
 
 
 def _parquet_num_rows(path: str) -> int:
@@ -1119,17 +1114,16 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     tok = docs.select(F.explode(tokenize(F.col("text"))).alias("term"))
     freq = tok.groupBy("term").agg(F.count("*").alias("c"))
-    # hybrid dispatch, the graph-family _gate convention: the gate is
-    # a parquet-FOOTER row count (driver-side metadata, no Spark job —
-    # a docs.count() gate measured ~0.9s/build, defeating its own
-    # purpose), and the forced-distributed override keeps the scale
-    # path timed and tested without touching call sites
-    gate = (
-        0
-        if _os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED")
-        else ZIPF_SINGLE_TASK_DOCS
-    )
-    if _parquet_num_rows(_os.path.join(sf_dir, "documents.parquet")) <= gate:
+    # hybrid dispatch on the ``corpus_zipf_fit`` gate: the row count is
+    # a parquet-FOOTER read (driver-side metadata, no Spark job — a
+    # docs.count() gate measured ~0.9s/build, defeating its own
+    # purpose). The single window is the gate's driver rung, so the
+    # forced-distributed mode keeps the scale path timed and tested.
+    # Up to 1M docs the vocabulary ranks in one bounded task (the r12
+    # A/B measured the distributed machinery at +0.75s of pure
+    # overhead on a bench-sized vocabulary).
+    n_docs = _parquet_num_rows(_os.path.join(sf_dir, "documents.parquet"))
+    if choose_path("corpus_zipf_fit", n_docs) == "driver":
         # bounded single-task rank: the vocabulary of a sub-gate
         # corpus fits one task comfortably
         w = Window.orderBy(F.desc("c"), F.asc("term"))
@@ -2110,17 +2104,10 @@ def _kmv_sketch(
     source. Top-K of per-shard top-Ks is exactly the global top-K, so
     the two paths are row-identical (proven at all three SFs; pinned
     in test_plan_shapes.py)."""
-    import os as _os
-
     from pyspark.sql import Window
 
-    gate = (
-        0
-        if _os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED")
-        else ZIPF_SINGLE_TASK_DOCS
-    )
     src = uni
-    if n_uni_rows > gate:
+    if choose_path("kmv_sketch", n_uni_rows) == "distributed":
         n_shards = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
         src = (
             uni.withColumn("shard", F.pmod(F.col("kh"), F.lit(n_shards)))

@@ -1,0 +1,19 @@
+"""Path selection for tests: override ``gate.LIMITS`` ladders."""
+
+from __future__ import annotations
+
+from unittest.mock import patch
+
+from github_miner_spark.gate import LIMITS
+
+
+def only(**keep: str):
+    """A ``patch.dict`` over ``LIMITS`` that keeps, for each named gate,
+    only the rung for the named path: ``only(pagerank="task")`` runs
+    PageRank's task kernel, ``only(pagerank="distributed")`` empties the
+    ladder so its distributed loop runs. Use it as a context manager or
+    a decorator."""
+    return patch.dict(
+        LIMITS,
+        {g: tuple(r for r in LIMITS[g] if r[0] == p) for g, p in keep.items()},
+    )

@@ -15,6 +15,7 @@ from github_miner_spark.graph.algorithms import (
     pagerank,
     strongly_connected_components,
 )
+from tests.gate_utils import only
 
 
 def edges_df(spark, pairs):
@@ -48,18 +49,18 @@ def test_pagerank_matches_numpy(spark, pairs):
     e = edges_df(spark, pairs)
     # both hybrid paths: in-driver numpy matvec and the distributed loop
     got = {r.id: r.rank for r in pagerank(e, iterations=15, damping=0.85).collect()}
-    # gated off, default task threshold: the task-local numpy kernel
-    task = {
-        r.id: r.rank
-        for r in pagerank(e, iterations=15, damping=0.85, collect_threshold=0).collect()
-    }
-    # both thresholds zeroed: the distributed power-iteration loop
-    dist = {
-        r.id: r.rank
-        for r in pagerank(
-            e, iterations=15, damping=0.85, collect_threshold=0, task_threshold=0
-        ).collect()
-    }
+    # task rung only: the task-local numpy kernel
+    with only(pagerank="task"):
+        task = {
+            r.id: r.rank
+            for r in pagerank(e, iterations=15, damping=0.85).collect()
+        }
+    # empty ladder: the distributed power-iteration loop
+    with only(pagerank="distributed"):
+        dist = {
+            r.id: r.rank
+            for r in pagerank(e, iterations=15, damping=0.85).collect()
+        }
     ids = {a for a, _ in pairs} | {b for _, b in pairs}
     want = numpy_pagerank(pairs, ids, 15, 0.85)
     assert set(got) == set(want)
@@ -82,19 +83,13 @@ def test_connected_components_long_path_converges(spark):
     # non-convergence now raises instead of returning bad components.
     n = 500
     e = edges_df(spark, [(i, i + 1) for i in range(n)])
-    got = {
-        r.id: r.component
-        for r in connected_components(
-            e, collect_threshold=0, task_threshold=0
-        ).collect()
-    }
+    with only(connected_components="distributed"):
+        got = {r.id: r.component for r in connected_components(e).collect()}
     assert got == {i: 0 for i in range(n + 1)}
     # whole-graph task kernel (the SCC whole-core pattern): identical
     # labels from the single-group union-find path
-    task = {
-        r.id: r.component
-        for r in connected_components(e, collect_threshold=0).collect()
-    }
+    with only(connected_components="task"):
+        task = {r.id: r.component for r in connected_components(e).collect()}
     assert task == got
 
 
@@ -188,7 +183,7 @@ def test_all_shortest_paths_diamond(spark):
 
 
 def test_scc_distributed_path_matches_hybrid(spark):
-    """Force the distributed Orzan-coloring path (threshold=0) and
+    """Force the distributed Orzan-coloring path (emptied ladders) and
     check it agrees with the trim+Tarjan hybrid on a graph with
     multiple non-trivial SCCs hanging off a DAG."""
     from github_miner_spark.graph.algorithms import strongly_connected_components
@@ -204,30 +199,35 @@ def test_scc_distributed_path_matches_hybrid(spark):
         "src bigint, dst bigint",
     )
     hybrid = {(r["id"], r["component"]) for r in strongly_connected_components(edges).collect()}
-    distributed = {
-        (r["id"], r["component"])
-        for r in strongly_connected_components(edges, core_collect_threshold=0).collect()
-    }
+    # driver rung off: the whole-core task kernel
+    with only(strongly_connected_components="task"):
+        distributed = {
+            (r["id"], r["component"])
+            for r in strongly_connected_components(edges).collect()
+        }
     assert hybrid == distributed
-    # third path: component_task_threshold=0 ALSO disables the per-WCC
-    # task-local Tarjan finish (and, by default, the whole-core
-    # shortcut), forcing the full FW-BW coloring loop
-    colored = {
-        (r["id"], r["component"])
-        for r in strongly_connected_components(
-            edges, core_collect_threshold=0, component_task_threshold=0
-        ).collect()
-    }
+    # third path: every SCC and WCC rung off, the per-WCC task-local
+    # Tarjan finish included, forcing the full FW-BW coloring loop
+    with only(
+        strongly_connected_components="distributed",
+        scc_component="distributed",
+        connected_components="distributed",
+    ):
+        colored = {
+            (r["id"], r["component"])
+            for r in strongly_connected_components(edges).collect()
+        }
     assert hybrid == colored
-    # fourth path: whole_core_task_threshold=0 disables ONLY the
-    # single-group shortcut — WCC star-contraction split + per-WCC
-    # task kernels (the scaling lane's configuration)
-    split = {
-        (r["id"], r["component"])
-        for r in strongly_connected_components(
-            edges, core_collect_threshold=0, whole_core_task_threshold=0
-        ).collect()
-    }
+    # fourth path: the single-group shortcut off — WCC star-contraction
+    # split + per-WCC task kernels (the scaling lane's configuration)
+    with only(
+        strongly_connected_components="distributed",
+        connected_components="distributed",
+    ):
+        split = {
+            (r["id"], r["component"])
+            for r in strongly_connected_components(edges).collect()
+        }
     assert hybrid == split
     comp = dict(hybrid)
     assert comp[1] == comp[2] == comp[3] == 1
@@ -261,15 +261,11 @@ def test_connected_components_converges_on_final_round(spark):
     edge-set-equality check which needed a confirming no-change
     round), so any off-by-one re-raises here."""
     e = edges_df(spark, [(i, i + 1) for i in range(1, 9)])
-    got = {
-        r.id: r.component
-        for r in connected_components(
-            e, max_iter=3, collect_threshold=0, task_threshold=0
-        ).collect()
-    }
-    assert set(got.values()) == {1}
-    with pytest.raises(RuntimeError):
-        connected_components(e, max_iter=2, collect_threshold=0, task_threshold=0)
+    with only(connected_components="distributed"):
+        got = {r.id: r.component for r in connected_components(e, max_iter=3).collect()}
+        assert set(got.values()) == {1}
+        with pytest.raises(RuntimeError):
+            connected_components(e, max_iter=2)
 
 
 def test_scc_final_peel_round_not_forfeited(spark):
@@ -277,48 +273,35 @@ def test_scc_final_peel_round_not_forfeited(spark):
     being attempted; max_iter=4 is the minimal budget for this chain of
     two 2-cycles on the forced-distributed path."""
     e = edges_df(spark, [(1, 2), (2, 1), (2, 3), (3, 4), (4, 3)])
-    got = {
-        r.id: r.component
-        for r in strongly_connected_components(
-            e, max_iter=4, core_collect_threshold=0
-        ).collect()
-    }
+    with only(strongly_connected_components="task"):
+        got = {
+            r.id: r.component
+            for r in strongly_connected_components(e, max_iter=4).collect()
+        }
     assert got == {1: 1, 2: 1, 3: 3, 4: 3}
 
 
 def test_louvain_driver_path_matches_distributed(spark):
     """The hybrid gate must be invisible: the in-driver semi-sync sweep
-    (collect_threshold hit) and the distributed half-sweeps must emit
+    (driver rung) and the distributed half-sweeps must emit
     the identical assignment on the real sf0.001 module graph."""
     from github_miner_spark.graph.algorithms import louvain
     from github_miner_spark.graph.store import load_graph
 
     g = load_graph(spark, "/root/testdata/sf0.001")
     mm = g.module_dep_edges()
-    fast = sorted(map(tuple, louvain(mm, max_sweeps=3, levels=2, early_exit=False).collect()))
-    # gated off, default task threshold: the task-local kernel path
-    task = sorted(
-        map(
-            tuple,
-            louvain(
-                mm, max_sweeps=3, levels=2, early_exit=False, collect_threshold=0
-            ).collect(),
+    def run():
+        return sorted(
+            map(tuple, louvain(mm, max_sweeps=3, levels=2, early_exit=False).collect())
         )
-    )
-    # both thresholds zeroed: the distributed half-sweep schedule
-    slow = sorted(
-        map(
-            tuple,
-            louvain(
-                mm,
-                max_sweeps=3,
-                levels=2,
-                early_exit=False,
-                collect_threshold=0,
-                task_threshold=0,
-            ).collect(),
-        )
-    )
+
+    fast = run()
+    # task rung only: the task-local kernel path
+    with only(louvain="task"):
+        task = run()
+    # empty ladder: the distributed half-sweep schedule
+    with only(louvain="distributed"):
+        slow = run()
     assert fast == task and len(fast) > 0
     assert fast == slow
 
@@ -329,9 +312,8 @@ def test_label_propagation_driver_path_matches_distributed(spark):
     g = load_graph(spark, "/root/testdata/sf0.001")
     mm = g.module_dep_edges()
     fast = sorted(map(tuple, label_propagation(mm, iterations=8).collect()))
-    slow = sorted(
-        map(tuple, label_propagation(mm, iterations=8, collect_threshold=0).collect())
-    )
+    with only(label_propagation="distributed"):
+        slow = sorted(map(tuple, label_propagation(mm, iterations=8).collect()))
     assert fast == slow and len(fast) > 0
 
 
@@ -343,16 +325,10 @@ def test_personalized_pagerank_driver_matches_distributed_edge_cases(spark):
     e = edges_df(spark, [(1, 2), (2, 3), (3, 1), (1, 4)])
     srcs = [1, 1, 99]  # duplicate + absent
     fast = {r.id: r.rank for r in pagerank(e, iterations=10, sources=srcs).collect()}
-    task = {
-        r.id: r.rank
-        for r in pagerank(e, iterations=10, sources=srcs, collect_threshold=0).collect()
-    }
-    dist = {
-        r.id: r.rank
-        for r in pagerank(
-            e, iterations=10, sources=srcs, collect_threshold=0, task_threshold=0
-        ).collect()
-    }
+    with only(pagerank="task"):
+        task = {r.id: r.rank for r in pagerank(e, iterations=10, sources=srcs).collect()}
+    with only(pagerank="distributed"):
+        dist = {r.id: r.rank for r in pagerank(e, iterations=10, sources=srcs).collect()}
     assert set(fast) == set(dist) == set(task)
     for v in fast:
         assert fast[v] == pytest.approx(dist[v], rel=1e-12), v
@@ -368,30 +344,18 @@ def test_louvain_driver_matches_distributed_sf001(spark):
     from github_miner_spark.graph.store import load_graph
 
     mm = load_graph(spark, "/root/testdata/sf0.01").module_dep_edges()
-    fast = sorted(map(tuple, louvain(mm, max_sweeps=3, levels=2, early_exit=False).collect()))
-    # gated off, default task threshold: the task-local kernel path
-    task = sorted(
-        map(
-            tuple,
-            louvain(
-                mm, max_sweeps=3, levels=2, early_exit=False, collect_threshold=0
-            ).collect(),
+    def run():
+        return sorted(
+            map(tuple, louvain(mm, max_sweeps=3, levels=2, early_exit=False).collect())
         )
-    )
-    # both thresholds zeroed: the distributed half-sweep schedule
-    slow = sorted(
-        map(
-            tuple,
-            louvain(
-                mm,
-                max_sweeps=3,
-                levels=2,
-                early_exit=False,
-                collect_threshold=0,
-                task_threshold=0,
-            ).collect(),
-        )
-    )
+
+    fast = run()
+    # task rung only: the task-local kernel path
+    with only(louvain="task"):
+        task = run()
+    # empty ladder: the distributed half-sweep schedule
+    with only(louvain="distributed"):
+        slow = run()
     assert fast == task and len(fast) > 0
     assert fast == slow
 
@@ -401,22 +365,9 @@ def test_label_propagation_driver_matches_distributed_sf001(spark):
 
     mm = load_graph(spark, "/root/testdata/sf0.01").module_dep_edges()
     fast = sorted(map(tuple, label_propagation(mm, iterations=8).collect()))
-    slow = sorted(
-        map(tuple, label_propagation(mm, iterations=8, collect_threshold=0).collect())
-    )
+    with only(label_propagation="distributed"):
+        slow = sorted(map(tuple, label_propagation(mm, iterations=8).collect()))
     assert fast == slow and len(fast) > 0
-
-
-def test_force_distributed_env_zeroes_gates(monkeypatch):
-    """bench.py's second lane contract: SPARK_GRAFT_FORCE_DISTRIBUTED=1
-    must zero every driver-collect gate at call time."""
-    from github_miner_spark.graph import algorithms, paths
-
-    assert algorithms._gate(2_000_000) == 2_000_000
-    assert paths._gate(123) == 123
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-    assert algorithms._gate(2_000_000) == 0
-    assert paths._gate(123) == 0
 
 
 def test_distributed_scc_huge_cyclic_core(spark, monkeypatch):
@@ -451,9 +402,9 @@ def test_distributed_scc_huge_cyclic_core(spark, monkeypatch):
 
 
 def test_distributed_scc_fwbw_coloring_on_single_giant_scc(spark, monkeypatch):
-    """The FW-BW coloring loop (the > component_task_threshold path) on
+    """The FW-BW coloring loop (the path past the scc_component gate) on
     a single ~2k-vertex SCC whose WCC split cannot help: forced gates +
-    component_task_threshold=0 exercises forward coloring with pointer
+    every SCC/WCC task rung off exercises forward coloring with pointer
     jumping, backward pruning, and re-trim end to end. Must match
     driver Tarjan exactly."""
     from github_miner_spark.graph.algorithms import strongly_connected_components
@@ -469,8 +420,13 @@ def test_distributed_scc_fwbw_coloring_on_single_giant_scc(spark, monkeypatch):
     edges = parts[0].unionByName(parts[1]).localCheckpoint(eager=True)
     fast_rows = sorted(map(tuple, strongly_connected_components(edges).collect()))
     monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-    slow = strongly_connected_components(edges, component_task_threshold=0)
-    assert fast_rows == sorted(map(tuple, slow.collect()))
+    with only(
+        strongly_connected_components="distributed",
+        scc_component="distributed",
+        connected_components="distributed",
+    ):
+        slow_rows = sorted(map(tuple, strongly_connected_components(edges).collect()))
+    assert fast_rows == slow_rows
     assert len(fast_rows) == n and len({c for _, c in fast_rows}) == 1
 
 
@@ -570,30 +526,22 @@ def test_betweenness_distributed_matches_driver(spark):
             r.id: r.betweenness
             for r in betweenness_centrality(e, roots).collect()
         }
-        slow = {
-            r.id: r.betweenness
-            for r in betweenness_centrality(e, roots, collect_threshold=0).collect()
-        }
+        def run():
+            return {
+                r.id: r.betweenness
+                for r in betweenness_centrality(e, roots).collect()
+            }
+
+        with only(betweenness_centrality="task"):
+            slow = run()
         # third/fourth formulations: windowed sweeps with the backward
         # task kernel, and with the backward LOOP fallback — so all
         # four distributed shapes stay pinned (slow above takes the
         # per-root task-local path)
-        windowed = {
-            r.id: r.betweenness
-            for r in betweenness_centrality(
-                e, roots, collect_threshold=0, per_root_task_threshold=0
-            ).collect()
-        }
-        loop = {
-            r.id: r.betweenness
-            for r in betweenness_centrality(
-                e,
-                roots,
-                collect_threshold=0,
-                per_root_task_threshold=0,
-                backward_task_threshold=0,
-            ).collect()
-        }
+        with only(betweenness_centrality="distributed"):
+            windowed = run()
+            with only(betweenness_backward="distributed"):
+                loop = run()
         want = _brandes_betweenness(pairs, roots)
         assert fast == pytest.approx(want, rel=1e-9), pairs
         assert set(slow) == set(want), pairs
@@ -618,13 +566,13 @@ def test_betweenness_duplicate_roots_count_once(spark):
     pairs = [(1, 2), (2, 3), (1, 4), (4, 3), (3, 5)]
     e = edges_df(spark, pairs)
     want = _brandes_betweenness(pairs, [1])
-    for kw in ({}, {"collect_threshold": 0},
-               {"collect_threshold": 0, "per_root_task_threshold": 0}):
-        got = {
-            r.id: r.betweenness
-            for r in betweenness_centrality(e, [1, 1], **kw).collect()
-        }
-        assert got == pytest.approx(want, rel=1e-9), kw
+    for path in ("driver", "task", "distributed"):
+        with only(betweenness_centrality=path):
+            got = {
+                r.id: r.betweenness
+                for r in betweenness_centrality(e, [1, 1]).collect()
+            }
+        assert got == pytest.approx(want, rel=1e-9), path
 
 
 def test_betweenness_distributed_random_graphs(spark):
@@ -648,16 +596,16 @@ def test_betweenness_distributed_random_graphs(spark):
             continue
         roots = sorted({a for a, _ in pairs})[:4]
         e = edges_df(spark, pairs)
-        slow = {
-            r.id: r.betweenness
-            for r in betweenness_centrality(e, roots, collect_threshold=0).collect()
-        }
-        windowed = {
-            r.id: r.betweenness
-            for r in betweenness_centrality(
-                e, roots, collect_threshold=0, per_root_task_threshold=0
-            ).collect()
-        }
+        with only(betweenness_centrality="task"):
+            slow = {
+                r.id: r.betweenness
+                for r in betweenness_centrality(e, roots).collect()
+            }
+        with only(betweenness_centrality="distributed"):
+            windowed = {
+                r.id: r.betweenness
+                for r in betweenness_centrality(e, roots).collect()
+            }
         want = _brandes_betweenness(pairs, roots)
         assert set(slow) == set(want), pairs
         assert set(windowed) == set(want), pairs
@@ -687,12 +635,11 @@ def test_betweenness_windowed_deep_chain_and_diamonds(spark):
     e = edges_df(spark, pairs)
     roots = [0]
     want = _brandes_betweenness(pairs, roots)
-    windowed = {
-        r.id: r.betweenness
-        for r in betweenness_centrality(
-            e, roots, collect_threshold=0, per_root_task_threshold=0
-        ).collect()
-    }
+    with only(betweenness_centrality="distributed"):
+        windowed = {
+            r.id: r.betweenness
+            for r in betweenness_centrality(e, roots).collect()
+        }
     assert set(windowed) == set(want)
     for v in want:
         assert windowed[v] == pytest.approx(want[v], rel=1e-9), v
@@ -715,9 +662,8 @@ def test_anf_task_kernel_matches_distributed_loop(spark):
 
     SF = "/root/testdata/sf0.001"
     task = sorted(map(tuple, anf_neighborhood_function(spark, SF).collect()))
-    loop = sorted(
-        map(tuple, anf_neighborhood_function(spark, SF, task_threshold=0).collect())
-    )
+    with only(anf="distributed"):
+        loop = sorted(map(tuple, anf_neighborhood_function(spark, SF).collect()))
     assert task == loop
     assert task, "no anchor rows"
     for row in task:
@@ -739,9 +685,8 @@ def test_anf_effective_diameter_parity_and_semantics(spark):
 
     SF = "/root/testdata/sf0.001"
     task = sorted(map(tuple, anf_effective_diameter(spark, SF).collect()))
-    loop = sorted(
-        map(tuple, anf_effective_diameter(spark, SF, task_threshold=0).collect())
-    )
+    with only(anf="distributed"):
+        loop = sorted(map(tuple, anf_effective_diameter(spark, SF).collect()))
     assert task == loop
     assert [h for h, *_ in task] == [1, 2, 3]
     nfs = [nf for _, nf, _, _ in task]

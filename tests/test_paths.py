@@ -14,6 +14,7 @@ from github_miner_spark.graph.paths import (
     reachable_set,
     shortest_path_length,
 )
+from tests.gate_utils import only
 
 
 def edges_df(spark, pairs):
@@ -118,23 +119,19 @@ def test_asp_driver_path_matches_distributed(spark, monkeypatch):
     ).collect()[0]["h"]
     targets = [int(hub), 132, 2]
 
-    driver = {
-        (r["target"], tuple(r["path"]), r["length"])
-        for r in P.all_shortest_paths_multi(mm, 2, targets).collect()
-    }
-    monkeypatch.setattr(P, "DRIVER_CLOSURE_EDGES", 0)
-    # gated off, default threshold: the task-local kernel path
-    task = {
-        (r["target"], tuple(r["path"]), r["length"])
-        for r in P.all_shortest_paths_multi(mm, 2, targets).collect()
-    }
-    # threshold zeroed too: the distributed two-sweep pipeline
-    dist = {
-        (r["target"], tuple(r["path"]), r["length"])
-        for r in P.all_shortest_paths_multi(
-            mm, 2, targets, per_root_task_threshold=0
-        ).collect()
-    }
+    def run():
+        return {
+            (r["target"], tuple(r["path"]), r["length"])
+            for r in P.all_shortest_paths_multi(mm, 2, targets).collect()
+        }
+
+    driver = run()
+    # task rung only: the task-local kernel path
+    with only(all_shortest_paths_multi="task"):
+        task = run()
+    # empty ladder: the distributed two-sweep pipeline
+    with only(all_shortest_paths_multi="distributed"):
+        dist = run()
     assert driver == task and len(driver) > 0
     assert driver == dist
 
@@ -150,22 +147,19 @@ def test_enumerate_simple_paths_driver_matches_distributed(spark):
         [(1, 2), (1, 2), (2, 3), (2, 4), (3, 4), (1, 4), (4, 5)],
         "src bigint, dst bigint",
     )
-    fast = sorted((tuple(r["path"]), r["length"]) for r in P.enumerate_simple_paths(edges, 1).collect())
-    saved = P.DRIVER_CLOSURE_EDGES
-    try:
-        P.DRIVER_CLOSURE_EDGES = 0
-        # gated off, default task threshold: the task-local DFS kernel
-        task = sorted(
+    def run():
+        return sorted(
             (tuple(r["path"]), r["length"])
             for r in P.enumerate_simple_paths(edges, 1).collect()
         )
-        # task threshold zeroed: the distributed level loop
-        slow = sorted(
-            (tuple(r["path"]), r["length"])
-            for r in P.enumerate_simple_paths(edges, 1, task_threshold=0).collect()
-        )
-    finally:
-        P.DRIVER_CLOSURE_EDGES = saved
+
+    fast = run()
+    # task rung only: the task-local DFS kernel
+    with only(enumerate_simple_paths="task"):
+        task = run()
+    # empty ladder: the distributed level loop
+    with only(enumerate_simple_paths="distributed"):
+        slow = run()
     assert fast == task and len(fast) > 0
     assert fast == slow
     # the doubled 1->2 edge doubles every path through it
@@ -176,8 +170,7 @@ def test_distributed_closure_adversarial_depth_and_hubs(spark):
     """VERDICT r4 item 8: the distributed closure/BFS loops on a graph
     shaped to hurt — a depth-250 chain (beyond the reference's 185-depth
     anchor) feeding a 50-way fan into a ~300k-edge single-out DAG with
-    a ~4.9k-in-degree hub — forced past the driver gate
-    (driver_threshold=0). Asserts the loops COMPLETE (bounded state, no
+    a ~4.9k-in-degree hub — forced past the driver rung. Asserts the loops COMPLETE (bounded state, no
     cycle false-positive on a genuine DAG) and agree exactly with the
     in-driver DP twin."""
     chain = spark.range(250).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
@@ -205,41 +198,34 @@ def test_distributed_closure_adversarial_depth_and_hubs(spark):
     )
 
     fast = closure_path_counts(edges, roots=[0], max_iter=500)  # driver DP
-    # gated off, default task threshold: the task-local DP kernel
-    task = closure_path_counts(edges, roots=[0], max_iter=500, driver_threshold=0)
-    # task threshold zeroed too: the distributed frontier loop
-    slow = closure_path_counts(
-        edges,
-        roots=[0],
-        max_iter=500,
-        driver_threshold=0,
-        task_threshold=0,
-        broadcast_frontier=True,
-        checkpoint_every=10,
-    )
     f_rows = sorted(map(tuple, fast.collect()))
-    t_rows = sorted(map(tuple, task.collect()))
-    s_rows = sorted(map(tuple, slow.collect()))
+    # task rung only: the task-local DP kernel
+    with only(closure_path_counts="task"):
+        task = closure_path_counts(edges, roots=[0], max_iter=500)
+        t_rows = sorted(map(tuple, task.collect()))
+    # empty ladder: the distributed frontier loop
+    with only(closure_path_counts="distributed"):
+        slow = closure_path_counts(
+            edges,
+            roots=[0],
+            max_iter=500,
+            broadcast_frontier=True,
+            checkpoint_every=10,
+        )
+        s_rows = sorted(map(tuple, slow.collect()))
     assert f_rows == t_rows and len(f_rows) > 300
     assert f_rows == s_rows
 
-    depths = bfs_depths(
-        edges, roots=[0], max_iter=500, driver_threshold=0, checkpoint_every=10
-    )
+    with only(bfs_depths="distributed"):
+        depths = bfs_depths(edges, roots=[0], max_iter=500, checkpoint_every=10)
+        d_rows = sorted(map(tuple, depths.collect()))
+        assert depths.agg(F.max("depth")).collect()[0][0] >= 250
     d_fast = bfs_depths(edges, roots=[0], max_iter=500)
-    assert sorted(map(tuple, depths.collect())) == sorted(map(tuple, d_fast.collect()))
-    assert depths.agg(F.max("depth")).collect()[0][0] >= 250
+    assert d_rows == sorted(map(tuple, d_fast.collect()))
     # per-root task-local path (opt-in): same full map as both twins
-    d_task = bfs_depths(
-        edges,
-        roots=[0],
-        max_iter=500,
-        driver_threshold=0,
-        per_root_task_threshold=5_000_000,
-    )
-    assert sorted(map(tuple, depths.collect())) == sorted(
-        map(tuple, d_task.collect())
-    )
+    with only(bfs_depths="task"):
+        d_task = bfs_depths(edges, roots=[0], max_iter=500, per_root_task=True)
+        assert d_rows == sorted(map(tuple, d_task.collect()))
 
 
 def test_bfs_depths_dataframe_roots_task_parity(spark):
@@ -255,15 +241,12 @@ def test_bfs_depths_dataframe_roots_task_parity(spark):
         [(a, b) for a, b in rows if a != b], "src bigint, dst bigint"
     ).localCheckpoint(eager=True)
     roots_df = edges.select(F.col("src").alias("root")).filter(F.col("src") < 6).distinct()
-    task = bfs_depths(
-        edges, roots=roots_df, driver_threshold=0, per_root_task_threshold=5_000_000
-    )
-    loop = bfs_depths(
-        edges, roots=roots_df, driver_threshold=0, per_root_task_threshold=0
-    )
+    with only(bfs_depths="task"):
+        t = sorted(map(tuple, bfs_depths(edges, roots=roots_df, per_root_task=True).collect()))
+    with only(bfs_depths="distributed"):
+        loop = bfs_depths(edges, roots=roots_df, per_root_task=True)
+        assert t == sorted(map(tuple, loop.collect()))
     drv = bfs_depths(edges, roots=roots_df)
-    t = sorted(map(tuple, task.collect()))
-    assert t == sorted(map(tuple, loop.collect()))
     assert t == sorted(map(tuple, drv.collect()))
     assert len(t) > 100
 
@@ -304,17 +287,11 @@ def test_weighted_sssp_driver_matches_distributed(spark, monkeypatch):
         driver = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
         assert len(driver) > 0
         monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-        # forced path 1: per-root task kernel (default threshold)
+        # forced path 1: per-root task kernel (default ladder)
         task = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
         # forced path 2: the Bellman-Ford relaxation loop
-        dist = sorted(
-            map(
-                tuple,
-                P.weighted_sssp(
-                    edges, root, per_root_task_threshold=0
-                ).collect(),
-            )
-        )
+        with only(weighted_sssp="distributed"):
+            dist = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
         monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED")
         assert driver == task
         assert driver == dist

@@ -13,6 +13,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from github_miner_spark.graph.algorithms import connected_components
+from tests.gate_utils import only
 
 _settings = settings(
     max_examples=8,
@@ -154,16 +155,17 @@ def test_closure_path_counts_matches_dp(spark, edges, root):
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
     )
-    # default gate -> driver DP fast path; driver_threshold=0 forces
-    # the distributed frontier loop: BOTH must match the reference
+    # default gate -> driver DP fast path; the task rung alone runs
+    # the same DP in an executor task: BOTH must match the reference
     got_driver = {
         r["node"]: r["paths"]
         for r in closure_path_counts(df, roots=[root]).collect()
     }
-    got_dist = {
-        r["node"]: r["paths"]
-        for r in closure_path_counts(df, roots=[root], driver_threshold=0).collect()
-    }
+    with only(closure_path_counts="task"):
+        got_dist = {
+            r["node"]: r["paths"]
+            for r in closure_path_counts(df, roots=[root]).collect()
+        }
     assert got_driver == want
     assert got_dist == want
 
@@ -212,15 +214,16 @@ def test_bfs_depths_matches_python_bfs_on_cyclic_graphs(spark, edges, root):
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
     )
-    # default gate -> driver BFS; driver_threshold=0 forces the
+    # default gate -> driver BFS; an empty ladder forces the
     # distributed loop: BOTH must match the reference
     got_driver = {
         r["node"]: r["depth"] for r in bfs_depths(df, roots=[root]).collect()
     }
-    got_dist = {
-        r["node"]: r["depth"]
-        for r in bfs_depths(df, roots=[root], driver_threshold=0).collect()
-    }
+    with only(bfs_depths="distributed"):
+        got_dist = {
+            r["node"]: r["depth"]
+            for r in bfs_depths(df, roots=[root]).collect()
+        }
     assert got_driver == want
     assert got_dist == want
 
@@ -392,13 +395,12 @@ def test_coreness_both_paths_match_peel_reference(spark, edges):
         [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
     )
     driver = {r.id: r.core for r in coreness(df).collect()}
-    # gated off, default task threshold: the task-local peel kernel
-    task = {r.id: r.core for r in coreness(df, collect_threshold=0).collect()}
-    # both thresholds zeroed: the distributed h-index fixpoint
-    distributed = {
-        r.id: r.core
-        for r in coreness(df, collect_threshold=0, task_threshold=0).collect()
-    }
+    # task rung only: the task-local peel kernel
+    with only(coreness="task"):
+        task = {r.id: r.core for r in coreness(df).collect()}
+    # empty ladder: the distributed h-index fixpoint
+    with only(coreness="distributed"):
+        distributed = {r.id: r.core for r in coreness(df).collect()}
     assert driver == want
     assert task == want
     assert distributed == want

@@ -1,18 +1,21 @@
 #!/usr/bin/env python
-"""Static plan audit of every bench headline query: anti-pattern scan."""
+"""Static plan audit of every bench headline query: anti-pattern scan.
+
+Runs at local[$SPARK_GRAFT_CPUS] (the session default)."""
 import json
 import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 from github_miner_spark import registry
 from github_miner_spark.session import get_spark
 from bench import HEADLINE
 
-spark = get_spark(app_name="plan-audit", master="local[8]", shuffle_partitions=32)
+spark = get_spark(app_name="plan-audit", shuffle_partitions=32)
 specs = registry.all_specs()
 from github_miner_spark.graph.store import materialize_graph
 materialize_graph(spark, SF)
@@ -36,6 +39,8 @@ for n in [x for x in HEADLINE if x in specs]:
         "cartesian": plan.count("CartesianProduct"),
         "py_eval": plan.count("BatchEvalPython") + plan.count("ArrowEvalPython"),
         "map_py": plan.count("MapInPandas") + plan.count("PythonMapInArrow") + plan.count("MapInArrow"),
+        # applyInPandas / cogroup kernels (per-WCC Tarjan, Louvain, Brandes, ...)
+        "group_py": plan.count("FlatMapGroupsInPandas") + plan.count("FlatMapCoGroupsInPandas"),
         "single_part": plan.count("SinglePartition"),
         "window": plan.count("(Window"),
         "parquet_scans": scans,
@@ -43,13 +48,17 @@ for n in [x for x in HEADLINE if x in specs]:
         "rdd_scans": plan.count("Scan ExistingRDD"),
         "sort": len(re.findall(r"\(\d+\) Sort", plan)),
     }
-with open("/root/repo/plans/r13/plan_audit.json", "w") as f:
+with open(os.path.join(REPO, "plans", "r13", "plan_audit.json"), "w") as f:
     json.dump(out, f, indent=1)
 print("queries audited:", len(out))
 print("\n-- py eval nodes (expect 0) --")
 for n, v in out.items():
     if v.get("py_eval"):
         print(n, v["py_eval"])
+print("-- grouped pandas kernels (applyInPandas / cogroup) --")
+for n, v in out.items():
+    if v.get("group_py"):
+        print(n, v["group_py"])
 print("-- cartesian products --")
 for n, v in out.items():
     if v.get("cartesian"):
