@@ -770,11 +770,12 @@ def main() -> None:
             # per-round driver bench; the round-10 measurement ran the
             # full protocol once and committed the artifact
             # (BENCH_scaling_r10.json, PERF.md round 10). The louvain
-            # entry times the PHASE-1 local-moving sweeps (2 sweeps,
-            # 1 level): the at-scale dominant loop — the super-node
-            # level re-runs the same sweeps on a contracted graph
-            # orders of magnitude smaller, while the FULL distributed
-            # two-level run is plan-compile-bound at bench SF (352s
+            # entry times the PHASE-1 local-moving sweeps (a fixed 2
+            # sweeps, 1 level, no convergence probe): the at-scale
+            # dominant loop — the super-node level re-runs the same
+            # sweeps on a contracted graph orders of magnitude
+            # smaller, while the FULL distributed two-level run is
+            # plan-compile-bound at bench SF (352s
             # cold on 3k edges — all barrier/codegen overhead, no
             # data signal).
             if os.environ.get("SPARK_GRAFT_EXTENDED_SCALING_LANE"):

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.etl.merge import merge_append
+from github_miner_spark.etl.merge import merge_append, read_existing
 from github_miner_spark.etl.package_json import (
     extract_dependency_edges,
     read_manifest_lake,
@@ -145,11 +145,11 @@ def run_insert_job(
         (out_vertices, vertices, VERTEX_KEY),
         (out_edges, edges, EDGE_KEY),
     ):
-        try:
-            existing = spark.read.parquet(path)
-            merged = merge_append(existing, df, key).localCheckpoint(eager=True)
-        except Exception:
+        existing = read_existing(spark.read, path)
+        if existing is None:
             merged = df
+        else:
+            merged = merge_append(existing, df, key).localCheckpoint(eager=True)
         merged.write.mode("overwrite").parquet(path)
     return {
         "vertices": spark.read.parquet(out_vertices).count(),

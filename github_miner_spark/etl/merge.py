@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, DataFrameReader
 
 
 def dedupe_batch(batch: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -38,3 +39,17 @@ def merge_append(existing: DataFrame, batch: DataFrame, keys: Sequence[str]) -> 
 def novel_rows(existing: DataFrame, batch: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Just the to-be-appended rows (what a MERGE INSERT clause sees)."""
     return dedupe_batch(batch, keys).join(existing, list(keys), "left_anti")
+
+
+def read_existing(reader: DataFrameReader, path: str) -> DataFrame | None:
+    """``reader.parquet(path)``, or None when nothing was written there
+    yet. Only a missing path means "empty": any other failure (a corrupt
+    part file, an unreadable dir) propagates, so a caller that would
+    overwrite ``path`` with a merge never replaces a table it could not
+    read with just the current batch."""
+    try:
+        return reader.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise

@@ -26,6 +26,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from github_miner_spark.etl.merge import read_existing
+
 # the reference's widening windows (src/miner.ts:145-159)
 FIBONACCI_WINDOW_DAYS = (1, 2, 3, 5, 8, 13, 21)
 
@@ -153,9 +155,8 @@ def run_mining_job(
     import pandas as pd
 
     planned = partitions_df(spark, parts)
-    try:
-        completed = spark.read.schema("partition_key string").parquet(state_dir)
-    except Exception:
+    completed = read_existing(spark.read.schema("partition_key string"), state_dir)
+    if completed is None:
         completed = spark.createDataFrame([], "partition_key string")
     pending = pending_partitions(planned, completed)
     n_pending = pending.count()

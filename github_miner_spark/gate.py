@@ -32,9 +32,9 @@ from __future__ import annotations
 import os
 
 LIMITS: dict[str, tuple[tuple[str, int], ...]] = {
-    # weighted edges; the task kernel outranks the driver twin, which
-    # measured 2x slower at bench scale (the collect + re-ship of ranks)
-    "pagerank": (("task", 5_000_000), ("driver", 2_000_000)),
+    # weighted edges; a driver twin measured 2x slower than the task
+    # kernel at bench scale (the collect + re-ship of ranks)
+    "pagerank": (("task", 5_000_000),),
     # deduped non-self pairs
     "connected_components": (("driver", 2_000_000), ("task", 5_000_000)),
     # deduped edges, then the trimmed core: driver Tarjan, else the
@@ -72,8 +72,8 @@ def choose_path(gate: str, n_rows: int, skip: tuple[str, ...] = ()) -> str:
     """The path ``gate`` takes for ``n_rows`` input rows: the first rung
     of ``LIMITS[gate]`` whose limit admits ``n_rows``, else
     ``"distributed"``. ``skip`` names paths this call cannot take (a
-    missing precondition of the kernel, or a caller that did not opt
-    in); the force flag adds ``"driver"``."""
+    caller that did not opt in to a rung); the force flag adds
+    ``"driver"``."""
     if os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED"):
         skip = (*skip, "driver")
     for path, max_rows in LIMITS[gate]:

@@ -48,23 +48,6 @@ def _vertex_ids(edges: DataFrame) -> DataFrame:
     )
 
 
-def _pagerank_driver(
-    weighted: DataFrame,
-    verts: DataFrame,
-    iterations: int,
-    damping: float,
-    sources: list[int] | None,
-) -> DataFrame:
-    """In-driver twin of the power-iteration loop: the collected
-    (src, dst, w) list becomes index arrays and each iteration is one
-    deterministic numpy scatter-add — same recurrence, same dangling-
-    mass decay, same personalization."""
-    rows = [(r["src"], r["dst"], r["w"]) for r in weighted.collect()]
-    ids = sorted(r["id"] for r in verts.collect())
-    out = _pagerank_rows_numpy(rows, ids, iterations, damping, sources)
-    return weighted.sparkSession.createDataFrame(out, "id bigint, rank double")
-
-
 def _pagerank_rows_numpy(
     rows: list[tuple[int, int, float]],
     ids: list[int],
@@ -72,8 +55,9 @@ def _pagerank_rows_numpy(
     damping: float,
     sources: list[int] | None,
 ) -> list[tuple[int, float]]:
-    """The shared numpy power-iteration core: identical recurrence for
-    the in-driver twin and the executor-task kernel."""
+    """The numpy power-iteration core the executor-task kernel runs:
+    the distributed loop's recurrence, dangling-mass decay and
+    personalization, one scatter-add per iteration."""
     import numpy as np
 
     idx = {v: i for i, v in enumerate(ids)}
@@ -107,11 +91,11 @@ def _pagerank_group_factory(
     iterations: int, damping: float, sources: list[int] | None
 ):
     """Build the applyInPandas kernel for task-local PageRank: the
-    weighted edge list arrives as one group and the shared numpy core
-    runs inside the executor task. Valid only when the vertex set is
-    edge-derived (vertices=None): every endpoint of e appears in the
-    weighted rows (a node with no out-edges still appears as dst), so
-    the kernel reconstructs exactly the ids the driver twin would."""
+    weighted edge list arrives as one group and the numpy core
+    (_pagerank_rows_numpy) runs inside the executor task. The vertex set is edge-derived:
+    every endpoint of e appears in the weighted rows (a node with no
+    out-edges still appears as dst), so the kernel reconstructs exactly
+    the ids the distributed loop ranks."""
 
     def _pagerank_group(pdf):
         import pandas as pd
@@ -129,14 +113,22 @@ def _pagerank_group_factory(
     return _pagerank_group
 
 
+# PageRank's distributed loop takes one barrier per 5 iterations: the
+# in-window iterations chain lazily and execute as ONE job at the
+# checkpoint (5 shuffles in one DAG), instead of paying a driver
+# barrier per iteration — power iteration has no per-step convergence
+# probe, so nothing needs the intermediate ranks materialized. Lineage
+# stays bounded by the window. A/B at sf0.1/local[32]: windows of
+# 4/5/8/10 ran 4.3-6.2 / 4.6-5.0 / 6.3-6.5 / 6.3-6.5 s — 5 is the knee
+# (4 barriers for 20 iterations); wider windows lose to codegen over
+# the deeper unmaterialized plan.
+PAGERANK_BARRIER_EVERY = 5
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 20,
     damping: float = 0.85,
-    vertices: DataFrame | None = None,
-    broadcast_ranks: bool = False,
-    loop_shuffle_width: int | None = None,
-    barrier_every: int = 5,
     sources: list[int] | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank, OUTGOING direction, non-normalized
@@ -154,27 +146,19 @@ def pagerank(
     literals change (both precomputed driver-side so the DuckDB oracle
     starts from identical IEEE-754 constants).
 
-    ``broadcast_ranks``: broadcast the rank vector into the per-
-    iteration contribution join instead of shuffling the weighted edge
-    table — ~30% faster when |V| fits in executor memory (a rank row is
-    16 bytes; up to ~100M vertices is fine); leave off beyond that.
-
-    ``loop_shuffle_width``: explicit override for the per-iteration
-    groupBy shuffle width (see paths._loop_shuffle_partitions) — the
-    aggregated state is one row per vertex, so the session-wide width
-    sized for full-table scans only buys task-launch overhead in the
-    loop. None (default) sizes it from the weighted edge count
-    (paths._adaptive_loop_width): narrow at bench SF, the session
-    width again at cluster scale. The INPUT materializations (degree
-    join, vertex distinct) always run at session width — only the loop
-    narrows."""
+    The distributed loop's groupBy shuffle width is sized from the
+    weighted edge count (paths._adaptive_loop_width): the aggregated
+    state is one row per vertex, so the session-wide width sized for
+    full-table scans only buys task-launch overhead in the loop. The
+    INPUT materializations (degree join, vertex distinct) always run at
+    session width — only the loop narrows."""
     from github_miner_spark.graph.paths import (
         _adaptive_loop_width,
         _loop_shuffle_partitions,
     )
 
     e = edges.select("src", "dst")
-    verts = (vertices.select("id") if vertices is not None else _vertex_ids(e)).distinct()
+    verts = _vertex_ids(e).distinct()
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     # pre-join the per-edge weight once: src -> dst with 1/outdeg(src)
     weighted = e.join(outdeg, "src").select(
@@ -182,27 +166,18 @@ def pagerank(
     ).localCheckpoint(eager=True)
     n_w = weighted.count()
 
-    # Hybrid fast path (README: anchored-probe hybrid execution):
-    # 20 power iterations cost 4+ driver barriers distributed; under
-    # the ``pagerank`` gate the weighted edge list collects and the
-    # same recurrence runs as a numpy matvec. Ranks are genuine
-    # float sums, so the two paths agree to accumulation order —
-    # i.e. to the repo-wide 6dp rounding convention every consumer
-    # (and the DuckDB oracle, which sums in its own order) already
-    # applies; parity at that convention is pinned in tests.
-    # Task-local path FIRST (r9 flip): when the weighted edge list fits
-    # one executor task AND the vertex set is edge-derived, the shared
-    # numpy power-iteration core runs inside ONE applyInPandas task —
-    # executor-side, no driver collect, the 4+ barrier-window jobs
-    # collapse to 2 stages. The driver twin below collects ~|E| rows
-    # and re-ships |V| ranks through the pickle createDataFrame path,
-    # which MEASURES 2x the kernel at bench SF (2.0-3.1s vs 1.0-1.4s
-    # same-session) — so the kernel outranks it whenever both apply;
-    # the twin remains for explicit-vertices callers and as the pinned
-    # parity anchor. Past the gate the distributed loop below is the
+    # Task-local path (README: anchored-probe hybrid execution): 20
+    # power iterations cost 4+ driver barriers distributed; under the
+    # ``pagerank`` gate the weighted edge list runs the same recurrence
+    # as a numpy matvec inside ONE applyInPandas task — executor-side,
+    # no driver collect, the barrier-window jobs collapse to 2 stages.
+    # Ranks are genuine float sums, so the two paths agree to
+    # accumulation order — i.e. to the repo-wide 6dp rounding
+    # convention every consumer (and the DuckDB oracle, which sums in
+    # its own order) already applies; parity at that convention is
+    # pinned in tests. Past the gate the distributed loop below is the
     # at-scale path.
-    path = choose_path("pagerank", n_w, () if vertices is None else ("task",))
-    if path == "task":
+    if choose_path("pagerank", n_w) == "task":
         return (
             weighted.withColumn("g", F.lit(1))
             .groupBy("g")
@@ -212,16 +187,8 @@ def pagerank(
             )
         )
 
-    if path == "driver":
-        return _pagerank_driver(
-            weighted, verts, iterations, damping, sources
-        )
-
-    if loop_shuffle_width is None:
-        loop_shuffle_width = _adaptive_loop_width(e.sparkSession, n_w)
-    # Eager HERE, after the driver/task dispatches (which never read
-    # verts distributed — the twin collects it, the kernel derives the
-    # ids itself) and BEFORE the narrowed loop scope: left lazy, the
+    # Eager HERE, after the task dispatch (the kernel derives the ids
+    # itself) and BEFORE the narrowed loop scope: left lazy, the
     # corpus-sized vertex distinct would first execute inside
     # _loop_shuffle_partitions at the adaptive loop width (ADVICE r6).
     verts = verts.localCheckpoint(eager=True)
@@ -230,7 +197,7 @@ def pagerank(
     with _loop_shuffle_partitions(
         e.sparkSession,
         enabled=True,
-        width=loop_shuffle_width,
+        width=_adaptive_loop_width(e.sparkSession, n_w),
         aqe_off=True,
     ):
         if sources is None:
@@ -244,9 +211,8 @@ def pagerank(
             base_col = F.when(F.col("id").isin(srcs), F.lit(c0)).otherwise(F.lit(0.0))
         ranks = verts.withColumn("rank", init_col)
         for it in range(1, iterations + 1):
-            r = F.broadcast(ranks) if broadcast_ranks else ranks
             contribs = (
-                weighted.join(r, weighted.src == ranks.id)
+                weighted.join(ranks, weighted.src == ranks.id)
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("w")).alias("msg"))
             )
@@ -256,17 +222,7 @@ def pagerank(
                     "rank"
                 ),
             )
-            # one barrier per 5 iterations: the in-window iterations
-            # chain lazily and execute as ONE job at the checkpoint (5
-            # shuffles in one DAG), instead of paying a driver barrier
-            # per iteration — power iteration has no per-step
-            # convergence probe, so nothing needs the intermediate
-            # ranks materialized. Lineage stays bounded by the window.
-            # A/B at sf0.1/local[32]: windows of 4/5/8/10 ran
-            # 4.3-6.2 / 4.6-5.0 / 6.3-6.5 / 6.3-6.5 s — 5 is the knee
-            # (4 barriers for 20 iterations); wider windows lose to
-            # codegen over the deeper unmaterialized plan.
-            if it % barrier_every == 0 or it == iterations:
+            if it % PAGERANK_BARRIER_EVERY == 0 or it == iterations:
                 ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
@@ -313,11 +269,7 @@ def _union_find_group(pdf):
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    loop_shuffle_width: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Weakly-connected components via alternating large-star/small-star
     pointer doubling (the MapReduce CC algorithm of Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14). Returns
@@ -381,12 +333,10 @@ def connected_components(
         return verts.join(roots, "id", "left_outer").select(
             "id", F.coalesce(F.col("component"), F.col("id")).alias("component")
         )
-    if loop_shuffle_width is None:
-        loop_shuffle_width = _adaptive_loop_width(base.sparkSession, n_pairs)
     with _loop_shuffle_partitions(
         base.sparkSession,
         enabled=True,
-        width=loop_shuffle_width,
+        width=_adaptive_loop_width(base.sparkSession, n_pairs),
     ):
         converged = pairs.isEmpty()
         for _ in range(max_iter):
@@ -537,11 +487,7 @@ def _tarjan_components(edge_list: list[tuple[int, int]], nodes: list[int]) -> di
     return comp
 
 
-def strongly_connected_components(
-    edges: DataFrame,
-    max_iter: int = 200,
-    loop_shuffle_width: int | None = None,
-) -> DataFrame:
+def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> DataFrame:
     """SCC, hybrid two-level (the set-at-a-time analog of the
     reference's algo.scc 'huge' graph run,
     documentation/queries.md:120-141):
@@ -586,13 +532,12 @@ def strongly_connected_components(
 
     Returns (id, component) with component = min member id.
 
-    ``loop_shuffle_width``: explicit override for the trim/coloring
-    loops' shuffle width. None (default) sizes it from the deduped edge
-    count at ~250k rows per partition (min 2, capped at the session's
-    shuffle width): the loop state is vertex/edge-sized, so at bench SF
-    a handful of partitions removes per-round task-scheduling overhead
-    the session's full width would pay ~70 times over, while a 100-TB
-    core gets the session width back automatically."""
+    The trim/coloring loops' shuffle width is sized from the deduped
+    edge count (paths._adaptive_loop_width): the loop state is
+    vertex/edge-sized, so at bench SF a handful of partitions removes
+    per-round task-scheduling overhead the session's full width would
+    pay ~70 times over, while a 100-TB core gets the session width back
+    automatically."""
     from github_miner_spark.graph.paths import (
         _adaptive_loop_width,
         _loop_shuffle_partitions,
@@ -605,10 +550,8 @@ def strongly_connected_components(
     dedup = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     n_edges = dedup.count()
     spark = edges.sparkSession
-    if loop_shuffle_width is None:
-        loop_shuffle_width = _adaptive_loop_width(spark, n_edges)
     with _loop_shuffle_partitions(
-        spark, enabled=True, width=loop_shuffle_width
+        spark, enabled=True, width=_adaptive_loop_width(spark, n_edges)
     ):
         return _scc_impl(dedup, n_edges, max_iter)
 
@@ -956,9 +899,7 @@ import itertools as _itertools
 _LV_SEQ = _itertools.count(1)
 
 
-def _louvain_phase1(
-    sym: DataFrame, m2: float, max_sweeps: int, early_exit: bool = True
-) -> DataFrame:
+def _louvain_phase1(sym: DataFrame, m2: float, max_sweeps: int) -> DataFrame:
     """Louvain local-moving phase over a weighted symmetric edge set
     (src, dst, w); self-rows (src==dst) carry intra-node weight from
     prior aggregation levels. Returns (id, community).
@@ -967,7 +908,10 @@ def _louvain_phase1(
     nodes (two half-sweeps), which prevents the two-coloring
     oscillation that plain synchronous moving exhibits, while staying
     set-at-a-time. Ties break to the smallest community id, so runs
-    are deterministic.
+    are deterministic. Exactly ``max_sweeps`` sweeps run: a sweep past
+    convergence moves nothing and is the identity, so the fixed
+    schedule needs no per-half-sweep convergence probe (and matches the
+    unrolled oracle, which runs the same count).
 
     Shape (r9 floor work, two independent cuts):
 
@@ -1061,33 +1005,16 @@ def _louvain_phase1(
            CASE WHEN pmod(CAST(conv(substring(md5(CAST(id AS STRING)), 1, 8),
                                     16, 10) AS BIGINT), 2) = {{parity}}
                 THEN choice ELSE cur END AS community,
-           k,
-           (pmod(CAST(conv(substring(md5(CAST(id AS STRING)), 1, 8),
-                           16, 10) AS BIGINT), 2) = {{parity}}
-            AND choice <> cur) AS moved
+           k
     FROM merged
     """
     try:
         for _ in range(max_sweeps):
-            moved_any = False
             for parity in (0, 1):
                 state.createOrReplaceTempView(f"{tag}_state")
-                new_state = spark.sql(
+                state = spark.sql(
                     half_sweep_sql.format(parity=parity)
                 ).localCheckpoint(eager=True)
-                # the convergence probe is one driver job per
-                # half-sweep; fixed-schedule callers (whose oracle
-                # unrolls exactly max_sweeps sweeps — extra sweeps past
-                # convergence are identity) skip it and save 2 jobs x
-                # sweeps x levels
-                if early_exit:
-                    changed = not new_state.filter(F.col("moved")).isEmpty()
-                    moved_any = moved_any or changed
-                # the extra `moved` column rides along — the next
-                # half-sweep's SQL picks columns by name
-                state = new_state
-            if early_exit and not moved_any:
-                break
     finally:
         spark.catalog.dropTempView(f"{tag}_sym")
         spark.catalog.dropTempView(f"{tag}_state")
@@ -1103,7 +1030,7 @@ def _md5_parity(v: int) -> int:
 
 
 def _louvain_phase1_driver(
-    sym: list[tuple[int, int, float]], m2: float, max_sweeps: int, early_exit: bool
+    sym: list[tuple[int, int, float]], m2: float, max_sweeps: int
 ) -> dict[int, int]:
     """In-driver twin of _louvain_phase1 over a collected symmetric
     weighted edge list. Bit-parity argument (same as the unrolled
@@ -1123,7 +1050,6 @@ def _louvain_phase1_driver(
     comm = {v: v for v in k}
     parity_of = {v: _md5_parity(v) for v in k}
     for _ in range(max_sweeps):
-        moved_any = False
         for parity in (0, 1):
             tot: dict[int, float] = defaultdict(float)
             for v, c in comm.items():
@@ -1144,14 +1070,8 @@ def _louvain_phase1_driver(
                     key = (-score, opt)
                     if best_key is None or key < best_key:
                         best_key, choice = key, opt
-                if parity_of[v] == parity and choice != cur:
-                    new_comm[v] = choice
-                    moved_any = True
-                else:
-                    new_comm[v] = cur
+                new_comm[v] = choice if parity_of[v] == parity else cur
             comm = new_comm
-        if early_exit and not moved_any:
-            break
     return comm
 
 
@@ -1160,15 +1080,14 @@ def _louvain_driver(
     m2: float,
     max_sweeps: int,
     levels: int,
-    early_exit: bool,
 ) -> dict[int, int]:
-    """In-driver twin of _louvain_inner's level loop: aggregate
+    """In-driver twin of louvain's level loop: aggregate
     communities into super-nodes (weights summed, intra-community mass
     as self-rows), re-run local moving with the ORIGINAL m2, map back,
     then canonicalize community ids to the min member id."""
     from collections import defaultdict
 
-    assignment = _louvain_phase1_driver(sym, m2, max_sweeps, early_exit)
+    assignment = _louvain_phase1_driver(sym, m2, max_sweeps)
     cur_sym = sym
     for _ in range(1, levels):
         agg: dict[tuple[int, int], float] = defaultdict(float)
@@ -1177,7 +1096,7 @@ def _louvain_driver(
         super_sym = [(s, d, w) for (s, d), w in agg.items()]
         if not any(s != d for s, d, _ in super_sym):
             break
-        super_assignment = _louvain_phase1_driver(super_sym, m2, max_sweeps, early_exit)
+        super_assignment = _louvain_phase1_driver(super_sym, m2, max_sweeps)
         assignment = {v: super_assignment[c] for v, c in assignment.items()}
         cur_sym = super_sym
     members: dict[int, list[int]] = defaultdict(list)
@@ -1195,8 +1114,6 @@ def louvain(
     edges: DataFrame,
     max_sweeps: int = 5,
     levels: int = 2,
-    loop_shuffle_width: int | None = None,
-    early_exit: bool = True,
     sym: DataFrame | None = None,
     sym_stats: tuple[float, int] | None = None,
 ) -> DataFrame:
@@ -1209,53 +1126,13 @@ def louvain(
     aggregates communities into super-nodes (edge weights summed,
     intra-community weight becoming self-rows) and re-runs local moving,
     then maps assignments back. Returns (id, community) with community =
-    min member id (canonical, deterministic).
+    min member id (canonical, deterministic). Each level runs exactly
+    ``max_sweeps`` local-moving sweeps (see _louvain_phase1).
 
-    ``loop_shuffle_width``: explicit override for the sweep loops'
-    shuffle width; None (default) sizes it from the symmetric edge
+    The sweep loops' shuffle width is sized from the symmetric edge
     count (paths._adaptive_loop_width) — the per-sweep aggregations
     are vertex/edge-sized, so the session width only buys task-launch
     overhead at bench SF while a huge graph gets it back."""
-    return _louvain_inner(
-        edges, max_sweeps, levels, early_exit, loop_shuffle_width, sym, sym_stats
-    )
-
-
-def _louvain_group_factory(
-    m2: float, max_sweeps: int, levels: int, early_exit: bool
-):
-    """Build the applyInPandas kernel for task-local Louvain: the
-    symmetric weighted edge list arrives as one group and the SAME
-    ``_louvain_driver`` twin runs inside the executor task. The twin's
-    bit-parity argument (integer-valued-double sums are order-exact,
-    identical score operation tree) makes task-vs-distributed equality
-    exact, not approximate — the same guarantee the hybrid driver gate
-    already relies on, now without any driver collect."""
-
-    def _louvain_group(pdf):
-        import pandas as pd
-
-        rows = [
-            (int(s), int(d), float(w))
-            for s, d, w in zip(pdf["src"], pdf["dst"], pdf["w"])
-        ]
-        comm = _louvain_driver(rows, m2, max_sweeps, levels, early_exit)
-        return pd.DataFrame(
-            {"id": list(comm.keys()), "community": list(comm.values())}
-        )
-
-    return _louvain_group
-
-
-def _louvain_inner(
-    edges: DataFrame,
-    max_sweeps: int,
-    levels: int,
-    early_exit: bool = True,
-    loop_shuffle_width: int | None = None,
-    sym: DataFrame | None = None,
-    sym_stats: tuple[float, int] | None = None,
-) -> DataFrame:
     from github_miner_spark.graph.paths import (
         _adaptive_loop_width,
         _loop_shuffle_partitions,
@@ -1289,7 +1166,6 @@ def _louvain_inner(
             float(m2),
             max_sweeps,
             levels,
-            early_exit,
         )
         return edges.sparkSession.createDataFrame(
             list(comm.items()), "id bigint, community bigint"
@@ -1306,7 +1182,7 @@ def _louvain_inner(
             sym.withColumn("g", F.lit(1))
             .groupBy("g")
             .applyInPandas(
-                _louvain_group_factory(float(m2), max_sweeps, levels, early_exit),
+                _louvain_group_factory(float(m2), max_sweeps, levels),
                 schema="id bigint, community bigint",
             )
             # consumers reference the assignment several times
@@ -1315,25 +1191,42 @@ def _louvain_inner(
             .localCheckpoint(eager=True)
         )
 
-    if loop_shuffle_width is None:
-        loop_shuffle_width = _adaptive_loop_width(edges.sparkSession, n_sym)
     with _loop_shuffle_partitions(
-        edges.sparkSession, enabled=True, width=loop_shuffle_width
+        edges.sparkSession,
+        enabled=True,
+        width=_adaptive_loop_width(edges.sparkSession, n_sym),
     ):
-        return _louvain_distributed(
-            edges, sym, float(m2), max_sweeps, levels, early_exit
+        return _louvain_distributed(sym, float(m2), max_sweeps, levels)
+
+
+def _louvain_group_factory(m2: float, max_sweeps: int, levels: int):
+    """Build the applyInPandas kernel for task-local Louvain: the
+    symmetric weighted edge list arrives as one group and the SAME
+    ``_louvain_driver`` twin runs inside the executor task. The twin's
+    bit-parity argument (integer-valued-double sums are order-exact,
+    identical score operation tree) makes task-vs-distributed equality
+    exact, not approximate — the same guarantee the hybrid driver gate
+    already relies on, now without any driver collect."""
+
+    def _louvain_group(pdf):
+        import pandas as pd
+
+        rows = [
+            (int(s), int(d), float(w))
+            for s, d, w in zip(pdf["src"], pdf["dst"], pdf["w"])
+        ]
+        comm = _louvain_driver(rows, m2, max_sweeps, levels)
+        return pd.DataFrame(
+            {"id": list(comm.keys()), "community": list(comm.values())}
         )
+
+    return _louvain_group
 
 
 def _louvain_distributed(
-    edges: DataFrame,
-    sym: DataFrame,
-    m2: float,
-    max_sweeps: int,
-    levels: int,
-    early_exit: bool,
+    sym: DataFrame, m2: float, max_sweeps: int, levels: int
 ) -> DataFrame:
-    assignment = _louvain_phase1(sym, float(m2), max_sweeps, early_exit)
+    assignment = _louvain_phase1(sym, float(m2), max_sweeps)
     for _ in range(1, levels):
         # aggregate: super-node per community, weights summed (self-rows
         # keep the intra-community mass so super-level degrees are right)
@@ -1348,7 +1241,7 @@ def _louvain_distributed(
         )
         if super_sym.filter(F.col("src") != F.col("dst")).isEmpty():
             break
-        super_assignment = _louvain_phase1(super_sym, float(m2), max_sweeps, early_exit)
+        super_assignment = _louvain_phase1(super_sym, float(m2), max_sweeps)
         assignment = (
             assignment.join(
                 super_assignment.select(
@@ -1578,11 +1471,7 @@ def _coreness_group(pdf):
     )
 
 
-def coreness(
-    edges: DataFrame,
-    max_iter: int = 100,
-    loop_shuffle_width: int | None = None,
-) -> DataFrame:
+def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     """k-core decomposition: core number per vertex of the UNDIRECTED
     simple graph underlying ``edges`` (self-loops dropped). Returns
     (id, core). The reference's plugin set ships algo.kcore alongside
@@ -1608,7 +1497,10 @@ def coreness(
     """
     from pyspark.sql import Window
 
-    from github_miner_spark.graph.paths import _loop_shuffle_partitions
+    from github_miner_spark.graph.paths import (
+        _adaptive_loop_width,
+        _loop_shuffle_partitions,
+    )
 
     und = (
         edges.select("src", "dst")
@@ -1640,14 +1532,10 @@ def coreness(
             .applyInPandas(_coreness_group, schema="id bigint, core bigint")
         )
 
-    from github_miner_spark.graph.paths import _adaptive_loop_width
-
-    if loop_shuffle_width is None:
-        loop_shuffle_width = _adaptive_loop_width(edges.sparkSession, n_edges)
     with _loop_shuffle_partitions(
         edges.sparkSession,
         enabled=True,
-        width=loop_shuffle_width,
+        width=_adaptive_loop_width(edges.sparkSession, n_edges),
         aqe_off=True,
     ):
         adj = und.select(F.col("u").alias("id"), F.col("v").alias("nb")).unionByName(
@@ -1789,7 +1677,6 @@ def betweenness_centrality(
     edges: DataFrame,
     roots,
     max_iter: int = 1000,
-    loop_shuffle_width: int | None = None,
     broadcast_frontier: bool = False,
 ) -> DataFrame:
     """Source-sampled shortest-path betweenness: (id, betweenness)
@@ -1895,17 +1782,15 @@ def betweenness_centrality(
             .agg(F.sum("delta").alias("betweenness"))
             .select(F.col("node").alias("id"), "betweenness")
         )
-    if loop_shuffle_width is None:
-        loop_shuffle_width = _adaptive_loop_width(spark, n_edges)
     with _loop_shuffle_partitions(
-        spark, enabled=True, width=loop_shuffle_width, aqe_off=True
+        spark, enabled=True, width=_adaptive_loop_width(spark, n_edges), aqe_off=True
     ):
         # ---- forward sweep: windowed sigma-BFS ------------------------
         # ``forward_window`` levels expand LAZILY between barriers:
         # each intra-window level keeps its own per-level groupBy (so
         # sigma stays node-aggregated — chaining the groupBys lazily
         # plans the window as ONE job with k sequential shuffles, the
-        # pagerank barrier_every pattern) and anti-joins only against
+        # pagerank barrier-window pattern) and anti-joins only against
         # the WINDOW-START visited set (a fixed checkpointed frame —
         # single-reference chain, so no exponential unroll). Nodes
         # re-reached at a deeper depth INSIDE the window survive until

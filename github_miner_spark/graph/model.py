@@ -263,12 +263,8 @@ def build_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_graph(spark: SparkSession, sf_dir: str, cache: bool = False) -> PropertyGraph:
-    g = PropertyGraph(build_vertices(spark, sf_dir), build_edges(spark, sf_dir))
-    if cache:
-        g.vertices.cache()
-        g.edges.cache()
-    return g
+def build_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
+    return PropertyGraph(build_vertices(spark, sf_dir), build_edges(spark, sf_dir))
 
 
 def cyclic_module_edges(

@@ -109,24 +109,38 @@ class _loop_shuffle_partitions:
         return False
 
 
-def _adaptive_loop_width(
-    spark, n_rows: int, rows_per_partition: int = 250_000, floor: int = 2
-) -> int:
-    """Loop shuffle width sized from the loop-state row count: ~250k
-    rows per partition, never below ``floor``, never above the
-    session's configured width. At bench SF vertex/edge-sized loop
-    state is a few thousand rows, where the session width (sized for
-    full-table scans) pays task-launch overhead every round for
-    nothing; a 100-TB graph gets the session width back
-    automatically. Callers that know better pass an explicit width."""
+# _adaptive_loop_width: loop-state rows per shuffle partition, and the
+# narrowest loop width
+LOOP_ROWS_PER_PARTITION = 250_000
+LOOP_WIDTH_FLOOR = 2
+
+
+def _adaptive_loop_width(spark, n_rows: int) -> int:
+    """Loop shuffle width sized from the loop-state row count: one
+    partition per ``LOOP_ROWS_PER_PARTITION`` rows, never below
+    ``LOOP_WIDTH_FLOOR``, never above the session's configured width.
+    At bench SF vertex/edge-sized loop state is a few thousand rows,
+    where the session width (sized for full-table scans) pays
+    task-launch overhead every round for nothing; a 100-TB graph gets
+    the session width back automatically."""
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(floor, min(sess, -(-int(n_rows) // rows_per_partition)))
+    wanted = -(-int(n_rows) // LOOP_ROWS_PER_PARTITION)
+    return max(LOOP_WIDTH_FLOOR, min(sess, wanted))
 
 
 # Root-count cap for the anchored-closure fast paths: only an explicit
 # root set this small is collected and handed to a driver or task twin
 # (the edge-count rungs are the ``gate.LIMITS`` entries).
 DRIVER_CLOSURE_ROOTS = 128
+
+# Barrier cadence of the distributed frontier loops, in levels per
+# window: closure_path_counts and bfs_depths keep the levels inside a
+# window LAZY and materialize the whole window at one barrier (see
+# their docstrings). Closure cadences of 5/7/9 measured noise-level on
+# an interleaved A/B at sf0.1; the remaining ~3.5s anchor-closure floor
+# is barrier count x driver latency, not plan shape.
+CLOSURE_CHECKPOINT_EVERY = 7
+BFS_CHECKPOINT_EVERY = 4
 
 # Cap on driver-collected keep/terminal id sets (enumerate_simple_paths'
 # emit-time filter): 64k bigints is broadcast-sized driver state; a
@@ -212,9 +226,7 @@ def closure_path_counts(
     edges: DataFrame,
     roots=None,
     max_iter: int = 100,
-    checkpoint_every: int = 7,
     broadcast_frontier: bool = False,
-    checkpoint_edges: bool = True,
 ) -> DataFrame:
     """Transitive closure preserving path multiplicity.
 
@@ -233,36 +245,30 @@ def closure_path_counts(
     contract; ``tests/test_gate.py`` pins parity). Distributed loop
     unchanged beyond the gate.
 
-    ``checkpoint_every``: barrier cadence. Levels inside a window stay
-    LAZY (no Spark job at all); each barrier materializes the WHOLE
-    window's contribution as one level-tagged, per-level-aggregated
-    chunk (one job covering the window's chained joins), the next
-    frontier is a filter over that already-checkpointed chunk, and the
-    emptiness probe scans checkpointed partitions (free). One driver
-    barrier per k levels instead of two per level — and, because every
-    level lands in exactly one materialized chunk, the final
-    aggregation unions only checkpointed data: the earlier design let
-    the final job REPLAY the lazy in-window levels (1+2+..+(k-1) extra
-    joins per window), which was the residual 2x on the anchor closure
-    bench.
+    The distributed loop materializes the edge relation once up front
+    (an interleaved A/B at sf0.1 measured that ~1s/call faster than
+    re-scanning the edge plan per level, even for plain store scans)
+    and barriers every ``CLOSURE_CHECKPOINT_EVERY`` levels. Levels
+    inside a window stay LAZY (no Spark job at all); each barrier
+    materializes the WHOLE window's contribution as one level-tagged,
+    per-level-aggregated chunk (one job covering the window's chained
+    joins), the next frontier is a filter over that already-checkpointed
+    chunk, and the emptiness probe scans checkpointed partitions
+    (free). One driver barrier per k levels instead of two per level —
+    and, because every level lands in exactly one materialized chunk,
+    the final aggregation unions only checkpointed data: the earlier
+    design let the final job REPLAY the lazy in-window levels
+    (1+2+..+(k-1) extra joins per window), which was the residual 2x on
+    the anchor closure bench.
 
     ``broadcast_frontier``: hint the per-level join to broadcast the
     frontier instead of shuffling the edge table every round — 2x
     faster when the root set is small (measured at sf0.1); leave off
     for many-root closures whose frontier may not fit in memory.
-
-    ``checkpoint_edges``: materialize the edge relation once up front.
-    Keep True (default) — an INTERLEAVED A/B at sf0.1 (same session,
-    alternating variants) shows the materialization wins ~1s/call even
-    for plain store scans (the per-level re-scan loses to re-reading
-    checkpointed partitions); sequential A/B blocks showed the
-    opposite and were session-noise. Pass False only for an edge plan
-    too large to materialize. Cadence (checkpoint_every 5/7/9) is
-    noise-level on the same interleaved design; the remaining ~3.5s
-    anchor-closure floor is barrier count x driver latency, not plan
-    shape.
     """
     spark = edges.sparkSession
+    edges = edges.select("src", "dst")
+    pinned = False  # the fast-path gate already checkpointed ``edges``
     cheapest = choose_path("closure_path_counts", 0)
     if roots is not None:
         if isinstance(roots, DataFrame):
@@ -282,10 +288,11 @@ def closure_path_counts(
             # collect, the task kernel and the fallback loop — the
             # caller's edge derivation never runs twice (the SCC /
             # betweenness one-lineage discipline).
-            e2 = edges.select("src", "dst").localCheckpoint(eager=True)
-            path = choose_path("closure_path_counts", e2.count())
+            edges = edges.localCheckpoint(eager=True)
+            pinned = True
+            path = choose_path("closure_path_counts", edges.count())
             if path == "driver":
-                rows = [(r["src"], r["dst"]) for r in e2.collect()]
+                rows = [(r["src"], r["dst"]) for r in edges.collect()]
                 out = _closure_in_driver(rows, roots)
                 return spark.createDataFrame(
                     out or [], "root bigint, node bigint, paths bigint"
@@ -298,18 +305,15 @@ def closure_path_counts(
             # the job, same refusal semantics.
             if path == "task":
                 return (
-                    e2.withColumn("g", F.lit(1))
+                    edges.withColumn("g", F.lit(1))
                     .groupBy("g")
                     .applyInPandas(
                         _closure_group_factory([int(r) for r in roots]),
                         schema="root bigint, node bigint, paths bigint",
                     )
                 )
-            edges = e2
-            checkpoint_edges = False  # already checkpointed above
     with _loop_shuffle_partitions(spark, enabled=broadcast_frontier):
-        edges = edges.select("src", "dst")
-        if checkpoint_edges:
+        if not pinned:
             edges = edges.localCheckpoint(eager=True)
         root_df = _as_root_df(edges, roots)
         frontier = (
@@ -326,7 +330,7 @@ def closure_path_counts(
                 "root", F.col("dst").alias("node"), "paths"
             )
             window.append(nxt.withColumn("level", F.lit(it)))
-            if it % checkpoint_every == 0 or it == max_iter:
+            if it % CLOSURE_CHECKPOINT_EVERY == 0 or it == max_iter:
                 # one job per window: per-(root, node, level) sums keep
                 # the state bound the per-level agg used to enforce
                 # (amortized over the window), and the level tag lets
@@ -428,7 +432,6 @@ def bfs_depths(
     max_iter: int = 1000,
     until: int | None = None,
     broadcast_frontier: bool = False,
-    checkpoint_every: int = 4,
     per_root_task: bool = False,
 ) -> DataFrame:
     """Min-depth BFS: (root, node, depth) with the smallest hop count
@@ -439,15 +442,16 @@ def bfs_depths(
     already final when a node first enters the frontier, so
     point-to-point searches cost O(dist) rounds, not O(diameter).
 
-    ``checkpoint_every``: like closure_path_counts, levels inside a
-    window stay LAZY (each anti-joined against the window-start visited
-    set, but not deduped level-to-level); one barrier per window unions
-    them, takes min(depth) per (root, node), drops already-visited
-    rows, and materializes. Layered-BFS min() semantics make the
-    deferred dedup exact: every discovery path produces a row and the
-    minimum survives. Intra-window row growth is bounded by
-    branching^window (the price of 1 barrier per window instead of 3
-    per level — measured 3x faster on the sf0.1 DAG probes).
+    The distributed loop barriers every ``BFS_CHECKPOINT_EVERY``
+    levels: like closure_path_counts, levels inside a window stay LAZY
+    (each anti-joined against the window-start visited set, but not
+    deduped level-to-level); one barrier per window unions them, takes
+    min(depth) per (root, node), drops already-visited rows, and
+    materializes. Layered-BFS min() semantics make the deferred dedup
+    exact: every discovery path produces a row and the minimum
+    survives. Intra-window row growth is bounded by branching^window
+    (the price of 1 barrier per window instead of 3 per level —
+    measured 3x faster on the sf0.1 DAG probes).
 
     ``per_root_task``: opt in to the ``bfs_depths`` gate's task rung —
     for callers whose root sample is small and whose edge set is
@@ -525,7 +529,7 @@ def bfs_depths(
             # window-end dedup
             anti = F.broadcast(base_visited) if broadcast_frontier else base_visited
             window: list[DataFrame] = []
-            for _ in range(checkpoint_every):
+            for _ in range(BFS_CHECKPOINT_EVERY):
                 if depth > max_iter:
                     break
                 depth += 1
@@ -557,13 +561,9 @@ def bfs_depths(
     return reduce(lambda a, b: a.unionByName(b), chunks)
 
 
-def reachable_set(
-    edges: DataFrame, roots=None, max_iter: int = 1000, broadcast_frontier: bool = False
-) -> DataFrame:
+def reachable_set(edges: DataFrame, roots=None, max_iter: int = 1000) -> DataFrame:
     """Distinct-node transitive closure: (root, node). Cycle-safe."""
-    return bfs_depths(
-        edges, roots, max_iter, broadcast_frontier=broadcast_frontier
-    ).select("root", "node")
+    return bfs_depths(edges, roots, max_iter).select("root", "node")
 
 
 def k_hop(

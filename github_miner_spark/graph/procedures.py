@@ -135,7 +135,7 @@ def call_procedure(
         from github_miner_spark.graph.algorithms import louvain
 
         max_sweeps = int(opts.get("iterations", 3))
-        result = _pin(louvain(sub, max_sweeps=max_sweeps, early_exit=False).select(
+        result = _pin(louvain(sub, max_sweeps=max_sweeps).select(
             "id", F.col("community").alias("value")
         ))
         n = result.count()
@@ -194,7 +194,7 @@ def stream_rows(
     if proc == "algo.louvain.stream":
         from github_miner_spark.graph.algorithms import louvain
 
-        result = louvain(sub, max_sweeps=int(opts.get("iterations", 3)), early_exit=False)
+        result = louvain(sub, max_sweeps=int(opts.get("iterations", 3)))
     elif proc == "algo.labelPropagation.stream":
         from github_miner_spark.graph.algorithms import label_propagation
 

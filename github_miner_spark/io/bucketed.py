@@ -26,28 +26,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_BUCKET_STORE", "/tmp/spark-graft-bucketed")
+# bucket files per write partition; both sides of a bucketed join read
+# the one table, so they always agree on the count
+BUCKETS = 8
 
 
-def _table_name(sf_dir: str, buckets: int) -> str:
+def _table_name(sf_dir: str) -> str:
     h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return f"edges_dst_b{buckets}_{h}"
+    return f"edges_dst_b{BUCKETS}_{h}"
 
 
-def ensure_bucketed_edges(
-    spark: SparkSession, sf_dir: str, buckets: int = 8
-) -> str:
+def ensure_bucketed_edges(spark: SparkSession, sf_dir: str) -> str:
     """Idempotently register (and on first use materialize) the edges
     table bucketed by ``dst``; returns the catalog table name."""
     from github_miner_spark.graph.store import load_graph
 
-    name = _table_name(sf_dir, buckets)
+    name = _table_name(sf_dir)
     if spark.catalog.tableExists(name):
         return name
     location = os.path.join(STORE_ROOT, name)
     edges = load_graph(spark, sf_dir).edges
     (
         edges.write.format("parquet")
-        .bucketBy(buckets, "dst")
+        .bucketBy(BUCKETS, "dst")
         .sortBy("dst")
         .option("path", location)
         .mode("overwrite")

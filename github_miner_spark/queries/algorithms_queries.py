@@ -154,9 +154,9 @@ def _louvain_phase1_sql(in_rel: str, m2_rel: str, k_rel: str, prefix: str, max_s
     integer-valued doubles (exact in IEEE-754 regardless of order), the
     single division by 2m is deterministic, and the argmax tie-break
     (score DESC, community ASC) plus md5 parity reproduce Spark's
-    deterministic sweep schedule bit-for-bit. The moved-any early exit
-    is dropped: a converged sweep moves nothing, so extra unrolled
-    sweeps are identity — same fixpoint.
+    deterministic sweep schedule bit-for-bit. Both sides run exactly
+    ``max_sweeps`` sweeps (a converged sweep moves nothing and is the
+    identity).
     """
     parity_expr = "(CAST(('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 8)) AS BIGINT) % 2)"
     ctes = [
@@ -454,10 +454,9 @@ def connected_components_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagerank_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = load_graph(spark, sf_dir)
     mm = g.module_dep_edges()
-    # shuffle-mode ranks: at bench scale the rank table is tiny and the
-    # per-iteration broadcast materialization costs more than the narrow
-    # shuffle (measured 5.2s vs 3.8s at sf0.1); broadcast_ranks stays the
-    # documented cluster-scale option for fat frontiers
+    # shuffle-mode ranks on the distributed path: at bench scale the
+    # rank table is tiny and a per-iteration broadcast materialization
+    # cost more than the narrow shuffle (measured 5.2s vs 3.8s at sf0.1)
     ranks = pagerank(mm, iterations=20, damping=0.85)
     names = g.vertices.select("id", "name")
     return (
@@ -514,10 +513,7 @@ def louvain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edge frame is checkpointed ONCE and shared with modularity.
     sym = _symmetrize_weighted(sub)
     stats = tuple(sym.agg(F.sum("w"), F.count(F.lit(1))).collect()[0])
-    comm = louvain(
-        sub, max_sweeps=3, levels=2, early_exit=False, sym=sym,
-        sym_stats=stats,
-    )
+    comm = louvain(sub, max_sweeps=3, levels=2, sym=sym, sym_stats=stats)
     q = modularity(sub, comm, sym=sym, sym_stats=stats)
     sizes = comm.groupBy("community").agg(F.count("*").alias("sz"))
     return sizes.agg(
@@ -554,10 +550,7 @@ def louvain_per_reltype(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sym = _symmetrize_weighted(sub)
         stats = tuple(sym.agg(F.sum("w"), F.count(F.lit(1))).collect()[0])
-        comm = louvain(
-            sub, max_sweeps=3, levels=2, early_exit=False, sym=sym,
-            sym_stats=stats,
-        )
+        comm = louvain(sub, max_sweeps=3, levels=2, sym=sym, sym_stats=stats)
         q = modularity(sub, comm, sym=sym, sym_stats=stats)
         sizes = comm.groupBy("community").agg(F.count("*").alias("sz"))
         outs.append(

@@ -297,7 +297,7 @@ def cypher_community_readback(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("src") >= 1002) & (F.col("src") < 5002)
         & (F.col("dst") >= 1002) & (F.col("dst") < 5002)
     )
-    comm = louvain(sub, max_sweeps=3, levels=2, early_exit=False)
+    comm = louvain(sub, max_sweeps=3, levels=2)
     written = with_vertex_property(g, "community", comm)
     return run_cypher(
         written,

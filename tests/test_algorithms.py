@@ -47,7 +47,7 @@ def numpy_pagerank(pairs, n_ids, iterations, damping):
 )
 def test_pagerank_matches_numpy(spark, pairs):
     e = edges_df(spark, pairs)
-    # both hybrid paths: in-driver numpy matvec and the distributed loop
+    # default ladder: the task-local numpy kernel at this size
     got = {r.id: r.rank for r in pagerank(e, iterations=15, damping=0.85).collect()}
     # task rung only: the task-local numpy kernel
     with only(pagerank="task"):
@@ -291,9 +291,7 @@ def test_louvain_driver_path_matches_distributed(spark):
     g = load_graph(spark, "/root/testdata/sf0.001")
     mm = g.module_dep_edges()
     def run():
-        return sorted(
-            map(tuple, louvain(mm, max_sweeps=3, levels=2, early_exit=False).collect())
-        )
+        return sorted(map(tuple, louvain(mm, max_sweeps=3, levels=2).collect()))
 
     fast = run()
     # task rung only: the task-local kernel path
@@ -318,10 +316,10 @@ def test_label_propagation_driver_path_matches_distributed(spark):
 
 
 def test_personalized_pagerank_driver_matches_distributed_edge_cases(spark):
-    """Duplicate and absent personalization sources: the driver matvec
-    must mirror the distributed semantics exactly — p0 divides by the
-    source LIST length (duplicates included) and absent ids simply
-    receive no restart mass, no renormalization."""
+    """Duplicate and absent personalization sources: the task kernel's
+    numpy matvec must mirror the distributed semantics exactly — p0
+    divides by the source LIST length (duplicates included) and absent
+    ids simply receive no restart mass, no renormalization."""
     e = edges_df(spark, [(1, 2), (2, 3), (3, 1), (1, 4)])
     srcs = [1, 1, 99]  # duplicate + absent
     fast = {r.id: r.rank for r in pagerank(e, iterations=10, sources=srcs).collect()}
@@ -345,9 +343,7 @@ def test_louvain_driver_matches_distributed_sf001(spark):
 
     mm = load_graph(spark, "/root/testdata/sf0.01").module_dep_edges()
     def run():
-        return sorted(
-            map(tuple, louvain(mm, max_sweeps=3, levels=2, early_exit=False).collect())
-        )
+        return sorted(map(tuple, louvain(mm, max_sweeps=3, levels=2).collect()))
 
     fast = run()
     # task rung only: the task-local kernel path
@@ -389,10 +385,10 @@ def test_distributed_scc_huge_cyclic_core(spark, monkeypatch):
     ]
     edges = parts[0].unionByName(parts[1]).unionByName(parts[2]).localCheckpoint(eager=True)
 
-    fast = strongly_connected_components(edges, loop_shuffle_width=8)
+    fast = strongly_connected_components(edges)
     fast_rows = sorted(map(tuple, fast.collect()))
     monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-    slow = strongly_connected_components(edges, loop_shuffle_width=8)
+    slow = strongly_connected_components(edges)
     slow_rows = sorted(map(tuple, slow.collect()))
     assert fast_rows == slow_rows
     # the affine maps are permutations (gcd(a, n) = 1), so every vertex

@@ -1223,7 +1223,7 @@ def test_louvain_stream_yields_assignment_rows(spark):
         & (F.col("src_label") == "NodeModule")
         & (F.col("dst_label") == "NodeModule")
     ).select("src", "dst")
-    want = louvain(proj, max_sweeps=3, early_exit=False)
+    want = louvain(proj, max_sweeps=3)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 

@@ -4,8 +4,9 @@
   one row past it, with and without SPARK_GRAFT_FORCE_DISTRIBUTED;
 - one parity case per ``LIMITS`` key: the public operator returns the
   same rows on every path its ladder can take;
-- a source guard: no per-call ``*_threshold`` knobs, no second reader
-  of the force flag.
+- a source guard: no per-call ``*_threshold`` knobs, no retired
+  loop-tuning parameters on the graph operators, no second reader of
+  the force flag.
 """
 
 from __future__ import annotations
@@ -24,8 +25,8 @@ D, T, X = "driver", "task", "distributed"
 
 # gate -> {n_rows: (path, path with the force flag set)}
 DECISIONS: dict[str, dict[int, tuple[str, str]]] = {
-    # the task kernel outranks the driver twin
-    "pagerank": {2 * M: (T, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X)},
+    # one task rung: the flag leaves the kernel on
+    "pagerank": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "connected_components": {
         2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X),
     },
@@ -57,11 +58,8 @@ DECISIONS: dict[str, dict[int, tuple[str, str]]] = {
     "kmv_sketch": {1 * M: (D, X), 1 * M + 1: (X, X)},
 }
 
-# calls that cannot take a rung: PageRank with explicit vertices (the
-# kernel derives ids from the edges), bfs_depths without the per-root
-# opt-in
+# calls that cannot take a rung: bfs_depths without the per-root opt-in
 SKIP_DECISIONS: dict[tuple[str, tuple[str, ...]], dict[int, tuple[str, str]]] = {
-    ("pagerank", (T,)): {2 * M: (D, X), 2 * M + 1: (X, X), 5 * M: (X, X)},
     ("bfs_depths", (T,)): {2 * M: (D, X), 2 * M + 1: (X, X), 5 * M: (X, X)},
 }
 
@@ -144,7 +142,7 @@ def _scc(spark):
 def _louvain(spark):
     from github_miner_spark.graph.algorithms import louvain
 
-    return _rows(louvain(_edges(spark, CLIQUES), max_sweeps=3, levels=2, early_exit=False))
+    return _rows(louvain(_edges(spark, CLIQUES), max_sweeps=3, levels=2))
 
 
 def _modularity(spark):
@@ -269,7 +267,7 @@ def test_parity_fixtures_are_nontrivial(spark):
 
     comps = {c for _v, c in _scc(spark)}
     assert len(comps) < len({v for e in CYCLIC for v in e})
-    comm = louvain(_edges(spark, CLIQUES), max_sweeps=3, levels=2, early_exit=False)
+    comm = louvain(_edges(spark, CLIQUES), max_sweeps=3, levels=2)
     assert comm.select(F.countDistinct("community")).first()[0] == 2
 
 
@@ -280,7 +278,22 @@ def test_parity_fixtures_are_nontrivial(spark):
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "github_miner_spark"
 FORCE_FLAG = "SPARK_GRAFT_FORCE_DISTRIBUTED"
-RETIRED = ("_" + "gate", "SPARK_GRAFT_CLOSURE_" + "DRIVER_EDGES")
+RETIRED = ("_" + "gate", "SPARK_GRAFT_CLOSURE_" + "DRIVER_EDGES", "_pagerank_" + "driver")
+# physical-tuning knobs the graph operators no longer take: the loop
+# shuffle width, barrier cadences and Louvain's sweep count are fixed
+# inside graph/, never chosen per call
+RETIRED_GRAPH_PARAMS = {
+    "loop_shuffle_width",
+    "broadcast_ranks",
+    "barrier_every",
+    "early_exit",
+    "checkpoint_every",
+    "checkpoint_edges",
+    "rows_per_partition",
+    "floor",
+}
+# retired from one operator only: other graph operators keep the name
+RETIRED_OPERATOR_PARAMS = {"pagerank": {"vertices"}, "reachable_set": {"broadcast_frontier"}}
 
 
 def _package_modules():
@@ -290,11 +303,17 @@ def _package_modules():
 def test_no_threshold_parameters():
     bad = []
     for path in _package_modules():
+        in_graph = path.parent == PACKAGE / "graph"
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                retired = set()
+                if in_graph:
+                    retired = RETIRED_GRAPH_PARAMS | RETIRED_OPERATOR_PARAMS.get(
+                        getattr(node, "name", ""), set()
+                    )
                 a = node.args
                 for arg in a.posonlyargs + a.args + a.kwonlyargs:
-                    if arg.arg.endswith("_threshold"):
+                    if arg.arg.endswith("_threshold") or arg.arg in retired:
                         bad.append(f"{path.relative_to(ROOT)}:{node.lineno} {arg.arg}")
     assert not bad, bad
 

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from github_miner_spark.etl.insert import run_insert_job
 
 
@@ -67,3 +69,20 @@ def test_insert_job_closure_and_idempotence(spark, tmp_path):
 
     second = run_insert_job(spark, lake, npm, vp, ep)
     assert second == first  # replay is a no-op (MERGE semantics)
+
+
+def test_unreadable_store_raises_instead_of_being_overwritten(spark, tmp_path):
+    """Only a missing store counts as empty: a corrupt part file in the
+    edge store must fail the job, not be replaced by the current batch
+    alone."""
+    lake = _write_lake(tmp_path)
+    npm = _npm_table(spark)
+    vp, ep = str(tmp_path / "vertices"), str(tmp_path / "edges")
+    run_insert_job(spark, lake, npm, vp, ep)
+
+    part = sorted((tmp_path / "edges").glob("part-*.parquet"))[0]
+    junk = b"not a parquet file" * 8
+    part.write_bytes(junk)
+    with pytest.raises(Exception):
+        run_insert_job(spark, lake, npm, vp, ep)
+    assert part.read_bytes() == junk

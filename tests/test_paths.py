@@ -206,18 +206,14 @@ def test_distributed_closure_adversarial_depth_and_hubs(spark):
     # empty ladder: the distributed frontier loop
     with only(closure_path_counts="distributed"):
         slow = closure_path_counts(
-            edges,
-            roots=[0],
-            max_iter=500,
-            broadcast_frontier=True,
-            checkpoint_every=10,
+            edges, roots=[0], max_iter=500, broadcast_frontier=True
         )
         s_rows = sorted(map(tuple, slow.collect()))
     assert f_rows == t_rows and len(f_rows) > 300
     assert f_rows == s_rows
 
     with only(bfs_depths="distributed"):
-        depths = bfs_depths(edges, roots=[0], max_iter=500, checkpoint_every=10)
+        depths = bfs_depths(edges, roots=[0], max_iter=500)
         d_rows = sorted(map(tuple, depths.collect()))
         assert depths.agg(F.max("depth")).collect()[0][0] >= 250
     d_fast = bfs_depths(edges, roots=[0], max_iter=500)

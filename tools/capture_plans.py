@@ -4,10 +4,11 @@
 Usage:
     python tools/capture_plans.py <suffix> <query> [<query> ...]
 
-Writes plans/r12/<query>_<suffix>.txt for each query (suffix is
-"before" or "after"). Runs on $SPARK_GRAFT_SF_DIR (default sf0.1) at
-local[$SPARK_GRAFT_CPUS] with the session defaults, matching the bench
-environment, so the captured plan is the one the bench times.
+Writes plans/<round>/<query>_<suffix>.txt for each query (suffix is
+"before" or "after"; round is $SPARK_GRAFT_PLANS_ROUND, default r13).
+Runs on $SPARK_GRAFT_SF_DIR (default sf0.1) with the session.get_spark
+defaults, matching the bench environment, so the captured plan is the
+one the bench times.
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 OUT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "plans",
@@ -34,13 +34,7 @@ def main() -> None:
     from github_miner_spark import registry
     from github_miner_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="capture-plans",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-        ),
-    )
+    spark = get_spark(app_name="capture-plans")
     specs = registry.all_specs()
     unknown = [n for n in names if n not in specs]
     if unknown:

@@ -40,9 +40,7 @@ def main() -> None:
     from github_miner_spark import registry
     from github_miner_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="scan-audit", master="local[8]", shuffle_partitions=8
-    )
+    spark = get_spark(app_name="scan-audit")
     from github_miner_spark.graph.store import materialize_graph
 
     materialize_graph(spark, SF_DIR)

@@ -1,17 +1,20 @@
 #!/usr/bin/env python
-"""Isolated per-query timing with the noop sink (guide §1.4).
+"""Isolated per-query timing: DataFrame construction, then the noop sink.
 
 Usage:
     python tools/time_queries.py <query> [<query> ...]
 
-Times each named registry query with df.write.format("noop") — every
-column of every row computed, nothing written — after one warmup pass,
-labelled via setJobDescription. Prints one line per query:
-    <name> noop_median=<s> samples=[...]
-Env: SPARK_GRAFT_TIME_PASSES (default 5), SPARK_GRAFT_SF_DIR,
-SPARK_GRAFT_CPUS. Passes are round-robin across the requested queries
-(the bench's interleaving discipline) so an ambient burst lands on one
-pass of every query, which the median rejects.
+Times each named registry query in two parts after one warmup pass,
+labelled via setJobDescription: building the DataFrame (the query
+function's Python side, including any eager driver work it does), and
+df.write.format("noop") on the result — every column of every row
+computed, nothing written. Prints one line per query:
+    <name> build_median=<s> noop_median=<s> build_samples=[...] samples=[...]
+Env: SPARK_GRAFT_TIME_PASSES (default 5), SPARK_GRAFT_SF_DIR; the
+session takes the session.get_spark defaults (SPARK_GRAFT_CPUS,
+SPARK_GRAFT_SHUFFLE_PARTITIONS). Passes are round-robin across the
+requested queries (the bench's interleaving discipline) so an ambient
+burst lands on one pass of every query, which the median rejects.
 """
 
 from __future__ import annotations
@@ -24,7 +27,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
@@ -36,13 +38,7 @@ def main() -> None:
     from github_miner_spark import registry
     from github_miner_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="time-queries",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-        ),
-    )
+    spark = get_spark(app_name="time-queries")
     specs = registry.all_specs()
     unknown = [n for n in names if n not in specs]
     if unknown:
@@ -51,26 +47,31 @@ def main() -> None:
 
     materialize_graph(spark, SF_DIR)
 
-    def noop(name: str) -> float:
+    def run(name: str) -> tuple[float, float]:
         spark.sparkContext.setJobDescription(f"time: {name}")
-        df = specs[name].spark(spark, SF_DIR)
         t0 = time.perf_counter()
+        df = specs[name].spark(spark, SF_DIR)
+        t1 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
+        t2 = time.perf_counter()
         spark.sparkContext.setJobDescription(None)
-        return round(dt, 3)
+        return round(t1 - t0, 3), round(t2 - t1, 3)
 
     for name in names:  # warmup
-        noop(name)
+        run(name)
+    build: dict[str, list[float]] = {n: [] for n in names}
     samples: dict[str, list[float]] = {n: [] for n in names}
     for _ in range(passes):
         for name in names:
-            samples[name].append(noop(name))
+            b, t = run(name)
+            build[name].append(b)
+            samples[name].append(t)
     for name in names:
-        ts = samples[name]
+        bs, ts = build[name], samples[name]
         print(
-            f"{name} noop_median={round(statistics.median(ts), 3)} "
-            f"samples={ts}"
+            f"{name} build_median={round(statistics.median(bs), 3)} "
+            f"noop_median={round(statistics.median(ts), 3)} "
+            f"build_samples={bs} samples={ts}"
         )
     spark.stop()
 
