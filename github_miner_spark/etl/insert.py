@@ -12,18 +12,21 @@ frontier is (new dependency targets) anti-join (already resolved) —
 the visited-set form of the reference's "only recurse on first
 creation" cycle guard (src/Neo4jClient.ts:321-327). Dev/peer deps
 expand one level, then main deps recurse (R2/R3 semantics,
-src/Neo4jClient.ts:176-180).
+src/Neo4jClient.ts:176-180). A level is one Spark materialization:
+its edges, tagged with whether ``dst`` is new, checkpointed once.
 
-Writes are idempotent MERGE-style appends keyed on node identity /
+Writes append only the batch's novel rows, keyed on node identity /
 (src, dst, rel_type) — re-running the job is a no-op.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.etl.merge import merge_append, read_existing
+from github_miner_spark.etl.merge import dedupe_batch, novel_rows, read_existing
 from github_miner_spark.etl.package_json import (
     extract_dependency_edges,
     read_manifest_lake,
@@ -31,6 +34,9 @@ from github_miner_spark.etl.package_json import (
 
 VERTEX_KEY = ["id"]
 EDGE_KEY = ["src", "dst", "rel_type"]
+VERTEX_SCHEMA = "id string, label string, name string"
+EDGE_SCHEMA = ("src string, dst string, rel_type string, src_label string, dst_label string, "
+               "version string")
 
 
 def _manifest_edges(manifests: DataFrame, src_label: str) -> DataFrame:
@@ -55,47 +61,40 @@ def expand_module_closure(
 
     seed_modules: 1-column DF ``name``. npm_manifests: manifest rows
     keyed by ``name`` (the npm registry cache as a table). Returns
-    (resolved_modules, module_edges). Names absent from the registry
-    stop the recursion (the reference's isNpmModule gate,
+    (resolved_modules, module_edges); a name can repeat in
+    resolved_modules (the caller's MERGE dedupes). Names absent from
+    the registry stop the recursion (the reference's isNpmModule gate,
     src/Neo4jClient.ts:103-138) but are still returned as modules, so
     edges never dangle — a deliberate divergence from the reference,
-    which drops the node and leaves the dependency unrecorded."""
-    spark = seed_modules.sparkSession
-    frontier = seed_modules.select("name").distinct().localCheckpoint(eager=True)
-    resolved = spark.createDataFrame([], "name string")
-    edge_parts: list[DataFrame] = []
+    which drops the node and leaves the dependency unrecorded. Raises
+    RuntimeError when ``max_iter`` levels still leave a frontier: a
+    replay never repairs a truncated closure."""
+    frontiers = [seed_modules.select("name")]
+    levels: list[DataFrame] = []
     for it in range(max_iter):
-        batch = npm_manifests.join(frontier, "name", "left_semi").localCheckpoint(eager=True)
-        resolved = resolved.unionByName(frontier).distinct().localCheckpoint(eager=True)
-        if batch.isEmpty():
-            break
+        batch = npm_manifests.join(frontiers[-1], "name", "left_semi")
         # dev/peer deps expand THIS level only; main deps recurse —
         # reference semantics (src/Neo4jClient.ts:176-213): at depth>0
         # only the main dependency map is expanded
-        manifests_level = batch if it == 0 else batch.withColumn(
-            "devDependencies", F.lit(None).cast("map<string,string>")
-        ).withColumn("peerDependencies", F.lit(None).cast("map<string,string>"))
-        edges = _manifest_edges(manifests_level, "NodeModule").localCheckpoint(eager=True)
-        edge_parts.append(edges)
-        frontier = (
-            edges.select(F.col("dst").alias("name"))
-            .distinct()
-            .join(resolved, "name", "left_anti")
+        if it > 0:
+            no_deps = F.lit(None).cast("map<string,string>")
+            batch = batch.withColumns({"devDependencies": no_deps, "peerDependencies": no_deps})
+        resolved = reduce(DataFrame.unionByName, frontiers)
+        known = resolved.distinct().select(F.col("name").alias("dst"), F.lit(True).alias("known"))
+        tagged = _manifest_edges(batch, "NodeModule").join(known, "dst", "left")
+        seen = Observation()  # filled by the checkpoint job itself: no emptiness probe
+        level = (
+            tagged.withColumn("new", F.col("known").isNull()).drop("known")
+            .observe(seen, F.count_if("new").alias("new"))
             .localCheckpoint(eager=True)
         )
-        if frontier.isEmpty():
+        levels.append(level.drop("new"))
+        if seen.get["new"] == 0:  # also ends on an empty level (no registry rows)
             break
-    if edge_parts:
-        all_edges = edge_parts[0]
-        for p in edge_parts[1:]:
-            all_edges = all_edges.unionByName(p)
-        all_edges = all_edges.dropDuplicates(EDGE_KEY)
+        frontiers.append(level.filter("new").select(F.col("dst").alias("name")))
     else:
-        all_edges = spark.createDataFrame(
-            [], "src string, dst string, rel_type string, src_label string, "
-            "dst_label string, version string"
-        )
-    return resolved, all_edges
+        raise RuntimeError(f"module closure did not converge in {max_iter} levels")
+    return resolved, reduce(DataFrame.unionByName, levels)
 
 
 def run_insert_job(
@@ -107,19 +106,20 @@ def run_insert_job(
 ) -> dict[str, int]:
     """E2 end-to-end: read the manifest lake, build user/repo/module
     vertices and all five edge types, expand the module closure, and
-    MERGE into the persistent vertex/edge tables (idempotent)."""
+    MERGE into the persistent vertex/edge tables (idempotent): one
+    append of novel rows per table. Returns the counts read back."""
     lake = read_manifest_lake(spark, lake_dir).localCheckpoint(eager=True)
 
     users = lake.select(
         F.col("owner").alias("id"),
         F.lit("GitUser").alias("label"),
         F.col("owner").alias("name"),
-    ).distinct()
+    )
     repos = lake.select(
         F.concat_ws("/", "owner", "repo").alias("id"),
         F.lit("GitRepo").alias("label"),
         F.col("repo").alias("name"),
-    ).distinct()
+    )
     owns = lake.select(
         F.col("owner").alias("src"),
         F.concat_ws("/", "owner", "repo").alias("dst"),
@@ -127,7 +127,7 @@ def run_insert_job(
         F.lit("GitUser").alias("src_label"),
         F.lit("GitRepo").alias("dst_label"),
         F.lit(None).cast("string").alias("version"),
-    ).distinct()
+    )
 
     repo_manifests = lake.withColumn("name", F.concat_ws("/", "owner", "repo"))
     repo_edges = _manifest_edges(repo_manifests, "GitRepo")
@@ -139,19 +139,18 @@ def run_insert_job(
     )
 
     vertices = users.unionByName(repos).unionByName(modules)
-    edges = owns.unionByName(repo_edges).unionByName(module_edges).dropDuplicates(EDGE_KEY)
+    edges = owns.unionByName(repo_edges).unionByName(module_edges)
 
-    for path, df, key in (
-        (out_vertices, vertices, VERTEX_KEY),
-        (out_edges, edges, EDGE_KEY),
+    for path, df, schema, key in (
+        (out_vertices, vertices, VERTEX_SCHEMA, VERTEX_KEY),
+        (out_edges, edges, EDGE_SCHEMA, EDGE_KEY),
     ):
-        existing = read_existing(spark.read, path)
+        existing = read_existing(spark, path, schema)
         if existing is None:
-            merged = df
+            dedupe_batch(df, key).write.parquet(path)
         else:
-            merged = merge_append(existing, df, key).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(path)
+            novel_rows(existing, df, key).write.mode("append").parquet(path)
     return {
-        "vertices": spark.read.parquet(out_vertices).count(),
-        "edges": spark.read.parquet(out_edges).count(),
+        "vertices": spark.read.schema(VERTEX_SCHEMA).parquet(out_vertices).count(),
+        "edges": spark.read.schema(EDGE_SCHEMA).parquet(out_edges).count(),
     }

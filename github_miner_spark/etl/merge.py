@@ -8,14 +8,18 @@ batch upsert: dedupe the incoming batch, anti-join against the existing
 table, append only the novel keys. One shuffle per batch instead of one
 round-trip per row; idempotent under replay, which is what the
 reference's checkpoint/resume loop actually needs.
+
+``etl/insert.py:run_insert_job`` appends ``novel_rows``, so a batch
+costs in proportion to the batch and never rewrites the table. Each
+batch adds part files, a replay one schema-only file per table;
+compaction is out of scope.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, DataFrameReader
+from pyspark.sql import DataFrame, SparkSession
 
 
 def dedupe_batch(batch: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -28,10 +32,10 @@ def merge_append(existing: DataFrame, batch: DataFrame, keys: Sequence[str]) -> 
     """Return existing ∪ (batch rows whose key is not yet present).
 
     The anti-join replaces the reference's EXISTS-before-CREATE; the
-    result is the post-merge table. At scale, write the novel rows with
-    ``df.write.mode("append")`` into a table partitioned/bucketed on
-    the key (or use a MERGE-capable format); the logic here is
-    format-agnostic."""
+    result is the post-merge table, for callers that need it as one
+    frame. To persist a merge, append ``novel_rows`` instead, as
+    ``run_insert_job`` does: rewriting the whole table per batch costs
+    in proportion to the table."""
     novel = dedupe_batch(batch, keys).join(existing, list(keys), "left_anti")
     return existing.unionByName(novel)
 
@@ -41,15 +45,13 @@ def novel_rows(existing: DataFrame, batch: DataFrame, keys: Sequence[str]) -> Da
     return dedupe_batch(batch, keys).join(existing, list(keys), "left_anti")
 
 
-def read_existing(reader: DataFrameReader, path: str) -> DataFrame | None:
-    """``reader.parquet(path)``, or None when nothing was written there
-    yet. Only a missing path means "empty": any other failure (a corrupt
-    part file, an unreadable dir) propagates, so a caller that would
-    overwrite ``path`` with a merge never replaces a table it could not
-    read with just the current batch."""
-    try:
-        return reader.parquet(path)
-    except AnalysisException as exc:
-        if exc.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
+def read_existing(spark: SparkSession, path: str, schema: str) -> DataFrame | None:
+    """The parquet table at ``path`` read with ``schema``, or None when
+    nothing was written there yet (probed on the Hadoop FileSystem, not
+    by a failed read). Any other failure (a corrupt part file, an
+    unreadable dir) propagates: an unreadable table is never "empty"."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath):
+        return None
+    return spark.read.schema(schema).parquet(path)

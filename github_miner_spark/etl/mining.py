@@ -155,7 +155,7 @@ def run_mining_job(
     import pandas as pd
 
     planned = partitions_df(spark, parts)
-    completed = read_existing(spark.read.schema("partition_key string"), state_dir)
+    completed = read_existing(spark, state_dir, "partition_key string")
     if completed is None:
         completed = spark.createDataFrame([], "partition_key string")
     pending = pending_partitions(planned, completed)

@@ -148,18 +148,14 @@ def extract_dependency_edges(manifests: DataFrame, src_col: str = "name") -> Dat
     """Explode the three dependency maps into a single heterogeneous
     edge set (src, dst, rel_type, version) — the set-at-a-time
     replacement for the reference's three per-row insert loops
-    (src/Neo4jClient.ts:140-231)."""
-    parts = []
-    for field, rel in REL_FOR_FIELD.items():
-        parts.append(
-            manifests.filter(F.col(field).isNotNull())
-            .select(
-                F.col(src_col).alias("src"),
-                F.explode(F.col(field)).alias("dst", "version"),
-            )
-            .withColumn("rel_type", F.lit(rel))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select("src", "dst", "rel_type", "version")
+    (src/Neo4jClient.ts:140-231). One generator pass reads each
+    manifest row once, not once per map."""
+    dep_maps = F.array(
+        *(F.struct(F.lit(rel).alias("rel_type"), F.col(field).alias("deps"))
+          for field, rel in REL_FOR_FIELD.items())
+    )
+    return (
+        manifests.select(F.col(src_col).alias("src"), F.inline(dep_maps))
+        .select("src", "rel_type", F.explode("deps").alias("dst", "version"))
+        .select("src", "dst", "rel_type", "version")
+    )

@@ -7,16 +7,23 @@ import json
 
 import pytest
 
-from github_miner_spark.etl.insert import run_insert_job
+from github_miner_spark.etl.insert import expand_module_closure, run_insert_job
+
+BASE_REPOS = [
+    ("alice", "app", {"name": "app", "dependencies": {"lodash": "^4.0.0"},
+                      "devDependencies": {"jest": "^29.0.0"}}),
+    ("bob", "tool", {"name": "tool", "dependencies": {"chalk": "~5.0.0"}}),
+]
+# a second batch: ansi is repo-seeded here, so its devDeps expand (R2)
+DELTA_REPOS = [
+    ("carol", "web", {"name": "web", "dependencies": {"react": "18.0.0"},
+                      "devDependencies": {"ansi": "1.0.0"}}),
+]
 
 
-def _write_lake(tmp_path):
-    lake = tmp_path / "lake"
-    for owner, repo, manifest in [
-        ("alice", "app", {"name": "app", "dependencies": {"lodash": "^4.0.0"},
-                          "devDependencies": {"jest": "^29.0.0"}}),
-        ("bob", "tool", {"name": "tool", "dependencies": {"chalk": "~5.0.0"}}),
-    ]:
+def _write_lake(tmp_path, repos=BASE_REPOS, name="lake"):
+    lake = tmp_path / name
+    for owner, repo, manifest in repos:
         d = lake / owner / repo
         d.mkdir(parents=True)
         (d / "package.json").write_text(json.dumps(manifest))
@@ -86,3 +93,60 @@ def test_unreadable_store_raises_instead_of_being_overwritten(spark, tmp_path):
     with pytest.raises(Exception):
         run_insert_job(spark, lake, npm, vp, ep)
     assert part.read_bytes() == junk
+
+
+def test_closure_raises_instead_of_truncating(spark):
+    """chalk -> ansi needs a second level: one level must raise, since
+    a replay could never add the modules a truncated closure missed."""
+    seed = spark.createDataFrame([("lodash",), ("jest",), ("chalk",)], "name string")
+    npm = _npm_table(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        expand_module_closure(seed, npm, max_iter=1)
+    resolved, _ = expand_module_closure(seed, npm, max_iter=2)
+    assert {r["name"] for r in resolved.collect()} == {
+        "lodash", "jest", "chalk", "ansi", "left-pad"
+    }
+
+
+def _part_files(store):
+    return {p.name: p.read_bytes() for p in store.glob("part-*")}
+
+
+def test_second_batch_appends_instead_of_rewriting(spark, tmp_path):
+    """A second, different batch is appended: every part file the first
+    batch wrote stays, byte for byte. Replaying it changes no count."""
+    npm = _npm_table(spark)
+    vp, ep = tmp_path / "vertices", tmp_path / "edges"
+    base = run_insert_job(spark, _write_lake(tmp_path), npm, str(vp), str(ep))
+    before = {vp: _part_files(vp), ep: _part_files(ep)}
+
+    delta_lake = _write_lake(tmp_path, DELTA_REPOS, "delta")
+    delta = run_insert_job(spark, delta_lake, npm, str(vp), str(ep))
+    # carol, carol/web, react, deep-dev; OWNS, web->react, web->ansi, ansi->deep-dev
+    assert delta == {"vertices": base["vertices"] + 4, "edges": base["edges"] + 4}
+    for store, files in before.items():
+        after = _part_files(store)
+        assert all(after.get(name) == body for name, body in files.items())
+    e = {(r["src"], r["dst"], r["rel_type"]) for r in spark.read.parquet(str(ep)).collect()}
+    assert ("ansi", "deep-dev", "DEV_DEPENDS_ON") in e
+
+    assert run_insert_job(spark, delta_lake, npm, str(vp), str(ep)) == delta
+
+
+def test_delta_batch_job_budget(spark, tmp_path):
+    """A batch merged into an existing store runs one materialization
+    per closure level plus one write per table; the job count pins
+    that (22 jobs here; the overwrite-merge it replaced ran 52)."""
+    npm = _npm_table(spark)
+    vp, ep = str(tmp_path / "vertices"), str(tmp_path / "edges")
+    run_insert_job(spark, _write_lake(tmp_path), npm, vp, ep)
+    delta_lake = _write_lake(tmp_path, DELTA_REPOS, "delta")
+    sc = spark.sparkContext
+    group = f"insert-job-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "insert job budget")
+    try:
+        run_insert_job(spark, delta_lake, npm, vp, ep)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 30

@@ -785,3 +785,77 @@ def test_clustered_opq_permutation_matches_numpy(spark, tmp_path_factory, vecs):
     assert set(got) == set(want)
     for vid in want:
         assert np.abs(np.array(got[vid]) - np.array(want[vid])).max() < 1e-9, vid
+
+
+_MODULES = ["m0", "m1", "m2", "m3", "m4", "m5"]
+# ghost names are not in the registry: they stay vertices and stop the recursion
+_DEP_MAP = st.dictionaries(
+    st.sampled_from(_MODULES + ["ghost0", "ghost1"]),
+    st.sampled_from(["1.0.0", "^2.1.0"]),
+    max_size=3,
+)
+_DEP_FIELDS = ("dependencies", "devDependencies", "peerDependencies")
+
+
+@st.composite
+def _lake_strategy(draw):
+    """(registry, [base batch, delta batch]). Every module is registered
+    and every dependency map (dev/peer ones at any depth too) draws
+    from all names, so self-loops, cycles, unregistered names and deep
+    dev/peer maps that must not expand all occur."""
+    registry = [{"name": n, **{f: draw(_DEP_MAP) for f in _DEP_FIELDS}} for n in _MODULES]
+    batches = []
+    for b in range(2):
+        batch = []
+        for i in range(draw(st.integers(1, 3))):
+            repo = f"r{b}{i}"
+            manifest = {"name": repo, **{f: draw(_DEP_MAP) for f in _DEP_FIELDS}}
+            batch.append((f"u{draw(st.integers(0, 2))}", repo, manifest))
+        batches.append(batch)
+    return registry, batches
+
+
+@given(_lake_strategy())
+@_settings
+def test_insert_job_matches_python_closure(spark, tmp_path_factory, lake):
+    """Randomized registries and lakes through run_insert_job: base
+    batch, delta batch, then a replay of the base. The returned counts
+    after every op and the final stores must equal the pure-Python
+    closure's (tests/insert_reference.py)."""
+    import json
+
+    from github_miner_spark.etl.insert import run_insert_job
+    from tests.insert_reference import reference_batch
+
+    registry, batches = lake
+    tmp = tmp_path_factory.mktemp("insert_prop")
+    npm = spark.createDataFrame(
+        [tuple(r[c] for c in ("name", *_DEP_FIELDS)) for r in registry],
+        "name string, dependencies map<string,string>, "
+        "devDependencies map<string,string>, peerDependencies map<string,string>",
+    )
+    lake_dirs = []
+    for b, batch in enumerate(batches):
+        for owner, repo, manifest in batch:
+            d = tmp / f"batch{b}" / owner / repo
+            d.mkdir(parents=True)
+            (d / "package.json").write_text(json.dumps(manifest))
+        lake_dirs.append(str(tmp / f"batch{b}"))
+
+    vp, ep = str(tmp / "vertices"), str(tmp / "edges")
+    want_v, want_e = set(), set()
+    for b in (0, 1, 0):
+        v, e = reference_batch(registry, batches[b])
+        want_v |= v
+        want_e |= e
+        got = run_insert_job(spark, lake_dirs[b], npm, vp, ep)
+        assert got == {"vertices": len(want_v), "edges": len(want_e)}
+    got_v = {tuple(r) for r in spark.read.parquet(vp).select("id", "label", "name").collect()}
+    got_e = {
+        tuple(r)
+        for r in spark.read.parquet(ep)
+        .select("src", "dst", "rel_type", "src_label", "dst_label", "version")
+        .collect()
+    }
+    assert got_v == want_v
+    assert got_e == want_e
