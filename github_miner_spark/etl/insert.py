@@ -15,8 +15,11 @@ expand one level, then main deps recurse (R2/R3 semantics,
 src/Neo4jClient.ts:176-180). A level is one Spark materialization:
 its edges, tagged with whether ``dst`` is new, checkpointed once.
 
-Writes append only the batch's novel rows, keyed on node identity /
-(src, dst, rel_type) — re-running the job is a no-op.
+Writes append only the batch's novel rows, keyed on node identity
+(id, label) / (src, dst, rel_type) — re-running the job is a no-op. The
+label is part of a vertex's identity: a GitUser and a NodeModule may
+share a name (user ``chalk`` owning ``chalk/app``, which depends on
+module ``chalk``), and both vertices must survive.
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from github_miner_spark.etl.package_json import (
     read_manifest_lake,
 )
 
-VERTEX_KEY = ["id"]
+VERTEX_KEY = ["id", "label"]
 EDGE_KEY = ["src", "dst", "rel_type"]
 VERTEX_SCHEMA = "id string, label string, name string"
 EDGE_SCHEMA = ("src string, dst string, rel_type string, src_label string, dst_label string, "

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key, publish
+from github_miner_spark.io.store_key import content_key, publish, read_store
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_BPE_STORE", "/tmp/spark-graft-bpe")
 
@@ -148,4 +148,4 @@ def materialize_bpe_merges(spark: SparkSession, sf_dir: str) -> str:
 def load_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(step, left_sym, right_sym, n_occurrences) from the store."""
     base = materialize_bpe_merges(spark, sf_dir)
-    return spark.read.parquet(os.path.join(base, "merges.parquet"))
+    return read_store(spark, os.path.join(base, "merges.parquet"))

@@ -25,7 +25,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from github_miner_spark.io.store_key import PARQUET_DIR_ENTRIES, content_key, publish
+from github_miner_spark.io.store_key import (
+    PARQUET_DIR_ENTRIES,
+    content_key,
+    publish,
+    read_store,
+)
 
 STORE_ROOT = os.environ.get(
     "SPARK_GRAFT_CLUSTERED_STORE", "/tmp/spark-graft-clustered"
@@ -72,4 +77,4 @@ def materialize_clu_truth(spark: SparkSession, sf_dir: str) -> str:
 
 def load_clu_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, neighbor_id) from the materialized rollup."""
-    return spark.read.parquet(materialize_clu_truth(spark, sf_dir))
+    return read_store(spark, materialize_clu_truth(spark, sf_dir))

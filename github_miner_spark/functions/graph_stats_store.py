@@ -26,6 +26,7 @@ from github_miner_spark.io.store_key import (
     PARQUET_DIR_ENTRIES,
     content_key,
     publish,
+    read_store,
 )
 
 STORE_ROOT = os.environ.get(
@@ -105,7 +106,7 @@ def materialize_anchor_reach(spark: SparkSession, sf_dir: str) -> str:
 
 def load_anchor_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, h, exact_reached) from the materialized rollup."""
-    return spark.read.parquet(materialize_anchor_reach(spark, sf_dir))
+    return read_store(spark, materialize_anchor_reach(spark, sf_dir))
 
 
 def anchor_nodes(spark: SparkSession, sf_dir: str) -> list[int]:

@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key, publish
+from github_miner_spark.io.store_key import content_key, publish, read_store
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_INT8_STORE", "/tmp/spark-graft-int8")
 
@@ -57,7 +57,7 @@ def materialize_int8_codes(spark: SparkSession, sf_dir: str) -> str:
 def load_int8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, codes array<tinyint>) from the materialized store."""
     base = materialize_int8_codes(spark, sf_dir)
-    return spark.read.parquet(os.path.join(base, "codes.parquet"))
+    return read_store(spark, os.path.join(base, "codes.parquet"))
 
 
 def int8_topk_from_store(

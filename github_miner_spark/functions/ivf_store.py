@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key, publish
+from github_miner_spark.io.store_key import content_key, publish, read_store
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_IVF_STORE", "/tmp/spark-graft-ivf")
 
@@ -70,8 +70,8 @@ def load_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     assignment is (vec_id, embedding, list_id), centroids (cid, cvec)."""
     base = materialize_ivf_index(spark, sf_dir)
     return (
-        spark.read.parquet(os.path.join(base, "assignment.parquet")),
-        spark.read.parquet(os.path.join(base, "centroids.parquet")),
+        read_store(spark, os.path.join(base, "assignment.parquet")),
+        read_store(spark, os.path.join(base, "centroids.parquet")),
     )
 
 
@@ -258,10 +258,10 @@ def materialize_ivf_lloyd_index(
             "vec_id",
             F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding"),
         )
-        cents0 = spark.read.parquet(os.path.join(base, "centroids.parquet"))
+        cents0 = read_store(spark, os.path.join(base, "centroids.parquet"))
         cents = lloyd_refined_centroids(emb, cents0, n_iter=n_iter)
         cents.write.mode("overwrite").parquet(os.path.join(stage, "centroids.parquet"))
-        refined = spark.read.parquet(os.path.join(stage, "centroids.parquet"))
+        refined = read_store(spark, os.path.join(stage, "centroids.parquet"))
         assign_lists(emb, refined).sortWithinPartitions("list_id").write.mode(
             "overwrite"
         ).parquet(os.path.join(stage, "assignment.parquet"))
@@ -287,8 +287,8 @@ def ivf_lloyd_topk_from_store(
     search shape to ``ivf_topk_from_store``, sharper lists."""
     base = materialize_ivf_lloyd_index(spark, sf_dir, n_iter=n_iter)
     lloyd = os.path.join(base, f"lloyd{n_iter}")
-    assigned = spark.read.parquet(os.path.join(lloyd, "assignment.parquet"))
-    cents = spark.read.parquet(os.path.join(lloyd, "centroids.parquet"))
+    assigned = read_store(spark, os.path.join(lloyd, "assignment.parquet"))
+    cents = read_store(spark, os.path.join(lloyd, "centroids.parquet"))
     return _ivf_search(assigned, cents, query_ids, k, n_probe)
 
 
@@ -339,7 +339,7 @@ def materialize_incremental_ivf_base(spark: SparkSession, sf_dir: str) -> str:
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
         )
         cents.write.mode("overwrite").parquet(os.path.join(stage, "centroids.parquet"))
-        frozen = spark.read.parquet(os.path.join(stage, "centroids.parquet"))
+        frozen = read_store(spark, os.path.join(stage, "centroids.parquet"))
         assign_lists(b, frozen).sortWithinPartitions("list_id").write.mode(
             "overwrite"
         ).parquet(os.path.join(stage, "base_assignment.parquet"))
@@ -362,9 +362,7 @@ def delta_assignment_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from github_miner_spark.io.tables import load_table
 
     base = materialize_incremental_ivf_base(spark, sf_dir)
-    frozen = spark.read.parquet(
-        os.path.join(base, "incr_base", "centroids.parquet")
-    )
+    frozen = read_store(spark, os.path.join(base, "incr_base", "centroids.parquet"))
     emb = load_table(spark, "embeddings", sf_dir).select(
         "vec_id",
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("embedding"),
@@ -409,14 +407,10 @@ def load_incremental_ivf_index(
     the base assignment UNION the delta-appended one, both list-sorted
     at rest, served against the frozen centroid set."""
     base = ivf_delta_append(spark, sf_dir)
-    asg = spark.read.parquet(
-        os.path.join(base, "incr_base", "base_assignment.parquet")
+    asg = read_store(
+        spark, os.path.join(base, "incr_base", "base_assignment.parquet")
     ).unionByName(
-        spark.read.parquet(
-            os.path.join(base, "incr_delta", "delta_assignment.parquet")
-        )
+        read_store(spark, os.path.join(base, "incr_delta", "delta_assignment.parquet"))
     )
-    cents = spark.read.parquet(
-        os.path.join(base, "incr_base", "centroids.parquet")
-    )
+    cents = read_store(spark, os.path.join(base, "incr_base", "centroids.parquet"))
     return asg, cents

@@ -55,7 +55,7 @@ from github_miner_spark.functions.pq_store import (
     _subspaces,
 )
 from github_miner_spark.functions.similarity import dot
-from github_miner_spark.io.store_key import content_key, publish
+from github_miner_spark.io.store_key import content_key, publish, read_store
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_IVFPQ_STORE", "/tmp/spark-graft-ivfpq")
 
@@ -113,7 +113,7 @@ def materialize_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
             F.col("vec_id").alias("cid"), F.col("nv").alias("cvec")
         )
         cents.write.mode("overwrite").parquet(os.path.join(stage, "centroids.parquet"))
-        cents = spark.read.parquet(os.path.join(stage, "centroids.parquet"))
+        cents = read_store(spark, os.path.join(stage, "centroids.parquet"))
         asg = _nearest_centroid(nrm, cents)
         res = asg.select(
             "vec_id",
@@ -136,7 +136,7 @@ def materialize_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
             "j", "cid", F.col("sv").alias("cvec")
         )
         rcb.write.mode("overwrite").parquet(os.path.join(stage, "rcodebook.parquet"))
-        rcb = spark.read.parquet(os.path.join(stage, "rcodebook.parquet"))
+        rcb = read_store(spark, os.path.join(stage, "rcodebook.parquet"))
         sub = _subspaces(res, "rv")
         codes = (
             sub.join(F.broadcast(rcb), "j")
@@ -174,9 +174,9 @@ def load_ivfpq_index(
     """(codes, centroids, rcodebook) from the materialized store."""
     base = materialize_ivfpq_index(spark, sf_dir)
     return (
-        spark.read.parquet(os.path.join(base, "codes.parquet")),
-        spark.read.parquet(os.path.join(base, "centroids.parquet")),
-        spark.read.parquet(os.path.join(base, "rcodebook.parquet")),
+        read_store(spark, os.path.join(base, "codes.parquet")),
+        read_store(spark, os.path.join(base, "centroids.parquet")),
+        read_store(spark, os.path.join(base, "rcodebook.parquet")),
     )
 
 

@@ -23,13 +23,19 @@ Mechanism choice, measured and reasoned this round:
   later plan, so a persist inside a query function would silently
   serve one bench pass's intermediate to the next pass (the banned
   cross-run result-caching class) and nothing ever unpersists it.
+
+``pin_counted`` is the eager form, for a site that needs the pinned
+frame's row count (a gate decision, a YIELD column): the count comes
+from an ``Observation`` filled by the pin job itself, so pin-then-count
+costs one Spark job, not two. Same mechanism rule as ``pin``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 RELIABLE = bool(os.environ.get("SPARK_GRAFT_RELIABLE_PIN"))
 CHECKPOINT_DIR = os.environ.get(
@@ -43,9 +49,21 @@ def pin(df: DataFrame) -> DataFrame:
     fine in local mode, a durability trade at cluster scale).
     SPARK_GRAFT_RELIABLE_PIN=1: a reliable checkpoint against the
     session checkpoint dir (replicated storage in production)."""
+    return _checkpoint(df, eager=False)
+
+
+def pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``(pinned, n)``: ``df`` pinned eagerly by ``pin``'s mechanism,
+    and its row count, observed by that one checkpoint job."""
+    seen = Observation()
+    pinned = _checkpoint(df.observe(seen, F.count(F.lit(1)).alias("n")), eager=True)
+    return pinned, seen.get["n"]
+
+
+def _checkpoint(df: DataFrame, eager: bool) -> DataFrame:
     if RELIABLE:
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
             sc.setCheckpointDir(CHECKPOINT_DIR)
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)

@@ -34,7 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key, publish
+from github_miner_spark.io.store_key import content_key, publish, read_store
 
 from github_miner_spark.functions.similarity import dot, norm
 
@@ -112,7 +112,7 @@ def materialize_pq_codes(spark: SparkSession, sf_dir: str) -> str:
             "j", "cid", F.col("sv").alias("cvec")
         )
         codebook.write.mode("overwrite").parquet(os.path.join(stage, "codebook.parquet"))
-        cb = spark.read.parquet(os.path.join(stage, "codebook.parquet"))
+        cb = read_store(spark, os.path.join(stage, "codebook.parquet"))
         # encoding: per (vec_id, j) squared-L2 argmin over the KSUB
         # entries — corpus_rows x M_SUB x KSUB narrow rows, map-side
         # (codebook broadcast). The argmin is min_by over a groupBy
@@ -148,8 +148,8 @@ def load_pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     """(codes, codebook) from the materialized store."""
     base = materialize_pq_codes(spark, sf_dir)
     return (
-        spark.read.parquet(os.path.join(base, "codes.parquet")),
-        spark.read.parquet(os.path.join(base, "codebook.parquet")),
+        read_store(spark, os.path.join(base, "codes.parquet")),
+        read_store(spark, os.path.join(base, "codebook.parquet")),
     )
 
 

@@ -18,7 +18,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import PARQUET_DIR_ENTRIES, content_key, publish
+from github_miner_spark.io.store_key import (
+    PARQUET_DIR_ENTRIES,
+    content_key,
+    publish,
+    read_store,
+)
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_TEXT_STORE", "/tmp/spark-graft-text")
 
@@ -46,7 +51,7 @@ def materialize_text_index(spark: SparkSession, sf_dir: str) -> str:
 def load_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) inverted index from the materialized store."""
     base = materialize_text_index(spark, sf_dir)
-    return spark.read.parquet(os.path.join(base, "shingles.parquet"))
+    return read_store(spark, os.path.join(base, "shingles.parquet"))
 
 
 def materialize_dup_pairs(
@@ -69,7 +74,7 @@ def materialize_dup_pairs(
 
     def write(stage: str) -> None:
         docs = load_table(spark, "documents", sf_dir)
-        idx = spark.read.parquet(os.path.join(base, "shingles.parquet"))
+        idx = read_store(spark, os.path.join(base, "shingles.parquet"))
         jaccard_pairs(docs, threshold=threshold, index=idx).select(
             F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
         ).write.mode("overwrite").parquet(stage)
@@ -84,7 +89,7 @@ def load_dup_pairs(
     spark: SparkSession, sf_dir: str, threshold: float = 0.8
 ) -> DataFrame:
     """(src, dst) near-dup doc pairs from the materialized store."""
-    return spark.read.parquet(materialize_dup_pairs(spark, sf_dir, threshold))
+    return read_store(spark, materialize_dup_pairs(spark, sf_dir, threshold))
 
 
 # Version suffix of the source-overlap rollup's on-disk layout AND its
@@ -120,7 +125,7 @@ def materialize_source_overlap(spark: SparkSession, sf_dir: str) -> str:
 
     def write(stage: str) -> None:
         docs = load_table(spark, "documents", sf_dir).select("doc_id", "source")
-        idx = spark.read.parquet(os.path.join(base, "shingles.parquet"))
+        idx = read_store(spark, os.path.join(base, "shingles.parquet"))
         ss = (
             idx.join(docs, "doc_id")
             .select("source", "shingle")
@@ -169,7 +174,7 @@ def load_source_overlap(
     """(source_shingles, source_sizes, pair_inter) from the rollup."""
     base = materialize_source_overlap(spark, sf_dir)
     return (
-        spark.read.parquet(os.path.join(base, "source_shingles.parquet")),
-        spark.read.parquet(os.path.join(base, "source_sizes.parquet")),
-        spark.read.parquet(os.path.join(base, "pair_inter.parquet")),
+        read_store(spark, os.path.join(base, "source_shingles.parquet")),
+        read_store(spark, os.path.join(base, "source_sizes.parquet")),
+        read_store(spark, os.path.join(base, "pair_inter.parquet")),
     )

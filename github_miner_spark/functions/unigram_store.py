@@ -39,7 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.io.store_key import content_key, publish
+from github_miner_spark.io.store_key import content_key, publish, read_store
 
 STORE_ROOT = os.environ.get(
     "SPARK_GRAFT_UNIGRAM_STORE", "/tmp/spark-graft-unigram"
@@ -278,10 +278,10 @@ def materialize_unigram_model(spark: SparkSession, sf_dir: str) -> str:
 def load_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(piece, cnt) from the materialized store."""
     base = materialize_unigram_model(spark, sf_dir)
-    return spark.read.parquet(os.path.join(base, "vocab.parquet"))
+    return read_store(spark, os.path.join(base, "vocab.parquet"))
 
 
 def load_word_segs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, f, seg, n_pieces) from the materialized store."""
     base = materialize_unigram_model(spark, sf_dir)
-    return spark.read.parquet(os.path.join(base, "word_segs.parquet"))
+    return read_store(spark, os.path.join(base, "word_segs.parquet"))

@@ -34,6 +34,7 @@ from github_miner_spark.io.store_key import (
     PARQUET_DIR_ENTRIES,
     content_key,
     publish,
+    read_store,
 )
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_WALK_STORE", "/tmp/spark-graft-walks")
@@ -229,4 +230,4 @@ def load_walks(spark: SparkSession, sf_dir: str, scheme: str = "det") -> DataFra
     """The walk-corpus entry point: materialize (once) and read
     (start, seed, cur, path, depth) from the store."""
     base = materialize_walks(spark, sf_dir, scheme)
-    return spark.read.parquet(os.path.join(base, f"walks_{scheme}.parquet"))
+    return read_store(spark, os.path.join(base, f"walks_{scheme}.parquet"))

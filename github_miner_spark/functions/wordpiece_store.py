@@ -37,7 +37,7 @@ from github_miner_spark.functions.bpe_store import (
     corpus_state,
     split_symbols,
 )
-from github_miner_spark.io.store_key import content_key, publish
+from github_miner_spark.io.store_key import content_key, publish, read_store
 
 STORE_ROOT = os.environ.get(
     "SPARK_GRAFT_WORDPIECE_STORE", "/tmp/spark-graft-wordpiece"
@@ -156,7 +156,7 @@ def materialize_wordpiece_merges(spark: SparkSession, sf_dir: str) -> str:
 def load_wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(step, left_sym, right_sym, n_pair, score_q) from the store."""
     base = materialize_wordpiece_merges(spark, sf_dir)
-    return spark.read.parquet(os.path.join(base, "merges.parquet"))
+    return read_store(spark, os.path.join(base, "merges.parquet"))
 
 
 def max_munch_piece_count(pieces: list[str], toks_col: str = "toks"):

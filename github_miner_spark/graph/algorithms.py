@@ -27,6 +27,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin_counted
 from github_miner_spark.gate import LIMITS, choose_path
 
 # Cap on the per-root task kernels' replication volume (|roots| x E
@@ -161,10 +162,9 @@ def pagerank(
     verts = _vertex_ids(e).distinct()
     outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     # pre-join the per-edge weight once: src -> dst with 1/outdeg(src)
-    weighted = e.join(outdeg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w")
-    ).localCheckpoint(eager=True)
-    n_w = weighted.count()
+    weighted, n_w = pin_counted(
+        e.join(outdeg, "src").select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
+    )
 
     # Task-local path (README: anchored-probe hybrid execution): 20
     # power iterations cost 4+ driver barriers distributed; under the
@@ -547,8 +547,7 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
     # materialization of the input; everything else derives from the
     # checkpoint, not from re-running the input plan. Done BEFORE the
     # loop-width context so the adaptive width can read its size.
-    dedup = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    n_edges = dedup.count()
+    dedup, n_edges = pin_counted(edges.select("src", "dst").distinct())
     spark = edges.sparkSession
     with _loop_shuffle_partitions(
         spark, enabled=True, width=_adaptive_loop_width(spark, n_edges)
@@ -615,8 +614,7 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
         e = edges_in
         prev_e = e.count()
         for _ in range(max_rounds):
-            e = _peel_once(e).localCheckpoint(eager=True)
-            n_e = e.count()
+            e, n_e = pin_counted(_peel_once(e))
             if n_e == prev_e:
                 break
             prev_e = n_e
@@ -1736,10 +1734,9 @@ def betweenness_centrality(
     if not roots:
         return spark.createDataFrame([], out_schema)
     # One lineage traversal (the SCC discipline): checkpoint the edge
-    # projection first, then count/collect the checkpoint — never
-    # re-run the input derivation.
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    n_edges = edges.count()
+    # projection first (the same job counts it), then collect the
+    # checkpoint — never re-run the input derivation.
+    edges, n_edges = pin_counted(edges.select("src", "dst"))
     path = choose_path("betweenness_centrality", n_edges)
     if path == "driver":
         rows = [(r["src"], r["dst"]) for r in edges.collect()]

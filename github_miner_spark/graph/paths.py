@@ -39,6 +39,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin_counted
 from github_miner_spark.gate import choose_path
 
 
@@ -288,9 +289,9 @@ def closure_path_counts(
             # collect, the task kernel and the fallback loop — the
             # caller's edge derivation never runs twice (the SCC /
             # betweenness one-lineage discipline).
-            edges = edges.localCheckpoint(eager=True)
+            edges, n_edges = pin_counted(edges)
             pinned = True
-            path = choose_path("closure_path_counts", edges.count())
+            path = choose_path("closure_path_counts", n_edges)
             if path == "driver":
                 rows = [(r["src"], r["dst"]) for r in edges.collect()]
                 out = _closure_in_driver(rows, roots)
@@ -476,9 +477,9 @@ def bfs_depths(
         if not isinstance(roots, DataFrame) and len(roots) <= DRIVER_CLOSURE_ROOTS:
             # ONE materialization shared by the gate count, both fast
             # paths and the loop (the closure discipline): the count
-            # runs on the checkpoint, never the raw derivation
-            edges = edges.localCheckpoint(eager=True)
-            path = choose_path("bfs_depths", edges.count(), skip)
+            # is observed by the checkpoint job, never a second job
+            edges, n_edges = pin_counted(edges)
+            path = choose_path("bfs_depths", n_edges, skip)
             if path == "driver":
                 rows = [(r["src"], r["dst"]) for r in edges.collect()]
                 out = _bfs_in_driver(rows, roots, max_iter)
@@ -773,8 +774,8 @@ def all_shortest_paths_multi(
         # ONE materialization shared by the gate count, the driver
         # collect, the task kernel and the fallback pipeline (the
         # closure discipline)
-        edges = edges.localCheckpoint(eager=True)
-        path = choose_path(gate, edges.count())
+        edges, n_edges = pin_counted(edges)
+        path = choose_path(gate, n_edges)
         if path == "driver":
             rows = [(r["src"], r["dst"]) for r in edges.collect()]
             out = _asp_in_driver(rows, int(src), targets, max_iter)
@@ -1165,8 +1166,8 @@ def weighted_sssp(
     # ordinary fault-tolerant pattern (ADVICE r7).
     path = "distributed"
     if choose_path("weighted_sssp", 0) != "distributed":
-        edges = edges.localCheckpoint(eager=True)
-        path = choose_path("weighted_sssp", edges.count())
+        edges, n_edges = pin_counted(edges)
+        path = choose_path("weighted_sssp", n_edges)
     if path == "driver":
         rows = [(r["src"], r["dst"], float(r["w"])) for r in edges.collect()]
         out = _dijkstra_in_driver(rows, int(root))

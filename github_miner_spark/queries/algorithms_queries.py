@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from github_miner_spark.functions.pin import pin_counted
 from github_miner_spark.gate import choose_path
 from github_miner_spark.graph.algorithms import (
     _symmetrize_weighted,
@@ -1978,8 +1979,7 @@ def anf_neighborhood_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = 1 << m_bits
     rho_max = 60 - m_bits + 1
     g = load_graph(spark, sf_dir)
-    e = g.module_dep_edges().select("src", "dst").localCheckpoint(eager=True)
-    n_edges = e.count()
+    e, n_edges = pin_counted(g.module_dep_edges().select("src", "dst"))
     # anchors come from the anchored-reachability rollup's parquet
     # files (driver-side pyarrow read, no Spark job — r13): the
     # rollup's node set IS the distinct src < anchor_max set this
@@ -2162,8 +2162,7 @@ def anf_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = 1 << m_bits
     rho_max = 60 - m_bits + 1
     g = load_graph(spark, sf_dir)
-    e = g.module_dep_edges().select("src", "dst").localCheckpoint(eager=True)
-    n_edges = e.count()
+    e, n_edges = pin_counted(g.module_dep_edges().select("src", "dst"))
     if choose_path("anf", n_edges) == "task":
         sums = (
             e.withColumn("g", F.lit(1))

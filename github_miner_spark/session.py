@@ -12,6 +12,14 @@ sf0.01 locally would survive a 1000-executor cluster at 100 TB:
 - Broadcast threshold left at default: dimension tables (region, nation,
   supplier, the vertex-label dims) are broadcast automatically; big
   fact-fact joins go sort-merge with AQE skew handling.
+- PySpark's per-call call-site capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``): with it on,
+  every ``F.*``/``Column`` call makes about five extra py4j round trips
+  to record its Python call site: building MinHash's 16 aggregate
+  columns took 170-320 ms with it and 48 ms without (4-core VM,
+  local[1], median of 15). Errors still raise with their
+  Python traceback; only the call site in an error's
+  ``DataFrameQueryContext`` is lost.
 """
 
 from __future__ import annotations
@@ -54,6 +62,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # the events table stores parquet TIMESTAMP(NANOS); read as long
         # and convert (see io.tables) — Spark has no ns timestamp type
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

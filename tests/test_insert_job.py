@@ -150,3 +150,37 @@ def test_delta_batch_job_budget(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 30
+
+
+def test_user_and_module_sharing_a_name_both_survive(spark, tmp_path):
+    """User chalk owns chalk/app, which depends on module chalk: the
+    GitUser and the NodeModule share an id, and both vertices survive
+    the base batch, a delta and a replay of the base."""
+    from tests.insert_reference import reference_batch
+
+    registry = [
+        {"name": "chalk", "dependencies": {"ansi": "1.0.0"},
+         "devDependencies": None, "peerDependencies": None},
+        {"name": "ansi", "dependencies": None,
+         "devDependencies": None, "peerDependencies": None},
+    ]
+    npm = spark.createDataFrame(
+        [tuple(r.values()) for r in registry],
+        "name string, dependencies map<string,string>, "
+        "devDependencies map<string,string>, peerDependencies map<string,string>",
+    )
+    base = [("chalk", "app", {"name": "app", "dependencies": {"chalk": "~5.0.0"}})]
+    lakes = {"base": (base, _write_lake(tmp_path, base, "base")),
+             "delta": (DELTA_REPOS, _write_lake(tmp_path, DELTA_REPOS, "delta"))}
+    vp, ep = str(tmp_path / "vertices"), str(tmp_path / "edges")
+    want_v, want_e = set(), set()
+    for name in ("base", "delta", "base"):
+        repos, lake = lakes[name]
+        v, e = reference_batch(registry, repos)
+        want_v |= v
+        want_e |= e
+        got = run_insert_job(spark, lake, npm, vp, ep)
+        stored = {tuple(r) for r in spark.read.parquet(vp).select("id", "label", "name").collect()}
+        assert {("chalk", "GitUser", "chalk"), ("chalk", "NodeModule", "chalk")} <= stored
+        assert stored == want_v
+        assert got == {"vertices": len(want_v), "edges": len(want_e)}

@@ -303,3 +303,22 @@ def test_weighted_sssp_negative_weight_raises(spark):
     e = wedges_df(spark, [(1, 2, 1.0), (2, 3, -0.5)])
     with pytest.raises(ValueError, match="non-negative"):
         weighted_sssp(e, 1)
+
+
+def test_closure_driver_path_job_budget(spark, diamond):
+    """The driver path costs one job to pin the edges, which also
+    counts them for the gate, and one to collect the pinned slice. A
+    separate count() of the pinned edges ran two more jobs."""
+    sc = spark.sparkContext
+    group = "closure-driver-job-budget"
+    sc.setJobGroup(group, "closure driver job budget")
+    try:
+        with only(closure_path_counts="driver"):
+            out = closure_path_counts(diamond.filter("src > 0"), roots=[1])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert {(r.root, r.node): r.paths for r in out.collect()} == {
+        (1, 2): 1, (1, 3): 1, (1, 4): 2, (1, 5): 2
+    }

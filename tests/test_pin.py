@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import importlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from github_miner_spark.functions import pin as pin_mod
@@ -42,3 +43,50 @@ def test_env_controls_mechanism(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_RELIABLE_PIN")
     importlib.reload(pin_mod)
     assert pin_mod.RELIABLE is False
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(params=["local", "reliable"])
+def mechanism(request, monkeypatch, tmp_path):
+    if request.param == "reliable":
+        monkeypatch.setattr(pin_mod, "RELIABLE", True)
+        monkeypatch.setattr(pin_mod, "CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    return request.param
+
+
+@pytest.mark.parametrize("n", [0, 1, 257])
+def test_pin_counted_matches_pin_then_count(spark, mechanism, n):
+    base = spark.range(n).repartition(3).select(F.col("id"), (F.col("id") % 5).alias("m"))
+    pinned, count = pin_mod.pin_counted(base)
+    reference = pin_mod.pin(base)
+    assert count == reference.count() == n
+    assert _rows(pinned) == _rows(reference)
+    assert "LogicalRDD" in pinned._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_pin_counted_saves_the_count_job(spark, mechanism):
+    """The count comes from the pin job: one job fewer than an eager
+    pin followed by count()."""
+    def frame():
+        return spark.range(500).repartition(3).select(F.col("id"), (F.col("id") * 3).alias("v"))
+
+    (_, n), counted_jobs = _jobs_in_group(
+        spark, f"pin-counted-{mechanism}", lambda: pin_mod.pin_counted(frame())
+    )
+    m, two_step_jobs = _jobs_in_group(
+        spark,
+        f"pin-then-count-{mechanism}",
+        lambda: pin_mod._checkpoint(frame(), eager=True).count(),
+    )
+    assert n == m == 500
+    assert counted_jobs <= two_step_jobs - 1

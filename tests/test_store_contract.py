@@ -1,7 +1,9 @@
 """The store contract, once for every materializer: a second call is a
 hit (same path, nothing rewritten), every spec version participates in
 the address, an incomplete store on disk is rebuilt rather than served,
-and no materializer hand-rolls its own publish step."""
+every artifact reads back with its footer schema, no materializer
+hand-rolls its own publish step, and no package code reads parquet
+without a schema."""
 
 from __future__ import annotations
 
@@ -27,6 +29,7 @@ from github_miner_spark.functions import (
     wordpiece_store,
 )
 from github_miner_spark.graph import store as graph_store
+from github_miner_spark.io.store_key import read_store
 from tests.conftest import SF_SMOKE
 
 SF = SF_SMOKE
@@ -133,6 +136,25 @@ def test_spec_version_moves_address(monkeypatch, name):
     assert case.path(SF) != before
 
 
+def _parquet_artifacts(path: str) -> list[str]:
+    """Every Spark parquet output dir at or under ``path``."""
+    return sorted(
+        str(d)
+        for d in [pathlib.Path(path), *pathlib.Path(path).rglob("*")]
+        if d.is_dir() and any(f.name.startswith("part-") for f in d.iterdir())
+    )
+
+
+@pytest.mark.parametrize("name", list(CASES))
+def test_read_store_schema_matches_inference(spark, name):
+    """The footer schema ``read_store`` passes is the schema Spark's
+    own inference returns, for every artifact the store publishes."""
+    artifacts = _parquet_artifacts(CASES[name].materialize(spark, SF))
+    assert artifacts, f"{name}: no parquet artifact"
+    for path in artifacts:
+        assert read_store(spark, path).schema == spark.read.parquet(path).schema, path
+
+
 def test_partial_graph_store_is_rebuilt_not_served(spark, monkeypatch, tmp_path):
     """A key dir holding only vertices.parquet (a foreign or
     half-copied store) must be replaced by a complete build."""
@@ -206,3 +228,59 @@ def test_no_materializer_hand_rolls_a_publish_step():
         ]
     assert found == 17, f"expected 17 materializers, scanned {found}"
     assert offenders == []
+
+
+# Readers whose schema is whatever the caller wrote, so there is no
+# fixed schema to pass: "<path>:<function>" -> why.
+_SCHEMALESS_READ_ALLOWLIST = {
+    "github_miner_spark/io/sinks.py:restore": (
+        "reads back a snapshot of any frame the caller saved"
+    ),
+    "github_miner_spark/streaming/mining.py:read_drained": (
+        "reads the streaming sink through its transaction log; the "
+        "schema is the caller's stream's"
+    ),
+}
+
+
+def _is_schemaless_parquet_read(call: ast.Call) -> bool:
+    """``<x>.read[.<opt>(...)...].parquet(...)`` with no ``.schema(...)``
+    in the chain."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr == "parquet"):
+        return False
+    node = call.func.value
+    while isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        if node.func.attr == "schema":
+            return False
+        node = node.func.value
+    return isinstance(node, ast.Attribute) and node.attr == "read"
+
+
+def _schemaless_parquet_reads(pkg: pathlib.Path):
+    """(``<path>:<innermost enclosing function>``, line) per read."""
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        fns = [n for n in ast.walk(tree) if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and _is_schemaless_parquet_read(node):
+                owner = max(
+                    (f for f in fns if f.lineno <= node.lineno <= f.end_lineno),
+                    key=lambda f: f.lineno,
+                    default=None,
+                )
+                name = owner.name if owner else "<module>"
+                yield f"{path.relative_to(pkg.parent)}:{name}", node.lineno
+
+
+def test_no_schemaless_parquet_read():
+    """A bare ``spark.read.parquet`` runs a schema-inference job per
+    read. Store artifacts go through io/store_key.py:read_store; other
+    reads pass their schema. Only caller-shaped readers are exempt."""
+    pkg = pathlib.Path(graph_store.__file__).resolve().parents[1]
+    found = {}
+    for site, lineno in _schemaless_parquet_reads(pkg):
+        found.setdefault(site, lineno)
+    offenders = sorted(f"{s}:{n}" for s, n in found.items() if s not in _SCHEMALESS_READ_ALLOWLIST)
+    assert offenders == []
+    # a stale entry would silently exempt whatever is added under its name
+    assert set(_SCHEMALESS_READ_ALLOWLIST) <= set(found)
