@@ -845,9 +845,12 @@ def main() -> None:
             "note": "SPARK_GRAFT_FORCE_DISTRIBUTED=1: every driver rung "
             "of github_miner_spark/gate.py:LIMITS skipped. Executor-side "
             "task rungs (whole-core SCC, whole-graph CC union-find, "
-            "per-root path kernels) stay active here at bench SF; the "
-            "scaling lane pins the distributed machinery itself by "
-            "emptying those gates' ladders (scc/CC/ASP entries)",
+            "per-root path kernels) stay active here at bench SF, so for "
+            "the gates whose ladder is the task rung alone (CC, Louvain, "
+            "coreness, closure counts, ASP, simple paths, weighted SSSP) "
+            "the flag changes no path; the scaling lane pins the "
+            "distributed machinery itself by emptying those gates' "
+            "ladders (scc/CC/ASP entries)",
             "queries": dist_timings,
             "spreads": {n: _spread(ts) for n, ts in dist_samples.items()},
             "samples": dist_samples,

@@ -35,11 +35,21 @@ from github_miner_spark.etl.package_json import (
     read_manifest_lake,
 )
 
-VERTEX_KEY = ["id", "label"]
 EDGE_KEY = ["src", "dst", "rel_type"]
 VERTEX_SCHEMA = "id string, label string, name string"
 EDGE_SCHEMA = ("src string, dst string, rel_type string, src_label string, dst_label string, "
                "version string")
+
+
+def _vertex_identity(df: DataFrame) -> DataFrame:
+    """``df`` plus ``vkey``: the (id, label) identity as ONE column,
+    ``label:id``. Anti-joined on the pair, Catalyst pushes the join
+    through the users/repos/modules union and turns each branch's
+    literal label into a filter on the existing side, so three
+    broadcasts of the vertex table get built; on ``vkey`` every branch
+    probes the same one. Labels are a fixed set with no ``:``, so the
+    key is injective."""
+    return df.withColumn("vkey", F.concat("label", F.lit(":"), "id"))
 
 
 def _manifest_edges(manifests: DataFrame, src_label: str) -> DataFrame:
@@ -144,15 +154,16 @@ def run_insert_job(
     vertices = users.unionByName(repos).unionByName(modules)
     edges = owns.unionByName(repo_edges).unionByName(module_edges)
 
-    for path, df, schema, key in (
-        (out_vertices, vertices, VERTEX_SCHEMA, VERTEX_KEY),
-        (out_edges, edges, EDGE_SCHEMA, EDGE_KEY),
+    for path, df, schema, key, identify in (
+        (out_vertices, vertices, VERTEX_SCHEMA, ["vkey"], _vertex_identity),
+        (out_edges, edges, EDGE_SCHEMA, EDGE_KEY, lambda frame: frame),
     ):
         existing = read_existing(spark, path, schema)
         if existing is None:
-            dedupe_batch(df, key).write.parquet(path)
+            rows, mode = dedupe_batch(identify(df), key), "error"
         else:
-            novel_rows(existing, df, key).write.mode("append").parquet(path)
+            rows, mode = novel_rows(identify(existing), identify(df), key), "append"
+        rows.select(df.columns).write.mode(mode).parquet(path)
     return {
         "vertices": spark.read.schema(VERTEX_SCHEMA).parquet(out_vertices).count(),
         "edges": spark.read.schema(EDGE_SCHEMA).parquet(out_edges).count(),

@@ -9,9 +9,9 @@ table, append only the novel keys. One shuffle per batch instead of one
 round-trip per row; idempotent under replay, which is what the
 reference's checkpoint/resume loop actually needs.
 
-``etl/insert.py:run_insert_job`` appends ``novel_rows``, so a batch
-costs in proportion to the batch and never rewrites the table. Each
-batch adds part files, a replay one schema-only file per table;
+A MERGE appends ``novel_rows`` (``etl/insert.py:run_insert_job``), so
+a batch costs in proportion to the batch and never rewrites the table.
+Each batch adds part files, a replay one schema-only file per table;
 compaction is out of scope.
 """
 
@@ -26,18 +26,6 @@ def dedupe_batch(batch: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Within-batch dedup on the identity key (reference: first write
     wins via Redis set membership)."""
     return batch.dropDuplicates(list(keys))
-
-
-def merge_append(existing: DataFrame, batch: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Return existing ∪ (batch rows whose key is not yet present).
-
-    The anti-join replaces the reference's EXISTS-before-CREATE; the
-    result is the post-merge table, for callers that need it as one
-    frame. To persist a merge, append ``novel_rows`` instead, as
-    ``run_insert_job`` does: rewriting the whole table per batch costs
-    in proportion to the table."""
-    novel = dedupe_batch(batch, keys).join(existing, list(keys), "left_anti")
-    return existing.unionByName(novel)
 
 
 def novel_rows(existing: DataFrame, batch: DataFrame, keys: Sequence[str]) -> DataFrame:

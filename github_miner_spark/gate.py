@@ -1,12 +1,13 @@
 """One execution-path gate for every hybrid operator.
 
-Each gated operator computes the same rows three ways:
+A gated operator computes the same rows on up to three paths:
 
 - ``driver``: collect the input and run an in-driver twin (or, for the
   corpus rank gates, one bounded single-partition window) — no
   per-round barriers, but nothing scales out;
-- ``task``: ship the whole input to ONE executor task and run the same
-  twin there through ``applyInPandas`` — no driver collect;
+- ``task``: ship the whole input to ONE executor task and run the
+  twin there through a pandas UDF (``applyInPandas`` over one group,
+  or ``mapInPandas`` over one partition) — no driver collect;
 - ``distributed``: the level-synchronous DataFrame loop, the only path
   with no size limit.
 
@@ -15,6 +16,17 @@ rungs, tried in order; :func:`choose_path` returns the first rung that
 admits ``n_rows`` and ``"distributed"`` when none does. The one logical
 operator / size-chosen physical strategy split follows Pregelix (VLDB
 2014).
+
+Most ladders hold one rung. Only three gates keep both a ``driver`` and
+a ``task`` rung, because their driver twin measured faster than the
+same twin in one task: ``strongly_connected_components``,
+``betweenness_centrality`` and ``bfs_depths`` (the numbers sit beside
+their entries). Where the task kernel ran the same twin no slower
+(connected components, Louvain, coreness, closure counts, all shortest
+paths, simple-path enumeration, weighted SSSP) the driver rung is gone:
+a second in-process strategy that never wins is only more code.
+``modularity``, ``label_propagation`` and the corpus rank gates keep a
+lone ``driver`` rung; they have no task twin.
 
 ``SPARK_GRAFT_FORCE_DISTRIBUTED=1`` (read at call time) skips every
 ``driver`` rung, so the bench's distributed lane and tests reach the
@@ -36,30 +48,36 @@ LIMITS: dict[str, tuple[tuple[str, int], ...]] = {
     # kernel at bench scale (the collect + re-ship of ranks)
     "pagerank": (("task", 5_000_000),),
     # deduped non-self pairs
-    "connected_components": (("driver", 2_000_000), ("task", 5_000_000)),
+    "connected_components": (("task", 5_000_000),),
     # deduped edges, then the trimmed core: driver Tarjan, else the
-    # whole core as one Tarjan task
+    # whole core as one Tarjan task. The driver rung stays: on the
+    # 32-core distributed lane the task rung measured 0.93 s against
+    # the driver's 0.66 s
     "strongly_connected_components": (("driver", 5_000_000), ("task", 5_000_000)),
     # per weakly-connected piece of the core: Tarjan task up to this
     # many edges, the coloring loop above it; a whole graph above it is
     # trimmed first
     "scc_component": (("task", 5_000_000),),
     # symmetric weighted edges
-    "louvain": (("driver", 2_000_000), ("task", 5_000_000)),
+    "louvain": (("task", 5_000_000),),
     "modularity": (("driver", 2_000_000),),
     "label_propagation": (("driver", 2_000_000),),
     # deduped undirected edges
-    "coreness": (("driver", 5_000_000), ("task", 5_000_000)),
-    # edges; the task rung is one Brandes run per sampled root
+    "coreness": (("task", 5_000_000),),
+    # edges; the task rung is one Brandes run per sampled root. The
+    # driver rung stays: it measured 0.89 s against the task's 0.98 s
     "betweenness_centrality": (("driver", 5_000_000), ("task", 5_000_000)),
     # largest per-root shortest-path DAG after the forward sweep
     "betweenness_backward": (("task", 2_000_000),),
     # edges, for a small explicit root set (paths.DRIVER_CLOSURE_ROOTS)
-    "closure_path_counts": (("driver", 2_000_000), ("task", 5_000_000)),
+    "closure_path_counts": (("task", 5_000_000),),
+    # The driver rung stays: on closeness, the per_root_task caller,
+    # it measured 0.80 s against the task's 1.12 s; and the task rung
+    # is opt-in, so internal sweeps have no other way past the loop
     "bfs_depths": (("driver", 2_000_000), ("task", 5_000_000)),
-    "all_shortest_paths_multi": (("driver", 2_000_000), ("task", 5_000_000)),
-    "enumerate_simple_paths": (("driver", 2_000_000), ("task", 5_000_000)),
-    "weighted_sssp": (("driver", 2_000_000), ("task", 5_000_000)),
+    "all_shortest_paths_multi": (("task", 5_000_000),),
+    "enumerate_simple_paths": (("task", 5_000_000),),
+    "weighted_sssp": (("task", 5_000_000),),
     # module edges, both ANF queries
     "anf": (("task", 5_000_000),),
     # documents rows (parquet footer), and source-overlap shingle rows

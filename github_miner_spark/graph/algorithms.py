@@ -301,30 +301,17 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     n_pairs = pairs.count()
-    # Hybrid fast path (README: anchored-probe hybrid execution):
-    # under the ``connected_components`` gate the deduped pair list
-    # collects and path-compressed union-find labels the graph exactly
-    # — integer work, bit-identical to the star-contraction result.
-    # The distributed O(log^2 n) loop engages unchanged beyond it.
-    path = choose_path("connected_components", n_pairs)
-    if path == "driver":
-        nodes = [r["id"] for r in verts.collect()]
-        comp = _union_find_components(
-            nodes, [(r["a"], r["b"]) for r in pairs.collect()]
-        )
-        return edges.sparkSession.createDataFrame(
-            list(comp.items()), "id bigint, component bigint"
-        )
-    # Whole-graph task shortcut (the SCC whole-core pattern): a pair
-    # set that fits one executor task is labeled by path-compressed
-    # union-find inside ONE applyInPandas group — one job instead of
-    # O(log^2 n) star-contraction barriers. Executor-side compute, so
-    # the force flag leaves it on; the scaling lane empties the gate
-    # to time the distributed rounds, and a pair set above the rung
-    # takes the star contraction unchanged — the 100 TB path. Isolated
-    # and self-loop-only vertices come back via the same left-join
-    # tail the distributed loop uses.
-    if path == "task":
+    # Whole-graph task shortcut (README: anchored-probe hybrid
+    # execution; the SCC whole-core pattern): a pair set that fits one
+    # executor task is labeled by path-compressed union-find inside ONE
+    # applyInPandas group — integer work, bit-identical to the
+    # star-contraction result, one job instead of O(log^2 n) barriers.
+    # Executor-side compute, so the force flag leaves it on; the
+    # scaling lane empties the gate to time the distributed rounds, and
+    # a pair set above the rung takes the star contraction unchanged —
+    # the 100 TB path. Isolated and self-loop-only vertices come back
+    # via the same left-join tail the distributed loop uses.
+    if choose_path("connected_components", n_pairs) == "task":
         roots = (
             pairs.withColumn("g", F.lit(1))
             .groupBy("g")
@@ -933,8 +920,8 @@ def _louvain_phase1(sym: DataFrame, m2: float, max_sweeps: int) -> DataFrame:
 
     Every float lands from the identical expression tree as the r8
     shape (k/tot/k_in are integer-valued-double sums, order exact), so
-    the driver twin, the task kernel, and the unrolled CTE oracle stay
-    bit-identical — pinned by the 4-way parity tests.
+    the in-memory twin the task kernel runs and the unrolled CTE
+    oracle stay bit-identical — pinned by the parity tests.
     """
     spark = sym.sparkSession
     tag = f"lv{next(_LV_SEQ)}"
@@ -1030,8 +1017,8 @@ def _md5_parity(v: int) -> int:
 def _louvain_phase1_driver(
     sym: list[tuple[int, int, float]], m2: float, max_sweeps: int
 ) -> dict[int, int]:
-    """In-driver twin of _louvain_phase1 over a collected symmetric
-    weighted edge list. Bit-parity argument (same as the unrolled
+    """In-memory twin of _louvain_phase1 over a symmetric weighted
+    edge list (the task kernel runs it). Bit-parity argument (same as the unrolled
     oracle's): every aggregate is a sum of integer-valued doubles —
     exact in IEEE-754 regardless of accumulation order — and the score
     expression k_in - k * adj_tot / m2 is evaluated with the identical
@@ -1079,7 +1066,7 @@ def _louvain_driver(
     max_sweeps: int,
     levels: int,
 ) -> dict[int, int]:
-    """In-driver twin of louvain's level loop: aggregate
+    """In-memory twin of louvain's level loop: aggregate
     communities into super-nodes (weights summed, intra-community mass
     as self-rows), re-run local moving with the ORIGINAL m2, map back,
     then canonicalize community ids to the min member id."""
@@ -1148,34 +1135,16 @@ def louvain(
     if not m2:
         return edges.sparkSession.createDataFrame([], "id bigint, community bigint")
 
-    # Hybrid fast path (README: anchored-probe hybrid execution): the
-    # sweep loop pays 2 driver barriers per sweep per level, so under
-    # the ``louvain`` gate the symmetric edge list collects (it is
-    # already materialized for m2) and the exact same semi-synchronous
-    # schedule runs in-driver — bit-identical moves, see
-    # _louvain_phase1_driver. Beyond the gate the distributed sweeps
-    # below engage unchanged; parity between the paths is pinned by
-    # tests on the bench slice and randomized graphs.
-    path = choose_path("louvain", n_sym)
-    if path == "driver":
-        rows = sym.collect()
-        comm = _louvain_driver(
-            [(r["src"], r["dst"], r["w"]) for r in rows],
-            float(m2),
-            max_sweeps,
-            levels,
-        )
-        return edges.sparkSession.createDataFrame(
-            list(comm.items()), "id bigint, community bigint"
-        )
-
-    # Task-local path (the SCC/betweenness pattern): when the symmetric
-    # edge list fits one executor task, the whole two-level schedule
-    # runs inside ONE applyInPandas task via the bit-parity driver twin
-    # — executor-side, no driver collect, ~12 sweep barriers -> 2
-    # stages. Past the gate the distributed sweeps below are the
-    # at-scale path; equality is exact (see _louvain_group_factory).
-    if path == "task":
+    # Task-local path (README: anchored-probe hybrid execution): the
+    # sweep loop pays 2 driver barriers per sweep per level, so when
+    # the symmetric edge list fits one executor task the whole
+    # two-level schedule runs inside ONE applyInPandas task via the
+    # bit-parity twin _louvain_driver — no driver collect, ~12 sweep
+    # barriers -> 2 stages. Past the gate the distributed sweeps below
+    # are the at-scale path; equality is exact (see
+    # _louvain_group_factory), pinned by tests on the bench slice and
+    # randomized graphs.
+    if choose_path("louvain", n_sym) == "task":
         return (
             sym.withColumn("g", F.lit(1))
             .groupBy("g")
@@ -1417,7 +1386,7 @@ def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
 def _matula_beck_coreness(edge_list: list[tuple[int, int]]) -> dict[int, int]:
     """Exact core numbers via the Matula-Beck O(E) bucket peel over an
     in-memory undirected simple edge list (self-loops excluded by the
-    caller). Used only on the driver rung — the driver twin of
+    caller). The task kernel (_coreness_group) runs it — the twin of
     the distributed h-index fixpoint, and the independent reference the
     property tests pin it against."""
     adj: dict[int, set[int]] = {}
@@ -1486,10 +1455,10 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     fixpoint are no-ops, which is what lets the DuckDB oracle unroll a
     fixed round count and still hash-match exactly.
 
-    Under the ``coreness`` gate the slice collects and the exact
-    Matula-Beck bucket peel runs in-driver — the same hybrid policy as
-    SCC's driver-Tarjan (README: anchored-probe hybrid execution);
-    parity between the two paths is property-tested. RAISES if the
+    Under the ``coreness`` gate the exact Matula-Beck bucket peel runs
+    in one executor task — the same hybrid policy as SCC's whole-core
+    Tarjan task (README: anchored-probe hybrid execution); parity
+    between the two paths is property-tested. RAISES if the
     distributed fixpoint is not reached within ``max_iter`` rounds
     rather than returning wrong numbers (the CC convergence contract).
     """
@@ -1510,20 +1479,13 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
     n_edges = und.count()
     if n_edges == 0:
         return edges.sparkSession.createDataFrame([], "id bigint, core bigint")
-    path = choose_path("coreness", n_edges)
-    if path == "driver":
-        rows = und.collect()
-        core = _matula_beck_coreness([(r["u"], r["v"]) for r in rows])
-        return edges.sparkSession.createDataFrame(
-            list(core.items()), "id bigint, core bigint"
-        )
     # Task-local path (the SCC/betweenness/louvain/pagerank pattern):
     # an undirected edge set that fits one executor task runs the exact
     # Matula-Beck peel inside ONE applyInPandas task — executor-side,
     # no driver collect, the O(iterations) h-index barriers collapse to
     # 2 stages. Past the gate the fixpoint loop below is the at-scale
     # path.
-    if path == "task":
+    if choose_path("coreness", n_edges) == "task":
         return (
             und.withColumn("g", F.lit(1))
             .groupBy("g")

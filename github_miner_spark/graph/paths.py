@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -134,6 +135,13 @@ def _adaptive_loop_width(spark, n_rows: int) -> int:
 # (the edge-count rungs are the ``gate.LIMITS`` entries).
 DRIVER_CLOSURE_ROOTS = 128
 
+# The closure DP twin's refusal on a reachable cycle; the task path
+# re-raises it on the driver when the kernel's job fails with it.
+CLOSURE_CYCLE_ERROR = (
+    "closure did not converge — cyclic input? use reachable_set/bfs_depths "
+    "(cycle-safe) or pass a depth bound"
+)
+
 # Barrier cadence of the distributed frontier loops, in levels per
 # window: closure_path_counts and bfs_depths keep the levels inside a
 # window LAZY and materialize the whole window at one barrier (see
@@ -186,10 +194,7 @@ def _closure_in_driver(
                     if indeg[w] == 0:
                         dq.append(w)
         if len(order) != len(reach):
-            raise RuntimeError(
-                "closure did not converge — cyclic input? use "
-                "reachable_set/bfs_depths (cycle-safe) or pass a depth bound"
-            )
+            raise RuntimeError(CLOSURE_CYCLE_ERROR)
         paths: dict[int, int] = defaultdict(int)
         paths[root] = 1  # length-0 seed, excluded from output
         for v in order:
@@ -200,27 +205,30 @@ def _closure_in_driver(
     return out
 
 
-def _closure_group_factory(roots: list[int]):
-    """Build the applyInPandas kernel for task-local closure counting:
-    the edge list arrives as one group and the SAME
-    ``_closure_in_driver`` twin the parity tests pin runs inside the
-    executor task for every root at once."""
+def _closure_batches_factory(roots: list[int]):
+    """Build the mapInPandas kernel for task-local closure counting:
+    the caller coalesces the pinned edge list to ONE partition, so a
+    single task sees every edge and runs the SAME ``_closure_in_driver``
+    twin the parity tests pin for every root at once."""
 
-    def _closure_group(pdf):
+    def _closure_batches(batches):
         import pandas as pd
 
-        out = _closure_in_driver(
-            list(zip(pdf["src"].astype(int), pdf["dst"].astype(int))), roots
-        )
-        return pd.DataFrame(
+        edge_rows = [
+            (int(a), int(b))
+            for pdf in batches
+            for a, b in zip(pdf["src"], pdf["dst"])
+        ]
+        out = _closure_in_driver(edge_rows, roots)
+        yield pd.DataFrame(
             {
-                "root": [r for r, _n, _p in out],
-                "node": [n for _r, n, _p in out],
-                "paths": [p for _r, _n, p in out],
+                "root": pd.Series([r for r, _n, _p in out], dtype="int64"),
+                "node": pd.Series([n for _r, n, _p in out], dtype="int64"),
+                "paths": pd.Series([p for _r, _n, p in out], dtype="int64"),
             }
         )
 
-    return _closure_group
+    return _closure_batches
 
 
 def closure_path_counts(
@@ -238,13 +246,12 @@ def closure_path_counts(
     Raises RuntimeError if the frontier is still non-empty after
     ``max_iter`` levels (cyclic input without a depth bound).
 
-    Hybrid execution: with an explicit small root set (<=
-    ``DRIVER_CLOSURE_ROOTS``) the ``closure_path_counts`` gate picks
-    the path by edge count — the slice collected and the DP run
-    in-driver, or the same DP in one executor task — skipping the
-    frontier loop's barrier floor entirely (same results, same cycle
-    contract; ``tests/test_gate.py`` pins parity). Distributed loop
-    unchanged beyond the gate.
+    Hybrid execution: with a small root set (<=
+    ``DRIVER_CLOSURE_ROOTS``, given as ids or as a frame) the
+    ``closure_path_counts`` gate picks the path by edge count — the DP
+    in one executor task — skipping the frontier loop's barrier floor
+    entirely (same results, same cycle contract; ``tests/test_gate.py``
+    pins parity). Distributed loop unchanged beyond the gate.
 
     The distributed loop materializes the edge relation once up front
     (an interleaved A/B at sf0.1 measured that ~1s/call faster than
@@ -269,13 +276,13 @@ def closure_path_counts(
     """
     spark = edges.sparkSession
     edges = edges.select("src", "dst")
-    pinned = False  # the fast-path gate already checkpointed ``edges``
+    pinned = False  # the task-path gate already checkpointed ``edges``
     cheapest = choose_path("closure_path_counts", 0)
     if roots is not None:
         if isinstance(roots, DataFrame):
             # a root FRAME under the cap collects to a scalar list (one
-            # tiny count + collect) so it can take the fast path too
-            if cheapest == "driver" and roots.count() <= DRIVER_CLOSURE_ROOTS:
+            # tiny count + collect) so it can take the task kernel too
+            if cheapest != "distributed" and roots.count() <= DRIVER_CLOSURE_ROOTS:
                 rcol = roots.columns[0]
                 roots = [int(r[rcol]) for r in roots.distinct().collect()]
         else:
@@ -285,34 +292,30 @@ def closure_path_counts(
             and len(roots) <= DRIVER_CLOSURE_ROOTS
             and cheapest != "distributed"
         ):
-            # ONE materialization shared by the gate count, the driver
-            # collect, the task kernel and the fallback loop — the
-            # caller's edge derivation never runs twice (the SCC /
-            # betweenness one-lineage discipline).
+            # ONE materialization shared by the gate count, the task
+            # kernel and the fallback loop — the caller's edge
+            # derivation never runs twice (the SCC / betweenness
+            # one-lineage discipline).
             edges, n_edges = pin_counted(edges)
             pinned = True
-            path = choose_path("closure_path_counts", n_edges)
-            if path == "driver":
-                rows = [(r["src"], r["dst"]) for r in edges.collect()]
-                out = _closure_in_driver(rows, roots)
-                return spark.createDataFrame(
-                    out or [], "root bigint, node bigint, paths bigint"
+            # Task-local path: an edge set that fits one executor task
+            # runs the closure DP twin — all roots in one kernel call —
+            # in ONE task; no driver collect, no frontier barriers. The
+            # kernel is pinned now, so a reachable cycle raises the
+            # same RuntimeError at call time as the frontier loop; the
+            # pinned edges coalesce into that task without a shuffle,
+            # which keeps the eager pin from costing an extra job.
+            if choose_path("closure_path_counts", n_edges) == "task":
+                counts = edges.coalesce(1).mapInPandas(
+                    _closure_batches_factory(roots),
+                    schema="root bigint, node bigint, paths bigint",
                 )
-            # Task-local path (the betweenness/ASP pattern): an edge
-            # set that fits one executor task runs the same closure DP
-            # — all roots in one kernel call — inside ONE applyInPandas
-            # task; no driver collect, no frontier barriers. The cycle
-            # contract (RuntimeError) raises from the task and fails
-            # the job, same refusal semantics.
-            if path == "task":
-                return (
-                    edges.withColumn("g", F.lit(1))
-                    .groupBy("g")
-                    .applyInPandas(
-                        _closure_group_factory([int(r) for r in roots]),
-                        schema="root bigint, node bigint, paths bigint",
-                    )
-                )
+                try:
+                    return pin_counted(counts)[0]
+                except PythonException as exc:
+                    if CLOSURE_CYCLE_ERROR not in str(exc):
+                        raise
+                    raise RuntimeError(CLOSURE_CYCLE_ERROR) from exc
     with _loop_shuffle_partitions(spark, enabled=broadcast_frontier):
         if not pinned:
             edges = edges.localCheckpoint(eager=True)
@@ -668,10 +671,11 @@ def _asp_in_driver(
     targets: list[int],
     max_iter: int,
 ) -> list[tuple[int, list[int], int]]:
-    """In-driver twin of the multi-target shortest-path enumeration:
-    forward/reverse BFS, per-target on-path restriction (fd + rd ==
-    length), then DFS over the shortest-path DAG — work proportional
-    to the OUTPUT (every explored edge is on some shortest path)."""
+    """In-memory twin of the multi-target shortest-path enumeration,
+    run by the task kernel: forward/reverse BFS, per-target on-path
+    restriction (fd + rd == length), then DFS over the shortest-path
+    DAG — work proportional to the OUTPUT (every explored edge is on
+    some shortest path)."""
     from collections import defaultdict, deque
 
     adj: dict[int, list[int]] = defaultdict(list)
@@ -750,8 +754,8 @@ def all_shortest_paths_multi(
     """All shortest paths from ``src`` to EVERY id in ``targets`` in one
     batched pass: (target, path, length). For a small target set the
     ``all_shortest_paths_multi`` gate runs the whole construction via
-    :func:`_asp_in_driver` in-driver or inside one executor task; the
-    distributed two-sweep pipeline below engages beyond it.
+    :func:`_asp_in_driver` inside one executor task; the distributed
+    two-sweep pipeline below engages beyond it.
 
     Same shortest-path-DAG construction as :func:`all_shortest_paths`
     (forward BFS + reverse BFS + on-path filter), but the reverse BFS
@@ -765,31 +769,20 @@ def all_shortest_paths_multi(
     edges = edges.select("src", "dst")
     targets = [int(t) for t in targets]
     empty = spark.createDataFrame([], "target bigint, path array<bigint>, length int")
-    # driver fast path (same gate shape as closure/bfs): the whole DAG
-    # construction + enumeration is output-bounded python over a
-    # collectable slice, skipping both BFS sweeps AND the ~max_len
-    # expansion barriers
+    # task-local path (same gate shape as closure/bfs; the
+    # betweenness/Dijkstra pattern): the whole DAG construction +
+    # enumeration is output-bounded python, so an edge set that fits an
+    # executor task runs the pinned twin inside ONE applyInPandas task
+    # — no driver collect, none of the 2-sweep + max_len expansion
+    # barriers. Past the gate the distributed pipeline below is the
+    # at-scale path (and the bench scaling lane times THAT path
+    # explicitly by emptying the gate's ladder).
     gate = "all_shortest_paths_multi"
     if len(targets) <= DRIVER_CLOSURE_ROOTS and choose_path(gate, 0) != "distributed":
-        # ONE materialization shared by the gate count, the driver
-        # collect, the task kernel and the fallback pipeline (the
-        # closure discipline)
+        # ONE materialization shared by the gate count, the task
+        # kernel and the fallback pipeline (the closure discipline)
         edges, n_edges = pin_counted(edges)
-        path = choose_path(gate, n_edges)
-        if path == "driver":
-            rows = [(r["src"], r["dst"]) for r in edges.collect()]
-            out = _asp_in_driver(rows, int(src), targets, max_iter)
-            return spark.createDataFrame(
-                out or [], "target bigint, path array<bigint>, length int"
-            )
-        # task-local path (the betweenness/BFS/Dijkstra pattern): an
-        # edge set that fits an executor task runs the pinned in-driver
-        # twin inside ONE applyInPandas task — no driver collect, none
-        # of the 2-sweep + max_len expansion barriers. Past the gate
-        # the distributed pipeline below is the at-scale path (and the
-        # bench scaling lane times THAT path explicitly by emptying the
-        # gate's ladder).
-        if path == "task":
+        if choose_path(gate, n_edges) == "task":
             return (
                 edges.withColumn("g", F.lit(1))
                 .groupBy("g")
@@ -891,8 +884,8 @@ def _dfs_enumerate(
     pairs: list[tuple[int, int]], root: int, keep: set[int] | None = None
 ) -> list[tuple[list[int], int]]:
     """Iterative-recursion DFS emitting EVERY simple path of length
-    >= 1 out of ``root`` — the shared twin for the in-driver gate and
-    the executor-task kernel. Keeps duplicate (src, dst) rows: parallel
+    >= 1 out of ``root`` — the twin the executor-task kernel runs.
+    Keeps duplicate (src, dst) rows: parallel
     relationships multiply paths in the distributed join exactly as in
     Cypher, and this twin must agree row-for-row. ``keep`` filters at
     EMIT time (recursion unaffected), so a selective end-node set keeps
@@ -977,39 +970,29 @@ def enumerate_simple_paths(
     this set (a label-constrained terminal node), applied after
     enumeration so intermediate expansion is unaffected.
 
-    Hybrid (README: anchored-probe policy): the
-    ``enumerate_simple_paths`` gate collects a small slice and an
-    iterative DFS enumerates in-driver (or in one executor task) —
-    identical path set, output-proportional either way; the level loop
-    below engages unchanged beyond it."""
+    Hybrid (README: anchored-probe policy): under the
+    ``enumerate_simple_paths`` gate an iterative DFS enumerates in one
+    executor task — identical path set, output-proportional either
+    way; the level loop below engages unchanged beyond it."""
     e = edges.select("src", "dst").localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    path = "distributed"
-    if choose_path("enumerate_simple_paths", 0) != "distributed":
-        path = choose_path("enumerate_simple_paths", e.count())
-    if path == "driver":
-        keep = None
-        if end_nodes is not None:
-            keep = {r["id"] for r in end_nodes.select("id").distinct().collect()}
-        out_rows = _dfs_enumerate(
-            [(r["src"], r["dst"]) for r in e.collect()], root, keep=keep
-        )
-        return spark.createDataFrame(out_rows, "path array<bigint>, length int")
     # Task-local path (the betweenness/ASP pattern): an edge set that
     # fits one executor task enumerates inside ONE applyInPandas task
-    # via the same DFS twin. The end_nodes set (usually a tiny
+    # via the DFS twin. The end_nodes set (usually a tiny
     # label-constrained terminal set) is collected — bounded by
     # KEEP_COLLECT_CAP, since a label set can grow with the corpus —
-    # and passed as the kernel's emit-time keep filter, exactly like
-    # the driver twin: the task's in-memory result list is then
-    # O(kept paths), not O(all simple paths) — a selective end set
-    # over a branchy graph must never force one task to hold every
-    # path (ADVICE r7). An end set ABOVE the cap is, by the same
-    # token, barely selective relative to the path set, so the kernel
-    # enumerates unfiltered and the broadcast post-filter keeps the
-    # old distributed shape. Past the gate the level loop below is the
-    # at-scale path (output-proportional either way).
-    if path == "task":
+    # and passed as the twin's emit-time keep filter: the task's
+    # in-memory result list is then O(kept paths), not O(all simple
+    # paths) — a selective end set over a branchy graph must never
+    # force one task to hold every path (ADVICE r7). An end set ABOVE
+    # the cap is, by the same token, barely selective relative to the
+    # path set, so the kernel enumerates unfiltered and the broadcast
+    # post-filter keeps the old distributed shape. Past the gate the
+    # level loop below is the at-scale path (output-proportional
+    # either way).
+    if (
+        choose_path("enumerate_simple_paths", 0) != "distributed"
+        and choose_path("enumerate_simple_paths", e.count()) == "task"
+    ):
         keep = None
         if end_nodes is not None:
             sample = end_nodes.select("id").distinct().limit(
@@ -1079,8 +1062,8 @@ def enumerate_simple_paths(
 def _dijkstra_in_driver(
     rows: list[tuple[int, int, float]], root: int
 ) -> list[tuple[int, float]]:
-    """Driver fast path for anchored weighted SSSP: binary-heap
-    Dijkstra over a collected edge slice. The root itself appears in
+    """In-memory twin for anchored weighted SSSP (the task kernel runs
+    it): binary-heap Dijkstra over an edge slice. The root itself appears in
     the output only if a cycle leads back to it (matching bfs_depths'
     depth >= 1 convention and the distributed loop below)."""
     import heapq
@@ -1139,8 +1122,8 @@ def weighted_sssp(
     installs (bin/install_neo4j_plugins.sh).
 
     Hybrid on the closure family's gate shape: a small edge slice
-    collects and runs heap Dijkstra in-driver (or in one executor
-    task); beyond the ``weighted_sssp`` gate a level-synchronous
+    runs heap Dijkstra in one executor task; beyond the
+    ``weighted_sssp`` gate a level-synchronous
     Bellman-Ford relaxation runs distributed — one keyed min-merge
     shuffle and one emptiness probe per round, state
     checkpointed, rounds bounded by the hop length of the optimal
@@ -1168,15 +1151,11 @@ def weighted_sssp(
     if choose_path("weighted_sssp", 0) != "distributed":
         edges, n_edges = pin_counted(edges)
         path = choose_path("weighted_sssp", n_edges)
-    if path == "driver":
-        rows = [(r["src"], r["dst"], float(r["w"])) for r in edges.collect()]
-        out = _dijkstra_in_driver(rows, int(root))
-        return spark.createDataFrame(out or [], "node bigint, dist double")
-    # same precondition as the driver path: Bellman-Ford min-merge
-    # CONVERGES on negative weights (it just stops improving), so
-    # without this probe the two gate outcomes would disagree on the
-    # same input — one scalar aggregate, the distributed branch's
-    # analog of the driver branch's collect-time check
+    # Dijkstra's precondition, checked on both paths: Bellman-Ford
+    # min-merge CONVERGES on negative weights (it just stops
+    # improving), and the task twin's own check would only fail the
+    # job at action time — one scalar aggregate raises here instead,
+    # before either path is built
     wmin = edges.agg(F.min("w").alias("m")).collect()[0]["m"]
     if wmin is not None and wmin < 0:
         raise ValueError("weighted_sssp requires non-negative weights")

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from github_miner_spark.etl.merge import merge_append
+from github_miner_spark.etl.merge import novel_rows
 from github_miner_spark.etl.package_json import extract_dependency_edges
 from github_miner_spark.graph.model import (
     GRAPH_ORACLE_CTES,
@@ -147,7 +147,7 @@ def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def idempotent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_graph(spark, sf_dir).edges
     keys = ["src", "dst", "rel_type"]
-    merged = merge_append(e, e, keys)  # replay the same batch
+    merged = e.unionByName(novel_rows(e, e, keys))  # replay the same batch
     return merged.agg(
         F.count("*").alias("total_edges"),
         F.count_distinct(*[F.col(k) for k in keys]).alias("distinct_keys"),

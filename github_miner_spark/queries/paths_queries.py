@@ -381,7 +381,7 @@ def dependency_graph_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     "w = 1 + (dst mod 7)/4 — quarter-valued doubles, so every path "
     "sum is exact in binary and min() is engine-stable without "
     "rounding. Hybrid on the closure family's shared gate: heap "
-    "Dijkstra in-driver under the edge threshold, level-synchronous "
+    "Dijkstra in one executor task under the edge threshold, level-synchronous "
     "Bellman-Ford relaxation (one keyed min-merge per round, rounds "
     "bounded by optimal-path hop length, non-convergence raises) "
     "distributed; the anchored probe runs broadcast-frontier. Oracle "

@@ -282,8 +282,8 @@ def test_scc_final_peel_round_not_forfeited(spark):
 
 
 def test_louvain_driver_path_matches_distributed(spark):
-    """The hybrid gate must be invisible: the in-driver semi-sync sweep
-    (driver rung) and the distributed half-sweeps must emit
+    """The hybrid gate must be invisible: the semi-sync sweep twin in
+    the task kernel and the distributed half-sweeps must emit
     the identical assignment on the real sf0.001 module graph."""
     from github_miner_spark.graph.algorithms import louvain
     from github_miner_spark.graph.store import load_graph
@@ -293,14 +293,12 @@ def test_louvain_driver_path_matches_distributed(spark):
     def run():
         return sorted(map(tuple, louvain(mm, max_sweeps=3, levels=2).collect()))
 
+    # the default ladder: the task-local kernel path
     fast = run()
-    # task rung only: the task-local kernel path
-    with only(louvain="task"):
-        task = run()
     # empty ladder: the distributed half-sweep schedule
     with only(louvain="distributed"):
         slow = run()
-    assert fast == task and len(fast) > 0
+    assert len(fast) > 0
     assert fast == slow
 
 
@@ -345,14 +343,12 @@ def test_louvain_driver_matches_distributed_sf001(spark):
     def run():
         return sorted(map(tuple, louvain(mm, max_sweeps=3, levels=2).collect()))
 
+    # the default ladder: the task-local kernel path
     fast = run()
-    # task rung only: the task-local kernel path
-    with only(louvain="task"):
-        task = run()
     # empty ladder: the distributed half-sweep schedule
     with only(louvain="distributed"):
         slow = run()
-    assert fast == task and len(fast) > 0
+    assert len(fast) > 0
     assert fast == slow
 
 

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from github_miner_spark.gate import LIMITS, choose_path
+from tests.gate_utils import only
 
 M = 1_000_000
 D, T, X = "driver", "task", "distributed"
@@ -27,30 +28,22 @@ D, T, X = "driver", "task", "distributed"
 DECISIONS: dict[str, dict[int, tuple[str, str]]] = {
     # one task rung: the flag leaves the kernel on
     "pagerank": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "connected_components": {
-        2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X),
-    },
+    "connected_components": {5 * M: (T, T), 5 * M + 1: (X, X)},
     # the force flag leaves the whole-core task on
     "strongly_connected_components": {5 * M: (D, T), 5 * M + 1: (X, X)},
     "scc_component": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "louvain": {2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X)},
+    "louvain": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "modularity": {2 * M: (D, X), 2 * M + 1: (X, X)},
     "label_propagation": {2 * M: (D, X), 2 * M + 1: (X, X)},
-    "coreness": {5 * M: (D, T), 5 * M + 1: (X, X)},
+    "coreness": {5 * M: (T, T), 5 * M + 1: (X, X)},
     # ... and the per-root kernels
     "betweenness_centrality": {5 * M: (D, T), 5 * M + 1: (X, X)},
     "betweenness_backward": {2 * M: (T, T), 2 * M + 1: (X, X)},
-    "closure_path_counts": {
-        2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X),
-    },
+    "closure_path_counts": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "bfs_depths": {2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X)},
-    "all_shortest_paths_multi": {
-        2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X),
-    },
-    "enumerate_simple_paths": {
-        2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X),
-    },
-    "weighted_sssp": {2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X)},
+    "all_shortest_paths_multi": {5 * M: (T, T), 5 * M + 1: (X, X)},
+    "enumerate_simple_paths": {5 * M: (T, T), 5 * M + 1: (X, X)},
+    "weighted_sssp": {5 * M: (T, T), 5 * M + 1: (X, X)},
     # ... and ANF's whole-graph kernel
     "anf": {5 * M: (T, T), 5 * M + 1: (X, X)},
     # the flag turns the single-window corpus ranks off
@@ -83,6 +76,36 @@ def test_choose_path_matches_decision_table(monkeypatch, forced):
     for (gate, skip), rows in SKIP_DECISIONS.items():
         for n, want in rows.items():
             assert choose_path(gate, n, skip) == want[forced], (gate, skip, n)
+
+
+# The gates whose ladder keeps BOTH a driver and a task rung, with the
+# measurement that keeps the driver rung (driver vs task, seconds, on
+# the 32-core distributed lane). A gate whose task kernel runs the same
+# twin no slower gets the task rung alone; adding one here needs a
+# measured reason beside it.
+DRIVER_BEATS_TASK = {
+    "strongly_connected_components",  # 0.66 vs 0.93
+    "betweenness_centrality",  # 0.89 vs 0.98
+    "bfs_depths",  # closeness, its per_root_task caller: 0.80 vs 1.12
+}
+
+
+def test_driver_and_task_rungs_only_where_driver_wins():
+    both = {
+        gate
+        for gate, ladder in LIMITS.items()
+        if {D, T} <= {path for path, _ in ladder}
+    }
+    assert both == DRIVER_BEATS_TASK
+
+
+def test_only_rejects_a_path_the_ladder_lacks():
+    with pytest.raises(ValueError, match="no 'driver' rung"):
+        only(louvain="driver")
+    with only(louvain="distributed"):
+        assert LIMITS["louvain"] == ()
+    with only(louvain="task"):
+        assert LIMITS["louvain"] == ((T, 5 * M),)
 
 
 def test_empty_ladder_is_distributed(monkeypatch):

@@ -136,7 +136,10 @@ def test_second_batch_appends_instead_of_rewriting(spark, tmp_path):
 def test_delta_batch_job_budget(spark, tmp_path):
     """A batch merged into an existing store runs one materialization
     per closure level plus one write per table; the job count pins
-    that (22 jobs here; the overwrite-merge it replaced ran 52)."""
+    that (22 jobs here, and once 23 in a full-suite run: AQE submits
+    query stages as their inputs finish; the overwrite-merge it
+    replaced ran 52, and the vertex anti-join on the (id, label) pair,
+    with its three broadcasts, 24)."""
     npm = _npm_table(spark)
     vp, ep = str(tmp_path / "vertices"), str(tmp_path / "edges")
     run_insert_job(spark, _write_lake(tmp_path), npm, vp, ep)
@@ -149,7 +152,34 @@ def test_delta_batch_job_budget(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 30
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 23
+
+
+def test_vertex_merge_builds_one_broadcast(spark, tmp_path, monkeypatch):
+    """The vertex anti-join probes ONE broadcast of the existing vertex
+    table from all three union branches (users, repos, modules): the
+    AQE final plan of the vertex write builds it once and reuses it."""
+    import re
+
+    from github_miner_spark.etl import insert
+
+    npm = _npm_table(spark)
+    vp, ep = str(tmp_path / "vertices"), str(tmp_path / "edges")
+    run_insert_job(spark, _write_lake(tmp_path), npm, vp, ep)
+    real, merged = insert.novel_rows, []
+
+    def spy(*args):
+        merged.append(real(*args))
+        return merged[-1]
+
+    monkeypatch.setattr(insert, "novel_rows", spy)
+    run_insert_job(spark, _write_lake(tmp_path, DELTA_REPOS, "delta"), npm, vp, ep)
+    vertex_merge = merged[0]
+    vertex_merge.collect()
+    final = vertex_merge._jdf.queryExecution().executedPlan().toString()
+    final = final.split("Initial Plan")[0]
+    assert len(re.findall(r"[-:] BroadcastExchange", final)) == 1, final
+    assert len(re.findall(r"ReusedExchange", final)) >= 2, final
 
 
 def test_user_and_module_sharing_a_name_both_survive(spark, tmp_path):

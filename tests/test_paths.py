@@ -106,8 +106,9 @@ def test_all_shortest_paths_multi_src_in_targets(spark):
 
 
 def test_asp_driver_path_matches_distributed(spark, monkeypatch):
-    """The driver fast path and the distributed two-sweep pipeline must
-    produce identical (target, path, length) sets on the real graph."""
+    """The task kernel (which runs the in-memory twin) and the
+    distributed two-sweep pipeline must produce identical (target,
+    path, length) sets on the real graph."""
     import github_miner_spark.graph.paths as P
     from github_miner_spark.graph.store import load_graph
     from pyspark.sql import functions as F
@@ -125,20 +126,19 @@ def test_asp_driver_path_matches_distributed(spark, monkeypatch):
             for r in P.all_shortest_paths_multi(mm, 2, targets).collect()
         }
 
-    driver = run()
-    # task rung only: the task-local kernel path
-    with only(all_shortest_paths_multi="task"):
-        task = run()
+    # the default ladder: the task-local kernel path
+    task = run()
     # empty ladder: the distributed two-sweep pipeline
     with only(all_shortest_paths_multi="distributed"):
         dist = run()
-    assert driver == task and len(driver) > 0
-    assert driver == dist
+    assert len(task) > 0
+    assert task == dist
 
 
 def test_enumerate_simple_paths_driver_matches_distributed(spark):
-    """The hybrid gate must be invisible for path enumeration: driver
-    DFS and the distributed level loop emit the identical path multiset
+    """The hybrid gate must be invisible for path enumeration: the DFS
+    twin in the task kernel and the distributed level loop emit the
+    identical path multiset
     — including duplicate paths from PARALLEL edges, which multiply in
     both paths exactly as Cypher relationship semantics require."""
     import github_miner_spark.graph.paths as P
@@ -153,14 +153,12 @@ def test_enumerate_simple_paths_driver_matches_distributed(spark):
             for r in P.enumerate_simple_paths(edges, 1).collect()
         )
 
+    # the default ladder: the task-local DFS kernel
     fast = run()
-    # task rung only: the task-local DFS kernel
-    with only(enumerate_simple_paths="task"):
-        task = run()
     # empty ladder: the distributed level loop
     with only(enumerate_simple_paths="distributed"):
         slow = run()
-    assert fast == task and len(fast) > 0
+    assert len(fast) > 0
     assert fast == slow
     # the doubled 1->2 edge doubles every path through it
     assert fast.count(((1, 2), 1)) == 2
@@ -170,9 +168,9 @@ def test_distributed_closure_adversarial_depth_and_hubs(spark):
     """VERDICT r4 item 8: the distributed closure/BFS loops on a graph
     shaped to hurt — a depth-250 chain (beyond the reference's 185-depth
     anchor) feeding a 50-way fan into a ~300k-edge single-out DAG with
-    a ~4.9k-in-degree hub — forced past the driver rung. Asserts the loops COMPLETE (bounded state, no
+    a ~4.9k-in-degree hub — forced past the fast rungs. Asserts the loops COMPLETE (bounded state, no
     cycle false-positive on a genuine DAG) and agree exactly with the
-    in-driver DP twin."""
+    DP twin in the task kernel."""
     chain = spark.range(250).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
     fan = spark.range(50).select(F.lit(250).alias("src"), (F.col("id") + 1000).alias("dst"))
     wide = (
@@ -197,19 +195,16 @@ def test_distributed_closure_adversarial_depth_and_hubs(spark):
         .localCheckpoint(eager=True)
     )
 
-    fast = closure_path_counts(edges, roots=[0], max_iter=500)  # driver DP
+    # the default ladder: the task-local DP kernel
+    fast = closure_path_counts(edges, roots=[0], max_iter=500)
     f_rows = sorted(map(tuple, fast.collect()))
-    # task rung only: the task-local DP kernel
-    with only(closure_path_counts="task"):
-        task = closure_path_counts(edges, roots=[0], max_iter=500)
-        t_rows = sorted(map(tuple, task.collect()))
     # empty ladder: the distributed frontier loop
     with only(closure_path_counts="distributed"):
         slow = closure_path_counts(
             edges, roots=[0], max_iter=500, broadcast_frontier=True
         )
         s_rows = sorted(map(tuple, slow.collect()))
-    assert f_rows == t_rows and len(f_rows) > 300
+    assert len(f_rows) > 300
     assert f_rows == s_rows
 
     with only(bfs_depths="distributed"):
@@ -265,9 +260,11 @@ def test_weighted_sssp_prefers_cheap_long_path(spark):
 
 
 def test_weighted_sssp_driver_matches_distributed(spark, monkeypatch):
-    """Heap Dijkstra (gated) and the Bellman-Ford relaxation loop must
-    agree exactly on the real graph AND on a weighted cyclic fixture
-    (cycle cost never improves a settled min, loop still terminates)."""
+    """Heap Dijkstra (the gated task kernel) and the Bellman-Ford
+    relaxation loop must agree exactly on the real graph AND on a
+    weighted cyclic fixture (cycle cost never improves a settled min,
+    loop still terminates), with or without the force flag, which
+    leaves the task rung on."""
     import github_miner_spark.graph.paths as P
     from github_miner_spark.graph.store import load_graph
     from pyspark.sql import functions as F
@@ -280,17 +277,17 @@ def test_weighted_sssp_driver_matches_distributed(spark, monkeypatch):
         spark, [(1, 2, 1.0), (2, 3, 0.5), (3, 1, 0.25), (3, 4, 2.0), (1, 4, 4.0)]
     )
     for edges, root in ((mm, 2), (cyc, 1)):
-        driver = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
-        assert len(driver) > 0
-        monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-        # forced path 1: per-root task kernel (default ladder)
+        # the default ladder: the per-root task kernel
         task = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
-        # forced path 2: the Bellman-Ford relaxation loop
+        assert len(task) > 0
+        monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
+        forced = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
+        # the Bellman-Ford relaxation loop
         with only(weighted_sssp="distributed"):
             dist = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
         monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED")
-        assert driver == task
-        assert driver == dist
+        assert task == forced
+        assert task == dist
     # the cyclic fixture's expected map, by hand: 1->2 = 1, 1->3 = 1.5,
     # 1->4 = 3.5 (via the cycle-free 2-hop), 1->1 = 1.75 (round trip)
     out = {r["node"]: r["dist"] for r in P.weighted_sssp(cyc, 1).collect()}
@@ -305,20 +302,23 @@ def test_weighted_sssp_negative_weight_raises(spark):
         weighted_sssp(e, 1)
 
 
-def test_closure_driver_path_job_budget(spark, diamond):
-    """The driver path costs one job to pin the edges, which also
-    counts them for the gate, and one to collect the pinned slice. A
-    separate count() of the pinned edges ran two more jobs."""
+def test_closure_task_path_job_budget(spark, diamond):
+    """The task path costs one job to pin the edges, which also counts
+    them for the gate, and one to pin the kernel's output, which runs
+    the DP at call time so a cycle raises there; the edges coalesce
+    into the kernel's task without a shuffle job. Reading the result
+    back is one more job."""
     sc = spark.sparkContext
-    group = "closure-driver-job-budget"
-    sc.setJobGroup(group, "closure driver job budget")
+    group = "closure-task-job-budget"
+    jobs = sc.statusTracker().getJobIdsForGroup
+    sc.setJobGroup(group, "closure task job budget")
     try:
-        with only(closure_path_counts="driver"):
+        with only(closure_path_counts="task"):
             out = closure_path_counts(diamond.filter("src > 0"), roots=[1])
+        assert len(jobs(group)) <= 2
+        rows = {(r.root, r.node): r.paths for r in out.collect()}
+        assert len(jobs(group)) <= 3
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
-    assert {(r.root, r.node): r.paths for r in out.collect()} == {
-        (1, 2): 1, (1, 3): 1, (1, 4): 2, (1, 5): 2
-    }
+    assert rows == {(1, 2): 1, (1, 3): 1, (1, 4): 2, (1, 5): 2}

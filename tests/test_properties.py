@@ -155,19 +155,12 @@ def test_closure_path_counts_matches_dp(spark, edges, root):
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
     )
-    # default gate -> driver DP fast path; the task rung alone runs
-    # the same DP in an executor task: BOTH must match the reference
-    got_driver = {
+    # default gate -> the DP twin in one executor task
+    got = {
         r["node"]: r["paths"]
         for r in closure_path_counts(df, roots=[root]).collect()
     }
-    with only(closure_path_counts="task"):
-        got_dist = {
-            r["node"]: r["paths"]
-            for r in closure_path_counts(df, roots=[root]).collect()
-        }
-    assert got_driver == want
-    assert got_dist == want
+    assert got == want
 
 
 @given(
@@ -394,14 +387,11 @@ def test_coreness_both_paths_match_peel_reference(spark, edges):
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
     )
-    driver = {r.id: r.core for r in coreness(df).collect()}
-    # task rung only: the task-local peel kernel
-    with only(coreness="task"):
-        task = {r.id: r.core for r in coreness(df).collect()}
+    # the default ladder: the task-local peel kernel
+    task = {r.id: r.core for r in coreness(df).collect()}
     # empty ladder: the distributed h-index fixpoint
     with only(coreness="distributed"):
         distributed = {r.id: r.core for r in coreness(df).collect()}
-    assert driver == want
     assert task == want
     assert distributed == want
 
