@@ -27,14 +27,15 @@ Mechanism choice, measured and reasoned this round:
 ``pin_counted`` is the eager form, for a site that needs the pinned
 frame's row count (a gate decision, a YIELD column): the count comes
 from an ``Observation`` filled by the pin job itself, so pin-then-count
-costs one Spark job, not two. Same mechanism rule as ``pin``.
+costs one Spark job, not two; ``pin_observed`` adds other aggregates
+(a minimum weight, say) to that job. Same mechanism rule as ``pin``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 RELIABLE = bool(os.environ.get("SPARK_GRAFT_RELIABLE_PIN"))
@@ -55,9 +56,18 @@ def pin(df: DataFrame) -> DataFrame:
 def pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
     """``(pinned, n)``: ``df`` pinned eagerly by ``pin``'s mechanism,
     and its row count, observed by that one checkpoint job."""
+    pinned, seen = pin_observed(df)
+    return pinned, seen["n"]
+
+
+def pin_observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """``pin_counted`` plus more aggregates over the same rows:
+    ``(pinned, {"n": rows, name: value, ...})``, all observed by the
+    one checkpoint job."""
     seen = Observation()
-    pinned = _checkpoint(df.observe(seen, F.count(F.lit(1)).alias("n")), eager=True)
-    return pinned, seen.get["n"]
+    metrics = [F.count(F.lit(1)).alias("n"), *(c.alias(k) for k, c in aggs.items())]
+    pinned = _checkpoint(df.observe(seen, *metrics), eager=True)
+    return pinned, seen.get
 
 
 def _checkpoint(df: DataFrame, eager: bool) -> DataFrame:

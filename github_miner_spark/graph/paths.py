@@ -40,7 +40,7 @@ from pyspark.errors import PythonException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from github_miner_spark.functions.pin import pin_counted
+from github_miner_spark.functions.pin import pin_counted, pin_observed
 from github_miner_spark.gate import choose_path
 
 
@@ -53,6 +53,18 @@ def _as_root_df(edges: DataFrame, roots) -> DataFrame:
         return roots.select(F.col(cols[0]).alias("root")).distinct()
     spark = edges.sparkSession
     return spark.createDataFrame([(int(r),) for r in roots], "root bigint")
+
+
+def _small_root_list(roots: DataFrame) -> DataFrame | list[int]:
+    """A root frame's distinct ids (its first column, as
+    ``_as_root_df`` reads it) as a list when there are at most
+    ``DRIVER_CLOSURE_ROOTS`` of them, else the frame itself: one
+    action, which reads at most one id past the cap."""
+    rcol = roots.columns[0]
+    rows = roots.select(rcol).distinct().limit(DRIVER_CLOSURE_ROOTS + 1).collect()
+    if len(rows) > DRIVER_CLOSURE_ROOTS:
+        return roots
+    return [int(r[rcol]) for r in rows]
 
 
 class _loop_shuffle_partitions:
@@ -280,11 +292,10 @@ def closure_path_counts(
     cheapest = choose_path("closure_path_counts", 0)
     if roots is not None:
         if isinstance(roots, DataFrame):
-            # a root FRAME under the cap collects to a scalar list (one
-            # tiny count + collect) so it can take the task kernel too
-            if cheapest != "distributed" and roots.count() <= DRIVER_CLOSURE_ROOTS:
-                rcol = roots.columns[0]
-                roots = [int(r[rcol]) for r in roots.distinct().collect()]
+            # a root FRAME under the cap collects to a scalar list so it
+            # can take the task kernel too
+            if cheapest != "distributed":
+                roots = _small_root_list(roots)
         else:
             roots = [int(r) for r in roots]  # materialize once (generators)
         if (
@@ -472,9 +483,7 @@ def bfs_depths(
     # (all_shortest_paths_multi) filter identically either way
     if roots is not None and cheapest != "distributed":
         if isinstance(roots, DataFrame):
-            if roots.count() <= DRIVER_CLOSURE_ROOTS:
-                rcol = roots.columns[0]
-                roots = [int(r[rcol]) for r in roots.distinct().collect()]
+            roots = _small_root_list(roots)
         else:
             roots = [int(r) for r in roots]
         if not isinstance(roots, DataFrame) and len(roots) <= DRIVER_CLOSURE_ROOTS:
@@ -1147,16 +1156,20 @@ def weighted_sssp(
     # with its executor) — the Bellman-Ford loop below recomputes the
     # projection from source lineage per round instead, Spark's
     # ordinary fault-tolerant pattern (ADVICE r7).
-    path = "distributed"
-    if choose_path("weighted_sssp", 0) != "distributed":
-        edges, n_edges = pin_counted(edges)
-        path = choose_path("weighted_sssp", n_edges)
+    #
     # Dijkstra's precondition, checked on both paths: Bellman-Ford
     # min-merge CONVERGES on negative weights (it just stops
     # improving), and the task twin's own check would only fail the
-    # job at action time — one scalar aggregate raises here instead,
-    # before either path is built
-    wmin = edges.agg(F.min("w").alias("m")).collect()[0]["m"]
+    # job at action time — the minimum weight raises here instead,
+    # before either path is built. The pin job observes it along with
+    # the count; without a pin it costs one scalar aggregate job.
+    path = "distributed"
+    if choose_path("weighted_sssp", 0) != "distributed":
+        edges, seen = pin_observed(edges, m=F.min("w"))
+        path = choose_path("weighted_sssp", seen["n"])
+        wmin = seen["m"]
+    else:
+        wmin = edges.agg(F.min("w").alias("m")).collect()[0]["m"]
     if wmin is not None and wmin < 0:
         raise ValueError("weighted_sssp requires non-negative weights")
     # per-root task-local path (the betweenness/BFS pattern): a single

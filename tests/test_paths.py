@@ -298,8 +298,50 @@ def test_weighted_sssp_negative_weight_raises(spark):
     from github_miner_spark.graph.paths import weighted_sssp
 
     e = wedges_df(spark, [(1, 2, 1.0), (2, 3, -0.5)])
-    with pytest.raises(ValueError, match="non-negative"):
-        weighted_sssp(e, 1)
+    for path in ("task", "distributed"):
+        with only(weighted_sssp=path), pytest.raises(ValueError, match="non-negative"):
+            weighted_sssp(e, 1)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_weighted_sssp_task_path_job_budget(spark):
+    """The task path costs one job before its result is read: pinning
+    the edges, which also counts them for the gate and observes the
+    minimum weight for the non-negative check."""
+    from github_miner_spark.graph.paths import weighted_sssp
+
+    e = wedges_df(spark, [(1, 2, 1.0), (2, 3, 2.5), (1, 3, 4.0)])
+    with only(weighted_sssp="task"):
+        out, n_jobs = _jobs_in_group(spark, "sssp-task-job-budget", lambda: weighted_sssp(e, 1))
+    assert n_jobs <= 1
+    assert {(r.node, r.dist) for r in out.collect()} == {(2, 1.0), (3, 3.5)}
+
+
+def test_closure_root_frame_job_budget(spark, diamond):
+    """A root frame under the cap costs one action to read its
+    distinct ids (two jobs: the distinct's shuffle, then the read), then
+    the task path's two pins (edges, kernel output). Counting the frame
+    first cost two more."""
+    roots = spark.createDataFrame([(1,), (1,)], "id bigint")
+    with only(closure_path_counts="task"):
+        out, n_jobs = _jobs_in_group(
+            spark, "closure-root-frame-job-budget", lambda: closure_path_counts(diamond, roots=roots)
+        )
+    assert n_jobs <= 4
+    rows = {(r.root, r.node): r.paths for r in out.collect()}
+    assert rows == {(1, 2): 1, (1, 3): 1, (1, 4): 2, (1, 5): 2}
 
 
 def test_closure_task_path_job_budget(spark, diamond):
