@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from github_miner_spark.etl.merge import dedupe_batch, novel_rows, read_existing
@@ -34,6 +34,7 @@ from github_miner_spark.etl.package_json import (
     extract_dependency_edges,
     read_manifest_lake,
 )
+from github_miner_spark.functions.pin import pin, pin_observed
 
 EDGE_KEY = ["src", "dst", "rel_type"]
 VERTEX_SCHEMA = "id string, label string, name string"
@@ -95,14 +96,13 @@ def expand_module_closure(
         resolved = reduce(DataFrame.unionByName, frontiers)
         known = resolved.distinct().select(F.col("name").alias("dst"), F.lit(True).alias("known"))
         tagged = _manifest_edges(batch, "NodeModule").join(known, "dst", "left")
-        seen = Observation()  # filled by the checkpoint job itself: no emptiness probe
-        level = (
-            tagged.withColumn("new", F.col("known").isNull()).drop("known")
-            .observe(seen, F.count_if("new").alias("new"))
-            .localCheckpoint(eager=True)
+        # the pin job counts the new rows itself: no emptiness probe
+        level, seen = pin_observed(
+            tagged.withColumn("new", F.col("known").isNull()).drop("known"),
+            new=F.count_if("new"),
         )
         levels.append(level.drop("new"))
-        if seen.get["new"] == 0:  # also ends on an empty level (no registry rows)
+        if seen["new"] == 0:  # also ends on an empty level (no registry rows)
             break
         frontiers.append(level.filter("new").select(F.col("dst").alias("name")))
     else:
@@ -121,7 +121,7 @@ def run_insert_job(
     vertices and all five edge types, expand the module closure, and
     MERGE into the persistent vertex/edge tables (idempotent): one
     append of novel rows per table. Returns the counts read back."""
-    lake = read_manifest_lake(spark, lake_dir).localCheckpoint(eager=True)
+    lake = pin(read_manifest_lake(spark, lake_dir), eager=True)
 
     users = lake.select(
         F.col("owner").alias("id"),

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.io.store_key import content_key, publish, read_store
 
 STORE_ROOT = os.environ.get("SPARK_GRAFT_BPE_STORE", "/tmp/spark-graft-bpe")
@@ -54,7 +55,7 @@ def corpus_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     toks = tokenize(F.col("text"))
-    return (
+    return pin(
         spread_to_session_width(docs)
         .select("doc_id", "source", toks.alias("toks"))
         .filter(F.size("toks") >= 1)
@@ -64,8 +65,8 @@ def corpus_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(
                 F.lit("<"), F.concat_ws("><", F.col("toks")), F.lit(">")
             ).alias("s"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.functions.text import (
     MINHASH_PRIME,
     token_hash,
@@ -48,15 +49,13 @@ def shingle_index(docs: DataFrame, text_col: str = "text", n: int = 3) -> DataFr
     """Inverted index (doc_id, shingle) over distinct hashed word
     n-grams.
 
-    The token array is materialized (localCheckpoint) before shingling:
+    The token array is materialized (``pin``) before shingling:
     higher-order array expressions are interpreted, and Catalyst's
     projection collapse would otherwise inline ``tokenize`` into every
     ``element_at`` — O(tokens^2) regex evaluations per document. With
     the barrier, tokenize runs once per doc and shingling reads the
     stored array."""
-    toks = docs.select(
-        "doc_id", tokenize(F.col(text_col)).alias("toks")
-    ).localCheckpoint(eager=False)
+    toks = pin(docs.select("doc_id", tokenize(F.col(text_col)).alias("toks")))
     shingles = F.array_distinct(F.transform(word_shingles(F.col("toks"), n), token_hash))
     return toks.select("doc_id", F.explode(shingles).alias("shingle"))
 
@@ -98,7 +97,7 @@ def jaccard_pairs(
     idx = (
         index
         if index is not None
-        else shingle_index(docs, text_col, n).localCheckpoint(eager=False)
+        else pin(shingle_index(docs, text_col, n))
     )
     sizes = idx.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     a = idx.alias("a")
@@ -185,10 +184,10 @@ def minhash_lsh_pairs(
     idx = (
         index
         if index is not None
-        else shingle_index(docs, text_col).localCheckpoint(eager=False)
+        else pin(shingle_index(docs, text_col))
     )
     sig = minhash_signatures(docs, idx, k)
-    buckets = minhash_band_buckets(sig, k, bands).localCheckpoint(eager=False)
+    buckets = pin(minhash_band_buckets(sig, k, bands))
     newer = (
         buckets
         if delta_min_doc_id is None
@@ -260,7 +259,7 @@ def simhash_near_pairs(
     bits; hamming <= 7 guarantees >= 1 identical band... pigeonhole at
     max_hamming <= 3 bands' worth) verified by bit_count(xor) <=
     max_hamming. Returns (doc_a, doc_b, hamming)."""
-    sh = simhash(docs, text_col).localCheckpoint(eager=False)
+    sh = pin(simhash(docs, text_col))
     band_structs = [
         F.struct(
             F.lit(k).alias("band"),

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.io.store_key import (
     GRAPH_BASE_TABLES,
     PARQUET_DIR_ENTRIES,
@@ -59,7 +60,7 @@ def build_anchor_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from github_miner_spark.graph.store import load_graph
 
     g = load_graph(spark, sf_dir)
-    e = g.module_dep_edges().select("src", "dst").localCheckpoint(eager=True)
+    e = pin(g.module_dep_edges().select("src", "dst"), eager=True)
     anchors = sorted(
         r["src"]
         for r in e.filter(F.col("src") < ANF_ANCHOR_MAX)
@@ -67,15 +68,15 @@ def build_anchor_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .collect()
     )
-    depths = (
+    depths = pin(
         bfs_depths(
             e,
             roots=anchors,
             broadcast_frontier=True,
             per_root_task=True,
         )
-        .filter(F.col("depth") <= ANF_HOPS)
-        .localCheckpoint(eager=True)
+        .filter(F.col("depth") <= ANF_HOPS),
+        eager=True,
     )
     exact = None
     for h in range(1, ANF_HOPS + 1):

@@ -1,9 +1,11 @@
-"""Lineage-cutting pin for CORPUS-SCALE frames consumed more than
-once (VERDICT r12 item 4 — the durability classification of the
-engine's localCheckpoint sites; plans/r13/pin_audit.md carries the
-per-site sweep).
+"""Lineage-cutting pin for frames consumed more than once. Every
+lineage cut in the package goes through this module, so the mechanism
+below is chosen in one place;
+``tests/test_pin.py::test_no_pin_mechanism_outside_pin_module`` rejects
+a ``localCheckpoint``, ``checkpoint``, ``cache`` or ``persist`` call
+anywhere else.
 
-Mechanism choice, measured and reasoned this round:
+Mechanism choice:
 
 - ``localCheckpoint(eager=False)`` (the local default): blocks are
   executor-local and non-replicated with lineage truncated, so on a
@@ -25,15 +27,25 @@ Mechanism choice, measured and reasoned this round:
   cross-run result-caching class) and nothing ever unpersists it.
 
 ``pin_counted`` is the eager form, for a site that needs the pinned
-frame's row count (a gate decision, a YIELD column): the count comes
-from an ``Observation`` filled by the pin job itself, so pin-then-count
-costs one Spark job, not two; ``pin_observed`` adds other aggregates
-(a minimum weight, say) to that job. Same mechanism rule as ``pin``.
+frame's row count (a gate decision, an emptiness test, a YIELD
+column): the count comes from an ``Observation`` filled by the pin job
+itself, so pin-then-count costs one Spark job, not two; ``pin_observed``
+adds other aggregates (a minimum weight, say) to that job. Same
+mechanism rule as ``pin``.
+
+An eager pin's job, its stages and the pinned RDD are named
+``<mechanism> at <module>.<function>`` after the pin's caller (Spark's
+``callSite.short`` property, in Spark's own "<method> at <location>"
+form): ``localCheckpoint at graph.algorithms.connected_components``,
+say, where Spark would otherwise report a JVM reflection frame. A lazy
+pin runs inside the first later action that reads it, so its work
+carries that action's name.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -44,13 +56,14 @@ CHECKPOINT_DIR = os.environ.get(
 )
 
 
-def pin(df: DataFrame) -> DataFrame:
-    """Cut lineage and materialize-on-first-use a frame that multiple
-    consumers read. Local default: localCheckpoint (non-replicated —
+def pin(df: DataFrame, *, eager: bool = False) -> DataFrame:
+    """Cut lineage on a frame that multiple consumers read. Lazy by
+    default: it materializes on first use. ``eager=True`` runs the
+    checkpoint job now. Local default: localCheckpoint (non-replicated —
     fine in local mode, a durability trade at cluster scale).
     SPARK_GRAFT_RELIABLE_PIN=1: a reliable checkpoint against the
     session checkpoint dir (replicated storage in production)."""
-    return _checkpoint(df, eager=False)
+    return _checkpoint(df, eager)
 
 
 def pin_counted(df: DataFrame) -> tuple[DataFrame, int]:
@@ -71,9 +84,23 @@ def pin_observed(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
 
 
 def _checkpoint(df: DataFrame, eager: bool) -> DataFrame:
-    if RELIABLE:
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(CHECKPOINT_DIR)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+    sc = df.sparkSession.sparkContext
+    if RELIABLE and sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(CHECKPOINT_DIR)
+    cut = df.checkpoint if RELIABLE else df.localCheckpoint
+    if not eager:
+        return cut(eager=False)
+    caller = sys._getframe(1)
+    while caller.f_globals["__name__"] == __name__:
+        caller = caller.f_back
+    module = caller.f_globals["__name__"].removeprefix("github_miner_spark.")
+    previous = sc.getLocalProperty("callSite.short")
+    sc.setLocalProperty(
+        "callSite.short", f"{cut.__name__} at {module}.{caller.f_code.co_name}"
+    )
+    try:
+        return cut(eager=True)
+    finally:
+        sc.setLocalProperty("callSite.short", previous)
+
+

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from github_miner_spark.functions.dedup import jaccard_pairs
+from github_miner_spark.functions.pin import pin_counted, pin_observed
 from github_miner_spark.functions.text import language_id, quality_score, token_count
 from github_miner_spark.graph.algorithms import connected_components
 from github_miner_spark.io.sinks import write_training_shards
@@ -37,32 +38,33 @@ def curate_and_export(
     survivor population after that stage, so the report is the funnel
     the curation dashboards plot.
     """
-    scored = docs.select(
-        "doc_id",
-        "text",
-        language_id(F.col("text")).alias("lang_pred"),
-        quality_score(F.col("text")).alias("quality"),
-        token_count(F.col("text")).alias("nt"),
-        F.md5("text").alias("h"),
-    ).localCheckpoint(eager=False)
+    is_lang = F.col("lang_pred") == lang
+    is_quality = F.col("quality") >= min_quality
+    scored, seen = pin_observed(
+        docs.select(
+            "doc_id",
+            "text",
+            language_id(F.col("text")).alias("lang_pred"),
+            quality_score(F.col("text")).alias("quality"),
+            token_count(F.col("text")).alias("nt"),
+            F.md5("text").alias("h"),
+        ),
+        lang=F.count_if(is_lang),
+        quality=F.count_if(is_lang & is_quality),
+    )
+    n_total, n_lang, n_quality = seen["n"], seen["lang"], seen["quality"]
+    t_ok, n_tokens = pin_counted(
+        scored.filter(is_lang & is_quality & F.col("nt").between(*token_band))
+    )
 
-    n_total = scored.count()
-    lang_ok = scored.filter(F.col("lang_pred") == lang)
-    n_lang = lang_ok.count()
-    q_ok = lang_ok.filter(F.col("quality") >= min_quality)
-    n_quality = q_ok.count()
-    t_ok = q_ok.filter(F.col("nt").between(*token_band)).localCheckpoint(eager=False)
-    n_tokens = t_ok.count()
 
     # exact dedup: first-writer-wins within the surviving population
     keep = t_ok.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
-    exact_kept = (
+    exact_kept, n_exact_kept = pin_counted(
         t_ok.join(keep, "h")
         .filter(F.col("doc_id") == F.col("keep_id"))
         .select("doc_id", "text")
-        .localCheckpoint(eager=False)
     )
-    n_exact_kept = exact_kept.count()
 
     # near-dup resolution: Jaccard pairs over the survivors only, star-
     # contraction components, keep the min doc_id of every cluster

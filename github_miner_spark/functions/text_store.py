@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.io.store_key import (
     PARQUET_DIR_ENTRIES,
     content_key,
@@ -126,7 +127,7 @@ def materialize_source_overlap(spark: SparkSession, sf_dir: str) -> str:
     def write(stage: str) -> None:
         docs = load_table(spark, "documents", sf_dir).select("doc_id", "source")
         idx = read_store(spark, os.path.join(base, "shingles.parquet"))
-        ss = (
+        ss = pin(
             idx.join(docs, "doc_id")
             .select("source", "shingle")
             .distinct()
@@ -134,8 +135,8 @@ def materialize_source_overlap(spark: SparkSession, sf_dir: str) -> str:
                 "source",
                 "shingle",
                 token_hash60(F.col("shingle").cast("string")).alias("kh"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         ss.sortWithinPartitions("shingle").write.mode("overwrite").parquet(
             os.path.join(stage, "source_shingles.parquet")

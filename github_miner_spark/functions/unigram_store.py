@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin, pin_observed
 from github_miner_spark.io.store_key import content_key, publish, read_store
 
 STORE_ROOT = os.environ.get(
@@ -221,18 +222,19 @@ def build_unigram_model(
     vocab = (piece, cnt) after EM_ROUNDS M-steps, word_segs = the
     final-vocabulary Viterbi segmentation of every dictionary word
     (word, f, seg, n_pieces)."""
-    words = word_freqs(spark, sf_dir).localCheckpoint(eager=True)
-    cands = candidate_segmentations(words).localCheckpoint(eager=True)
+    words = pin(word_freqs(spark, sf_dir), eager=True)
+    cands = pin(candidate_segmentations(words), eager=True)
     chars = words.select(
         F.explode(
             F.expr("transform(sequence(1, length(word)),"
                    " i -> substring(word, i, 1))")
         ).alias("piece")
     ).distinct()
-    counts = _seed_counts(words).localCheckpoint(eager=True)
+    # every counts pin also observes its total: the E-step's
+    # normalizer costs no job of its own
+    counts, seen = pin_observed(_seed_counts(words), total=F.sum("cnt"))
     for _ in range(EM_ROUNDS):
-        total = counts.agg(F.sum("cnt")).collect()[0][0]
-        best = best_segmentations(cands, counts, int(total))
+        best = best_segmentations(cands, counts, int(seen["total"]))
         usage = (
             best.select("word", F.explode("pieces").alias("piece"))
             .join(words, "word")
@@ -242,17 +244,16 @@ def build_unigram_model(
         # add-one floor on every alphabet character: the vocabulary
         # must always cover single chars or the next E-step could
         # strand a word with no feasible segmentation
-        counts = (
+        counts, seen = pin_observed(
             usage.unionByName(
                 chars.select("piece", F.lit(1).cast("bigint").alias("cnt"))
             )
             .groupBy("piece")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("cnt").cast("bigint").alias("cnt")),
+            total=F.sum("cnt"),
         )
-    total = counts.agg(F.sum("cnt")).collect()[0][0]
     segs = (
-        best_segmentations(cands, counts, int(total))
+        best_segmentations(cands, counts, int(seen["total"]))
         .join(words, "word")
         .select("word", "f", "seg", "n_pieces")
     )

@@ -8,7 +8,7 @@ GraphFrames shapes, implemented directly so no external package is
 needed and every step stays in Catalyst-planned joins/aggregations.
 
 Scale notes:
-- All loops localCheckpoint per iteration to truncate lineage.
+- All loops pin (functions/pin.py) per iteration to truncate lineage.
 - PageRank: contributions are one shuffle per iteration
   (join on src + groupBy dst); out-degrees computed once and reused;
   hub skew handled by AQE skew join.
@@ -27,7 +27,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from github_miner_spark.functions.pin import pin_counted
+from github_miner_spark.functions.pin import pin, pin_counted, pin_observed
 from github_miner_spark.gate import LIMITS, choose_path
 
 # Cap on the per-root task kernels' replication volume (|roots| x E
@@ -191,7 +191,7 @@ def pagerank(
     # itself) and BEFORE the narrowed loop scope: left lazy, the
     # corpus-sized vertex distinct would first execute inside
     # _loop_shuffle_partitions at the adaptive loop width (ADVICE r6).
-    verts = verts.localCheckpoint(eager=True)
+    verts = pin(verts, eager=True)
     # fixed-cadence loop with uniform vertex-sized state: AQE's
     # per-stage re-plan is pure overhead here (see _loop_shuffle_partitions)
     with _loop_shuffle_partitions(
@@ -223,7 +223,7 @@ def pagerank(
                 ),
             )
             if it % PAGERANK_BARRIER_EVERY == 0 or it == iterations:
-                ranks = ranks.localCheckpoint(eager=True)
+                ranks = pin(ranks, eager=True)
     return ranks
 
 
@@ -291,16 +291,15 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     # materialize the input selection ONCE: verts and pairs both derive
     # from it, and callers routinely pass expensive derived plans (e.g.
     # dedup_clusters feeds the whole Jaccard pair pipeline in) — without
-    # this checkpoint the vertex side re-executes that plan
-    base = edges.select("src", "dst").localCheckpoint(eager=True)
+    # this checkpoint the vertex side re-executes that plan. The lazy
+    # pin lands inside the pairs pin job, which also counts the pairs.
+    base = pin(edges.select("src", "dst"))
     verts = _vertex_ids(base)
-    pairs = (
+    pairs, n_pairs = pin_counted(
         base.filter(F.col("src") != F.col("dst"))
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_pairs = pairs.count()
     # Whole-graph task shortcut (README: anchored-probe hybrid
     # execution; the SCC whole-core pattern): a pair set that fits one
     # executor task is labeled by path-compressed union-find inside ONE
@@ -325,7 +324,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         enabled=True,
         width=_adaptive_loop_width(base.sparkSession, n_pairs),
     ):
-        converged = pairs.isEmpty()
+        converged = n_pairs == 0
         for _ in range(max_iter):
             if converged:
                 break
@@ -339,12 +338,12 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
                 .agg(F.min("b").alias("mb"))
                 .select("a", F.least(F.col("mb"), F.col("a")).alias("m"))
             )
-            large = (
+            large = pin(
                 nb.join(mins, "a")
                 .filter(F.col("b") > F.col("a"))
                 .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .distinct()
-                .localCheckpoint(eager=True)
+                .distinct(),
+                eager=True,
             )
             # small-star: orient each edge big->small; every small
             # neighbor (and the center) links to the center's minimum
@@ -352,13 +351,13 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
                 F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
             ).filter(F.col("a") != F.col("b"))
             smins = d.groupBy("a").agg(F.min("b").alias("m"))
-            small = (
+            small = pin(
                 d.join(smins, "a")
                 .select(F.col("b").alias("a"), F.col("m").alias("b"))
                 .unionByName(smins.select(F.col("a"), F.col("m").alias("b")))
                 .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .localCheckpoint(eager=True)
+                .distinct(),
+                eager=True,
             )
             # fixpoint probe (ONE job, VERDICT r7 item 2 — the old
             # count + exceptAll pair was two jobs, the exceptAll a
@@ -561,10 +560,8 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
             list(comp.items()), "id bigint, component bigint"
         )
 
-    remaining_edges = (
-        dedup.filter(F.col("src") != F.col("dst")).localCheckpoint(eager=True)
-    )
-    all_verts = _vertex_ids(dedup).localCheckpoint(eager=True)
+    remaining_edges, core_edge_count = pin_counted(dedup.filter(F.col("src") != F.col("dst")))
+    all_verts = pin(_vertex_ids(dedup), eager=True)
     assigned_parts: list[DataFrame] = []
 
     def _peel_once(e: DataFrame) -> DataFrame:
@@ -585,11 +582,14 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
             core.withColumnRenamed("id", "dst"), ["dst"], "left_semi"
         )
 
-    def _trim(edges_in: DataFrame, max_rounds: int) -> tuple[DataFrame, DataFrame]:
+    def _trim(
+        edges_in: DataFrame, n_in: int, max_rounds: int
+    ) -> tuple[DataFrame, int, DataFrame, int]:
         """Peel the acyclic fringe to a fixpoint; returns (core_verts,
-        core_edges), both checkpointed. One edge checkpoint + one cheap
-        count per round: the degree-flags aggregation stays LAZY inside
-        that single job, and convergence is detected on the edge count
+        their count, core_edges, their count), both frames checkpointed.
+        One counted edge checkpoint per round: the degree-flags
+        aggregation stays LAZY inside that single job, and convergence
+        is detected on the edge count
         (edges stable <=> core stable, core being a pure function of the
         edge set). One peel per checkpoint is deliberate — folding
         several lazy peels into one job was measured 3-8x SLOWER here
@@ -598,13 +598,12 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
         per-round cost is shuffle width, handled by the adaptive loop
         width). Peeled vertices are not tracked per round — callers
         diff against their vertex universe once at the end."""
-        e = edges_in
-        prev_e = e.count()
+        e, n_e = edges_in, n_in
         for _ in range(max_rounds):
+            prev_e = n_e
             e, n_e = pin_counted(_peel_once(e))
             if n_e == prev_e:
                 break
-            prev_e = n_e
         final_flags = (
             e.select(F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i"))
             .unionByName(
@@ -613,12 +612,10 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
             .groupBy("id")
             .agg(F.max("o").alias("has_out"), F.max("i").alias("has_in"))
         )
-        core = (
-            final_flags.filter((F.col("has_out") == 1) & (F.col("has_in") == 1))
-            .select("id")
-            .localCheckpoint(eager=True)
+        core, n_core = pin_counted(
+            final_flags.filter((F.col("has_out") == 1) & (F.col("has_in") == 1)).select("id")
         )
-        return core, e
+        return core, n_core, e, n_e
 
     # phase 0: trim the acyclic fringe. On DAG-heavy inputs (dependency
     # graphs are mostly acyclic) this removes almost everything in
@@ -630,15 +627,16 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
     # split labels the untrimmed graph task-locally either way. Past
     # the gate (any real corpus) the fixpoint trim engages unchanged.
     if choose_path("scc_component", n_edges) == "distributed":
-        remaining_verts, remaining_edges = _trim(remaining_edges, max_iter)
+        remaining_verts, _, remaining_edges, core_edge_count = _trim(
+            remaining_edges, core_edge_count, max_iter
+        )
     else:
-        remaining_verts = _vertex_ids(remaining_edges).localCheckpoint(eager=True)
+        remaining_verts = pin(_vertex_ids(remaining_edges), eager=True)
     singletons = all_verts.join(remaining_verts, "id", "left_anti")
     assigned_parts.append(
-        singletons.select("id", F.col("id").alias("component")).localCheckpoint(eager=True)
+        pin(singletons.select("id", F.col("id").alias("component")), eager=True)
     )
 
-    core_edge_count = remaining_edges.count()
     path = choose_path(gate, core_edge_count)
     if path == "driver":
         if core_edge_count > 0:
@@ -704,38 +702,37 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
     # ``connected_components`` gate: a caller pinning the distributed
     # split machinery (the scaling lane) empties both gates.
     wcc = connected_components(remaining_edges, max_iter=max_iter)
-    edges_w = remaining_edges.join(
-        wcc.select(F.col("id").alias("src"), F.col("component").alias("wcc")),
-        "src",
-    ).localCheckpoint(eager=True)
+    edges_w = pin(
+        remaining_edges.join(
+            wcc.select(F.col("id").alias("src"), F.col("component").alias("wcc")), "src"
+        ),
+        eager=True,
+    )
     # the per-row form of choose_path("scc_component", n_e) == "task"
     component_rows = dict(LIMITS["scc_component"]).get("task", -1)
-    big_ids = (
+    big_ids, n_big = pin_counted(
         edges_w.groupBy("wcc")
         .agg(F.count("*").alias("n_e"))
         .filter(F.col("n_e") > component_rows)
         .select("wcc")
-        .localCheckpoint(eager=True)
     )
     small = edges_w.join(big_ids, ["wcc"], "left_anti")
     scc_small = small.groupBy("wcc").applyInPandas(
         _tarjan_component_group, "id bigint, component bigint"
     )
     assigned_parts.append(scc_small)
-    if big_ids.isEmpty():
+    if n_big == 0:
         out = assigned_parts[0]
         for part in assigned_parts[1:]:
             out = out.unionByName(part)
         return out
-    remaining_edges = (
-        edges_w.join(big_ids, ["wcc"], "left_semi")
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
+    remaining_edges = pin(
+        edges_w.join(big_ids, ["wcc"], "left_semi").select("src", "dst"), eager=True
     )
-    remaining_verts = _vertex_ids(remaining_edges).localCheckpoint(eager=True)
+    remaining_verts, n_verts = pin_counted(_vertex_ids(remaining_edges))
 
     for _round in range(max_iter):
-        if remaining_verts.isEmpty():
+        if n_verts == 0:
             break
         # 1. forward min-color propagation to fixpoint, with POINTER
         # JUMPING: besides pulling min color over in-edges, each round
@@ -767,19 +764,18 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
                 F.coalesce(F.col("cmin"), F.col("color")),
                 F.coalesce(F.col("jcolor"), F.col("color")),
             )
-            new_colors = (
+            new_colors, seen = pin_observed(
                 colors.join(prop, colors.id == prop.nid, "left_outer")
                 .join(jump, colors.color == F.col("jid"), "left_outer")
                 .select(
                     "id",
                     newc.alias("color"),
                     (newc < F.col("color")).alias("changed"),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                changed=F.count_if("changed"),
             )
-            stable = new_colors.filter(F.col("changed")).isEmpty()
             colors = new_colors.select("id", "color")
-            if stable:
+            if seen["changed"] == 0:
                 break
         else:
             raise RuntimeError(
@@ -795,17 +791,16 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
             .withColumnRenamed("color", "src_color")
         )
         while True:
-            preds = (
+            preds, n_preds = pin_counted(
                 colored_edges.join(frontier, colored_edges.dst == frontier.id)
                 .filter(F.col("src_color") == F.col("color"))
                 .select(F.col("src").alias("id"), "color")
                 .distinct()
                 .join(scc, ["id"], "left_anti")
-                .localCheckpoint(eager=True)
             )
-            if preds.isEmpty():
+            if n_preds == 0:
                 break
-            scc = scc.unionByName(preds).localCheckpoint(eager=True)
+            scc = pin(scc.unionByName(preds), eager=True)
             frontier = preds
         assigned_parts.append(scc.select("id", F.col("color").alias("component")))
         # 3. drop assigned vertices, then RE-TRIM the fringe their
@@ -816,21 +811,19 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
         # the outer round count by the SCC-condensation depth rather
         # than the number of color classes. The shrunken core then
         # re-checks the driver-Tarjan rung.
-        prev_remaining = remaining_verts.join(scc, ["id"], "left_anti").localCheckpoint(
-            eager=True
-        )
+        prev_remaining = pin(remaining_verts.join(scc, ["id"], "left_anti"), eager=True)
         scc_ids = scc.select("id")
-        remaining_edges = (
+        remaining_edges, core_edge_count = pin_counted(
             remaining_edges.join(scc_ids.withColumnRenamed("id", "src"), ["src"], "left_anti")
             .join(scc_ids.withColumnRenamed("id", "dst"), ["dst"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        remaining_verts, remaining_edges = _trim(remaining_edges, max_iter)
+        remaining_verts, n_verts, remaining_edges, core_edge_count = _trim(
+            remaining_edges, core_edge_count, max_iter
+        )
         peeled = prev_remaining.join(remaining_verts, "id", "left_anti")
         assigned_parts.append(
-            peeled.select("id", F.col("id").alias("component")).localCheckpoint(eager=True)
+            pin(peeled.select("id", F.col("id").alias("component")), eager=True)
         )
-        core_edge_count = remaining_edges.count()
         if choose_path(gate, core_edge_count) == "driver":
             if core_edge_count > 0:
                 comp = _tarjan_components(
@@ -843,10 +836,10 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
                         list(comp.items()), "id bigint, component bigint"
                     )
                 )
-                remaining_verts = remaining_verts.limit(0).localCheckpoint(eager=True)
+                n_verts = 0
             break
 
-    if not remaining_verts.isEmpty():
+    if n_verts:
         raise RuntimeError(
             f"SCC decomposition still has unassigned vertices after {max_iter} "
             "peel rounds — refusing to return a partial labeling; raise max_iter"
@@ -864,13 +857,13 @@ def _symmetrize_weighted(edges: DataFrame) -> DataFrame:
     """Distinct directed pairs in both directions, weight 1.0 each,
     self-loops dropped: the undirected-graph representation used by
     louvain/modularity. (src, dst, w)."""
-    return (
+    return pin(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .withColumn("w", F.lit(1.0))
-        .localCheckpoint(eager=True)
+        .withColumn("w", F.lit(1.0)),
+        eager=True,
     )
 
 
@@ -929,10 +922,13 @@ def _louvain_phase1(sym: DataFrame, m2: float, max_sweeps: int) -> DataFrame:
     m2_sql = f"CAST({m2!r} AS DOUBLE)"
     # state = (id, community, k); k includes self-row weight (level-2
     # super nodes carry intra-community mass as self-rows)
-    state = spark.sql(
-        f"SELECT src AS id, src AS community, sum(w) AS k "
-        f"FROM {tag}_sym GROUP BY src"
-    ).localCheckpoint(eager=True)
+    state = pin(
+        spark.sql(
+            f"SELECT src AS id, src AS community, sum(w) AS k "
+            f"FROM {tag}_sym GROUP BY src"
+        ),
+        eager=True,
+    )
     half_sweep_sql = f"""
     WITH sum_tot AS (
       SELECT community, sum(k) AS tot FROM {tag}_state GROUP BY community
@@ -997,9 +993,7 @@ def _louvain_phase1(sym: DataFrame, m2: float, max_sweeps: int) -> DataFrame:
         for _ in range(max_sweeps):
             for parity in (0, 1):
                 state.createOrReplaceTempView(f"{tag}_state")
-                state = spark.sql(
-                    half_sweep_sql.format(parity=parity)
-                ).localCheckpoint(eager=True)
+                state = pin(spark.sql(half_sweep_sql.format(parity=parity)), eager=True)
     finally:
         spark.catalog.dropTempView(f"{tag}_sym")
         spark.catalog.dropTempView(f"{tag}_state")
@@ -1145,17 +1139,17 @@ def louvain(
     # _louvain_group_factory), pinned by tests on the bench slice and
     # randomized graphs.
     if choose_path("louvain", n_sym) == "task":
-        return (
+        # consumers reference the assignment several times
+        # (modularity joins it twice, size histograms once);
+        # without this pin each reference re-runs the kernel task
+        return pin(
             sym.withColumn("g", F.lit(1))
             .groupBy("g")
             .applyInPandas(
                 _louvain_group_factory(float(m2), max_sweeps, levels),
                 schema="id bigint, community bigint",
-            )
-            # consumers reference the assignment several times
-            # (modularity joins it twice, size histograms once);
-            # without this pin each reference re-runs the kernel task
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
 
     with _loop_shuffle_partitions(
@@ -1199,25 +1193,25 @@ def _louvain_distributed(
         # keep the intra-community mass so super-level degrees are right)
         cmap_src = assignment.select(F.col("id").alias("src"), F.col("community").alias("csrc"))
         cmap_dst = assignment.select(F.col("id").alias("dst"), F.col("community").alias("cdst"))
-        super_sym = (
+        super_sym, seen = pin_observed(
             sym.join(cmap_src, "src")
             .join(cmap_dst, "dst")
             .groupBy(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
-            .agg(F.sum("w").alias("w"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("w").alias("w")),
+            links=F.count_if(F.col("src") != F.col("dst")),
         )
-        if super_sym.filter(F.col("src") != F.col("dst")).isEmpty():
+        if seen["links"] == 0:
             break
         super_assignment = _louvain_phase1(super_sym, float(m2), max_sweeps)
-        assignment = (
+        assignment = pin(
             assignment.join(
                 super_assignment.select(
                     F.col("id").alias("community"), F.col("community").alias("super_c")
                 ),
                 "community",
             )
-            .select("id", F.col("super_c").alias("community"))
-            .localCheckpoint(eager=True)
+            .select("id", F.col("super_c").alias("community")),
+            eager=True,
         )
         sym = super_sym
     # canonicalize community ids to the min member id
@@ -1336,15 +1330,14 @@ def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
     ``label_propagation`` gate the sweep runs in-driver (the hybrid policy shared
     by SCC/closure/Louvain); the distributed loop engages unchanged
     beyond it."""
-    sym = (
+    sym, n_sym = pin_counted(
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     verts = _vertex_ids(edges)
-    if choose_path("label_propagation", sym.count()) == "driver":
+    if choose_path("label_propagation", n_sym) == "driver":
         vs = [r["id"] for r in verts.collect()]
         labels_map = _label_propagation_driver(
             vs, [(r["src"], r["dst"]) for r in sym.collect()], iterations
@@ -1360,7 +1353,7 @@ def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
     with _loop_shuffle_partitions(
         edges.sparkSession,
         enabled=True,
-        width=_adaptive_loop_width(edges.sparkSession, sym.count()),
+        width=_adaptive_loop_width(edges.sparkSession, n_sym),
     ):
         labels = verts.select("id", F.col("id").alias("community"))
         for _ in range(iterations):
@@ -1375,10 +1368,10 @@ def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
                 .agg(F.min("ord").alias("b"))
                 .select(F.col("nid"), F.col("b.community").alias("new_community"))
             )
-            labels = (
+            labels = pin(
                 labels.join(best, labels.id == best.nid, "left_outer")
-                .select("id", F.coalesce(F.col("new_community"), F.col("community")).alias("community"))
-                .localCheckpoint(eager=True)
+                .select("id", F.coalesce(F.col("new_community"), F.col("community")).alias("community")),
+                eager=True,
             )
     return labels
 
@@ -1469,14 +1462,12 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
         _loop_shuffle_partitions,
     )
 
-    und = (
+    und, n_edges = pin_counted(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_edges = und.count()
     if n_edges == 0:
         return edges.sparkSession.createDataFrame([], "id bigint, core bigint")
     # Task-local path (the SCC/betweenness/louvain/pagerank pattern):
@@ -1498,18 +1489,20 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
         width=_adaptive_loop_width(edges.sparkSession, n_edges),
         aqe_off=True,
     ):
-        adj = und.select(F.col("u").alias("id"), F.col("v").alias("nb")).unionByName(
-            und.select(F.col("v").alias("id"), F.col("u").alias("nb"))
-        ).localCheckpoint(eager=True)
-        cur = adj.groupBy("id").agg(F.count("*").alias("core")).localCheckpoint(eager=True)
+        adj = pin(
+            und.select(F.col("u").alias("id"), F.col("v").alias("nb")).unionByName(
+                und.select(F.col("v").alias("id"), F.col("u").alias("nb"))
+            ),
+            eager=True,
+        )
+        cur = pin(adj.groupBy("id").agg(F.count("*").alias("core")), eager=True)
         w = Window.partitionBy("id").orderBy(F.desc("cn"))
         for _ in range(max_iter):
             # the previous-value join rides INSIDE the checkpoint job
-            # (one job per round, not two) and the stability probe is a
-            # filter scan over the checkpointed result — the h-index
-            # sequence is monotone non-increasing, so changed <=>
-            # core < prev
-            nxt = (
+            # (one job per round, not two) and so does the stability
+            # count — the h-index sequence is monotone non-increasing,
+            # so changed <=> core < prev
+            nxt, seen = pin_observed(
                 adj.join(
                     cur.select(F.col("id").alias("nb"), F.col("core").alias("cn")), "nb"
                 )
@@ -1521,12 +1514,11 @@ def coreness(edges: DataFrame, max_iter: int = 100) -> DataFrame:
                 .join(cur.withColumnRenamed("core", "prev"), "id")
                 .select(
                     "id", "core", (F.col("core") != F.col("prev")).alias("changed")
-                )
-                .localCheckpoint(eager=True)
+                ),
+                changed=F.count_if("changed"),
             )
-            stable = nxt.filter(F.col("changed")).isEmpty()
             cur = nxt.select("id", "core")
-            if stable:
+            if seen["changed"] == 0:
                 return cur
     raise RuntimeError(
         f"coreness did not reach the h-index fixpoint within {max_iter} rounds; "
@@ -1767,11 +1759,11 @@ def betweenness_centrality(
         # materialized frame once.)
         from pyspark.sql.window import Window as _W
 
-        frontier = (
+        frontier = pin(
             root_df.select(
                 "root", F.col("root").alias("node"), F.lit(1.0).alias("sigma")
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         win_levels: list[DataFrame] = []  # exact (root, node, depth, sigma)
         visited_frames = [frontier.select("root", "node")]
@@ -1796,26 +1788,20 @@ def betweenness_centrality(
                     .agg(F.sum("sigma").alias("sigma"))
                 )
                 lazy.append(cur.withColumn("depth", F.lit(depth + j)))
-            closed = (
+            # the window's ONE materializing barrier: the pin job reads
+            # back row count, deepest-slice count (the next frontier's
+            # emptiness probe) and the max depth reached — no separate
+            # isEmpty/max jobs
+            closed, stats = pin_observed(
                 reduce(lambda a, b: a.unionByName(b), lazy)
                 .withColumn(
                     "_mind", F.min("depth").over(_W.partitionBy("root", "node"))
                 )
                 .filter(F.col("depth") == F.col("_mind"))
-                .drop("_mind")
-                .localCheckpoint(eager=False)
+                .drop("_mind"),
+                tail=F.count_if(F.col("depth") == depth + forward_window),
+                maxd=F.max("depth"),
             )
-            # the window's ONE materializing barrier: persists the
-            # lazy checkpoint and reads back row count, deepest-slice
-            # count (the next frontier's emptiness probe) and the max
-            # depth reached — no separate isEmpty/max jobs
-            stats = closed.agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    (F.col("depth") == depth + forward_window).cast("bigint")
-                ).alias("tail"),
-                F.max("depth").alias("maxd"),
-            ).collect()[0]
             if stats["n"] == 0:
                 break
             win_levels.append(closed)
@@ -1857,12 +1843,12 @@ def betweenness_centrality(
             (F.col("depth") - 1).alias("depth"),
             F.col("sigma").alias("sigma_w"),
         )
-        spd = (
+        spd = pin(
             depth_map.filter(F.col("depth") < n_levels - 1)
             .join(edges, depth_map.node == edges.src)
             .select("root", "node", "depth", "sigma", F.col("dst").alias("w"))
-            .join(hi_side, ["root", "w", "depth"])
-            .localCheckpoint(eager=True)
+            .join(hi_side, ["root", "w", "depth"]),
+            eager=True,
         )
         # ---- backward sweep --------------------------------------------
         # Preferred path: the SP-DAG is root-keyed by construction, so
@@ -1905,7 +1891,7 @@ def betweenness_centrality(
                 )
             else:
                 spe = spe.withColumn("delta_w", F.lit(None).cast("double"))
-            delta_d = (
+            delta_d = pin(
                 spe.groupBy("root", "node")
                 .agg(
                     F.sum(
@@ -1913,8 +1899,8 @@ def betweenness_centrality(
                         / F.col("sigma_w")
                         * (F.lit(1.0) + F.coalesce(F.col("delta_w"), F.lit(0.0)))
                     ).alias("delta")
-                )
-                .localCheckpoint(eager=True)
+                ),
+                eager=True,
             )
             bc_parts.append(delta_d)
             delta_next = delta_d

@@ -39,6 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.graph.model import PropertyGraph
 
 _NODE = r"\(\s*(?P<{p}var>\w*)\s*(?::\s*(?P<{p}label>\w+))?\s*(?P<{p}props>\{{[^}}]*\}})?\s*\)"
@@ -256,127 +257,117 @@ def apply_cypher_deletes(graph: PropertyGraph, query: str) -> DeleteResult:
     g = graph
     nodes_deleted = 0
     rels_deleted = 0
-    # Each statement's result is persisted while the script runs:
-    # statement k+1's matches and counts would otherwise re-execute the
-    # whole anti-join chain of statements 1..k on every action. (At
-    # real scale a delete rewrites the materialized store — graph/
-    # store.py — so the script depth never compounds; the cache plays
-    # that role for the in-session chain and is dropped on return,
-    # leaving the result graph's lineage intact.)
-    cached: list[DataFrame] = []
-
-    def swap(new_g: PropertyGraph, persist: bool = True) -> PropertyGraph:
-        # filter-built graphs skip the cache: stacked NOT-predicates
+    # Each statement's result is pinned: statement k+1's matches and
+    # counts would otherwise re-execute the whole anti-join chain of
+    # statements 1..k on every action, and the result graph reads the
+    # pinned frames. (At real scale a delete rewrites the materialized
+    # store — graph/store.py — so the script depth never compounds.)
+    def swap(new_g: PropertyGraph, pin_frames: bool = True) -> PropertyGraph:
+        # filter-built graphs skip the pin: stacked NOT-predicates
         # collapse into the base scan, so there is nothing to save
-        if persist and new_g is not g:
-            for df in (new_g.vertices, new_g.edges):
-                df.persist()
-                cached.append(df)
+        if pin_frames and new_g is not g:
+            return PropertyGraph(vertices=pin(new_g.vertices), edges=pin(new_g.edges))
         return new_g
 
-    try:
-        for stmt in parts:
-            sm = _STMT_RE.match(stmt)
-            if not sm:
-                if re.search(r"\bWHERE\b", stmt, re.IGNORECASE):
-                    raise NotImplementedError(
-                        "cypher_lite DELETE does not take WHERE — fold the "
-                        "condition into a {prop: value} map, or compose the "
-                        "anti-join directly (graph/mutations.py)"
-                    )
-                raise ValueError(f"unparseable delete statement: {stmt!r}")
-            detach = bool(sm.group("detach"))
-            targets = [t.strip() for t in sm.group("targets").split(",")]
-            pattern = sm.group("pattern").strip()
+    for stmt in parts:
+        sm = _STMT_RE.match(stmt)
+        if not sm:
+            if re.search(r"\bWHERE\b", stmt, re.IGNORECASE):
+                raise NotImplementedError(
+                    "cypher_lite DELETE does not take WHERE — fold the "
+                    "condition into a {prop: value} map, or compose the "
+                    "anti-join directly (graph/mutations.py)"
+                )
+            raise ValueError(f"unparseable delete statement: {stmt!r}")
+        detach = bool(sm.group("detach"))
+        targets = [t.strip() for t in sm.group("targets").split(",")]
+        pattern = sm.group("pattern").strip()
 
-            bare = _BARE_NODE_RE.match(pattern)
-            hop = _HOP_RE.match(pattern)
-            if bare:
-                var = bare.group("var")
-                if targets != [var] or not var:
-                    raise ValueError(
-                        f"DELETE targets {targets} not bound by pattern {pattern!r}"
+        bare = _BARE_NODE_RE.match(pattern)
+        hop = _HOP_RE.match(pattern)
+        if bare:
+            var = bare.group("var")
+            if targets != [var] or not var:
+                raise ValueError(
+                    f"DELETE targets {targets} not bound by pattern {pattern!r}"
+                )
+            if not _parse_props(bare.group("props")):
+                new_g, dn, dr = _delete_nodes_by_label(
+                    g, bare.group("label"), detach
+                )
+                g = swap(new_g, pin_frames=False)
+            else:
+                new_g, dn, dr = _delete_nodes(
+                    g, _vertex_ids(g, bare.group("label"), bare.group("props")), detach
+                )
+                g = swap(new_g)
+            nodes_deleted += dn
+            rels_deleted += dr
+        elif hop:
+            evar, avar, bvar = hop.group("evar"), hop.group("avar"), hop.group("bvar")
+            node_targets = [t for t in targets if t in (avar, bvar) and t]
+            edge_targets = [t for t in targets if t == evar and t]
+            unknown = [t for t in targets if t not in node_targets + edge_targets]
+            if unknown:
+                raise ValueError(
+                    f"DELETE targets {unknown} not bound by pattern {pattern!r}"
+                )
+            if edge_targets and node_targets:
+                raise NotImplementedError(
+                    "cypher_lite DELETE covers either the relationship "
+                    "variable or the node variables of one hop, not both "
+                    "in one statement"
+                )
+            if edge_targets:
+                cond = _hop_filter_condition(hop)
+                if cond is not None:
+                    # props-free endpoints: the matched set is a pure
+                    # edge-column predicate — one filter count, no join
+                    rels_deleted += g.edges.filter(cond).count()
+                    g = swap(
+                        PropertyGraph(vertices=g.vertices, edges=g.edges.filter(~cond)),
+                        pin_frames=False,
                     )
-                if not _parse_props(bare.group("props")):
-                    new_g, dn, dr = _delete_nodes_by_label(
-                        g, bare.group("label"), detach
-                    )
-                    g = swap(new_g, persist=False)
                 else:
-                    new_g, dn, dr = _delete_nodes(
-                        g, _vertex_ids(g, bare.group("label"), bare.group("props")), detach
+                    matched = _matched_edges(g, hop)
+                    # rows removed = one semi-join count against the
+                    # (small, distinct) matched set — not a before/after
+                    # count pair, which would scan the edge chain twice
+                    rels_deleted += g.edges.join(
+                        matched, ["src", "dst", "rel_type"], "left_semi"
+                    ).count()
+                    edges = g.edges.join(
+                        matched, ["src", "dst", "rel_type"], "left_anti"
                     )
-                    g = swap(new_g)
+                    g = swap(PropertyGraph(vertices=g.vertices, edges=edges))
+            if node_targets:
+                if not (hop.group("rarrow") or hop.group("larrow")):
+                    # an undirected matched-edge set loses which endpoint
+                    # the variable bound to — only edge deletes are
+                    # orientation-agnostic
+                    raise NotImplementedError(
+                        "cypher_lite DELETE of a node variable needs a "
+                        "directed hop — direct the pattern"
+                    )
+                matched = _matched_edges(g, hop)
+                ids = None
+                for t in node_targets:
+                    side = "src" if t == avar else "dst"
+                    if hop.group("larrow"):
+                        side = "dst" if side == "src" else "src"
+                    part_ids = matched.select(F.col(side).alias("id"))
+                    ids = part_ids if ids is None else ids.unionByName(part_ids)
+                new_g, dn, dr = _delete_nodes(g, ids, detach)
+                g = swap(new_g)
                 nodes_deleted += dn
                 rels_deleted += dr
-            elif hop:
-                evar, avar, bvar = hop.group("evar"), hop.group("avar"), hop.group("bvar")
-                node_targets = [t for t in targets if t in (avar, bvar) and t]
-                edge_targets = [t for t in targets if t == evar and t]
-                unknown = [t for t in targets if t not in node_targets + edge_targets]
-                if unknown:
-                    raise ValueError(
-                        f"DELETE targets {unknown} not bound by pattern {pattern!r}"
-                    )
-                if edge_targets and node_targets:
-                    raise NotImplementedError(
-                        "cypher_lite DELETE covers either the relationship "
-                        "variable or the node variables of one hop, not both "
-                        "in one statement"
-                    )
-                if edge_targets:
-                    cond = _hop_filter_condition(hop)
-                    if cond is not None:
-                        # props-free endpoints: the matched set is a pure
-                        # edge-column predicate — one filter count, no join
-                        rels_deleted += g.edges.filter(cond).count()
-                        g = swap(
-                            PropertyGraph(vertices=g.vertices, edges=g.edges.filter(~cond)),
-                            persist=False,
-                        )
-                    else:
-                        matched = _matched_edges(g, hop)
-                        # rows removed = one semi-join count against the
-                        # (small, distinct) matched set — not a before/after
-                        # count pair, which would scan the edge chain twice
-                        rels_deleted += g.edges.join(
-                            matched, ["src", "dst", "rel_type"], "left_semi"
-                        ).count()
-                        edges = g.edges.join(
-                            matched, ["src", "dst", "rel_type"], "left_anti"
-                        )
-                        g = swap(PropertyGraph(vertices=g.vertices, edges=edges))
-                if node_targets:
-                    if not (hop.group("rarrow") or hop.group("larrow")):
-                        # an undirected matched-edge set loses which endpoint
-                        # the variable bound to — only edge deletes are
-                        # orientation-agnostic
-                        raise NotImplementedError(
-                            "cypher_lite DELETE of a node variable needs a "
-                            "directed hop — direct the pattern"
-                        )
-                    matched = _matched_edges(g, hop)
-                    ids = None
-                    for t in node_targets:
-                        side = "src" if t == avar else "dst"
-                        if hop.group("larrow"):
-                            side = "dst" if side == "src" else "src"
-                        part_ids = matched.select(F.col(side).alias("id"))
-                        ids = part_ids if ids is None else ids.unionByName(part_ids)
-                    new_g, dn, dr = _delete_nodes(g, ids, detach)
-                    g = swap(new_g)
-                    nodes_deleted += dn
-                    rels_deleted += dr
-            else:
-                raise NotImplementedError(
-                    "cypher_lite DELETE covers bare-node and single-hop "
-                    "patterns (the reference's teardown shapes, "
-                    "documentation/queries.md:246-252,410-413) — compose "
-                    "multi-hop deletes from the matched frame directly"
-                )
-    finally:
-        for df in cached:
-            df.unpersist()
+        else:
+            raise NotImplementedError(
+                "cypher_lite DELETE covers bare-node and single-hop "
+                "patterns (the reference's teardown shapes, "
+                "documentation/queries.md:246-252,410-413) — compose "
+                "multi-hop deletes from the matched frame directly"
+            )
     return DeleteResult(graph=g, nodes_deleted=nodes_deleted, relationships_deleted=rels_deleted)
 
 

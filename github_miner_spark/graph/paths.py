@@ -21,10 +21,10 @@ DataFrames — set-at-a-time BFS replacing Neo4j's row-at-a-time DFS
   src/Neo4jClient.ts:321-327). Cycle-safe on any input.
 
 Scale notes:
-- Every iteration ends in ``localCheckpoint(eager=True)`` to truncate
-  lineage (without it, iteration N replays all N-1 prior shuffles and
-  the plan tree grows quadratically). On a production cluster with a
-  checkpoint dir configured, swap for reliable ``checkpoint()``.
+- Every iteration ends in an eager ``pin`` (functions/pin.py) to
+  truncate lineage (without it, iteration N replays all N-1 prior
+  shuffles and the plan tree grows quadratically);
+  ``SPARK_GRAFT_RELIABLE_PIN=1`` makes every pin a reliable checkpoint.
 - The frontier-edges join shuffles on the frontier node; hub-skew is
   handled by AQE skew-join splitting (enabled in session defaults).
 - Iteration count is O(graph depth): the derived module DAG has
@@ -40,7 +40,7 @@ from pyspark.errors import PythonException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from github_miner_spark.functions.pin import pin_counted, pin_observed
+from github_miner_spark.functions.pin import pin, pin_counted, pin_observed
 from github_miner_spark.gate import choose_path
 
 
@@ -329,13 +329,13 @@ def closure_path_counts(
                     raise RuntimeError(CLOSURE_CYCLE_ERROR) from exc
     with _loop_shuffle_partitions(spark, enabled=broadcast_frontier):
         if not pinned:
-            edges = edges.localCheckpoint(eager=True)
+            edges = pin(edges, eager=True)
         root_df = _as_root_df(edges, roots)
-        frontier = (
+        frontier = pin(
             edges.join(root_df, edges.src == root_df.root)
             .groupBy("root", F.col("dst").alias("node"))
-            .agg(F.count("*").cast("long").alias("paths"))
-            .localCheckpoint(eager=True)
+            .agg(F.count("*").cast("long").alias("paths")),
+            eager=True,
         )
         chunks = [frontier]
         window: list[DataFrame] = []
@@ -351,20 +351,19 @@ def closure_path_counts(
                 # (amortized over the window), and the level tag lets
                 # the next frontier come from the checkpointed chunk
                 # instead of re-expanding
-                chunk = (
+                chunk, seen = pin_observed(
                     reduce(lambda a, b: a.unionByName(b), window)
                     .groupBy("root", "node", "level")
-                    .agg(F.sum("paths").alias("paths"))
-                    .localCheckpoint(eager=True)
+                    .agg(F.sum("paths").alias("paths")),
+                    last=F.count_if(F.col("level") == it),
                 )
                 window = []
                 frontier = chunk.filter(F.col("level") == it).select(
                     "root", "node", "paths"
                 )
-                if frontier.isEmpty():
-                    chunks.append(chunk.select("root", "node", "paths"))
-                    break
                 chunks.append(chunk.select("root", "node", "paths"))
+                if seen["last"] == 0:
+                    break
             else:
                 frontier = nxt
         else:
@@ -521,19 +520,18 @@ def bfs_depths(
     if until is not None:
         until_set = {int(until)} if isinstance(until, int) else {int(u) for u in until}
     with _loop_shuffle_partitions(spark, enabled=broadcast_frontier):
-        frontier = (
+        frontier, n_frontier = pin_counted(
             edges.join(root_df, edges.src == root_df.root)
             .select("root", F.col("dst").alias("node"))
             .distinct()
             .withColumn("depth", F.lit(1))
-            .localCheckpoint(eager=True)
         )
         chunks = [frontier]
         if until_set:
             hit = frontier.select("node").distinct().filter(F.col("node").isin(*until_set))
             until_set -= {r["node"] for r in hit.collect()}
         depth = 1
-        done = frontier.isEmpty() or (until_set is not None and not until_set)
+        done = n_frontier == 0 or (until_set is not None and not until_set)
         while not done and depth <= max_iter:
             base_visited = reduce(lambda a, b: a.unionByName(b), chunks).select("root", "node")
             # small-probe mode: broadcast the visited set into the
@@ -555,17 +553,17 @@ def bfs_depths(
                 )
                 window.append(nxt)
                 frontier = nxt
-            wnd = (
+            wnd, seen = pin_observed(
                 reduce(lambda a, b: a.unionByName(b), window)
                 .groupBy("root", "node")
-                .agg(F.min("depth").alias("depth"))
-                .localCheckpoint(eager=True)
+                .agg(F.min("depth").alias("depth")),
+                last=F.count_if(F.col("depth") == depth),
             )
-            if wnd.isEmpty():
+            if seen["n"] == 0:
                 break
             chunks.append(wnd)
             frontier = wnd.filter(F.col("depth") == depth)
-            done = frontier.isEmpty()
+            done = seen["last"] == 0
             if until_set:
                 hit = wnd.select("node").distinct().filter(F.col("node").isin(*until_set))
                 until_set -= {r["node"] for r in hit.collect()}
@@ -652,22 +650,22 @@ def all_shortest_paths(edges: DataFrame, src: int, dst: int, max_iter: int = 100
     )
     s = onpath.select(F.col("node").alias("s_node"), F.col("fd").alias("s_fd"))
     t = onpath.select(F.col("node").alias("t_node"), F.col("fd").alias("t_fd"))
-    sp_edges = (
+    sp_edges = pin(
         edges.join(F.broadcast(s), edges.src == s.s_node)
         .join(F.broadcast(t), edges.dst == t.t_node)
         .filter(F.col("t_fd") == F.col("s_fd") + 1)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
+        .select("src", "dst"),
+        eager=True,
     )
     frontier = spark.createDataFrame([(src, [src])], "node bigint, path array<bigint>")
     for _ in range(length):
-        frontier = (
+        frontier = pin(
             F.broadcast(frontier).join(sp_edges, frontier.node == sp_edges.src)
             .select(
                 F.col("dst").alias("node"),
                 F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
     return frontier.filter(F.col("node") == dst).select(
         "path", F.lit(length).cast("int").alias("length")
@@ -843,15 +841,15 @@ def all_shortest_paths_multi(
     t_ = onpath.select(
         F.col("target").alias("t_target"), F.col("node").alias("t_node"), F.col("fd").alias("t_fd")
     )
-    sp_edges = (
+    sp_edges = pin(
         edges.join(F.broadcast(s), edges.src == s.s_node)
         .join(
             F.broadcast(t_),
             (edges.dst == t_.t_node) & (s.s_target == t_.t_target),
         )
         .filter(F.col("t_fd") == F.col("s_fd") + 1)
-        .select(F.col("s_target").alias("target"), "src", "dst")
-        .localCheckpoint(eager=True)
+        .select(F.col("s_target").alias("target"), "src", "dst"),
+        eager=True,
     )
     frontier = spark.createDataFrame(
         [(t, src, [src]) for t in reached], "target bigint, node bigint, path array<bigint>"
@@ -883,7 +881,7 @@ def all_shortest_paths_multi(
         # one barrier per 4 expansion steps; in-between levels stay lazy
         # (state = partial shortest paths, output-bounded by definition)
         if step % 4 == 0 or step == max_len:
-            frontier = frontier.localCheckpoint(eager=True)
+            frontier = pin(frontier, eager=True)
         done.append(frontier.filter(F.col("node") == F.col("target")))
     out = reduce(lambda a, b: a.unionByName(b), done)
     return out.join(len_df, "target").select("target", "path", "length")
@@ -983,7 +981,7 @@ def enumerate_simple_paths(
     ``enumerate_simple_paths`` gate an iterative DFS enumerates in one
     executor task — identical path set, output-proportional either
     way; the level loop below engages unchanged beyond it."""
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    e, n_e = pin_counted(edges.select("src", "dst"))
     # Task-local path (the betweenness/ASP pattern): an edge set that
     # fits one executor task enumerates inside ONE applyInPandas task
     # via the DFS twin. The end_nodes set (usually a tiny
@@ -998,10 +996,7 @@ def enumerate_simple_paths(
     # post-filter keeps the old distributed shape. Past the gate the
     # level loop below is the at-scale path (output-proportional
     # either way).
-    if (
-        choose_path("enumerate_simple_paths", 0) != "distributed"
-        and choose_path("enumerate_simple_paths", e.count()) == "task"
-    ):
+    if choose_path("enumerate_simple_paths", n_e) == "task":
         keep = None
         if end_nodes is not None:
             sample = end_nodes.select("id").distinct().limit(
@@ -1024,32 +1019,28 @@ def enumerate_simple_paths(
                 F.element_at(F.col("path"), -1) == F.col("_end"),
             ).drop("_end")
         return paths
-    frontier = (
-        e.filter(F.col("src") == root)
-        .select(
+    frontier, n_frontier = pin_counted(
+        e.filter(F.col("src") == root).select(
             F.col("dst").alias("node"),
             F.array(F.lit(root).cast("bigint"), F.col("dst").cast("bigint")).alias("path"),
         )
-        .localCheckpoint(eager=True)
     )
     levels = [frontier]
-    alive = not frontier.isEmpty()
+    alive = n_frontier > 0
     for _ in range(max_iter):
         if not alive:
             break
-        frontier = (
+        # ONE driver action per level: the pin job counts the level,
+        # which doubles as the emptiness probe
+        frontier, n_frontier = pin_counted(
             frontier.join(e, frontier.node == e.src)
             .filter(~F.array_contains(F.col("path"), F.col("dst")))
             .select(
                 F.col("dst").alias("node"),
                 F.concat(F.col("path"), F.array(F.col("dst").cast("bigint"))).alias("path"),
             )
-            .localCheckpoint(eager=True)
         )
-        # ONE driver action per level: the checkpoint materialized the
-        # level, so count() is metadata-cheap and doubles as the
-        # emptiness probe
-        alive = frontier.count() > 0
+        alive = n_frontier > 0
         if alive:
             levels.append(frontier)
     else:
@@ -1185,11 +1176,11 @@ def weighted_sssp(
             .applyInPandas(_dijkstra_root_group, schema="node bigint, dist double")
         )
     with _loop_shuffle_partitions(spark, enabled=broadcast_frontier):
-        dist = (
+        dist = pin(
             edges.filter(F.col("src") == int(root))
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("w").alias("dist"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("w").alias("dist")),
+            eager=True,
         )
         for _ in range(max_iter):
             d = F.broadcast(dist) if broadcast_frontier else dist
@@ -1200,17 +1191,16 @@ def weighted_sssp(
             )
             # stability probe fused into the min-merge (the SCC
             # discipline): each prior row carries its value as ``old``
-            # (new nodes carry +inf), so "anything improved" is a
-            # filter scan over the checkpointed merge — no per-round
-            # old-vs-new join
+            # (new nodes carry +inf), so "anything improved" is counted
+            # by the pin job itself — no per-round old-vs-new join
             prev = dist.select("node", "dist", F.col("dist").alias("old"))
-            new = (
+            new, seen = pin_observed(
                 prev.unionByName(cand)
                 .groupBy("node")
-                .agg(F.min("dist").alias("dist"), F.min("old").alias("old"))
-                .localCheckpoint(eager=True)
+                .agg(F.min("dist").alias("dist"), F.min("old").alias("old")),
+                improved=F.count_if(F.col("dist") < F.col("old")),
             )
-            if new.filter(F.col("dist") < F.col("old")).isEmpty():
+            if seen["improved"] == 0:
                 return new.select("node", "dist")
             dist = new.select("node", "dist")
     raise RuntimeError(

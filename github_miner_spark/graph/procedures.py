@@ -31,7 +31,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from github_miner_spark.functions.pin import pin_counted
+from github_miner_spark.functions.pin import pin, pin_counted
 from github_miner_spark.graph.model import PropertyGraph
 from github_miner_spark.graph.mutations import with_vertex_property
 
@@ -74,7 +74,7 @@ def call_procedure(
         # with_vertex_property join every read-back pays) — pin the
         # one-row-per-vertex assignment so the algorithm runs once,
         # not once per consumer. YIELD-only calls stay lazy.
-        return df.localCheckpoint(eager=True) if write else df
+        return pin(df, eager=True) if write else df
 
     def _counted(df: DataFrame) -> tuple[DataFrame, int]:
         # the ``nodes`` YIELD column: under write:true the pin job

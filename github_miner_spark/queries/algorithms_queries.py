@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from github_miner_spark.functions.pin import pin_counted
+from github_miner_spark.functions.pin import pin, pin_counted
 from github_miner_spark.gate import choose_path
 from github_miner_spark.graph.algorithms import (
     _symmetrize_weighted,
@@ -615,11 +615,10 @@ def node_similarity_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct aggregate trees in the r12 audit, ReusedExchange 0 ->
     # 1 scan + 1 distinct + pinned re-reads; the triangle_counts_top /
     # degree_assortativity discipline)
-    e = g.module_dep_edges().distinct().localCheckpoint(eager=False)
-    deg = (
+    e = pin(g.module_dep_edges().distinct())
+    deg = pin(
         e.groupBy("src")
         .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=False)
     )
     from github_miner_spark.functions.skew import spread_width
 
@@ -701,9 +700,9 @@ def triangle_counts_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three times (e1/e2/e3) and each alias re-ran the edge scan +
     # distinct Exchange (9 edge scans in the r12 audit -> 1 + pinned
     # re-reads)
-    und = e.select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).distinct().localCheckpoint(eager=False)
+    und = pin(
+        e.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")).distinct()
+    )
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
     tri = (
         e1.join(e2, F.col("e2.u") == F.col("e1.v"))
@@ -776,7 +775,7 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollups and both sides of the co-occurrence self-join) each
     # re-ran the edge scan + distinct Exchange (5 edge scans in the
     # r12 audit -> 1 + pinned re-reads)
-    e = g.module_dep_edges().distinct().localCheckpoint(eager=False)
+    e = pin(g.module_dep_edges().distinct())
     indeg = e.groupBy(F.col("dst").alias("z")).agg(F.count("*").alias("dz"))
     outdeg = e.groupBy(F.col("src").alias("m")).agg(F.count("*").alias("dm"))
     from github_miner_spark.functions.skew import spread_width
@@ -1037,9 +1036,9 @@ def clustering_coefficient_summary(spark: SparkSession, sf_dir: str) -> DataFram
     # branches and all three triangle-join aliases, and each consumer
     # re-ran the edge scan + distinct Exchange (16 edge scans in the
     # r12 audit -> 1 + pinned re-reads)
-    und = e.select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).distinct().localCheckpoint(eager=False)
+    und = pin(
+        e.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")).distinct()
+    )
     adj = und.select(F.col("u").alias("id"), F.col("v").alias("nb")).unionByName(
         und.select(F.col("v").alias("id"), F.col("u").alias("nb"))
     )
@@ -1138,15 +1137,13 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the degree rollup AND the endpoint-pair join — 6 edge scans in
     # the r12 audit -> 1 + pinned re-reads) and the node-sized degree
     # rollup (consumed by both endpoint joins)
-    und = e.select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    ).distinct().localCheckpoint(eager=False)
+    und = pin(
+        e.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")).distinct()
+    )
     adj = und.select(F.col("u").alias("id"), F.col("v").alias("nb")).unionByName(
         und.select(F.col("v").alias("id"), F.col("u").alias("nb"))
     )
-    deg = adj.groupBy("id").agg(F.count("*").alias("d")).localCheckpoint(
-        eager=False
-    )
+    deg = pin(adj.groupBy("id").agg(F.count("*").alias("d")))
     du = deg.select(F.col("id"), F.col("d").cast("double").alias("x"))
     dv = deg.select(F.col("id").alias("nb"), F.col("d").cast("double").alias("y"))
     pairs = adj.join(du, "id").join(dv, "nb")
@@ -1637,11 +1634,10 @@ def skipgram_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # negative distribution and the draw generator) each re-ran the
     # walk-store scan + explode + rollup (4 walks_det scans in the
     # r12 audit -> 1 + pinned re-reads).
-    sgp = (
+    sgp = pin(
         _skipgram_pairs_exploded(state)
         .groupBy("center", "context")
         .agg(F.count("*").cast("bigint").alias("n_pairs"))
-        .localCheckpoint(eager=False)
     )
     dist = sgp.groupBy(F.col("context").alias("negative")).agg(
         F.sum("n_pairs").cast("bigint").alias("cnt")
@@ -1745,20 +1741,19 @@ def _anf_distributed_reg_states(
     with _loop_shuffle_partitions(
         spark, enabled=True, width=loop_width, aqe_off=True
     ):
-        state = nodes.select(
-            "node",
-            h0.bitwiseAND(F.lit(m - 1)).alias("bucket"),
-            rho.alias("r"),
-        ).localCheckpoint(eager=True)
+        state = pin(
+            nodes.select("node", h0.bitwiseAND(F.lit(m - 1)).alias("bucket"), rho.alias("r")),
+            eager=True,
+        )
         for h in range(1, hops + 1):
             pulled = e.join(state, state.node == e.dst).select(
                 F.col("src").alias("node"), "bucket", "r"
             )
-            state = (
+            state = pin(
                 state.unionByName(pulled)
                 .groupBy("node", "bucket")
-                .agg(F.max("r").alias("r"))
-                .localCheckpoint(eager=True)
+                .agg(F.max("r").alias("r")),
+                eager=True,
             )
             per_h.append(state.withColumn("h", F.lit(h)))
     reg_states = per_h[0]

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.functions.pq_store import ADC_SCALE
 from github_miner_spark.functions.similarity import dot, norm
 from github_miner_spark.functions.text import md5_prefix_hash
@@ -960,10 +961,6 @@ def clustered_pq_rerank_recall_at_k(
     # corpus without the pin (the codebook/probe subsets stay cheap
     # pushed-filter scans either way, but these two consumers cannot
     # push). Adjudicated end-to-end under both actions (§ r13 notes).
-    # CORPUS-SCALE pin: pin() routes it to replicated checkpoint
-    # storage under SPARK_GRAFT_RELIABLE_PIN=1 (VERDICT r12 item 4).
-    from github_miner_spark.functions.pin import pin
-
     nvd = pin(cnv.select("vec_id", "nv"))
     scored = _clu_pq_scored(nvd)
     w = Window.partitionBy("query_id").orderBy(

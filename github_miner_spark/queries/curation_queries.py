@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.functions.text import token_count, token_hash
 from github_miner_spark.io.tables import load_table
 from github_miner_spark.registry import register
@@ -451,7 +452,7 @@ def minhash_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     idx = load_shingle_index(spark, sf_dir)
-    sig = minhash_signatures(docs, idx, k=16).localCheckpoint(eager=False)
+    sig = pin(minhash_signatures(docs, idx, k=16))
     buckets = minhash_band_buckets(sig, k=16, bands=4)
     is_eval = F.col("doc_id") % EVAL_MOD == 0
     eb = buckets.filter(is_eval).select(
@@ -918,11 +919,10 @@ def mixture_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # description's "one tokenizing scan" was only true per consumer
     # (4 documents scans in the r12 audit -> 1 + pinned re-reads of a
     # <= |sources|-row relation). Exact bigint sums: bit-identical.
-    per = (
+    per = pin(
         docs.select("source", F.size(tokenize(F.col("text"))).alias("n_tokens"))
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").alias("n_tokens"))
-        .localCheckpoint(eager=False)
     )
     tot = per.agg(F.sum("n_tokens").alias("tot_tokens"))
     p = per.crossJoin(F.broadcast(tot)).withColumn(
@@ -1100,7 +1100,7 @@ def bloom_decontamination_prefilter(spark: SparkSession, sf_dir: str) -> DataFra
     # eval_sh feeds BOTH the bit table and the membership-grading
     # join; the lazy checkpoint materializes the distinct shuffle once
     eval_sh = (
-        idx.filter(is_eval).select("shingle").distinct().localCheckpoint(eager=False)
+        pin(idx.filter(is_eval).select("shingle").distinct())
     )
     train_sh = idx.filter(~is_eval).select("shingle").distinct()
     ks = F.explode(F.array(*[F.lit(j) for j in range(4)])).alias("j")
@@ -1222,9 +1222,7 @@ def priority_sample_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # top21 feeds both the tau derivation and the selected branch;
     # the lazy checkpoint runs the scan + heap once, not twice
-    top21 = pr.orderBy(F.desc("priority"), "doc_id").limit(21).localCheckpoint(
-        eager=False
-    )
+    top21 = pin(pr.orderBy(F.desc("priority"), "doc_id").limit(21))
     # the (k+1)-th row under (priority DESC, doc_id ASC) is the MIN of
     # struct(priority, -doc_id): min priority, and among priority ties
     # the largest doc_id (= the last-ordered row)
@@ -1377,9 +1375,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per row before the explode (r12 clean-window interleaved
     # count-protocol medians at sf0.1: 1.514s union-over-checkpoint
     # vs 1.921s concat, untouched controls at par)
-    tdocs = docs.select(
-        "doc_id", "source", tokenize(F.col("text")).alias("toks")
-    ).localCheckpoint(eager=False)
+    tdocs = pin(docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks")))
     uni = tdocs.select("doc_id", "source", F.explode(F.col("toks")).alias("f"))
     bi = tdocs.select(
         "doc_id",
@@ -1393,16 +1389,14 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("f"),
     )
-    occ = (
-        uni.unionByName(bi)
-        .select(
+    # the explode output feeds three aggregations (raw counts,
+    # target counts, per-doc weights) — pin it once
+    occ = pin(
+        uni.unionByName(bi).select(
             "doc_id",
             "source",
             (token_hash60(F.col("f")) % DSIR_BUCKETS).alias("b"),
         )
-        # the explode output feeds three aggregations (raw counts,
-        # target counts, per-doc weights) — pin it once
-        .localCheckpoint(eager=False)
     )
     tgt = F.col("source").isin(*DSIR_TARGET_SOURCES)
     counts = occ.groupBy("b").agg(

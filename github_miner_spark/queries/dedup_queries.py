@@ -20,6 +20,7 @@ from github_miner_spark.functions.dedup import (
     simhash,
     simhash_near_pairs,
 )
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.functions.text import FINGERPRINT_MOD, MINHASH_PRIME  # noqa: F401
 from github_miner_spark.io.tables import load_table
 from github_miner_spark.queries.text_queries import DUCK_HASH, DUCK_TOKENS
@@ -444,10 +445,9 @@ def duplicated_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # different subtrees, paying the corpus pass twice (ReuseExchange
     # cannot dedupe them: the tokenizer's lambda-bound HOF expressions
     # defeat plan canonicalization)
-    wd = (
+    wd = pin(
         wins.groupBy("wh", "doc_id")
         .agg(F.count("*").alias("k"))
-        .localCheckpoint(eager=False)
     )
     dupw = (
         wd.groupBy("wh")

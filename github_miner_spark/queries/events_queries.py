@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.io.tables import load_table
 from github_miner_spark.registry import register
 
@@ -1028,13 +1029,13 @@ def item_cooccurrence_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides and both popularity lookups) would otherwise each re-run
     # the scan + JSON parse + distinct + degree window — the expensive
     # part of the whole query at any scale
-    kept = (
+    kept = pin(
         ui.withColumn(
             "n_items", F.count("*").over(Window.partitionBy("user_id"))
         )
         .filter(F.col("n_items") <= COOC_USER_CAP)
-        .select("user_id", "item")
-        .localCheckpoint(eager=True)
+        .select("user_id", "item"),
+        eager=True,
     )
     a = kept.select("user_id", F.col("item").alias("item_a"))
     b = kept.select("user_id", F.col("item").alias("item_b"))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.io.tables import load_table
 from github_miner_spark.registry import register
 
@@ -1171,12 +1172,7 @@ def suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join + lateness filter (3 lineitem scans in the r12 audit -> 2:
     # this pin plus the raw scan the semi build side genuinely needs).
     # Narrowed to the two join keys before pinning — shipdate is
-    # consumed by the filter. CORPUS-SCALE pin (lineitem fact rows):
-    # pinned via pin() so SPARK_GRAFT_RELIABLE_PIN=1 lands it in
-    # replicated checkpoint storage at cluster scale instead of
-    # non-replicated executor blocks (VERDICT r12 item 4).
-    from github_miner_spark.functions.pin import pin
-
+    # consumed by the filter.
     late_lines = pin(
         li.select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(finished, "l_orderkey")
@@ -1723,12 +1719,14 @@ def binned_quantile_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final select), and each consumer re-derived it from a FULL
     # lineitem scan + aggregate (5 lineitem scans in the r12 audit ->
     # 3: bounds once, binning, and the exact grading twin)
-    b = li.groupBy(F.col("l_returnflag").alias("g")).agg(
-        F.min(x).alias("mn"),
-        F.max(x).alias("mx"),
-        F.count("*").cast("bigint").alias("n"),
-        ((F.max(x) - F.min(x)) / F.lit(1024.0)).alias("w"),
-    ).localCheckpoint(eager=False)
+    b = pin(
+        li.groupBy(F.col("l_returnflag").alias("g")).agg(
+            F.min(x).alias("mn"),
+            F.max(x).alias("mx"),
+            F.count("*").cast("bigint").alias("n"),
+            ((F.max(x) - F.min(x)) / F.lit(1024.0)).alias("w"),
+        )
+    )
     # w == 0 (single-valued group) would make (x-mn)/w a 0/0 whose
     # NULL-vs-NaN resolution differs across engines; such a group is
     # all bin 0 and interpolates to est == mn exactly

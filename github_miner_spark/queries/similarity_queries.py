@@ -20,6 +20,7 @@ from github_miner_spark.functions.multimodal import (
     documents_as_media,
     extract_byte_features,
 )
+from github_miner_spark.functions.pin import pin
 from github_miner_spark.functions.similarity import brute_force_topk, cosine, lsh_topk
 from github_miner_spark.io.tables import load_table
 from github_miner_spark.registry import register
@@ -296,12 +297,14 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # norms computed ONCE per vector (not per candidate pair: the pair
     # count is ~n * bucket_occupancy, the vector count is n)
-    bucketed = emb.select(
-        "vec_id",
-        "ev",
-        lsh_bucket(F.col("ev"), n_planes=n_planes, dims=64).alias("bucket"),
-        norm(F.col("ev")).alias("nrm"),
-    ).localCheckpoint(eager=False)
+    bucketed = pin(
+        emb.select(
+            "vec_id",
+            "ev",
+            lsh_bucket(F.col("ev"), n_planes=n_planes, dims=64).alias("bucket"),
+            norm(F.col("ev")).alias("nrm"),
+        )
+    )
     a = bucketed.alias("a")
     b = bucketed.alias("b")
     return (
@@ -1490,16 +1493,14 @@ def bitext_mining_margin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "list_id",
     )
     cos = F.round(cosine(F.col("xv"), F.col("yv")), 6)
-    cand = (
-        x.join(y, "list_id")
-        .select(
+    # three consumers (pair scores + both kNN rollups) — pin once
+    cand = pin(
+        x.join(y, "list_id").select(
             "x_id",
             "y_id",
             cos.alias("cos_sim"),
             F.round((1.0 + cos) * 1000000, 0).cast("bigint").alias("smu"),
         )
-        # three consumers (pair scores + both kNN rollups) — pin once
-        .localCheckpoint(eager=False)
     )
     # each window partition holds one doc's IN-LIST candidates only —
     # bounded by the largest list, never the corpus

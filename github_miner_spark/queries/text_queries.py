@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from github_miner_spark.functions.pin import pin, pin_observed
 from github_miner_spark.functions.text import (
     FINGERPRINT_MOD,
     STOPWORDS,
@@ -369,10 +370,9 @@ def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12 audit — the HOF-lambda tokenizer defeats ReuseExchange).
     # One corpus pass; everything downstream reads the doc-term-sized
     # pin.
-    tf = (
+    tf = pin(
         toks.groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
     )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     total = docs.agg(F.count("*").alias("n"))
@@ -440,9 +440,7 @@ def doc_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the freq rollup measured WORSE (0.84 vs 0.64 end-to-end at
     # sf0.1) — the re-agg over the pinned tokens is cheaper than a
     # second checkpoint round-trip.
-    tok = docs.select(
-        "doc_id", F.explode(tokenize(F.col("text"))).alias("term")
-    ).localCheckpoint(eager=False)
+    tok = pin(docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("term")))
     freq = tok.groupBy("term").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").alias("n"))
     scored = (
@@ -904,10 +902,9 @@ def unigram_lm_segmentation_stats(
     # = sum(c * n_pieces), and distinct pieces never depended on word
     # multiplicity — the piece explode now runs per distinct
     # (source, word), not per token occurrence.
-    wr = (
+    wr = pin(
         toks.groupBy("source", "word")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)
     )
     j = wr.join(F.broadcast(segs), "word")
     per_source = j.groupBy("source").agg(
@@ -995,13 +992,13 @@ def doc_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form scanned+tokenized the corpus three times (bfreq for pfreq,
     # bfreq again for the score join, bg for scoring — 3 parquet scans
     # in the r12 audit). One corpus pass + one vocabulary-sized pin.
-    bg = docs.select("doc_id", tokenize(F.col("text")).alias("toks")).select(
-        "doc_id",
-        F.explode(token_windows(F.col("toks"), 2)).alias("bigram"),
-    ).localCheckpoint(eager=False)
-    bfreq = bg.groupBy("bigram").agg(F.count("*").alias("c")).localCheckpoint(
-        eager=False
+    bg = pin(
+        docs.select("doc_id", tokenize(F.col("text")).alias("toks")).select(
+            "doc_id",
+            F.explode(token_windows(F.col("toks"), 2)).alias("bigram"),
+        )
     )
+    bfreq = pin(bg.groupBy("bigram").agg(F.count("*").alias("c")))
     pfreq = (
         bfreq.groupBy(F.split(F.col("bigram"), " ")[0].alias("prefix"))
         .agg(F.sum("c").alias("pc"))
@@ -1144,10 +1141,10 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # could range-split differently and desync lrn from off (the
         # same two-consumer carve-out as procedures.py _pin;
         # vocabulary-sized, one skinny column pair)
-        parts = (
+        parts = pin(
             freq.repartitionByRange(n_shards, F.desc("c"), F.asc("term"))
-            .withColumn("pid", F.spark_partition_id())
-            .localCheckpoint(eager=True)
+            .withColumn("pid", F.spark_partition_id()),
+            eager=True,
         )
         local = parts.withColumn(
             "lrn",
@@ -1262,13 +1259,13 @@ def boilerplate_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran scan+tokenize+shingle+explode (3 parquet scans in the
     # r12 audit; the remaining second scan is the zero-column corpus
     # count, which parquet serves from footer metadata).
-    ex = docs.select(
-        "doc_id", "source", tokenize(F.col("text")).alias("toks")
-    ).select(
-        "doc_id",
-        "source",
-        F.explode(shingle_hashes_of_tokens(F.col("toks"))).alias("h"),
-    ).localCheckpoint(eager=False)
+    ex = pin(
+        docs.select("doc_id", "source", tokenize(F.col("text")).alias("toks")).select(
+            "doc_id",
+            "source",
+            F.explode(shingle_hashes_of_tokens(F.col("toks"))).alias("h"),
+        )
+    )
     # corpus size as a broadcast one-row frame, not a driver-side
     # docs.count(): the whole query stays one Spark job
     nd = docs.agg(F.count("*").alias("n_docs"))
@@ -1397,8 +1394,6 @@ def _kn_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1); the projection boundary evaluates the regex once per doc
     from github_miner_spark.functions.skew import spread_to_session_width
 
-    from github_miner_spark.functions.pin import pin
-
     bg = pin(
         spread_to_session_width(docs).select(
             "doc_id", tokenize(F.col("text")).alias("toks")
@@ -1417,10 +1412,7 @@ def _kn_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the scoring join, instead of re-running tokenize+explode
     # per consumer (4 corpus passes -> 1 at bench SF; at 100 TB the
     # checkpoint trades one corpus-sized write for three re-scans,
-    # the same call the simhash band index makes). CORPUS-SCALE pin
-    # (one row per bigram occurrence): pin() routes it to replicated
-    # checkpoint storage under SPARK_GRAFT_RELIABLE_PIN=1 (VERDICT
-    # r12 item 4) instead of non-replicated executor blocks.
+    # the same call the simhash band index makes).
     # bh functionally determines (ph, sh), so this is one agg keyed by
     # the bigram hash that keeps the prefix/suffix hashes available for
     # the model's two marginal aggregations.
@@ -1565,15 +1557,13 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form the gopher/distinct-n measurement settled on (concat() of
     # tagged struct arrays physically copies both families into a
     # fresh array per row). Interleaved end-to-end medians at sf0.1
-    # (construction + count — a lazy localCheckpoint EXECUTES its
+    # (construction + count — a lazy pin EXECUTES its
     # subtree at construction under AQE, so only the full protocol
     # prices these shapes fairly): 1.148s union-over-checkpoint vs
     # 1.36s concat vs 1.15s for the two-independent-explode form —
     # i.e. at par with the two-pass form locally, minus the concat
     # copy, and ONE corpus scan+tokenize instead of two at 100 TB
-    tdocs = docs.select(tokenize(F.col("text")).alias("toks")).localCheckpoint(
-        eager=False
-    )
+    tdocs = pin(docs.select(tokenize(F.col("text")).alias("toks")))
     uni_b = tdocs.select(F.lit(1).alias("k"), F.explode(F.col("toks")).alias("g"))
     bi_b = tdocs.select(
         F.lit(2).alias("k"),
@@ -1582,11 +1572,10 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (k, g)-keyed rollup is pinned too: u1, u2, bfreq and the two
     # totals all read the vocabulary-sized counts instead of
     # re-running the corpus pass
-    freq = (
+    freq = pin(
         uni_b.unionByName(bi_b)
         .groupBy("k", "g")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
     )
     ufreq = freq.filter(F.col("k") == 1).select(
         F.col("g").alias("tok"), F.col("c").alias("uc")
@@ -1665,7 +1654,7 @@ def vocab_coverage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees, paying the corpus pass twice (ReuseExchange cannot
     # dedupe them: the tokenizer's lambda-bound HOF expressions defeat
     # plan canonicalization). Measured adjudication (r12, end-to-end
-    # construction+count protocol — a lazy localCheckpoint EXECUTES
+    # construction+count protocol — a lazy pin EXECUTES
     # its subtree at construction under AQE, so partial timings
     # mislead here): this shape prices at 0.608s vs 0.438s for the
     # two-pass form at sf0.1 — the +0.17s is the rollup
@@ -1676,10 +1665,9 @@ def vocab_coverage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A single-chain variant (collect_list + global rank window, no
     # checkpoint) measured 0.599s — no better, and it adds an
     # unpartitioned window; rejected.
-    st = (
+    st = pin(
         uni.groupBy("source", "tok")
         .agg(F.count("*").alias("k"))
-        .localCheckpoint(eager=False)
     )
     ufreq = st.groupBy("tok").agg(F.sum("k").alias("c"))
     # top-k, not a global rank: orderBy+limit compiles to distributed
@@ -1773,9 +1761,7 @@ def _hll_estimates(vals: DataFrame, m_bits: int) -> DataFrame:
 
     m = 1 << m_bits
     rho_max = 60 - m_bits + 1
-    tok = vals.select(
-        "source", "v", token_hash60(F.col("v")).alias("h")
-    ).localCheckpoint(eager=False)
+    tok = pin(vals.select("source", "v", token_hash60(F.col("v")).alias("h")))
     w = F.shiftright(F.col("h"), m_bits)
     rho = F.when(w == F.lit(0), F.lit(rho_max)).otherwise(
         F.lit(rho_max) - F.length(F.bin(w))
@@ -1955,10 +1941,9 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (source, token-hash) counts: the ONLY corpus-scale aggregation;
     # lazily checkpointed so the two windows and the scalar total all
     # reuse the vocabulary-sized rollup instead of re-exploding
-    cst = (
+    cst = pin(
         tokh.groupBy("source", "kh")
         .agg(F.count("*").alias("c_st"))
-        .localCheckpoint(eager=False)
     )
     # c_t rides a window keyed by the 8-byte hash — per-kh partitions
     # are <= |sources| rows, scale-safe. tot_s does NOT: a window
@@ -2047,13 +2032,12 @@ def cms_heavy_hitter_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from github_miner_spark.functions.text import token_hash60
 
     docs = load_table(spark, "documents", sf_dir)
-    tfreq = (
+    tfreq = pin(
         spread_to_session_width(docs)
         .select(tokenize(F.col("text")).alias("toks"))
         .select(F.explode("toks").alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)
     )
     rows_j = F.explode(F.array(*[F.lit(j) for j in range(4)])).alias("j")
     bucket = token_hash60(
@@ -2264,7 +2248,7 @@ def kmv_set_operation_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source_shingles.parquet",
         )
     )
-    sk = _kmv_sketch(spark, uni, n_uni).localCheckpoint(eager=False)
+    sk = pin(_kmv_sketch(spark, uni, n_uni))
     # EVERY source pair, including disjoint ones (a zero-overlap pair
     # is the informative case for mixture planning) — the bounded
     # sources frame self-pairs under a broadcast, never a cartesian
@@ -2662,14 +2646,14 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan+tokenize, and dfreq re-derived hits a third time (3 parquet
     # scans in the r12 audit — the HOF-lambda tokenizer defeats
     # ReuseExchange). The pin makes the description's "ONE corpus
-    # scan" literally true; measured 0.97x end-to-end at sf0.1.
-    d = d.select(
-        "doc_id", "toks", F.size("toks").cast("bigint").alias("dl")
-    ).localCheckpoint(eager=False)
-    stats = d.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("dl").cast("bigint").alias("sdl"),
+    # scan" literally true; measured 0.97x end-to-end at sf0.1. The
+    # corpus stats (doc count, summed length) come from the pin job.
+    d, stats = pin_observed(
+        d.select("doc_id", "toks", F.size("toks").cast("bigint").alias("dl")),
+        sdl=F.sum("dl"),
     )
+    n_docs = F.lit(stats["n"]).cast("double")
+    avg_dl = F.lit(stats["sdl"]).cast("double") / n_docs
     hits = (
         d.select("doc_id", "dl", F.explode("toks").alias("term"))
         .filter(F.col("term").isin(list(BM25_TERMS)))
@@ -2679,7 +2663,7 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfreq = hits.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
     idf = F.log(
         1
-        + (F.col("n").cast("double") - F.col("df").cast("double") + 0.5)
+        + (n_docs - F.col("df").cast("double") + 0.5)
         / (F.col("df").cast("double") + 0.5)
     )
     w = (
@@ -2687,19 +2671,11 @@ def bm25_retrieval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("tf").cast("double") * (BM25_K1 + 1))
         / (
             F.col("tf").cast("double")
-            + BM25_K1
-            * (
-                1
-                - BM25_B
-                + BM25_B
-                * F.col("dl").cast("double")
-                / (F.col("sdl").cast("double") / F.col("n").cast("double"))
-            )
+            + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl").cast("double") / avg_dl)
         )
     )
     per_term = (
         hits.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
         .select(
             "doc_id",
             F.round(w * BM25_SCALE, 0).cast("bigint").alias("wq"),
@@ -2874,13 +2850,13 @@ def gopher_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode and the per-doc base frame the pivot joins back onto)
     # read the checkpointed token arrays — the per-n form re-ran
     # tokenize six times (five gram passes + the base frame)
-    base = docs.select(
-        "doc_id",
-        "source",
-        tokenize(F.col("text")).alias("toks"),
-    ).withColumn(
-        "tchars", F.expr("aggregate(toks, 0L, (a, x) -> a + length(x))")
-    ).localCheckpoint(eager=False)
+    base = pin(
+        docs.select(
+            "doc_id",
+            "source",
+            tokenize(F.col("text")).alias("toks"),
+        ).withColumn("tchars", F.expr("aggregate(toks, 0L, (a, x) -> a + length(x))"))
+    )
 
     # one explode per n over the CHECKPOINTED token arrays, unioned
     # with the family tag — no re-tokenize per family, and no concat()
@@ -3045,7 +3021,7 @@ def distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measurement, see _gram_array; the checkpointed-union form
     # measured fastest of the three: 1.275s vs 1.65s plain union vs
     # 2.45s concat, interleaved noop medians at sf0.1)
-    base = base.localCheckpoint(eager=False)
+    base = pin(base)
     per_n = [
         base.select(
             "source", F.lit(n).alias("n"), F.explode(_gram_array(n)).alias("g")
@@ -3175,9 +3151,9 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     langs = load_table(spark, "documents", sf_dir).select("doc_id", "lang")
-    sb = (
-        kn.join(langs, "doc_id")
-        .select(
+    # two consumers (sample histogram + full bucketing) — pin once
+    sb = pin(
+        kn.join(langs, "doc_id").select(
             "doc_id",
             "lang",
             F.least(
@@ -3190,8 +3166,6 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).alias("bin"),
         )
-        # two consumers (sample histogram + full bucketing) — pin once
-        .localCheckpoint(eager=False)
     )
     samp = sb.filter(
         md5_prefix_hash(

@@ -6,12 +6,20 @@ plan (scan of an RDD / checkpoint, no upstream parquet scan)."""
 
 from __future__ import annotations
 
+import ast
 import importlib
+import json
+import os
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
 from github_miner_spark.functions import pin as pin_mod
+from github_miner_spark.graph import algorithms as A
+from github_miner_spark.graph import paths as P
+from tests.conftest import SF_SMOKE
+from tests.gate_utils import only
 
 
 def _rows(df):
@@ -53,7 +61,7 @@ def _jobs_in_group(spark, group, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
 @pytest.fixture(params=["local", "reliable"])
@@ -89,4 +97,226 @@ def test_pin_counted_saves_the_count_job(spark, mechanism):
         lambda: pin_mod._checkpoint(frame(), eager=True).count(),
     )
     assert n == m == 500
-    assert counted_jobs <= two_step_jobs - 1
+    assert len(counted_jobs) <= len(two_step_jobs) - 1
+
+
+_MECHANISM_CALLS = {"localCheckpoint", "checkpoint", "cache", "persist"}
+
+
+def test_no_pin_mechanism_outside_pin_module():
+    """Every lineage cut goes through functions/pin.py, so the
+    mechanism (local or reliable checkpoint, never a CacheManager
+    persist) is chosen in one place. No allowlist."""
+    pkg = pathlib.Path(pin_mod.__file__).resolve().parents[1]
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pathlib.Path(pin_mod.__file__).resolve():
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _MECHANISM_CALLS
+            ):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno} {node.func.attr}")
+    assert offenders == []
+
+
+def _eager_pin_here(df):
+    return pin_mod.pin(df, eager=True)
+
+
+def test_eager_pin_job_is_named_after_its_caller(spark, mechanism):
+    """The checkpoint job's stages carry ``<mechanism> at
+    <module>.<function>``; the caller's call-site property is restored
+    afterwards."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("callSite.short", "outer")
+    try:
+        _, job_ids = _jobs_in_group(
+            spark, f"pin-name-{mechanism}",
+            lambda: _eager_pin_here(spark.range(40).repartition(2)),
+        )
+        assert sc.getLocalProperty("callSite.short") == "outer"
+    finally:
+        sc.setLocalProperty("callSite.short", None)
+    tracker = sc.statusTracker()
+    names = {
+        tracker.getStageInfo(s).name
+        for j in job_ids
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    }
+    method = "checkpoint" if mechanism == "reliable" else "localCheckpoint"
+    assert names == {f"{method} at {__name__}._eager_pin_here"}
+
+
+# --- the distributed loops under both mechanisms ------------------------
+
+_CYCLIC = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (5, 6), (7, 7), (8, 9)]
+_DAG = [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (2, 5), (6, 7)]
+
+
+def _edges(spark, pairs):
+    return spark.createDataFrame(pairs, "src bigint, dst bigint")
+
+
+def _nodes(pairs):
+    return sorted({v for e in pairs for v in e})
+
+
+def _case_cc(spark, tmp_path):
+    with only(connected_components="distributed"):
+        got = A.connected_components(_edges(spark, _CYCLIC)).collect()
+    want = A._union_find_components(_nodes(_CYCLIC), [e for e in _CYCLIC if e[0] != e[1]])
+    return sorted(map(tuple, got)), sorted(want.items())
+
+
+def _case_scc(spark, tmp_path):
+    with only(
+        strongly_connected_components="distributed",
+        scc_component="distributed",
+        connected_components="distributed",
+    ):
+        got = A.strongly_connected_components(_edges(spark, _CYCLIC)).collect()
+    want = A._tarjan_components([e for e in _CYCLIC if e[0] != e[1]], _nodes(_CYCLIC))
+    return sorted(map(tuple, got)), sorted(want.items())
+
+
+def _case_closure(spark, tmp_path):
+    with only(closure_path_counts="distributed"):
+        got = P.closure_path_counts(_edges(spark, _DAG), roots=[1, 6]).collect()
+    adj = {}
+    for a, b in _DAG:
+        adj.setdefault(a, []).append(b)
+    want = {}
+
+    def walk(root, node):
+        for nxt in adj.get(node, []):
+            want[(root, nxt)] = want.get((root, nxt), 0) + 1
+            walk(root, nxt)
+
+    for root in (1, 6):
+        walk(root, root)
+    return sorted(map(tuple, got)), sorted((r, n, c) for (r, n), c in want.items())
+
+
+def _case_insert(spark, tmp_path):
+    from github_miner_spark.etl.insert import run_insert_job
+    from tests.insert_reference import reference_batch
+
+    registry = [
+        {"name": "lodash", "dependencies": {"chalk": "^5.0.0"},
+         "devDependencies": None, "peerDependencies": None},
+        {"name": "chalk", "dependencies": {"ansi": "1.0.0"},
+         "devDependencies": {"jest": "^29.0.0"}, "peerDependencies": None},
+        {"name": "ansi", "dependencies": {"chalk": "^5.0.0"},
+         "devDependencies": None, "peerDependencies": None},
+    ]
+    npm = spark.createDataFrame(
+        [tuple(r.values()) for r in registry],
+        "name string, dependencies map<string,string>, "
+        "devDependencies map<string,string>, peerDependencies map<string,string>",
+    )
+    batch = [("alice", "app", {"name": "app", "dependencies": {"lodash": "^4.0.0"}})]
+    lake = tmp_path / "lake" / "alice" / "app"
+    lake.mkdir(parents=True)
+    (lake / "package.json").write_text(json.dumps(batch[0][2]))
+    vp, ep = str(tmp_path / "vertices"), str(tmp_path / "edges")
+    counts = [run_insert_job(spark, str(tmp_path / "lake"), npm, vp, ep) for _ in range(2)]
+    stored = {tuple(r) for r in spark.read.parquet(vp).select("id", "label", "name").collect()}
+    want_v, want_e = reference_batch(registry, batch)
+    want_counts = {"vertices": len(want_v), "edges": len(want_e)}
+    return (counts, stored), ([want_counts, want_counts], want_v)
+
+
+def _checkpoint_files(spark):
+    root = spark.sparkContext.getCheckpointDir()
+    if root is None:
+        return 0
+    return sum(len(files) for _, _, files in os.walk(root.removeprefix("file:")))
+
+
+@pytest.mark.parametrize("case", [_case_cc, _case_scc, _case_closure, _case_insert],
+                         ids=["connected_components", "strongly_connected_components",
+                              "closure_path_counts", "run_insert_job"])
+def test_distributed_loops_under_both_mechanisms(spark, mechanism, tmp_path, case):
+    """Each loop returns the reference rows under either mechanism, and
+    under the reliable one its pins land in the checkpoint dir."""
+    sc = spark.sparkContext
+    if mechanism == "reliable" and sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(pin_mod.CHECKPOINT_DIR)
+    before = _checkpoint_files(spark)
+    got, want = case(spark, tmp_path)
+    assert got == want
+    if mechanism == "reliable":
+        assert _checkpoint_files(spark) > before
+
+
+# --- job budgets of the collapsed probes --------------------------------
+
+
+def test_connected_components_counts_pairs_inside_the_pin_job(spark, monkeypatch):
+    """Before the first star-contraction round the distributed path runs
+    one action: the pairs pin, which also counts them, with the lazy
+    input pin riding inside it (AQE submits its shuffle map stage as a
+    job of its own, so two jobs). An eager input pin, the pairs pin, a
+    count and an emptiness probe ran five."""
+    sc = spark.sparkContext
+    group = "cc-pre-loop"
+    seen = []
+    real = P._loop_shuffle_partitions
+
+    def spy(*args, **kwargs):
+        seen.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(P, "_loop_shuffle_partitions", spy)
+    with only(connected_components="distributed"):
+        rows, _ = _jobs_in_group(
+            spark, group, lambda: A.connected_components(_edges(spark, _CYCLIC)).collect()
+        )
+    assert len(seen) == 1 and seen[0] <= 2
+    assert len({c for _, c in rows}) == 3
+
+
+def test_unigram_em_round_job_budget(spark, monkeypatch):
+    """One EM round's normalizer comes from the counts pin job: a round
+    runs 8 jobs here, 10 with a separate sum-and-collect (an aggregate
+    whose shuffle stage AQE submits as a job of its own)."""
+    from github_miner_spark.functions import unigram_store as U
+
+    def jobs_with(rounds):
+        monkeypatch.setattr(U, "EM_ROUNDS", rounds)
+        _, job_ids = _jobs_in_group(
+            spark, f"unigram-em-{rounds}", lambda: U.build_unigram_model(spark, SF_SMOKE)
+        )
+        return len(job_ids)
+
+    assert jobs_with(2) - jobs_with(1) <= 9
+
+
+def test_scc_peel_round_job_budget(spark, monkeypatch):
+    """The FW-BW peel round on one ~2k-vertex SCC (the graph of
+    test_distributed_scc_fwbw_coloring_on_single_giant_scc): the
+    emptiness and stability probes and the trim's edge count come from
+    the pin jobs, so the forced-distributed call runs 287 jobs here
+    (322 with separate probe jobs)."""
+    n = 2_000
+    base = spark.range(n)
+    edges = (
+        base.select(F.col("id").alias("src"), ((F.col("id") + 1) % n).alias("dst"))
+        .unionByName(base.select(F.col("id").alias("src"), ((F.col("id") * 3 + 7) % n).alias("dst")))
+        .localCheckpoint(eager=True)
+    )
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
+    with only(
+        strongly_connected_components="distributed",
+        scc_component="distributed",
+        connected_components="distributed",
+    ):
+        rows, jobs = _jobs_in_group(
+            spark, "scc-peel-round", lambda: A.strongly_connected_components(edges).collect()
+        )
+    assert len(rows) == n and len({c for _, c in rows}) == 1
+    assert len(jobs) <= 300
