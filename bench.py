@@ -270,10 +270,11 @@ CORE_LINE = [
 
 # Second lane (VERDICT r4 item 3): the iterative family re-timed with
 # SPARK_GRAFT_FORCE_DISTRIBUTED=1, which skips every driver rung of the
-# execution-path gate (github_miner_spark/gate.py) so the
-# DISTRIBUTED loops — the only code path that runs at 100 TB — have a
-# per-round timed floor next to the hybrid numbers, not just parity
-# tests.
+# execution-path gate (github_miner_spark/gate.py). No graph gate has
+# a driver rung any more, so the graph entries here time the same
+# executor-side task kernels as the main lane; only the corpus rank
+# gates (corpus_zipf_fit) reach their distributed path. The scaling
+# lane below empties ladders to time the distributed loops themselves.
 DISTRIBUTED_LANE = [
     "closure_counts_from_anchor",
     "pagerank_top20",
@@ -805,13 +806,13 @@ def main() -> None:
                             g, [ANCHOR_MODULE]
                         ).count(),
                     )
-                # no per_root_task opt-in: the windowed BFS loop
-                exponent(
-                    "closeness",
-                    lambda g: bfs_depths(
-                        g, roots=[ANCHOR_MODULE], broadcast_frontier=True
-                    ).count(),
-                )
+                with distributed_only("bfs_depths"):
+                    exponent(
+                        "closeness",
+                        lambda g: bfs_depths(
+                            g, roots=[ANCHOR_MODULE], broadcast_frontier=True
+                        ).count(),
+                    )
                 exponent(
                     "anf",
                     lambda g: _anf_distributed_reg_states(
@@ -844,13 +845,12 @@ def main() -> None:
         "distributed_lane": {
             "note": "SPARK_GRAFT_FORCE_DISTRIBUTED=1: every driver rung "
             "of github_miner_spark/gate.py:LIMITS skipped. Executor-side "
-            "task rungs (whole-core SCC, whole-graph CC union-find, "
-            "per-root path kernels) stay active here at bench SF, so for "
-            "the gates whose ladder is the task rung alone (CC, Louvain, "
-            "coreness, closure counts, ASP, simple paths, weighted SSSP) "
-            "the flag changes no path; the scaling lane pins the "
-            "distributed machinery itself by emptying those gates' "
-            "ladders (scc/CC/ASP entries)",
+            "task rungs (whole-input SCC, whole-graph CC union-find, "
+            "the path and centrality kernels) stay active here at bench "
+            "SF, and every graph gate with a task twin has the task rung "
+            "alone, so for those the flag changes no path; the scaling "
+            "lane pins the distributed machinery itself by emptying "
+            "those gates' ladders",
             "queries": dist_timings,
             "spreads": {n: _spread(ts) for n, ts in dist_samples.items()},
             "samples": dist_samples,

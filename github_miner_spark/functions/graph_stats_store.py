@@ -69,12 +69,7 @@ def build_anchor_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     depths = pin(
-        bfs_depths(
-            e,
-            roots=anchors,
-            broadcast_frontier=True,
-            per_root_task=True,
-        )
+        bfs_depths(e, roots=anchors, broadcast_frontier=True)
         .filter(F.col("depth") <= ANF_HOPS),
         eager=True,
     )

@@ -30,16 +30,6 @@ from pyspark.sql import functions as F
 from github_miner_spark.functions.pin import pin, pin_counted, pin_observed
 from github_miner_spark.gate import LIMITS, choose_path
 
-# Cap on the per-root task kernels' replication volume (|roots| x E
-# rows). The kernels replicate the edge list once per root through a
-# single shuffle — the broadcast join's copies-per-task analog — and
-# that is only a win while the total replicated row count stays in
-# ordinary-shuffle territory. 512M rows of (src, dst, root) bigints is
-# ~12 GB of shuffle cluster-wide: routine for any real cluster, while
-# still rejecting the all-vertices-as-roots blow-up (|V| x E) that the
-# exact-betweenness contract would otherwise send down this path.
-ROOT_REPLICATION_BUDGET = 512_000_000
-
 
 def _vertex_ids(edges: DataFrame) -> DataFrame:
     return (
@@ -403,17 +393,29 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
 
 
 def _tarjan_component_group(pdf):
-    """applyInPandas kernel: one weakly-connected component's edge list
-    arrives as a pandas frame (src, dst[, wcc]); iterative Tarjan labels
-    it task-locally. Runs INSIDE an executor task — no driver collect,
-    memory bounded by the scc_component gate the caller checks."""
+    """applyInPandas kernel: an edge list arrives as a pandas frame
+    (src, dst[, wcc]) and iterative Tarjan labels every endpoint
+    task-locally. Self-loop pairs are dropped before Tarjan, so a
+    vertex with only a self-loop is its own component. Runs INSIDE an
+    executor task — no driver collect, memory bounded by the gate the
+    caller checks."""
     import pandas as pd
 
     pairs = list(zip(pdf["src"].astype(int), pdf["dst"].astype(int)))
     nodes = sorted({v for p in pairs for v in p})
-    comp = _tarjan_components(pairs, nodes)
+    comp = _tarjan_components([(a, b) for a, b in pairs if a != b], nodes)
     return pd.DataFrame(
         {"id": list(comp.keys()), "component": list(comp.values())}
+    )
+
+
+def _tarjan_task(edges: DataFrame) -> DataFrame:
+    """(id, component) for every endpoint of ``edges``: the whole edge
+    set as ONE ``_tarjan_component_group`` task."""
+    return (
+        edges.withColumn("g", F.lit(1))
+        .groupBy("g")
+        .applyInPandas(_tarjan_component_group, "id bigint, component bigint")
     )
 
 
@@ -489,19 +491,14 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
          too-big graph, and a graph that already fits one executor
          task goes straight to the WCC split instead of paying
          O(fringe depth) peeling barriers.
-      1a. If the core is small (the ``strongly_connected_components``
-         gate's driver rung — the usual outcome: the reference's real
-         corpus has max SCC size 9), finish with iterative Tarjan on
-         the driver. A 100 TB near-DAG trims to a core that fits
-         comfortably in driver memory; paying 30+ distributed rounds
-         of driver-loop latency to color a few thousand nodes is the
-         wrong trade.
-      1b'. If the whole core fits ONE executor task (the same gate's
-         task rung), skip the WCC split and label the core
-         task-locally as a single applyInPandas group — the split's
-         only job is carving a too-big core into task-sized pieces,
-         and its star-contraction barriers were the dominant
-         distributed-floor cost at bench SF.
+      1a. If the deduped edge set, or else the trimmed core, fits ONE
+         executor task (the ``strongly_connected_components`` gate —
+         the usual outcome: the reference's real corpus has max SCC
+         size 9), label it task-locally with iterative Tarjan as a
+         single applyInPandas group: no driver collect, no WCC split
+         barriers. A 100 TB near-DAG trims to a core that fits one
+         task; paying 30+ distributed rounds of driver-loop latency to
+         color a few thousand nodes is the wrong trade.
       1b. Otherwise, split the core by WEAKLY-connected component
          (star contraction, O(log^2 n) rounds; every SCC is inside one
          WCC), shuffle the edges BY COMPONENT, and label each component
@@ -515,6 +512,7 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
          forward min-coloring (with pointer jumping) to fixpoint +
          backward pruning + FW-BW-Trim re-trim per round, fully
          distributed — the path for a genuinely huge entangled core.
+         Once a peeled core fits one task, 1a finishes it.
 
     Returns (id, component) with component = min member id.
 
@@ -543,22 +541,14 @@ def strongly_connected_components(edges: DataFrame, max_iter: int = 200) -> Data
 
 def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
     gate = "strongly_connected_components"
-    # Fast path: if the WHOLE deduped edge set already fits the driver
-    # rung, the distributed trim is pure barrier latency — its only
-    # job is to shrink a too-big-to-collect graph down to a
-    # collectable cyclic core. One collect supplies the edge list and
-    # the vertex universe (incl. self-loop-only vertices) for driver
-    # Tarjan (~5s -> <2s at sf0.1; at 100 TB the count is past the
-    # rung and the trim path below engages unchanged).
-    if choose_path(gate, n_edges) == "driver":
-        rows = dedup.collect()
-        nodes = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
-        comp = _tarjan_components(
-            [(r["src"], r["dst"]) for r in rows if r["src"] != r["dst"]], nodes
-        )
-        return dedup.sparkSession.createDataFrame(
-            list(comp.items()), "id bigint, component bigint"
-        )
+    # Whole-input task: if the deduped edge set fits one executor task,
+    # the distributed trim and the WCC split are pure barrier latency —
+    # their only job is carving a too-big graph into task-sized pieces.
+    # The kernel takes the vertex universe from the edge endpoints, so
+    # self-loop-only vertices come back as singletons (at 100 TB the
+    # count is past the rung and the trim path below engages).
+    if choose_path(gate, n_edges) == "task":
+        return _tarjan_task(dedup)
 
     remaining_edges, core_edge_count = pin_counted(dedup.filter(F.col("src") != F.col("dst")))
     all_verts = pin(_vertex_ids(dedup), eager=True)
@@ -621,7 +611,7 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
     # graphs are mostly acyclic) this removes almost everything in
     # O(depth) rounds of one degree-flags-derived edge checkpoint each,
     # leaving only the cyclic core. Trim's ONLY job is shrinking a
-    # too-big graph below the task/driver rungs, so when the
+    # too-big graph below the task rungs, so when the
     # whole deduped edge set ALREADY fits one executor task the
     # O(fringe depth) peeling barriers buy nothing — phase 1's WCC
     # split labels the untrimmed graph task-locally either way. Past
@@ -637,51 +627,18 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
         pin(singletons.select("id", F.col("id").alias("component")), eager=True)
     )
 
-    path = choose_path(gate, core_edge_count)
-    if path == "driver":
+    # Whole-core task (VERDICT r7 item 2): when the ENTIRE cyclic core
+    # fits one executor task, the WCC split below buys nothing — its
+    # star-contraction rounds were the dominant cost of the distributed
+    # floor (~7s of ~11s at bench SF, all barrier latency on a 31k-edge
+    # core). Emptying the gate's rung disables this shortcut alone (the
+    # scaling lane's pin: WCC split + per-WCC kernels stay timed); a
+    # core past the rung takes the WCC split unchanged — the 100 TB
+    # path.
+    if choose_path(gate, core_edge_count) == "task":
         if core_edge_count > 0:
-            comp = _tarjan_components(
-                [(r["src"], r["dst"]) for r in remaining_edges.collect()],
-                [r["id"] for r in remaining_verts.collect()],
-            )
-            spark = dedup.sparkSession
-            assigned_parts.append(
-                spark.createDataFrame(
-                    list(comp.items()), "id bigint, component bigint"
-                )
-            )
-        out = assigned_parts[0]
-        for part in assigned_parts[1:]:
-            out = out.unionByName(part)
-        return out
-
-    # Whole-core task shortcut (VERDICT r7 item 2): when the ENTIRE
-    # cyclic core fits one executor task, the WCC split below buys
-    # nothing — its only job is carving a too-big-for-one-task core
-    # into task-sized groups, and its star-contraction rounds were
-    # the dominant cost of the distributed floor (~7s of ~11s at
-    # bench SF, all barrier latency on a 31k-edge core). Run the
-    # per-component Tarjan kernel on the core as ONE group instead:
-    # executor-side compute with the same per-task memory budget the
-    # per-WCC path already accepts, so the force flag leaves it on
-    # (the established task-kernel precedent). Emptying the gate's
-    # task rung disables the shortcut alone (the scaling lane's pin:
-    # WCC split + per-WCC kernels stay timed); a core past the rung
-    # takes the WCC split unchanged — the 100 TB path.
-    if path == "task":
-        if core_edge_count > 0:
-            scc_core = (
-                remaining_edges.withColumn("g", F.lit(1))
-                .groupBy("g")
-                .applyInPandas(
-                    _tarjan_component_group, "id bigint, component bigint"
-                )
-            )
-            assigned_parts.append(scc_core)
-        out = assigned_parts[0]
-        for part in assigned_parts[1:]:
-            out = out.unionByName(part)
-        return out
+            assigned_parts.append(_tarjan_task(remaining_edges))
+        return reduce(DataFrame.unionByName, assigned_parts)
 
     # Phase 1: split the cyclic core by WEAKLY-connected component
     # (every SCC is inside one WCC) and finish each component where it
@@ -722,10 +679,7 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
     )
     assigned_parts.append(scc_small)
     if n_big == 0:
-        out = assigned_parts[0]
-        for part in assigned_parts[1:]:
-            out = out.unionByName(part)
-        return out
+        return reduce(DataFrame.unionByName, assigned_parts)
     remaining_edges = pin(
         edges_w.join(big_ids, ["wcc"], "left_semi").select("src", "dst"), eager=True
     )
@@ -810,7 +764,7 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
         # paying another full coloring fixpoint — this is what bounds
         # the outer round count by the SCC-condensation depth rather
         # than the number of color classes. The shrunken core then
-        # re-checks the driver-Tarjan rung.
+        # re-checks the whole-core task rung.
         prev_remaining = pin(remaining_verts.join(scc, ["id"], "left_anti"), eager=True)
         scc_ids = scc.select("id")
         remaining_edges, core_edge_count = pin_counted(
@@ -824,19 +778,10 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
         assigned_parts.append(
             pin(peeled.select("id", F.col("id").alias("component")), eager=True)
         )
-        if choose_path(gate, core_edge_count) == "driver":
+        if choose_path(gate, core_edge_count) == "task":
             if core_edge_count > 0:
-                comp = _tarjan_components(
-                    [(r["src"], r["dst"]) for r in remaining_edges.collect()],
-                    [r["id"] for r in remaining_verts.collect()],
-                )
-                spark = dedup.sparkSession
-                assigned_parts.append(
-                    spark.createDataFrame(
-                        list(comp.items()), "id bigint, component bigint"
-                    )
-                )
-                n_verts = 0
+                assigned_parts.append(_tarjan_task(remaining_edges))
+            n_verts = 0
             break
 
     if n_verts:
@@ -844,13 +789,7 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
             f"SCC decomposition still has unassigned vertices after {max_iter} "
             "peel rounds — refusing to return a partial labeling; raise max_iter"
         )
-    if not assigned_parts:
-        spark = dedup.sparkSession
-        return spark.createDataFrame([], "id bigint, component bigint")
-    out = assigned_parts[0]
-    for part in assigned_parts[1:]:
-        out = out.unionByName(part)
-    return out
+    return reduce(DataFrame.unionByName, assigned_parts)
 
 
 def _symmetrize_weighted(edges: DataFrame) -> DataFrame:
@@ -1535,9 +1474,8 @@ def _brandes_betweenness(
     sources s and targets t of sigma_st(v)/sigma_st. Parallel edges
     count as distinct shortest paths (multigraph semantics), matching
     the enumeration oracle and the distributed loop, neither of which
-    dedups the edge multiset. Used only on the driver rung —
-    the driver twin the property tests pin the distributed path
-    against."""
+    dedups the edge multiset. The task kernel runs it over every root;
+    the tests pin the distributed path against it."""
     from collections import defaultdict, deque
 
     adj: dict[int, list[int]] = defaultdict(list)
@@ -1604,25 +1542,22 @@ def _brandes_backward_group(pdf):
     )
 
 
-def _brandes_root_group(pdf):
-    """applyInPandas kernel: ONE root's replicated edge list arrives as
-    a pandas frame (root, src, dst) and the complete single-root
-    Brandes (forward sigma-BFS + backward accumulation) runs
-    task-locally by calling the SAME ``_brandes_betweenness`` twin the
-    property tests pin — distributed-vs-driver parity by construction.
-    Executor-side (no driver collect); memory bounded by the edge-count
-    gate the caller checks."""
-    import pandas as pd
+def _brandes_group_factory(roots: list[int]):
+    """Build the applyInPandas kernel for task-local betweenness: the
+    whole edge list arrives as one group and the SAME
+    ``_brandes_betweenness`` twin runs every sampled root inside the
+    executor task — no driver collect, no sweep barriers."""
 
-    root = int(pdf["root"].iloc[0])
-    pairs = list(zip(pdf["src"].astype(int), pdf["dst"].astype(int)))
-    bc = _brandes_betweenness(pairs, [root])
-    return pd.DataFrame(
-        {
-            "node": list(bc.keys()),
-            "delta": [float(v) for v in bc.values()],
-        }
-    )
+    def _brandes_group(pdf):
+        import pandas as pd
+
+        pairs = list(zip(pdf["src"].astype(int), pdf["dst"].astype(int)))
+        bc = _brandes_betweenness(pairs, roots)
+        return pd.DataFrame(
+            {"id": list(bc.keys()), "betweenness": [float(v) for v in bc.values()]}
+        )
+
+    return _brandes_group
 
 
 def betweenness_centrality(
@@ -1667,9 +1602,10 @@ def betweenness_centrality(
     width) ride broadcast joins so only the per-level groupBy
     shuffles — right for anchored/sampled probes, wrong for
     all-sources runs.
-    Under the ``betweenness_centrality`` gate the slice collects and
-    exact in-driver Brandes runs — the same hybrid policy as SCC's
-    driver-Tarjan; parity between the two paths is property-tested.
+    Under the ``betweenness_centrality`` gate the whole edge set goes
+    to ONE executor task, which runs exact Brandes for every root —
+    the same hybrid policy as SCC's whole-core Tarjan task; parity
+    between the two paths is property-tested.
     RAISES if either sweep exceeds ``max_iter`` rounds rather than
     returning truncated centralities.
     """
@@ -1680,59 +1616,28 @@ def betweenness_centrality(
 
     spark = edges.sparkSession
     # dedup at entry: a repeated sampled source contributes ONCE on
-    # every path (the task kernel's groupBy and the distributed sweeps
-    # both merge duplicates; the driver twin iterates the list, so
-    # without this it would be the odd one out and the gate would leak)
+    # every path (the distributed sweeps merge duplicates; the twin
+    # iterates the list, so without this the gate would leak)
     roots = sorted({int(r) for r in roots})
     out_schema = "id bigint, betweenness double"
     if not roots:
         return spark.createDataFrame([], out_schema)
     # One lineage traversal (the SCC discipline): checkpoint the edge
-    # projection first (the same job counts it), then collect the
-    # checkpoint — never re-run the input derivation.
+    # projection first (the same job counts it); the kernel and the
+    # sweeps read the checkpoint — never re-run the input derivation.
     edges, n_edges = pin_counted(edges.select("src", "dst"))
-    path = choose_path("betweenness_centrality", n_edges)
-    if path == "driver":
-        rows = [(r["src"], r["dst"]) for r in edges.collect()]
-        bc = _brandes_betweenness(rows, roots)
-        return spark.createDataFrame(
-            [(k, float(v)) for k, v in bc.items()], out_schema
+    # Task-local path: an edge set that fits one executor task runs
+    # every root's Brandes in ONE applyInPandas group — no driver
+    # collect, none of the O(diameter) sweep barriers. Beyond the gate
+    # the windowed level-synchronous sweeps below take over (exact at
+    # any size, parity property-tested).
+    if choose_path("betweenness_centrality", n_edges) == "task":
+        return (
+            edges.withColumn("g", F.lit(1))
+            .groupBy("g")
+            .applyInPandas(_brandes_group_factory(roots), out_schema)
         )
     root_df = spark.createDataFrame([(r,) for r in roots], "root bigint")
-    # ---- per-root task-local path ------------------------------------
-    # When the edge set fits an executor task, each sampled root's
-    # ENTIRE Brandes run is one applyInPandas group (the SCC task-local
-    # Tarjan pattern): replicate the checkpointed edge list per root
-    # with a broadcast cross join (|roots| is a broadcast-sized sample
-    # by contract, so replication volume is |roots| x E rows, shuffled
-    # once), run the pinned driver twin inside the task, sum. Three
-    # stages total instead of O(diameter) sequential barriers —
-    # measured 7.6-8.8s -> ~1.5s at sf0.1 forced-distributed. No
-    # driver collect anywhere, so this IS a 100 TB code path for any
-    # graph whose edge set fits task memory; beyond the gate the
-    # windowed level-synchronous sweeps below take over (exact at any
-    # size, parity property-tested against this path and the driver).
-    # The ROOT SET must also be bounded for this path to be the
-    # broadcast-join analog it claims: the docstring blesses roots =
-    # every vertex (exact betweenness), and replicating |V| x E rows
-    # for a large V would be the all-pairs blow-up, not a broadcast.
-    # The binding quantity is the replication volume |roots| x E (the
-    # broadcast join's build-side-copies analog), so gate on that
-    # product rather than a flat root cap — a flat cap would reject
-    # legitimate wide-sample/small-graph calls that replicate less
-    # than a narrow sample over a gate-sized graph. Oversized calls
-    # fall through to the windowed level-synchronous sweeps, whose
-    # per-level state is frontier-sized at any |roots|.
-    if path == "task" and len(roots) * max(n_edges, 1) <= ROOT_REPLICATION_BUDGET:
-        rep = edges.crossJoin(F.broadcast(root_df))
-        deltas = rep.groupBy("root").applyInPandas(
-            _brandes_root_group, schema="node bigint, delta double"
-        )
-        return (
-            deltas.groupBy("node")
-            .agg(F.sum("delta").alias("betweenness"))
-            .select(F.col("node").alias("id"), "betweenness")
-        )
     with _loop_shuffle_partitions(
         spark, enabled=True, width=_adaptive_loop_width(spark, n_edges), aqe_off=True
     ):

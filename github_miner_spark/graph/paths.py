@@ -143,8 +143,8 @@ def _adaptive_loop_width(spark, n_rows: int) -> int:
 
 
 # Root-count cap for the anchored-closure fast paths: only an explicit
-# root set this small is collected and handed to a driver or task twin
-# (the edge-count rungs are the ``gate.LIMITS`` entries).
+# root set this small is collected and handed to a task twin (the
+# edge-count rungs are the ``gate.LIMITS`` entries).
 DRIVER_CLOSURE_ROOTS = 128
 
 # The closure DP twin's refusal on a reachable cycle; the task path
@@ -417,18 +417,17 @@ def _bfs_in_driver(
     return out
 
 
-def _bfs_root_group_factory(max_iter: int):
-    """Build the applyInPandas kernel for per-root task-local BFS: one
-    root's replicated edge list arrives as (root, src, dst) and the
-    SAME ``_bfs_in_driver`` twin the parity tests pin runs inside the
-    executor task — no driver collect, no per-level barriers."""
+def _bfs_group_factory(roots: list[int], max_iter: int):
+    """Build the applyInPandas kernel for task-local BFS: the whole
+    edge list arrives as one group and the SAME ``_bfs_in_driver`` twin
+    the parity tests pin runs every root inside the executor task — no
+    driver collect, no per-level barriers."""
 
-    def _bfs_root_group(pdf):
+    def _bfs_group(pdf):
         import pandas as pd
 
-        root = int(pdf["root"].iloc[0])
         pairs = list(zip(pdf["src"].astype(int), pdf["dst"].astype(int)))
-        rows = _bfs_in_driver(pairs, [root], max_iter)
+        rows = _bfs_in_driver(pairs, roots, max_iter)
         return pd.DataFrame(
             {
                 "root": [r for r, _n, _d in rows],
@@ -437,7 +436,7 @@ def _bfs_root_group_factory(max_iter: int):
             }
         )
 
-    return _bfs_root_group
+    return _bfs_group
 
 
 def bfs_depths(
@@ -446,7 +445,6 @@ def bfs_depths(
     max_iter: int = 1000,
     until: int | None = None,
     broadcast_frontier: bool = False,
-    per_root_task: bool = False,
 ) -> DataFrame:
     """Min-depth BFS: (root, node, depth) with the smallest hop count
     root ->* node (depth >= 1). Cycle-safe via per-root visited sets.
@@ -455,6 +453,13 @@ def bfs_depths(
     set/list, ALL of these ids) has been reached — min depth is
     already final when a node first enters the frontier, so
     point-to-point searches cost O(dist) rounds, not O(diameter).
+
+    Hybrid execution: with a small root set (<=
+    ``DRIVER_CLOSURE_ROOTS``, given as ids or as a frame) and an edge
+    set within the ``bfs_depths`` gate, every root's BFS runs in ONE
+    executor task and returns the FULL min-depth map — a superset of
+    the until-early-stopped distributed output, which the ``until``
+    callers (all_shortest_paths*) filter identically either way.
 
     The distributed loop barriers every ``BFS_CHECKPOINT_EVERY``
     levels: like closure_path_counts, levels inside a window stay LAZY
@@ -465,55 +470,27 @@ def bfs_depths(
     exact: every discovery path produces a row and the minimum
     survives. Intra-window row growth is bounded by branching^window
     (the price of 1 barrier per window instead of 3 per level —
-    measured 3x faster on the sf0.1 DAG probes).
-
-    ``per_root_task``: opt in to the ``bfs_depths`` gate's task rung —
-    for callers whose root sample is small and whose edge set is
-    scan-backed; internal sweeps leave it off."""
+    measured 3x faster on the sf0.1 DAG probes)."""
     spark = edges.sparkSession
     edges = edges.select("src", "dst")
-    skip = () if per_root_task else ("task",)
-    cheapest = choose_path("bfs_depths", 0, skip)
-    # fast paths (same gate shape as closure_path_counts): a small
-    # explicit root set over a collectable edge slice runs the BFS
-    # in-driver, or per root inside one executor task, and returns the
-    # FULL min-depth map — a superset of the until-early-stopped
-    # distributed output, which internal callers
-    # (all_shortest_paths_multi) filter identically either way
-    if roots is not None and cheapest != "distributed":
+    if roots is not None and choose_path("bfs_depths", 0) != "distributed":
         if isinstance(roots, DataFrame):
             roots = _small_root_list(roots)
         else:
-            roots = [int(r) for r in roots]
+            roots = sorted({int(r) for r in roots})
         if not isinstance(roots, DataFrame) and len(roots) <= DRIVER_CLOSURE_ROOTS:
-            # ONE materialization shared by the gate count, both fast
-            # paths and the loop (the closure discipline): the count
+            # ONE materialization shared by the gate count, the task
+            # kernel and the loop (the closure discipline): the count
             # is observed by the checkpoint job, never a second job
             edges, n_edges = pin_counted(edges)
-            path = choose_path("bfs_depths", n_edges, skip)
-            if path == "driver":
-                rows = [(r["src"], r["dst"]) for r in edges.collect()]
-                out = _bfs_in_driver(rows, roots, max_iter)
-                return spark.createDataFrame(
-                    out or [], "root bigint, node bigint, depth int"
-                )
-            # ---- per-root task-local path (opt-in) ---------------------
-            # The betweenness per-root pattern applied to plain min-depth
-            # BFS: replicate the checkpointed edges per root (broadcast
-            # cross join) and run the pinned in-driver BFS twin INSIDE
-            # the task — 3 stages instead of O(diameter/window)
-            # sequential barriers, no driver collect. Beyond the gate,
-            # the windowed level-synchronous loop below is the at-scale
-            # path.
-            if path == "task":
-                root_df = spark.createDataFrame(
-                    [(int(r),) for r in roots], "root bigint"
-                )
-                return edges.crossJoin(F.broadcast(root_df)).groupBy(
-                    "root"
-                ).applyInPandas(
-                    _bfs_root_group_factory(max_iter),
-                    schema="root bigint, node bigint, depth int",
+            if choose_path("bfs_depths", n_edges) == "task":
+                return (
+                    edges.withColumn("g", F.lit(1))
+                    .groupBy("g")
+                    .applyInPandas(
+                        _bfs_group_factory(roots, max_iter),
+                        schema="root bigint, node bigint, depth int",
+                    )
                 )
     root_df = _as_root_df(edges, roots)
     until_set: set[int] | None = None
@@ -1136,40 +1113,26 @@ def weighted_sssp(
     """
     spark = edges.sparkSession
     edges = edges.select("src", "dst", F.col(weight_col).alias("w"))
-    # Checkpoint the edge projection ONLY when a rung can actually
-    # fire: evaluating the gate needs an edge count, and the count +
-    # collect/kernel + (past-the-gate) loop then all reuse the one
-    # materialization — the SCC/betweenness discipline. When no rung
-    # is on (forced-distributed lane with the task rung emptied), skip
-    # the eager localCheckpoint entirely: materializing a corpus-sized
-    # edge set to executor local disk up front costs a full extra
-    # write AND loses fault tolerance (localCheckpoint output dies
-    # with its executor) — the Bellman-Ford loop below recomputes the
-    # projection from source lineage per round instead, Spark's
-    # ordinary fault-tolerant pattern (ADVICE r7).
+    # ONE materialization shared by the gate count, the kernel and
+    # the Bellman-Ford rounds (the SCC/betweenness discipline): the
+    # caller's edge plan runs once, never once per round.
     #
     # Dijkstra's precondition, checked on both paths: Bellman-Ford
     # min-merge CONVERGES on negative weights (it just stops
     # improving), and the task twin's own check would only fail the
     # job at action time — the minimum weight raises here instead,
     # before either path is built. The pin job observes it along with
-    # the count; without a pin it costs one scalar aggregate job.
-    path = "distributed"
-    if choose_path("weighted_sssp", 0) != "distributed":
-        edges, seen = pin_observed(edges, m=F.min("w"))
-        path = choose_path("weighted_sssp", seen["n"])
-        wmin = seen["m"]
-    else:
-        wmin = edges.agg(F.min("w").alias("m")).collect()[0]["m"]
-    if wmin is not None and wmin < 0:
+    # the count.
+    edges, seen = pin_observed(edges, m=F.min("w"))
+    if seen["m"] is not None and seen["m"] < 0:
         raise ValueError("weighted_sssp requires non-negative weights")
-    # per-root task-local path (the betweenness/BFS pattern): a single
-    # root needs no replication at all — tag the checkpointed edge list
-    # with the root and run the pinned heap-Dijkstra twin inside ONE
-    # applyInPandas task. No driver collect, zero relaxation barriers;
-    # past the gate the Bellman-Ford loop below is the at-scale path
-    # (exact at any size, parity property-tested).
-    if path == "task":
+    # task-local path (the betweenness/BFS pattern): tag the
+    # checkpointed edge list with the root and run the pinned
+    # heap-Dijkstra twin inside ONE applyInPandas task. No driver
+    # collect, zero relaxation barriers; past the gate the Bellman-Ford
+    # loop below is the at-scale path (exact at any size, parity
+    # property-tested).
+    if choose_path("weighted_sssp", seen["n"]) == "task":
         return (
             edges.withColumn("root", F.lit(int(root)))
             .groupBy("root")

@@ -1206,13 +1206,7 @@ def closeness_centrality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["src"]
         for r in mm.filter(F.col("src") < 200).select("src").distinct().collect()
     )
-    # per_root_task: the scan-backed module edge set fits an executor
-    # task at any bench SF, so each sampled root's BFS runs
-    # task-locally (3 stages, no per-level barriers); past the gate
-    # bfs_depths falls back to its windowed loop
-    depths = bfs_depths(
-        mm, roots=roots, broadcast_frontier=True, per_root_task=True
-    )
+    depths = bfs_depths(mm, roots=roots, broadcast_frontier=True)
     return (
         depths.groupBy("root")
         .agg(

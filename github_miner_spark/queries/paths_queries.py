@@ -106,16 +106,8 @@ def closure_per_root(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bfs_depth_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = load_graph(spark, sf_dir)
-    # per_root_task (VERDICT r7 item 6): the anchored probe over the
-    # scan-backed module edge set fits an executor task at any bench
-    # SF, so the BFS runs task-locally (3 stages, no per-level
-    # barriers) — the closeness opt-in, applied family-wide; past the
-    # gate bfs_depths falls back to its windowed loop unchanged
     depths = bfs_depths(
-        g.module_dep_edges(),
-        roots=[ANCHOR_MODULE],
-        broadcast_frontier=True,
-        per_root_task=True,
+        g.module_dep_edges(), roots=[ANCHOR_MODULE], broadcast_frontier=True
     )
     return depths.select("node", "depth").orderBy("node")
 
@@ -143,13 +135,7 @@ def depth_extremes_per_root(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = load_graph(spark, sf_dir)
     mm = g.module_dep_edges()
     roots = mm.filter(F.col("src") < 200).select(F.col("src").alias("root")).distinct()
-    # per-root task opt-in (VERDICT r7 item 6): bfs_depths collapses
-    # the DataFrame root set to an explicit list when it is
-    # broadcast-sized, then runs each root's BFS inside one
-    # applyInPandas task — the closeness floor cut, applied here
-    depths = bfs_depths(
-        mm, roots=roots, broadcast_frontier=True, per_root_task=True
-    )
+    depths = bfs_depths(mm, roots=roots, broadcast_frontier=True)
     return (
         depths.groupBy("root")
         .agg(
@@ -307,11 +293,7 @@ def harmonic_centrality_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = load_graph(spark, sf_dir)
     mm = g.module_dep_edges()
     roots = mm.filter(F.col("src") < 200).select(F.col("src").alias("root")).distinct()
-    # per-root task opt-in (VERDICT r7 item 6): same floor cut as
-    # closeness — the root set is broadcast-sized by construction
-    depths = bfs_depths(
-        mm, roots=roots, broadcast_frontier=True, per_root_task=True
-    )
+    depths = bfs_depths(mm, roots=roots, broadcast_frontier=True)
     h = F.round(F.sum(1.0 / F.col("depth")), 6)
     return (
         depths.groupBy("root")

@@ -35,6 +35,14 @@ sf0.01 locally would survive a 1000-executor cluster at 100 TB:
   211-221 MB), no growth of the heap after GC. The cache is one per JVM
   and its size a static conf, so it holds only if this session starts
   the SparkContext.
+- Reliable checkpoints cleaned up with their RDD
+  (``spark.cleaner.referenceTracking.cleanCheckpoints=true``): under
+  ``SPARK_GRAFT_RELIABLE_PIN=1`` every pin writes a checkpoint dir,
+  and with Spark's default (off) nothing ever removes one, so one
+  oracle sweep left 730 files (9.9 MB) behind. With it on, Spark's
+  context cleaner deletes a pin's files once the JVM collects the
+  pinned RDD. Like the codegen cache it is read when the SparkContext
+  starts.
 """
 
 from __future__ import annotations
@@ -79,6 +87,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # the events table stores parquet TIMESTAMP(NANOS); read as long
         # and convert (see io.tables) — Spark has no ns timestamp type
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -198,15 +198,9 @@ def test_scc_distributed_path_matches_hybrid(spark):
         ],
         "src bigint, dst bigint",
     )
+    # the default ladder: the whole-input Tarjan task
     hybrid = {(r["id"], r["component"]) for r in strongly_connected_components(edges).collect()}
-    # driver rung off: the whole-core task kernel
-    with only(strongly_connected_components="task"):
-        distributed = {
-            (r["id"], r["component"])
-            for r in strongly_connected_components(edges).collect()
-        }
-    assert hybrid == distributed
-    # third path: every SCC and WCC rung off, the per-WCC task-local
+    # second path: every SCC and WCC rung off, the per-WCC task-local
     # Tarjan finish included, forcing the full FW-BW coloring loop
     with only(
         strongly_connected_components="distributed",
@@ -218,7 +212,7 @@ def test_scc_distributed_path_matches_hybrid(spark):
             for r in strongly_connected_components(edges).collect()
         }
     assert hybrid == colored
-    # fourth path: the single-group shortcut off — WCC star-contraction
+    # third path: the single-group shortcuts off — WCC star-contraction
     # split + per-WCC task kernels (the scaling lane's configuration)
     with only(
         strongly_connected_components="distributed",
@@ -362,13 +356,14 @@ def test_label_propagation_driver_matches_distributed_sf001(spark):
     assert fast == slow and len(fast) > 0
 
 
-def test_distributed_scc_huge_cyclic_core(spark, monkeypatch):
-    """Adversarial scale for the Orzan path (round 5): a ~20k-vertex /
+def test_distributed_scc_huge_cyclic_core(spark):
+    """Adversarial scale for the WCC split (round 5): a ~20k-vertex /
     ~60k-edge graph built from three affine maps i -> a*i+c mod n is
-    one giant low-diameter SCC plus fringe — the trim removes nothing,
-    so the forced-distributed run exercises forward coloring + backward
-    pruning + re-trim end to end on a core the driver gate never sees.
-    Must match driver Tarjan exactly."""
+    one giant low-diameter SCC — the trim removes nothing. With the
+    whole-input rung off, the second run takes the distributed path:
+    the WCC split, then the per-component Tarjan kernel on the one
+    60k-edge component. Must match the whole-input Tarjan task
+    exactly."""
     from github_miner_spark.graph.algorithms import strongly_connected_components
 
     n = 20_000
@@ -383,9 +378,9 @@ def test_distributed_scc_huge_cyclic_core(spark, monkeypatch):
 
     fast = strongly_connected_components(edges)
     fast_rows = sorted(map(tuple, fast.collect()))
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-    slow = strongly_connected_components(edges)
-    slow_rows = sorted(map(tuple, slow.collect()))
+    with only(strongly_connected_components="distributed"):
+        slow = strongly_connected_components(edges)
+        slow_rows = sorted(map(tuple, slow.collect()))
     assert fast_rows == slow_rows
     # the affine maps are permutations (gcd(a, n) = 1), so every vertex
     # lies on a cycle: one giant component expected
@@ -397,8 +392,8 @@ def test_distributed_scc_fwbw_coloring_on_single_giant_scc(spark, monkeypatch):
     """The FW-BW coloring loop (the path past the scc_component gate) on
     a single ~2k-vertex SCC whose WCC split cannot help: forced gates +
     every SCC/WCC task rung off exercises forward coloring with pointer
-    jumping, backward pruning, and re-trim end to end. Must match
-    driver Tarjan exactly."""
+    jumping, backward pruning, and re-trim end to end. Must match the
+    whole-input Tarjan task exactly."""
     from github_miner_spark.graph.algorithms import strongly_connected_components
 
     n = 2_000
@@ -498,8 +493,9 @@ def test_betweenness_driver_twin_matches_enumeration_reference():
 
 
 def test_betweenness_distributed_matches_driver(spark):
-    """Hybrid gate invisible: forced-distributed Brandes sweeps equal
-    the in-driver twin on cyclic + multi-edge + diamond shapes."""
+    """Hybrid gate invisible: the task kernel and the distributed
+    Brandes sweeps equal the Python twin on cyclic + multi-edge +
+    diamond shapes."""
     from github_miner_spark.graph.algorithms import (
         _brandes_betweenness,
         betweenness_centrality,
@@ -514,42 +510,36 @@ def test_betweenness_distributed_matches_driver(spark):
     for pairs in cases:
         roots = sorted({a for a, _ in pairs})
         e = edges_df(spark, pairs)
-        fast = {
-            r.id: r.betweenness
-            for r in betweenness_centrality(e, roots).collect()
-        }
+
         def run():
             return {
                 r.id: r.betweenness
                 for r in betweenness_centrality(e, roots).collect()
             }
 
-        with only(betweenness_centrality="task"):
-            slow = run()
-        # third/fourth formulations: windowed sweeps with the backward
-        # task kernel, and with the backward LOOP fallback — so all
-        # four distributed shapes stay pinned (slow above takes the
-        # per-root task-local path)
+        # the default ladder: every root's Brandes in one task
+        fast = run()
+        # windowed sweeps with the backward task kernel, and with the
+        # backward LOOP fallback — so both distributed shapes stay
+        # pinned
         with only(betweenness_centrality="distributed"):
             windowed = run()
             with only(betweenness_backward="distributed"):
                 loop = run()
         want = _brandes_betweenness(pairs, roots)
         assert fast == pytest.approx(want, rel=1e-9), pairs
-        assert set(slow) == set(want), pairs
         assert set(windowed) == set(want), pairs
         assert set(loop) == set(want), pairs
         for v in want:
-            assert slow[v] == pytest.approx(want[v], rel=1e-9), (v, pairs)
             assert windowed[v] == pytest.approx(want[v], rel=1e-9), (v, pairs)
             assert loop[v] == pytest.approx(want[v], rel=1e-9), (v, pairs)
 
 
 def test_betweenness_duplicate_roots_count_once(spark):
     """A repeated sampled source contributes ONCE on every path: the
-    task kernel's groupBy and the distributed sweeps merge duplicates
-    structurally, so the entry dedups the list and the driver twin
-    (which iterates per occurrence) can never be the odd one out."""
+    distributed sweeps merge duplicates structurally, so the entry
+    dedups the list and the task kernel's twin (which iterates per
+    occurrence) can never be the odd one out."""
     from github_miner_spark.graph.algorithms import (
         _brandes_betweenness,
         betweenness_centrality,
@@ -558,7 +548,7 @@ def test_betweenness_duplicate_roots_count_once(spark):
     pairs = [(1, 2), (2, 3), (1, 4), (4, 3), (3, 5)]
     e = edges_df(spark, pairs)
     want = _brandes_betweenness(pairs, [1])
-    for path in ("driver", "task", "distributed"):
+    for path in ("task", "distributed"):
         with only(betweenness_centrality=path):
             got = {
                 r.id: r.betweenness

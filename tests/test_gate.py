@@ -29,18 +29,18 @@ DECISIONS: dict[str, dict[int, tuple[str, str]]] = {
     # one task rung: the flag leaves the kernel on
     "pagerank": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "connected_components": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    # the force flag leaves the whole-core task on
-    "strongly_connected_components": {5 * M: (D, T), 5 * M + 1: (X, X)},
+    # the force flag leaves the whole-input task on
+    "strongly_connected_components": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "scc_component": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "louvain": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "modularity": {2 * M: (D, X), 2 * M + 1: (X, X)},
     "label_propagation": {2 * M: (D, X), 2 * M + 1: (X, X)},
     "coreness": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    # ... and the per-root kernels
-    "betweenness_centrality": {5 * M: (D, T), 5 * M + 1: (X, X)},
+    # ... and the all-roots kernels
+    "betweenness_centrality": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "betweenness_backward": {2 * M: (T, T), 2 * M + 1: (X, X)},
     "closure_path_counts": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "bfs_depths": {2 * M: (D, T), 2 * M + 1: (T, T), 5 * M: (T, T), 5 * M + 1: (X, X)},
+    "bfs_depths": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "all_shortest_paths_multi": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "enumerate_simple_paths": {5 * M: (T, T), 5 * M + 1: (X, X)},
     "weighted_sssp": {5 * M: (T, T), 5 * M + 1: (X, X)},
@@ -50,12 +50,6 @@ DECISIONS: dict[str, dict[int, tuple[str, str]]] = {
     "corpus_zipf_fit": {1 * M: (D, X), 1 * M + 1: (X, X)},
     "kmv_sketch": {1 * M: (D, X), 1 * M + 1: (X, X)},
 }
-
-# calls that cannot take a rung: bfs_depths without the per-root opt-in
-SKIP_DECISIONS: dict[tuple[str, tuple[str, ...]], dict[int, tuple[str, str]]] = {
-    ("bfs_depths", (T,)): {2 * M: (D, X), 2 * M + 1: (X, X), 5 * M: (X, X)},
-}
-
 
 def test_decision_table_covers_every_rung():
     assert set(DECISIONS) == set(LIMITS)
@@ -73,30 +67,17 @@ def test_choose_path_matches_decision_table(monkeypatch, forced):
     for gate, rows in DECISIONS.items():
         for n, want in rows.items():
             assert choose_path(gate, n) == want[forced], (gate, n, forced)
-    for (gate, skip), rows in SKIP_DECISIONS.items():
-        for n, want in rows.items():
-            assert choose_path(gate, n, skip) == want[forced], (gate, skip, n)
 
 
-# The gates whose ladder keeps BOTH a driver and a task rung, with the
-# measurement that keeps the driver rung (driver vs task, seconds, on
-# the 32-core distributed lane). A gate whose task kernel runs the same
-# twin no slower gets the task rung alone; adding one here needs a
-# measured reason beside it.
-DRIVER_BEATS_TASK = {
-    "strongly_connected_components",  # 0.66 vs 0.93
-    "betweenness_centrality",  # 0.89 vs 0.98
-    "bfs_depths",  # closeness, its per_root_task caller: 0.80 vs 1.12
-}
-
-
-def test_driver_and_task_rungs_only_where_driver_wins():
+def test_no_gate_holds_driver_and_task_rungs():
+    """A gate with a task kernel runs its twin there; a driver rung
+    beside it is a second in-process strategy, only more code."""
     both = {
         gate
         for gate, ladder in LIMITS.items()
         if {D, T} <= {path for path, _ in ladder}
     }
-    assert both == DRIVER_BEATS_TASK
+    assert not both, both
 
 
 def test_only_rejects_a_path_the_ladder_lacks():
@@ -205,7 +186,7 @@ def _closure(spark):
 def _bfs_depths(spark):
     from github_miner_spark.graph.paths import bfs_depths
 
-    return _rows(bfs_depths(_edges(spark, CYCLIC), roots=[1, 5], per_root_task=True))
+    return _rows(bfs_depths(_edges(spark, CYCLIC), roots=[1, 5]))
 
 
 def _asp(spark):
@@ -301,7 +282,15 @@ def test_parity_fixtures_are_nontrivial(spark):
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "github_miner_spark"
 FORCE_FLAG = "SPARK_GRAFT_FORCE_DISTRIBUTED"
-RETIRED = ("_" + "gate", "SPARK_GRAFT_CLOSURE_" + "DRIVER_EDGES", "_pagerank_" + "driver")
+RETIRED = (
+    "_" + "gate",
+    "SPARK_GRAFT_CLOSURE_" + "DRIVER_EDGES",
+    "_pagerank_" + "driver",
+    "_brandes_" + "root_group",
+    "_bfs_root_" + "group_factory",
+    "ROOT_REPLICATION_" + "BUDGET",
+    "per_root_" + "task",
+)
 # physical-tuning knobs the graph operators no longer take: the loop
 # shuffle width, barrier cadences and Louvain's sweep count are fixed
 # inside graph/, never chosen per call

@@ -211,34 +211,31 @@ def test_distributed_closure_adversarial_depth_and_hubs(spark):
         depths = bfs_depths(edges, roots=[0], max_iter=500)
         d_rows = sorted(map(tuple, depths.collect()))
         assert depths.agg(F.max("depth")).collect()[0][0] >= 250
+    # the default ladder: the BFS twin in one task, same full map
     d_fast = bfs_depths(edges, roots=[0], max_iter=500)
     assert d_rows == sorted(map(tuple, d_fast.collect()))
-    # per-root task-local path (opt-in): same full map as both twins
-    with only(bfs_depths="task"):
-        d_task = bfs_depths(edges, roots=[0], max_iter=500, per_root_task=True)
-        assert d_rows == sorted(map(tuple, d_task.collect()))
 
 
 def test_bfs_depths_dataframe_roots_task_parity(spark):
     """The depth-profile family (bfs_depth_profile /
-    depth_extremes_per_root / harmonic_centrality_roots, VERDICT r7
-    item 6) passes its root set as a DATAFRAME with the per-root task
-    opt-in: bfs_depths collapses a broadcast-sized DataFrame root set
-    to an explicit list and routes it down the task kernel. Parity:
-    task path == windowed loop == driver twin on a multi-root cyclic
-    graph."""
+    depth_extremes_per_root / harmonic_centrality_roots) passes its
+    root set as a DATAFRAME: bfs_depths collapses a broadcast-sized
+    DataFrame root set to an explicit list and routes it down the task
+    kernel. Parity: task path == windowed loop == the Python twin on a
+    multi-root cyclic graph."""
+    from github_miner_spark.graph.paths import _bfs_in_driver
+
     rows = [(i, (i * 7 + 3) % 40) for i in range(40)] + [(i, i + 1) for i in range(39)]
-    edges = spark.createDataFrame(
-        [(a, b) for a, b in rows if a != b], "src bigint, dst bigint"
-    ).localCheckpoint(eager=True)
+    pairs = [(a, b) for a, b in rows if a != b]
+    edges = spark.createDataFrame(pairs, "src bigint, dst bigint").localCheckpoint(eager=True)
     roots_df = edges.select(F.col("src").alias("root")).filter(F.col("src") < 6).distinct()
     with only(bfs_depths="task"):
-        t = sorted(map(tuple, bfs_depths(edges, roots=roots_df, per_root_task=True).collect()))
+        t = sorted(map(tuple, bfs_depths(edges, roots=roots_df).collect()))
     with only(bfs_depths="distributed"):
-        loop = bfs_depths(edges, roots=roots_df, per_root_task=True)
+        loop = bfs_depths(edges, roots=roots_df)
         assert t == sorted(map(tuple, loop.collect()))
-    drv = bfs_depths(edges, roots=roots_df)
-    assert t == sorted(map(tuple, drv.collect()))
+    roots = sorted({a for a, _ in pairs if a < 6})
+    assert t == sorted(_bfs_in_driver(pairs, roots, 1000))
     assert len(t) > 100
 
 
@@ -301,6 +298,29 @@ def test_weighted_sssp_negative_weight_raises(spark):
     for path in ("task", "distributed"):
         with only(weighted_sssp=path), pytest.raises(ValueError, match="non-negative"):
             weighted_sssp(e, 1)
+
+
+def test_weighted_sssp_loop_reads_the_edge_plan_once(spark):
+    """The Bellman-Ford rounds read the pinned edges: a Python UDF in
+    the caller's edge frame runs once per edge, not once per round (a
+    12-edge chain takes 12 rounds)."""
+    from github_miner_spark.graph.paths import weighted_sssp
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("double")
+    def weight(dst):
+        calls.add(1)
+        return 1.0 + dst % 3
+
+    n = 12
+    e = spark.range(n).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    ).withColumn("w", weight("dst"))
+    with only(weighted_sssp="distributed"):
+        out = {r.node: r.dist for r in weighted_sssp(e, 0).collect()}
+    assert sorted(out) == list(range(1, n + 1))
+    assert calls.value == n
 
 
 def _jobs_in_group(spark, group, fn):

@@ -230,27 +230,64 @@ def _case_insert(spark, tmp_path):
     return (counts, stored), ([want_counts, want_counts], want_v)
 
 
-def _checkpoint_files(spark):
+def _checkpoint_rdds(spark):
+    """Ids of the RDDs whose reliable checkpoint is on disk now."""
     root = spark.sparkContext.getCheckpointDir()
-    if root is None:
-        return 0
-    return sum(len(files) for _, _, files in os.walk(root.removeprefix("file:")))
+    root = root and root.removeprefix("file:")
+    if not root or not os.path.isdir(root):
+        return set()
+    return {int(d.removeprefix("rdd-")) for d in os.listdir(root) if d.startswith("rdd-")}
 
 
 @pytest.mark.parametrize("case", [_case_cc, _case_scc, _case_closure, _case_insert],
                          ids=["connected_components", "strongly_connected_components",
                               "closure_path_counts", "run_insert_job"])
-def test_distributed_loops_under_both_mechanisms(spark, mechanism, tmp_path, case):
+def test_distributed_loops_under_both_mechanisms(spark, monkeypatch, mechanism, tmp_path, case):
     """Each loop returns the reference rows under either mechanism, and
-    under the reliable one its pins land in the checkpoint dir."""
+    under the reliable one its pins land in the checkpoint dir. The
+    dir is read right after each eager pin, while the pinned frame is
+    still referenced: the context cleaner may delete a dropped pin's
+    files at any later JVM GC."""
     sc = spark.sparkContext
-    if mechanism == "reliable" and sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(pin_mod.CHECKPOINT_DIR)
-    before = _checkpoint_files(spark)
+    on_disk: set[int] = set()
+    if mechanism == "reliable":
+        if sc.getCheckpointDir() is None:
+            sc.setCheckpointDir(pin_mod.CHECKPOINT_DIR)
+        real = pin_mod._checkpoint
+
+        def spy(df, eager):
+            pinned = real(df, eager)
+            on_disk.update(_checkpoint_rdds(spark))
+            return pinned
+
+        monkeypatch.setattr(pin_mod, "_checkpoint", spy)
+    before = max(_checkpoint_rdds(spark), default=-1)
     got, want = case(spark, tmp_path)
     assert got == want
     if mechanism == "reliable":
-        assert _checkpoint_files(spark) > before
+        assert max(on_disk, default=-1) > before
+
+
+def test_reliable_pin_files_go_with_the_frame(spark, monkeypatch, tmp_path):
+    """Once a reliably pinned frame is dropped and the JVM collects its
+    RDD, Spark's context cleaner deletes the pin's checkpoint dir."""
+    import gc
+    import time
+
+    monkeypatch.setattr(pin_mod, "RELIABLE", True)
+    monkeypatch.setattr(pin_mod, "CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+    before = _checkpoint_rdds(spark)
+    pinned = pin_mod.pin(spark.range(100).select((F.col("id") * 2).alias("v")), eager=True)
+    assert pinned.count() == 100
+    mine = _checkpoint_rdds(spark) - before
+    assert mine
+    del pinned
+    deadline = time.monotonic() + 30
+    while mine & _checkpoint_rdds(spark) and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert not mine & _checkpoint_rdds(spark)
 
 
 # --- job budgets of the collapsed probes --------------------------------

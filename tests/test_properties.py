@@ -1,6 +1,7 @@
 """Property-based checks (hypothesis) for the algorithm cores whose
 failure modes are subtle: star-contraction connected components vs a
-reference union-find, and LSH dedup containment vs exact Jaccard.
+reference union-find, SCC vs mutual reachability, betweenness vs
+shortest-path enumeration (both on both of their paths), and LSH dedup containment vs exact Jaccard.
 
 Spark actions are slow per example, so example counts are small and
 sizes bounded — the value is randomized STRUCTURE (cycles, chains,
@@ -8,6 +9,7 @@ hubs, disconnected islands), not volume."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -207,9 +209,9 @@ def test_bfs_depths_matches_python_bfs_on_cyclic_graphs(spark, edges, root):
     df = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
     )
-    # default gate -> driver BFS; an empty ladder forces the
-    # distributed loop: BOTH must match the reference
-    got_driver = {
+    # default gate -> the BFS twin in one task; an empty ladder forces
+    # the distributed loop: BOTH must match the reference
+    got_task = {
         r["node"]: r["depth"] for r in bfs_depths(df, roots=[root]).collect()
     }
     with only(bfs_depths="distributed"):
@@ -217,8 +219,120 @@ def test_bfs_depths_matches_python_bfs_on_cyclic_graphs(spark, edges, root):
             r["node"]: r["depth"]
             for r in bfs_depths(df, roots=[root]).collect()
         }
-    assert got_driver == want
+    assert got_task == want
     assert got_dist == want
+
+
+def _reach(edges: list[tuple[int, int]]) -> dict[int, set[int]]:
+    """Reflexive reachability per vertex by plain graph search."""
+    out: dict[int, list[int]] = {}
+    for a, b in edges:
+        out.setdefault(a, []).append(b)
+        out.setdefault(b, [])
+    reach = {}
+    for v in out:
+        seen, stack = {v}, [v]
+        while stack:
+            for w in out[stack.pop()]:
+                if w not in seen:
+                    seen.add(w)
+                    stack.append(w)
+        reach[v] = seen
+    return reach
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 11), st.integers(0, 11)), min_size=1, max_size=30
+    )
+)
+@_settings
+def test_scc_both_paths_match_mutual_reachability(spark, edges):
+    """strongly_connected_components on random digraphs with cycles,
+    self-loops and parallel edges: u and v share a component if and
+    only if each reaches the other, and the component id is the
+    smallest member."""
+    from github_miner_spark.graph.algorithms import strongly_connected_components
+
+    reach = _reach(edges)
+    want = {v: min(u for u in reach[v] if v in reach[u]) for v in reach}
+    df = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
+    )
+    # the default ladder: the whole-input Tarjan task; an empty ladder:
+    # the WCC split and its per-component kernels
+    task = {r.id: r.component for r in strongly_connected_components(df).collect()}
+    with only(strongly_connected_components="distributed"):
+        distributed = {
+            r.id: r.component for r in strongly_connected_components(df).collect()
+        }
+    assert task == want
+    assert distributed == want
+
+
+def _enumerated_betweenness(
+    edges: list[tuple[int, int]], roots: set[int]
+) -> dict[int, float]:
+    """Source-sampled betweenness by listing every shortest path: BFS
+    depths from each root, then every edge sequence that climbs one
+    depth per edge (parallel edges are distinct paths); each interior
+    vertex of a root->t path earns 1/(number of root->t paths)."""
+    from collections import deque
+
+    bc: dict[int, float] = {}
+    for s in roots:
+        dist = {s: 0}
+        dq = deque([s])
+        while dq:
+            v = dq.popleft()
+            for a, b in edges:
+                if a == v and b not in dist:
+                    dist[b] = dist[v] + 1
+                    dq.append(b)
+        paths: dict[int, list[list[int]]] = {s: [[s]]}
+        for v in sorted(dist, key=dist.get)[1:]:
+            paths[v] = [
+                p + [v]
+                for a, b in edges
+                if b == v and a in dist and dist[a] == dist[v] - 1
+                for p in paths[a]
+            ]
+        for t, ps in paths.items():
+            for p in ps if t != s else ():
+                for v in p[1:-1]:
+                    bc[v] = bc.get(v, 0.0) + 1.0 / len(ps)
+    return bc
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 7), st.integers(0, 7)), min_size=1, max_size=20
+    ),
+    roots=st.lists(st.integers(0, 7), min_size=1, max_size=4),
+)
+@_settings
+def test_betweenness_both_paths_match_path_enumeration(spark, edges, roots):
+    """betweenness_centrality on random digraphs of at most 8 vertices
+    with cycles, self-loops and parallel edges, against an enumeration
+    of every shortest path; repeated roots count once."""
+    from github_miner_spark.graph.algorithms import betweenness_centrality
+
+    want = _enumerated_betweenness(edges, set(roots))
+    df = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
+    )
+
+    def run():
+        return {
+            r.id: r.betweenness
+            for r in betweenness_centrality(df, roots).collect()
+        }
+
+    task = run()
+    with only(betweenness_centrality="distributed"):
+        distributed = run()
+    assert task == pytest.approx(want, rel=1e-9)
+    assert distributed == pytest.approx(want, rel=1e-9)
 
 
 @given(

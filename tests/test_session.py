@@ -26,6 +26,10 @@ def test_codegen_cache_holds_the_working_set(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
 
 
+def test_reliable_checkpoints_are_cleaned_with_their_rdd(spark):
+    assert spark.conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
 def test_warm_rerun_compiles_nothing(spark, sf_dir, monkeypatch):
     """A second run of the benchmark's ``query_mix`` ops takes every
     generated class from the codegen cache. They need about 110 classes
