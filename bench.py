@@ -268,31 +268,16 @@ CORE_LINE = [
     "vocab_coverage_stats",
 ]
 
-# Second lane (VERDICT r4 item 3): the iterative family re-timed with
-# SPARK_GRAFT_FORCE_DISTRIBUTED=1, which skips every driver rung of the
-# execution-path gate (github_miner_spark/gate.py). No graph gate has
-# a driver rung any more, so the graph entries here time the same
-# executor-side task kernels as the main lane; only the corpus rank
-# gates (corpus_zipf_fit) reach their distributed path. The scaling
-# lane below empties ladders to time the distributed loops themselves.
+# Second lane (VERDICT r4 item 3): the queries whose path changes when
+# every driver rung of the execution-path gate
+# (github_miner_spark/gate.py:LIMITS) is off, re-timed with those
+# ladders emptied: louvain_communities through its modularity step
+# (the one-statement SQL instead of two collects) and corpus_zipf_fit
+# (the range-partitioned shard rank, the 100 TB shape). Task rungs stay
+# on; the scaling lane below empties them to time the distributed
+# loops themselves.
 DISTRIBUTED_LANE = [
-    "closure_counts_from_anchor",
-    "pagerank_top20",
-    "scc_summary",
     "louvain_communities",
-    "all_shortest_paths_pairs",
-    "k_core_decomposition",
-    "connected_components_summary",
-    "dependency_graph_paths",
-    # round 6: the sampled-source centrality loops (multi-root
-    # sigma-BFS + backward accumulation) get a timed distributed floor
-    "closeness_centrality_sample",
-    "betweenness_centrality_sample",
-    # round 6 close: the weighted SSSP relaxation loop
-    "weighted_shortest_distances",
-    # round 12: the zipf hybrid dispatch — the forced-distributed lane
-    # times the range-partitioned shard-rank path (the 100 TB shape);
-    # the main lane's default is the gated single-task rank
     "corpus_zipf_fit",
 ]
 
@@ -616,24 +601,25 @@ def main() -> None:
         samples.update(iso_s)
         stats.update({n: s + " (isolated lane)" for n, s in iso_st.items()})
 
-    # Second lane: force every driver-collect gate to 0 and re-time the
-    # iterative family so the distributed loops have a recorded floor
-    # each round (VERDICT r4 item 3). Skipped when the whole run is
-    # already forced-distributed via the environment.
+    from unittest.mock import patch
+
+    from github_miner_spark.gate import LIMITS
+
+    # Second lane: every ladder holding a driver rung emptied, so the
+    # DISTRIBUTED_LANE queries record their scale-out floor each round
+    # (VERDICT r4 item 3).
     dist_timings: dict[str, float] = {}
     dist_samples: dict[str, list[float]] = {}
     dist_stats: dict[str, str] = {}
-    if not os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED") and not os.environ.get(
-        "SPARK_GRAFT_SKIP_DISTRIBUTED_LANE"
-    ):
+    if not os.environ.get("SPARK_GRAFT_SKIP_DISTRIBUTED_LANE"):
         dist_names = [n for n in DISTRIBUTED_LANE if n in specs]
-        os.environ["SPARK_GRAFT_FORCE_DISTRIBUTED"] = "1"
-        try:
+        driver_off = {
+            g: () for g, ladder in LIMITS.items() if any(p == "driver" for p, _ in ladder)
+        }
+        with patch.dict(LIMITS, driver_off):
             for name in dist_names:  # warmup pass
                 specs[name].spark(spark, SF_DIR).count()
             dist_timings, dist_samples, dist_stats = run_lane(dist_names)
-        finally:
-            del os.environ["SPARK_GRAFT_FORCE_DISTRIBUTED"]
 
     # Third lane (VERDICT r5 item 8, protocol fixed per r6 item 2): a
     # SECOND scale point for the two worst distributed floors (scc,
@@ -650,14 +636,9 @@ def main() -> None:
     # cyclified module graph; for ASP the copies are chained by a link
     # edge so the BFS genuinely traverses 3x the depth and data.
     scaling: dict[str, dict] = {}
-    if not os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED") and not os.environ.get(
-        "SPARK_GRAFT_SKIP_SCALING_LANE"
-    ):
-        from unittest.mock import patch
-
+    if not os.environ.get("SPARK_GRAFT_SKIP_SCALING_LANE"):
         from pyspark.sql import functions as F
 
-        from github_miner_spark.gate import LIMITS
         from github_miner_spark.graph.algorithms import (
             connected_components,
             strongly_connected_components,
@@ -667,160 +648,155 @@ def main() -> None:
         from github_miner_spark.graph.store import load_graph
         from github_miner_spark.queries.paths_queries import ANCHOR_MODULE
 
-        os.environ["SPARK_GRAFT_FORCE_DISTRIBUTED"] = "1"
-        try:
-            base = cyclic_module_edges(
-                spark, SF_DIR, mm=load_graph(spark, SF_DIR).module_dep_edges()
-            ).localCheckpoint(eager=True)
-            hi = int(base.agg(F.max(F.greatest("src", "dst"))).collect()[0][0]) + 1
+        base = cyclic_module_edges(
+            spark, SF_DIR, mm=load_graph(spark, SF_DIR).module_dep_edges()
+        ).localCheckpoint(eager=True)
+        hi = int(base.agg(F.max(F.greatest("src", "dst"))).collect()[0][0]) + 1
 
-            def scaled(k: int):
-                parts = [
-                    base.select(
-                        (F.col("src") + F.lit(i * hi)).alias("src"),
-                        (F.col("dst") + F.lit(i * hi)).alias("dst"),
-                    )
-                    for i in range(k)
-                ]
-                links = spark.createDataFrame(
-                    [(132 + i * hi, ANCHOR_MODULE + (i + 1) * hi) for i in range(k - 1)],
-                    "src bigint, dst bigint",
+        def scaled(k: int):
+            parts = [
+                base.select(
+                    (F.col("src") + F.lit(i * hi)).alias("src"),
+                    (F.col("dst") + F.lit(i * hi)).alias("dst"),
                 )
-                g = parts[0]
-                for p_ in parts[1:]:
-                    g = g.unionByName(p_)
-                return g.unionByName(links).localCheckpoint(eager=True)
+                for i in range(k)
+            ]
+            links = spark.createDataFrame(
+                [(132 + i * hi, ANCHOR_MODULE + (i + 1) * hi) for i in range(k - 1)],
+                "src bigint, dst bigint",
+            )
+            g = parts[0]
+            for p_ in parts[1:]:
+                g = g.unionByName(p_)
+            return g.unionByName(links).localCheckpoint(eager=True)
 
-            g1, g3 = scaled(1), scaled(3)
-            scaling_reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
+        g1, g3 = scaled(1), scaled(3)
+        scaling_reps = int(os.environ.get("SPARK_GRAFT_SCALING_REPS", "3"))
 
-            def distributed_only(*gates):
-                # the force flag already skips the driver rungs; empty
-                # ladders turn the task kernels off too, so the entry
-                # times the distributed loop itself
-                return patch.dict(LIMITS, {g: () for g in gates})
+        def distributed_only(*gates):
+            # empty ladders: the entry times the distributed loop
+            # itself, not a task kernel
+            return patch.dict(LIMITS, {g: () for g in gates})
 
-            def exponent(label, fn):
-                fn(g1)  # warm
-                fn(g3)  # warm the 3x shape too — its first run JITs new stages
-                pairs = []
-                for _ in range(scaling_reps):
-                    t0 = time.perf_counter(); fn(g1); t1 = time.perf_counter() - t0
-                    t0 = time.perf_counter(); fn(g3); t3 = time.perf_counter() - t0
-                    pairs.append(
-                        {
-                            "t_1x": round(t1, 3),
-                            "t_3x": round(t3, 3),
-                            "exponent": round(math.log(t3 / t1) / math.log(3.0), 3),
-                        }
-                    )
-                scaling[label] = {
-                    "pairs": pairs,
-                    "exponent_median": round(
-                        statistics.median(p["exponent"] for p in pairs), 3
-                    ),
-                    "acceptance": "median < 1.1",
-                }
+        def exponent(label, fn):
+            fn(g1)  # warm
+            fn(g3)  # warm the 3x shape too — its first run JITs new stages
+            pairs = []
+            for _ in range(scaling_reps):
+                t0 = time.perf_counter(); fn(g1); t1 = time.perf_counter() - t0
+                t0 = time.perf_counter(); fn(g3); t3 = time.perf_counter() - t0
+                pairs.append(
+                    {
+                        "t_1x": round(t1, 3),
+                        "t_3x": round(t3, 3),
+                        "exponent": round(math.log(t3 / t1) / math.log(3.0), 3),
+                    }
+                )
+            scaling[label] = {
+                "pairs": pairs,
+                "exponent_median": round(
+                    statistics.median(p["exponent"] for p in pairs), 3
+                ),
+                "acceptance": "median < 1.1",
+            }
 
-            # SCC and WCC ladders emptied: the lane pins the DISTRIBUTED
-            # split machinery (trim + WCC star contraction + per-WCC
-            # task kernels — the path a core too big for one task
-            # takes), not the single-group shortcut a bench-sized core
-            # would otherwise route to
+        # SCC and WCC ladders emptied: the lane pins the DISTRIBUTED
+        # split machinery (trim + WCC star contraction + per-WCC
+        # task kernels — the path a core too big for one task
+        # takes), not the single-group shortcut a bench-sized core
+        # would otherwise route to
+        with distributed_only(
+            "strongly_connected_components", "connected_components"
+        ):
+            exponent(
+                "scc", lambda g: strongly_connected_components(g).count()
+            )
+        # the CC-family distributed floor in the lane above records
+        # the whole-graph union-find task kernel at bench SF (it is
+        # executor-side, not a driver rung — ADVICE r8); this entry
+        # pins the star-contraction LOOP itself, so the at-scale CC
+        # machinery keeps a direct per-round witness with a
+        # measured exponent.
+        with distributed_only("connected_components"):
+            exponent(
+                "connected_components",
+                lambda g: connected_components(g).count(),
+            )
+        # the lane pins the DISTRIBUTED two-sweep pipeline's
+        # exponent (the path a 100 TB edge set takes), not the
+        # task-local kernel a bench-sized graph would otherwise
+        # route to
+        with distributed_only("all_shortest_paths_multi"):
+            exponent(
+                "all_shortest_paths",
+                lambda g: all_shortest_paths_multi(
+                    g, ANCHOR_MODULE, [132 + 2 * hi if g is g3 else 132]
+                ).count(),
+            )
+        # round 10 (VERDICT r9 item 3): exponents for the
+        # remaining iterative floors — louvain, k-core,
+        # betweenness, closeness, ANF. Whole-graph entries see 3x
+        # nodes+edges directly; the rooted sweeps start from the
+        # copy-0 anchor and traverse the whole chain through the
+        # link edges, so 3x data AND 3x depth (the ASP protocol).
+        # Task-kernel ladders emptied — the lane times the
+        # distributed loops themselves. OPT-IN
+        # (SPARK_GRAFT_EXTENDED_SCALING_LANE=1): these five
+        # entries cost ~15-20 min under the full 3-pair protocol
+        # (their distributed loops are barrier-dominated at bench
+        # SF — measured: k-core ~24s, closeness ~16s, betweenness
+        # ~14s warm per 1x call at sf0.01), which would triple the
+        # per-round driver bench; the round-10 measurement ran the
+        # full protocol once and committed the artifact
+        # (BENCH_scaling_r10.json, PERF.md round 10). The louvain
+        # entry times the PHASE-1 local-moving sweeps (a fixed 2
+        # sweeps, 1 level, no convergence probe): the at-scale
+        # dominant loop — the super-node level re-runs the same
+        # sweeps on a contracted graph orders of magnitude
+        # smaller, while the FULL distributed two-level run is
+        # plan-compile-bound at bench SF (352s
+        # cold on 3k edges — all barrier/codegen overhead, no
+        # data signal).
+        if os.environ.get("SPARK_GRAFT_EXTENDED_SCALING_LANE"):
+            from github_miner_spark.graph.algorithms import (
+                betweenness_centrality,
+                coreness,
+                louvain,
+            )
+            from github_miner_spark.graph.paths import bfs_depths
+            from github_miner_spark.queries.algorithms_queries import (
+                _anf_distributed_reg_states,
+            )
+
+            with distributed_only("louvain"):
+                exponent(
+                    "louvain_phase1",
+                    lambda g: louvain(g, max_sweeps=2, levels=1).count(),
+                )
+            with distributed_only("coreness"):
+                exponent("k_core", lambda g: coreness(g).count())
             with distributed_only(
-                "strongly_connected_components", "connected_components"
+                "betweenness_centrality", "betweenness_backward"
             ):
                 exponent(
-                    "scc", lambda g: strongly_connected_components(g).count()
-                )
-            # the CC-family distributed floor in the lane above records
-            # the whole-graph union-find task kernel at bench SF (it is
-            # executor-side, not a driver rung — ADVICE r8); this entry
-            # pins the star-contraction LOOP itself, so the at-scale CC
-            # machinery keeps a direct per-round witness with a
-            # measured exponent.
-            with distributed_only("connected_components"):
-                exponent(
-                    "connected_components",
-                    lambda g: connected_components(g).count(),
-                )
-            # the lane pins the DISTRIBUTED two-sweep pipeline's
-            # exponent (the path a 100 TB edge set takes), not the
-            # task-local kernel a bench-sized graph would otherwise
-            # route to
-            with distributed_only("all_shortest_paths_multi"):
-                exponent(
-                    "all_shortest_paths",
-                    lambda g: all_shortest_paths_multi(
-                        g, ANCHOR_MODULE, [132 + 2 * hi if g is g3 else 132]
+                    "betweenness",
+                    lambda g: betweenness_centrality(
+                        g, [ANCHOR_MODULE]
                     ).count(),
                 )
-            # round 10 (VERDICT r9 item 3): exponents for the
-            # remaining iterative floors — louvain, k-core,
-            # betweenness, closeness, ANF. Whole-graph entries see 3x
-            # nodes+edges directly; the rooted sweeps start from the
-            # copy-0 anchor and traverse the whole chain through the
-            # link edges, so 3x data AND 3x depth (the ASP protocol).
-            # Task-kernel ladders emptied — the lane times the
-            # distributed loops themselves. OPT-IN
-            # (SPARK_GRAFT_EXTENDED_SCALING_LANE=1): these five
-            # entries cost ~15-20 min under the full 3-pair protocol
-            # (their distributed loops are barrier-dominated at bench
-            # SF — measured: k-core ~24s, closeness ~16s, betweenness
-            # ~14s warm per 1x call at sf0.01), which would triple the
-            # per-round driver bench; the round-10 measurement ran the
-            # full protocol once and committed the artifact
-            # (BENCH_scaling_r10.json, PERF.md round 10). The louvain
-            # entry times the PHASE-1 local-moving sweeps (a fixed 2
-            # sweeps, 1 level, no convergence probe): the at-scale
-            # dominant loop — the super-node level re-runs the same
-            # sweeps on a contracted graph orders of magnitude
-            # smaller, while the FULL distributed two-level run is
-            # plan-compile-bound at bench SF (352s
-            # cold on 3k edges — all barrier/codegen overhead, no
-            # data signal).
-            if os.environ.get("SPARK_GRAFT_EXTENDED_SCALING_LANE"):
-                from github_miner_spark.graph.algorithms import (
-                    betweenness_centrality,
-                    coreness,
-                    louvain,
-                )
-                from github_miner_spark.graph.paths import bfs_depths
-                from github_miner_spark.queries.algorithms_queries import (
-                    _anf_distributed_reg_states,
-                )
-
-                with distributed_only("louvain"):
-                    exponent(
-                        "louvain_phase1",
-                        lambda g: louvain(g, max_sweeps=2, levels=1).count(),
-                    )
-                with distributed_only("coreness"):
-                    exponent("k_core", lambda g: coreness(g).count())
-                with distributed_only(
-                    "betweenness_centrality", "betweenness_backward"
-                ):
-                    exponent(
-                        "betweenness",
-                        lambda g: betweenness_centrality(
-                            g, [ANCHOR_MODULE]
-                        ).count(),
-                    )
-                with distributed_only("bfs_depths"):
-                    exponent(
-                        "closeness",
-                        lambda g: bfs_depths(
-                            g, roots=[ANCHOR_MODULE], broadcast_frontier=True
-                        ).count(),
-                    )
+            with distributed_only("bfs_depths"):
                 exponent(
-                    "anf",
-                    lambda g: _anf_distributed_reg_states(
-                        spark, g, 5, 3, 56, g.count()
+                    "closeness",
+                    lambda g: bfs_depths(
+                        g, roots=[ANCHOR_MODULE], broadcast_frontier=True
                     ).count(),
                 )
-        finally:
-            del os.environ["SPARK_GRAFT_FORCE_DISTRIBUTED"]
+            exponent(
+                "anf",
+                lambda g: _anf_distributed_reg_states(
+                    spark, g, 5, 3, 56, g.count()
+                ).count(),
+            )
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1).rstrip(".")) if m else None
@@ -843,21 +819,19 @@ def main() -> None:
         f"smallest of {passes + _extra} — additive-contention guard, "
         "VERDICT r8 #2) — per-query statistic named in 'stats'",
         "distributed_lane": {
-            "note": "SPARK_GRAFT_FORCE_DISTRIBUTED=1: every driver rung "
-            "of github_miner_spark/gate.py:LIMITS skipped. Executor-side "
-            "task rungs (whole-input SCC, whole-graph CC union-find, "
-            "the path and centrality kernels) stay active here at bench "
-            "SF, and every graph gate with a task twin has the task rung "
-            "alone, so for those the flag changes no path; the scaling "
-            "lane pins the distributed machinery itself by emptying "
-            "those gates' ladders",
+            "note": "every github_miner_spark/gate.py:LIMITS ladder that "
+            "holds a driver rung emptied (modularity and the corpus rank "
+            "gates), so louvain_communities times its modularity SQL and "
+            "corpus_zipf_fit its shard rank; the other registry queries "
+            "take no driver rung, and the scaling lane times the task "
+            "gates' distributed loops",
             "queries": dist_timings,
             "spreads": {n: _spread(ts) for n, ts in dist_samples.items()},
             "samples": dist_samples,
             "stats": dist_stats,
         },
         "scaling_lane": {
-            "note": "forced-distributed scc/CC/ASP at 1x and 3x synthetic "
+            "note": "distributed scc/CC/ASP at 1x and 3x synthetic "
             "scale (gate.LIMITS ladders emptied — the lane times the "
             "distributed loops themselves); 3 interleaved (1x,3x) pairs "
             "per algorithm, exponent "

@@ -295,9 +295,8 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     # executor task is labeled by path-compressed union-find inside ONE
     # applyInPandas group — integer work, bit-identical to the
     # star-contraction result, one job instead of O(log^2 n) barriers.
-    # Executor-side compute, so the force flag leaves it on; the
-    # scaling lane empties the gate to time the distributed rounds, and
-    # a pair set above the rung takes the star contraction unchanged —
+    # The scaling lane empties the gate to time the distributed rounds,
+    # and a pair set above the rung takes the star contraction unchanged —
     # the 100 TB path. Isolated and self-loop-only vertices come back
     # via the same left-join tail the distributed loop uses.
     if choose_path("connected_components", n_pairs) == "task":
@@ -647,8 +646,7 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
     #     overwhelmingly common case for a trimmed core — cycles are
     #     local) shuffle BY COMPONENT into applyInPandas and are labeled
     #     task-locally by iterative Tarjan, all components in parallel,
-    #     no driver collect anywhere (this is executor-side compute,
-    #     so the force flag leaves it on);
+    #     no driver collect anywhere;
     #   - components past the ``scc_component`` gate fall through to
     #     the distributed FW-BW-Trim coloring loop below, which then
     #     runs on those components only.
@@ -792,17 +790,17 @@ def _scc_impl(dedup: DataFrame, n_edges: int, max_iter: int) -> DataFrame:
     return reduce(DataFrame.unionByName, assigned_parts)
 
 
-def _symmetrize_weighted(edges: DataFrame) -> DataFrame:
-    """Distinct directed pairs in both directions, weight 1.0 each,
-    self-loops dropped: the undirected-graph representation used by
-    louvain/modularity. (src, dst, w)."""
-    return pin(
+def _symmetrize_weighted(edges: DataFrame) -> tuple[DataFrame, int]:
+    """Distinct directed pairs in both directions, weight 1.0 each (a
+    self-loop survives once, via the swapped branch, as in the oracle
+    SQL): the undirected graph louvain/modularity use. Returns the
+    pinned (src, dst, w) frame and its row count, which is also 2m."""
+    return pin_counted(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .withColumn("w", F.lit(1.0)),
-        eager=True,
+        .withColumn("w", F.lit(1.0))
     )
 
 
@@ -1032,8 +1030,7 @@ def louvain(
     edges: DataFrame,
     max_sweeps: int = 5,
     levels: int = 2,
-    sym: DataFrame | None = None,
-    sym_stats: tuple[float, int] | None = None,
+    sym: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """Louvain community detection as DataFrame iteration — the real
     modularity-optimizing algorithm, not a label-propagation stand-in
@@ -1050,21 +1047,15 @@ def louvain(
     The sweep loops' shuffle width is sized from the symmetric edge
     count (paths._adaptive_loop_width) — the per-sweep aggregations
     are vertex/edge-sized, so the session width only buys task-launch
-    overhead at bench SF while a huge graph gets it back."""
+    overhead at bench SF while a huge graph gets it back. ``sym``:
+    optionally the ``_symmetrize_weighted(edges)`` pair."""
     from github_miner_spark.graph.paths import (
         _adaptive_loop_width,
         _loop_shuffle_partitions,
     )
 
-    if sym is None:
-        sym = _symmetrize_weighted(edges)
-    # ONE action for both loop constants (2m and the edge count) — the
-    # r8 shape paid a collect plus a count per call; callers that
-    # already aggregated the shared sym pass (m2, n_sym) straight in
-    if sym_stats is not None:
-        m2, n_sym = sym_stats
-    else:
-        m2, n_sym = sym.agg(F.sum("w"), F.count(F.lit(1))).collect()[0]
+    sym, n_sym = sym or _symmetrize_weighted(edges)
+    m2 = float(n_sym)
     if not m2:
         return edges.sparkSession.createDataFrame([], "id bigint, community bigint")
 
@@ -1085,7 +1076,7 @@ def louvain(
             sym.withColumn("g", F.lit(1))
             .groupBy("g")
             .applyInPandas(
-                _louvain_group_factory(float(m2), max_sweeps, levels),
+                _louvain_group_factory(m2, max_sweeps, levels),
                 schema="id bigint, community bigint",
             ),
             eager=True,
@@ -1096,7 +1087,7 @@ def louvain(
         enabled=True,
         width=_adaptive_loop_width(edges.sparkSession, n_sym),
     ):
-        return _louvain_distributed(sym, float(m2), max_sweeps, levels)
+        return _louvain_distributed(sym, m2, max_sweeps, levels)
 
 
 def _louvain_group_factory(m2: float, max_sweeps: int, levels: int):
@@ -1161,25 +1152,18 @@ def _louvain_distributed(
 def modularity(
     edges: DataFrame,
     assignment: DataFrame,
-    sym: DataFrame | None = None,
-    sym_stats: tuple[float, int] | None = None,
+    sym: tuple[DataFrame, int] | None = None,
 ) -> float:
     """Newman modularity Q of ``assignment`` (id, community) on the
     undirected simple graph induced by ``edges``. Under the
     ``modularity`` gate the sums run in-driver (all are sums of integer-valued doubles — exact in IEEE-754 in any
     order — so the two paths return the identical float).
 
-    ``sym`` / ``sym_stats``: optionally the precomputed
-    ``_symmetrize_weighted(edges)`` frame and its (m2, n_sym)
-    aggregate — queries that run louvain + modularity over the same
-    graph pass them to both so the symmetrization is checkpointed and
-    aggregated once."""
-    if sym is None:
-        sym = _symmetrize_weighted(edges)
-    if sym_stats is not None:
-        m2, n_sym = sym_stats
-    else:
-        m2, n_sym = sym.agg(F.sum("w"), F.count(F.lit(1))).collect()[0]
+    ``sym``: optionally the ``_symmetrize_weighted(edges)`` pair —
+    queries that run louvain + modularity over the same graph pass it
+    to both so the symmetrization is pinned and counted once."""
+    sym, n_sym = sym or _symmetrize_weighted(edges)
+    m2 = float(n_sym)
     if not m2:
         return 0.0
     if choose_path("modularity", n_sym) == "driver":
@@ -1235,9 +1219,9 @@ def modularity(
 def _label_propagation_driver(
     vertices: list[int], sym: list[tuple[int, int]], iterations: int
 ) -> dict[int, int]:
-    """In-driver twin of the synchronous label-propagation sweep: votes
-    are integer counts and the tie-break (votes DESC, label ASC) is
-    exact, so the two paths agree move-for-move."""
+    """Python twin of the synchronous label-propagation sweep, run by
+    the task kernel: votes are integer counts and the tie-break (votes
+    DESC, label ASC) is exact, so the two paths agree move-for-move."""
     from collections import defaultdict
 
     adj: dict[int, list[int]] = defaultdict(list)
@@ -1260,15 +1244,33 @@ def _label_propagation_driver(
     return labels
 
 
+def _label_propagation_group(iterations: int):
+    """applyInPandas kernel: the symmetric non-self pairs plus one
+    ``(id, id)`` row per vertex arrive as one group, and the twin sweeps
+    them in the executor task. The ``(id, id)`` rows carry the vertex
+    set, so a vertex with only a self-loop keeps its own label."""
+
+    def _group(pdf):
+        import pandas as pd
+
+        rows = list(zip(pdf["src"].astype(int), pdf["dst"].astype(int)))
+        labels = _label_propagation_driver(
+            [s for s, d in rows if s == d], [r for r in rows if r[0] != r[1]], iterations
+        )
+        return pd.DataFrame({"id": list(labels), "community": list(labels.values())})
+
+    return _group
+
+
 def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
     """Community detection via synchronous label propagation with a
     deterministic tie-break (most frequent neighbor label, ties -> min
     label) — the GraphFrames-style stand-in for the reference's Louvain
     procedure (documentation/queries.md:82-98; SURVEY.md §7 notes the
-    deviation). Returns (id, community). Under the
-    ``label_propagation`` gate the sweep runs in-driver (the hybrid policy shared
-    by SCC/closure/Louvain); the distributed loop engages unchanged
-    beyond it."""
+    deviation). Returns (id, community) for every endpoint of
+    ``edges``. Under the ``label_propagation`` gate the twin sweep runs
+    in one executor task (``_label_propagation_group``); past it the
+    distributed loop below runs the same sweep."""
     sym, n_sym = pin_counted(
         edges.select("src", "dst")
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -1276,13 +1278,14 @@ def label_propagation(edges: DataFrame, iterations: int = 10) -> DataFrame:
         .distinct()
     )
     verts = _vertex_ids(edges)
-    if choose_path("label_propagation", n_sym) == "driver":
-        vs = [r["id"] for r in verts.collect()]
-        labels_map = _label_propagation_driver(
-            vs, [(r["src"], r["dst"]) for r in sym.collect()], iterations
-        )
-        return edges.sparkSession.createDataFrame(
-            list(labels_map.items()), "id bigint, community bigint"
+    if choose_path("label_propagation", n_sym) == "task":
+        return (
+            sym.unionByName(verts.select(F.col("id").alias("src"), F.col("id").alias("dst")))
+            .withColumn("g", F.lit(1))
+            .groupBy("g")
+            .applyInPandas(
+                _label_propagation_group(iterations), schema="id bigint, community bigint"
+            )
         )
     from github_miner_spark.graph.paths import (
         _adaptive_loop_width,
@@ -1657,7 +1660,7 @@ def betweenness_centrality(
         # minimal depth — the rows surviving the filter are exactly
         # the per-level-barrier rows. Cuts the forward sweep from
         # O(depth) barriers to O(depth / window): measured 18 -> 5
-        # jobs, 6.4-11.6s -> ~2-3s at sf0.1 forced-distributed.
+        # jobs, 6.4-11.6s -> ~2-3s at sf0.1 on the distributed path.
         # (The earlier windowed attempt the r6 code warned about
         # double-referenced the lazy window union in its min-depth
         # join-back; the window-function filter below references the

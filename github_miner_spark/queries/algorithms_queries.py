@@ -511,11 +511,10 @@ def louvain_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Q=0.493 vs 0.499 at 4 sweeps, 4x faster; slice-sized loop state
     # -> narrow shuffle width (9.0s -> 7.0s at sf0.1). The symmetric
-    # edge frame is checkpointed ONCE and shared with modularity.
+    # edge frame is pinned and counted ONCE and shared with modularity.
     sym = _symmetrize_weighted(sub)
-    stats = tuple(sym.agg(F.sum("w"), F.count(F.lit(1))).collect()[0])
-    comm = louvain(sub, max_sweeps=3, levels=2, sym=sym, sym_stats=stats)
-    q = modularity(sub, comm, sym=sym, sym_stats=stats)
+    comm = louvain(sub, max_sweeps=3, levels=2, sym=sym)
+    q = modularity(sub, comm, sym=sym)
     sizes = comm.groupBy("community").agg(F.count("*").alias("sz"))
     return sizes.agg(
         F.count("*").alias("n_communities"),
@@ -550,9 +549,8 @@ def louvain_per_reltype(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src", "dst")
         )
         sym = _symmetrize_weighted(sub)
-        stats = tuple(sym.agg(F.sum("w"), F.count(F.lit(1))).collect()[0])
-        comm = louvain(sub, max_sweeps=3, levels=2, sym=sym, sym_stats=stats)
-        q = modularity(sub, comm, sym=sym, sym_stats=stats)
+        comm = louvain(sub, max_sweeps=3, levels=2, sym=sym)
+        q = modularity(sub, comm, sym=sym)
         sizes = comm.groupBy("community").agg(F.count("*").alias("sz"))
         outs.append(
             sizes.agg(

@@ -1091,8 +1091,8 @@ def _parquet_num_rows(path: str) -> int:
     "(VERDICT r11 item 4, priced by the r12 A/B): corpora under the "
     "gate rank with one bounded single-task window (the distributed "
     "machinery measured +0.75s of pure overhead at bench SF), while "
-    "larger corpora — or SPARK_GRAFT_FORCE_DISTRIBUTED=1, which the "
-    "bench distributed lane and tests set — use repartitionByRange on "
+    "larger corpora (and the bench distributed lane, which empties "
+    "the gate's ladder) use repartitionByRange on "
     "the unique (freq desc, term) order, per-shard row_number, plus "
     "broadcast per-shard offsets from a shard-count rollup: no "
     "single-partition sort of the vocabulary (10^8-10^9 rows at "
@@ -1114,8 +1114,8 @@ def corpus_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hybrid dispatch on the ``corpus_zipf_fit`` gate: the row count is
     # a parquet-FOOTER read (driver-side metadata, no Spark job — a
     # docs.count() gate measured ~0.9s/build, defeating its own
-    # purpose). The single window is the gate's driver rung, so the
-    # forced-distributed mode keeps the scale path timed and tested.
+    # purpose). The single window is the gate's driver rung; an emptied
+    # ladder (the bench distributed lane, tests) runs the scale path.
     # Up to 1M docs the vocabulary ranks in one bounded task (the r12
     # A/B measured the distributed machinery at +0.75s of pure
     # overhead on a bench-sized vocabulary).

@@ -264,14 +264,21 @@ def test_connected_components_converges_on_final_round(spark):
 
 def test_scc_final_peel_round_not_forfeited(spark):
     """ADVICE r2: the final permitted peel round used to raise before
-    being attempted; max_iter=4 is the minimal budget for this chain of
-    two 2-cycles on the forced-distributed path."""
+    being attempted. With every SCC and WCC task rung off, max_iter=4
+    is the minimal budget for this chain of two 2-cycles: at 3 the
+    forward coloring runs out of rounds and raises."""
     e = edges_df(spark, [(1, 2), (2, 1), (2, 3), (3, 4), (4, 3)])
-    with only(strongly_connected_components="task"):
+    with only(
+        strongly_connected_components="distributed",
+        scc_component="distributed",
+        connected_components="distributed",
+    ):
         got = {
             r.id: r.component
             for r in strongly_connected_components(e, max_iter=4).collect()
         }
+        with pytest.raises(RuntimeError):
+            strongly_connected_components(e, max_iter=3).collect()
     assert got == {1: 1, 2: 1, 3: 3, 4: 3}
 
 
@@ -301,6 +308,7 @@ def test_label_propagation_driver_path_matches_distributed(spark):
 
     g = load_graph(spark, "/root/testdata/sf0.001")
     mm = g.module_dep_edges()
+    # the default ladder: the twin sweep in one task
     fast = sorted(map(tuple, label_propagation(mm, iterations=8).collect()))
     with only(label_propagation="distributed"):
         slow = sorted(map(tuple, label_propagation(mm, iterations=8).collect()))
@@ -350,6 +358,7 @@ def test_label_propagation_driver_matches_distributed_sf001(spark):
     from github_miner_spark.graph.store import load_graph
 
     mm = load_graph(spark, "/root/testdata/sf0.01").module_dep_edges()
+    # the default ladder: the twin sweep in one task
     fast = sorted(map(tuple, label_propagation(mm, iterations=8).collect()))
     with only(label_propagation="distributed"):
         slow = sorted(map(tuple, label_propagation(mm, iterations=8).collect()))
@@ -388,10 +397,10 @@ def test_distributed_scc_huge_cyclic_core(spark):
     assert len(fast_rows) == n and len(comps) == 1
 
 
-def test_distributed_scc_fwbw_coloring_on_single_giant_scc(spark, monkeypatch):
+def test_distributed_scc_fwbw_coloring_on_single_giant_scc(spark):
     """The FW-BW coloring loop (the path past the scc_component gate) on
-    a single ~2k-vertex SCC whose WCC split cannot help: forced gates +
-    every SCC/WCC task rung off exercises forward coloring with pointer
+    a single ~2k-vertex SCC whose WCC split cannot help: every SCC/WCC
+    task rung off exercises forward coloring with pointer
     jumping, backward pruning, and re-trim end to end. Must match the
     whole-input Tarjan task exactly."""
     from github_miner_spark.graph.algorithms import strongly_connected_components
@@ -406,7 +415,6 @@ def test_distributed_scc_fwbw_coloring_on_single_giant_scc(spark, monkeypatch):
     ]
     edges = parts[0].unionByName(parts[1]).localCheckpoint(eager=True)
     fast_rows = sorted(map(tuple, strongly_connected_components(edges).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
     with only(
         strongly_connected_components="distributed",
         scc_component="distributed",

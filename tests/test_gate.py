@@ -1,12 +1,11 @@
 """The execution-path gate (``github_miner_spark/gate.py``).
 
 - a Spark-free decision table: every ladder at each rung's limit and
-  one row past it, with and without SPARK_GRAFT_FORCE_DISTRIBUTED;
+  one row past it;
 - one parity case per ``LIMITS`` key: the public operator returns the
   same rows on every path its ladder can take;
 - a source guard: no per-call ``*_threshold`` knobs, no retired
-  loop-tuning parameters on the graph operators, no second reader of
-  the force flag.
+  loop-tuning parameters on the graph operators, no retired names.
 """
 
 from __future__ import annotations
@@ -24,31 +23,30 @@ from tests.gate_utils import only
 M = 1_000_000
 D, T, X = "driver", "task", "distributed"
 
-# gate -> {n_rows: (path, path with the force flag set)}
-DECISIONS: dict[str, dict[int, tuple[str, str]]] = {
-    # one task rung: the flag leaves the kernel on
-    "pagerank": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "connected_components": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    # the force flag leaves the whole-input task on
-    "strongly_connected_components": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "scc_component": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "louvain": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "modularity": {2 * M: (D, X), 2 * M + 1: (X, X)},
-    "label_propagation": {2 * M: (D, X), 2 * M + 1: (X, X)},
-    "coreness": {5 * M: (T, T), 5 * M + 1: (X, X)},
+# gate -> {n_rows: path}
+DECISIONS: dict[str, dict[int, str]] = {
+    # one task rung: the twin over the whole input in one task
+    "pagerank": {5 * M: T, 5 * M + 1: X},
+    "connected_components": {5 * M: T, 5 * M + 1: X},
+    "strongly_connected_components": {5 * M: T, 5 * M + 1: X},
+    "scc_component": {5 * M: T, 5 * M + 1: X},
+    "louvain": {5 * M: T, 5 * M + 1: X},
+    "modularity": {2 * M: D, 2 * M + 1: X},
+    "label_propagation": {2 * M: T, 2 * M + 1: X},
+    "coreness": {5 * M: T, 5 * M + 1: X},
     # ... and the all-roots kernels
-    "betweenness_centrality": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "betweenness_backward": {2 * M: (T, T), 2 * M + 1: (X, X)},
-    "closure_path_counts": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "bfs_depths": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "all_shortest_paths_multi": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "enumerate_simple_paths": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    "weighted_sssp": {5 * M: (T, T), 5 * M + 1: (X, X)},
+    "betweenness_centrality": {5 * M: T, 5 * M + 1: X},
+    "betweenness_backward": {2 * M: T, 2 * M + 1: X},
+    "closure_path_counts": {5 * M: T, 5 * M + 1: X},
+    "bfs_depths": {5 * M: T, 5 * M + 1: X},
+    "all_shortest_paths_multi": {5 * M: T, 5 * M + 1: X},
+    "enumerate_simple_paths": {5 * M: T, 5 * M + 1: X},
+    "weighted_sssp": {5 * M: T, 5 * M + 1: X},
     # ... and ANF's whole-graph kernel
-    "anf": {5 * M: (T, T), 5 * M + 1: (X, X)},
-    # the flag turns the single-window corpus ranks off
-    "corpus_zipf_fit": {1 * M: (D, X), 1 * M + 1: (X, X)},
-    "kmv_sketch": {1 * M: (D, X), 1 * M + 1: (X, X)},
+    "anf": {5 * M: T, 5 * M + 1: X},
+    # the single-window corpus ranks
+    "corpus_zipf_fit": {1 * M: D, 1 * M + 1: X},
+    "kmv_sketch": {1 * M: D, 1 * M + 1: X},
 }
 
 def test_decision_table_covers_every_rung():
@@ -58,15 +56,10 @@ def test_decision_table_covers_every_rung():
             assert {limit, limit + 1} <= set(DECISIONS[gate]), gate
 
 
-@pytest.mark.parametrize("forced", [False, True])
-def test_choose_path_matches_decision_table(monkeypatch, forced):
-    if forced:
-        monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-    else:
-        monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED", raising=False)
+def test_choose_path_matches_decision_table():
     for gate, rows in DECISIONS.items():
         for n, want in rows.items():
-            assert choose_path(gate, n) == want[forced], (gate, n, forced)
+            assert choose_path(gate, n) == want, (gate, n)
 
 
 def test_no_gate_holds_driver_and_task_rungs():
@@ -83,6 +76,8 @@ def test_no_gate_holds_driver_and_task_rungs():
 def test_only_rejects_a_path_the_ladder_lacks():
     with pytest.raises(ValueError, match="no 'driver' rung"):
         only(louvain="driver")
+    with pytest.raises(ValueError, match="no 'driver' rung"):
+        only(label_propagation="driver")
     with only(louvain="distributed"):
         assert LIMITS["louvain"] == ()
     with only(louvain="task"):
@@ -90,7 +85,6 @@ def test_only_rejects_a_path_the_ladder_lacks():
 
 
 def test_empty_ladder_is_distributed(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED", raising=False)
     monkeypatch.setitem(LIMITS, "pagerank", ())
     assert choose_path("pagerank", 0) == X
 
@@ -147,15 +141,6 @@ def _louvain(spark):
     from github_miner_spark.graph.algorithms import louvain
 
     return _rows(louvain(_edges(spark, CLIQUES), max_sweeps=3, levels=2))
-
-
-def _modularity(spark):
-    from github_miner_spark.graph.algorithms import modularity
-
-    comm = spark.createDataFrame(
-        [(v, 1 if v <= 4 else 5) for v in range(1, 9)], "id bigint, community bigint"
-    )
-    return modularity(_edges(spark, CLIQUES), comm)
 
 
 def _label_propagation(spark):
@@ -224,7 +209,7 @@ PARITY_CASES = {
     "strongly_connected_components": (_scc, {}),
     "scc_component": (_scc, {"strongly_connected_components": ()}),
     "louvain": (_louvain, {}),
-    "modularity": (_modularity, {}),
+    "modularity": (_query("louvain_communities"), {}),
     "label_propagation": (_label_propagation, {}),
     "coreness": (_coreness, {}),
     "betweenness_centrality": (_betweenness, {}),
@@ -246,7 +231,6 @@ def test_parity_cases_cover_every_gate():
 
 @pytest.mark.parametrize("gate", sorted(PARITY_CASES))
 def test_every_path_returns_the_same_rows(spark, monkeypatch, gate):
-    monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED", raising=False)
     run, routes = PARITY_CASES[gate]
     for other, ladder in routes.items():
         monkeypatch.setitem(LIMITS, other, ladder)
@@ -281,10 +265,10 @@ def test_parity_fixtures_are_nontrivial(spark):
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "github_miner_spark"
-FORCE_FLAG = "SPARK_GRAFT_FORCE_DISTRIBUTED"
 RETIRED = (
     "_" + "gate",
     "SPARK_GRAFT_CLOSURE_" + "DRIVER_EDGES",
+    "SPARK_GRAFT_FORCE_" + "DISTRIBUTED",
     "_pagerank_" + "driver",
     "_brandes_" + "root_group",
     "_bfs_root_" + "group_factory",
@@ -328,15 +312,6 @@ def test_no_threshold_parameters():
                     if arg.arg.endswith("_threshold") or arg.arg in retired:
                         bad.append(f"{path.relative_to(ROOT)}:{node.lineno} {arg.arg}")
     assert not bad, bad
-
-
-def test_force_flag_read_only_in_gate():
-    readers = []
-    for path in _package_modules():
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Constant) and node.value == FORCE_FLAG:
-                readers.append(str(path.relative_to(PACKAGE)))
-    assert readers == ["gate.py"], readers
 
 
 def test_retired_gate_names_are_gone():

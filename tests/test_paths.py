@@ -256,12 +256,11 @@ def test_weighted_sssp_prefers_cheap_long_path(spark):
     assert out == {2: 1.0, 3: 2.0, 4: 3.0}
 
 
-def test_weighted_sssp_driver_matches_distributed(spark, monkeypatch):
+def test_weighted_sssp_driver_matches_distributed(spark):
     """Heap Dijkstra (the gated task kernel) and the Bellman-Ford
     relaxation loop must agree exactly on the real graph AND on a
     weighted cyclic fixture (cycle cost never improves a settled min,
-    loop still terminates), with or without the force flag, which
-    leaves the task rung on."""
+    loop still terminates)."""
     import github_miner_spark.graph.paths as P
     from github_miner_spark.graph.store import load_graph
     from pyspark.sql import functions as F
@@ -277,13 +276,9 @@ def test_weighted_sssp_driver_matches_distributed(spark, monkeypatch):
         # the default ladder: the per-root task kernel
         task = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
         assert len(task) > 0
-        monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-        forced = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
         # the Bellman-Ford relaxation loop
         with only(weighted_sssp="distributed"):
             dist = sorted(map(tuple, P.weighted_sssp(edges, root).collect()))
-        monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED")
-        assert task == forced
         assert task == dist
     # the cyclic fixture's expected map, by hand: 1->2 = 1, 1->3 = 1.5,
     # 1->4 = 3.5 (via the cycle-free 2-hop), 1->1 = 1.75 (round trip)

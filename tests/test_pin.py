@@ -333,12 +333,12 @@ def test_unigram_em_round_job_budget(spark, monkeypatch):
     assert jobs_with(2) - jobs_with(1) <= 9
 
 
-def test_scc_peel_round_job_budget(spark, monkeypatch):
+def test_scc_peel_round_job_budget(spark):
     """The FW-BW peel round on one ~2k-vertex SCC (the graph of
     test_distributed_scc_fwbw_coloring_on_single_giant_scc): the
     emptiness and stability probes and the trim's edge count come from
-    the pin jobs, so the forced-distributed call runs 287 jobs here
-    (322 with separate probe jobs)."""
+    the pin jobs, so the distributed call runs 287 jobs here (322 with
+    separate probe jobs)."""
     n = 2_000
     base = spark.range(n)
     edges = (
@@ -346,7 +346,6 @@ def test_scc_peel_round_job_budget(spark, monkeypatch):
         .unionByName(base.select(F.col("id").alias("src"), ((F.col("id") * 3 + 7) % n).alias("dst")))
         .localCheckpoint(eager=True)
     )
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
     with only(
         strongly_connected_components="distributed",
         scc_component="distributed",

@@ -9,6 +9,7 @@ import io
 import re
 
 from github_miner_spark import registry
+from tests.gate_utils import only
 
 SF = "/root/testdata/sf0.001"
 
@@ -710,10 +711,11 @@ def test_hybrid_fusion_legs_planned_once(spark):
         assert m.group(1) == "Cross", (plan, m.group(1))
 
 
-def test_zipf_rank_is_distributed(spark, monkeypatch):
+def test_zipf_rank_is_distributed(spark):
     """VERDICT r11 item 4: corpus_zipf_fit's vocabulary rank must not
-    straggle one task at scale. Above the gate (forced here the way
-    the bench distributed lane forces it) the rank is distributed:
+    straggle one task at scale. Above the gate (here its ladder is
+    emptied, as the bench distributed lane empties it) the rank is
+    distributed:
     range-partitioned shards pinned once (localCheckpoint — both
     consumers must see identical shard boundaries), the
     vocabulary-sized rank window partitioned by pid, the only
@@ -722,21 +724,20 @@ def test_zipf_rank_is_distributed(spark, monkeypatch):
     window stays (the r12 A/B measured the distributed machinery at
     +0.75s of pure overhead at bench SF), and both paths produce
     identical results."""
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-    plan = _plan(spark, "corpus_zipf_fit")
-    # the vocab-sized rank window is keyed by the shard id
-    assert re.search(
-        r"windowspecdefinition\(pid#\d+, c#\d+L DESC", plan
-    ), plan
-    # the shard-offset side joins back via broadcast, never a shuffle
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    # one pinned RDD feeds both consumers (rank + offsets): the two
-    # ExistingRDD scans reference the same checkpointed RDD id
-    rdd_ids = set(re.findall(r"(MapPartitionsRDD\[\d+\]) at localCheckpoint", plan))
-    assert len(rdd_ids) == 1, rdd_ids
-    forced = registry.all_specs()["corpus_zipf_fit"].spark(spark, SF).collect()
+    with only(corpus_zipf_fit="distributed"):
+        plan = _plan(spark, "corpus_zipf_fit")
+        # the vocab-sized rank window is keyed by the shard id
+        assert re.search(
+            r"windowspecdefinition\(pid#\d+, c#\d+L DESC", plan
+        ), plan
+        # the shard-offset side joins back via broadcast, never a shuffle
+        assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+        # one pinned RDD feeds both consumers (rank + offsets): the two
+        # ExistingRDD scans reference the same checkpointed RDD id
+        rdd_ids = set(re.findall(r"(MapPartitionsRDD\[\d+\]) at localCheckpoint", plan))
+        assert len(rdd_ids) == 1, rdd_ids
+        forced = registry.all_specs()["corpus_zipf_fit"].spark(spark, SF).collect()
 
-    monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED")
     default_plan = _plan(spark, "corpus_zipf_fit")
     # bench-SF default: the bounded single-task rank, no checkpoint
     assert "localCheckpoint" not in default_plan
@@ -747,7 +748,7 @@ def test_zipf_rank_is_distributed(spark, monkeypatch):
     )
 
 
-def test_kmv_sketch_topk_is_distributed(spark, monkeypatch):
+def test_kmv_sketch_topk_is_distributed(spark):
     """r12: kmv_set_operation_estimates' k-minimum-values selection
     must not sort a whole SOURCE's distinct-shingle vocabulary in one
     window task at scale (sources are few, so each window partition is
@@ -776,20 +777,19 @@ def test_kmv_sketch_topk_is_distributed(spark, monkeypatch):
             df.explain("formatted")
         return buf.getvalue()
 
-    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
-    plan = sketch_plan()
-    # the vocabulary-scale sort is keyed by (source, shard), never by
-    # source alone; the survivor rank runs after the r1 filter
-    assert re.search(
-        r"windowspecdefinition\(source#\d+, shard#\d+L", plan
-    ), plan
-    forced = (
-        registry.all_specs()["kmv_set_operation_estimates"]
-        .spark(spark, SF)
-        .collect()
-    )
+    with only(kmv_sketch="distributed"):
+        plan = sketch_plan()
+        # the vocabulary-scale sort is keyed by (source, shard), never by
+        # source alone; the survivor rank runs after the r1 filter
+        assert re.search(
+            r"windowspecdefinition\(source#\d+, shard#\d+L", plan
+        ), plan
+        forced = (
+            registry.all_specs()["kmv_set_operation_estimates"]
+            .spark(spark, SF)
+            .collect()
+        )
 
-    monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED")
     default_plan = sketch_plan()
     # bench-SF default: the single bounded window, no shard machinery
     assert "shard" not in default_plan

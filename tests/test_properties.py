@@ -1,7 +1,10 @@
 """Property-based checks (hypothesis) for the algorithm cores whose
 failure modes are subtle: star-contraction connected components vs a
 reference union-find, SCC vs mutual reachability, betweenness vs
-shortest-path enumeration (both on both of their paths), and LSH dedup containment vs exact Jaccard.
+shortest-path enumeration (both on both of their paths), label
+propagation vs a synchronous sweep and modularity vs Newman's matrix
+form (both on both of their paths), and LSH dedup containment vs exact
+Jaccard.
 
 Spark actions are slow per example, so example counts are small and
 sizes bounded — the value is randomized STRUCTURE (cycles, chains,
@@ -508,6 +511,87 @@ def test_coreness_both_paths_match_peel_reference(spark, edges):
         distributed = {r.id: r.core for r in coreness(df).collect()}
     assert task == want
     assert distributed == want
+
+
+# random undirected structure: edges over 0..11 (cycles, self-loops,
+# parallel and reversed duplicates) plus isolated self-loop vertices
+# 12..15, whose only edge is to themselves
+_community_graphs = st.tuples(
+    st.lists(st.tuples(st.integers(0, 11), st.integers(0, 11)), min_size=1, max_size=30),
+    st.lists(st.integers(12, 15), max_size=3),
+).map(lambda t: t[0] + [(v, v) for v in t[1]])
+
+
+def _sweep_reference(edges: list[tuple[int, int]], iterations: int) -> dict[int, int]:
+    """Synchronous label propagation by definition: every vertex takes
+    the label most frequent among its distinct non-self neighbors
+    (ties -> smallest label), all vertices at once; a vertex without
+    neighbors keeps its label."""
+    from collections import Counter
+
+    nbrs: dict[int, set[int]] = {v: set() for e in edges for v in e}
+    for a, b in edges:
+        if a != b:
+            nbrs[a].add(b)
+            nbrs[b].add(a)
+    label = {v: v for v in nbrs}
+    for _ in range(iterations):
+        nxt = {}
+        for v, ns in nbrs.items():
+            votes = Counter(label[u] for u in ns)
+            top = max(votes.values(), default=0)
+            nxt[v] = min((c for c, n in votes.items() if n == top), default=label[v])
+        label = nxt
+    return label
+
+
+@given(edges=_community_graphs, iterations=st.integers(1, 4))
+@_settings
+def test_label_propagation_both_paths_match_sweep_reference(spark, edges, iterations):
+    from github_miner_spark.graph.algorithms import label_propagation
+
+    want = _sweep_reference(edges, iterations)
+    df = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in edges], "src bigint, dst bigint"
+    )
+    got = {}
+    for path in ("task", "distributed"):
+        with only(label_propagation=path):
+            got[path] = {
+                r.id: r.community for r in label_propagation(df, iterations).collect()
+            }
+    assert got["task"] == want
+    assert got["distributed"] == want
+
+
+@given(edges=_community_graphs, labels=st.lists(st.integers(0, 3), min_size=16, max_size=16))
+@_settings
+def test_modularity_both_paths_match_newman_matrix_form(spark, edges, labels):
+    """Q = (1/2m) sum_ij [A_ij - k_i k_j / 2m] delta(c_i, c_j) with numpy,
+    where A is the 0/1 adjacency of the undirected simple graph: each
+    distinct pair once per direction, and a self-loop once, A_vv = 1,
+    as the engine's symmetrization keeps it."""
+    import numpy as np
+
+    from github_miner_spark.graph.algorithms import modularity
+
+    a = np.zeros((16, 16))
+    for u, v in edges:
+        a[u, v] = a[v, u] = 1.0
+    k = a.sum(axis=1)
+    m2 = a.sum()
+    c = np.array(labels)
+    want = float(((a - np.outer(k, k) / m2) * (c[:, None] == c[None, :])).sum() / m2)
+    df = spark.createDataFrame(
+        [(int(u), int(v)) for u, v in edges], "src bigint, dst bigint"
+    )
+    comm = spark.createDataFrame(
+        [(v, labels[v]) for v in sorted({v for e in edges for v in e})],
+        "id bigint, community bigint",
+    )
+    for path in ("driver", "distributed"):
+        with only(modularity=path):
+            assert modularity(df, comm) == pytest.approx(want, rel=1e-9, abs=1e-12), path
 
 
 def test_percentile_approx_matches_exact_within_tolerance(spark):
