@@ -56,10 +56,19 @@ def test_decision_table_covers_every_rung():
             assert {limit, limit + 1} <= set(DECISIONS[gate]), gate
 
 
-def test_choose_path_matches_decision_table():
+@pytest.mark.parametrize("past_limit", [False, True])
+def test_choose_path_matches_decision_table(past_limit):
+    """At a rung's limit that rung runs; one row past it, the next rung
+    (or the distributed plan) does."""
+    checked = 0
     for gate, rows in DECISIONS.items():
+        limits = {limit for _path, limit in LIMITS[gate]}
         for n, want in rows.items():
+            if (n not in limits) != past_limit:
+                continue
             assert choose_path(gate, n) == want, (gate, n)
+            checked += 1
+    assert checked >= len(DECISIONS)
 
 
 def test_no_gate_holds_driver_and_task_rungs():
